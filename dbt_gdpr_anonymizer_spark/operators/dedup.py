@@ -10,6 +10,15 @@ this is the LLM-training-data extension surface. Design targets 100 TB:
   never contains an all-pairs product; cost scales with bucket occupancy,
   not n². Jaccard verification runs only on candidate pairs.
 
+* ``ngram_jaccard_pairs``, ``edit_distance_pairs``, ``containment_pairs``:
+  EXACT similarity joins sharing one AllPairs/SSJoin prefix kernel.
+  ``_df_prefix`` keeps each document's first tokens in a global
+  document-frequency order (df from a count window over the token hash
+  ``_h``), ``_prefix_pairs`` self-joins those prefixes on ``_h`` inside a
+  length band, and each operator keeps only its tokenization, its prefix
+  length and its exact check. Ordering or threshold changes land in the
+  kernel once.
+
 Tuning: with ``num_hashes=16, bands=8`` (r=2 rows/band), a pair with true
 Jaccard s becomes a candidate with p = 1-(1-s^2)^8: s=0.9 → 0.9999983,
 s=0.5 → 0.90, s=0.2 → 0.28. Raise bands/hashes for lower thresholds.
@@ -20,7 +29,7 @@ DuckDB) — zero Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions import text as tx
@@ -245,6 +254,116 @@ def neardup_pairs(
     return track_caches(out, sets_)
 
 
+def _df_prefix(
+    tokens: DataFrame, id_col: str, prefix_len: Column | int, *tiebreak: str
+) -> DataFrame:
+    """Each document's first ``prefix_len`` tokens in one global order —
+    the prefix step shared by the exact similarity joins
+    (``ngram_jaccard_pairs``, ``edit_distance_pairs``,
+    ``containment_pairs``; the AllPairs / SSJoin shape).
+
+    ``tokens`` has one row per (document, token): ``id_col``, the token
+    hash ``_h`` (xxhash64 of the token), the token's own columns named in
+    ``tiebreak`` and whatever the caller carries along; the result adds
+    ``_df`` and ``_rk``, so callers project. ``prefix_len`` is a Column
+    over those rows (or a constant). The order is document
+    frequency ascending (rarest first), then ``_h``, then ``tiebreak``:
+    boilerplate tokens shared by thousands of documents sink to the end
+    of every list, so they rarely land in a prefix and the join on
+    prefix tokens costs Σ prefix_df² instead of Σ df².
+
+    Why the result stays exact:
+
+    * the Chaudhuri et al. prefix lemma holds for ANY total order that
+      all documents share — document frequency only makes it cheap;
+    * every wide exchange keys on the 8-byte ``_h``, not the token
+      string. Equal tokens hash equal, so no pair is lost. A collision
+      can only merge two tokens' counts (an order change the lemma
+      tolerates) or admit a spurious candidate, which the caller's exact
+      check rejects. The ``tiebreak`` columns keep the order total and
+      identical across documents even then; comparisons short-circuit on
+      (df, ``_h``), so they are almost never read;
+    * document frequency is a count window partitioned by ``_h``, not a
+      groupBy plus a corpus-sized back-join: the window pays the same
+      exchange and sort on ``_h`` as the back-join did, and the
+      aggregate, its exchange and the join are gone, with identical
+      counts.
+
+    The measurements behind both choices are in OPTIMIZATION_r11.md and
+    OPTIMIZATION_r12.md.
+
+    Persisting is left to the callers: a prefix that feeds both sides of
+    a self-join (``_prefix_pairs``) should be cached; one with a single
+    consumer should not (the cache write is then pure extra work).
+    """
+    w_df = Window.partitionBy("_h")
+    w = Window.partitionBy(id_col).orderBy("_df", "_h", *tiebreak)
+    return (
+        tokens.withColumn("_df", F.count(F.lit(1)).over(w_df))
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= prefix_len)
+    )
+
+
+def _prefix_pairs(
+    prefix: DataFrame, id_col: str, len_col: str, band: Column
+) -> DataFrame:
+    """Symmetric candidates from a ``_df_prefix`` table: (_ida, _idb)
+    with _ida < _idb sharing a prefix ``_h``, kept where ``band`` — a
+    Column over the two sizes ``_la`` and ``_lb`` (``len_col`` of each
+    side) — holds. Not distinct: a pair sharing several prefix tokens
+    repeats."""
+    a = prefix.select(
+        F.col(id_col).alias("_ida"), F.col(len_col).alias("_la"), "_h"
+    )
+    b = prefix.select(
+        F.col(id_col).alias("_idb"), F.col(len_col).alias("_lb"), "_h"
+    )
+    return (
+        a.join(b, "_h")
+        .filter(F.col("_ida") < F.col("_idb"))
+        .filter(band)
+        .select("_ida", "_idb")
+    )
+
+
+def _attach_sides(
+    cands: DataFrame, side: DataFrame, id_col: str, *cols: str
+) -> DataFrame:
+    """Join ``cols`` of ``side`` onto both ends of (_ida, _idb) candidate
+    pairs, as ``<col>_a`` and ``<col>_b``, for the exact check."""
+    for s in "ab":
+        cands = cands.join(
+            side.select(
+                F.col(id_col).alias(f"_id{s}"),
+                *[F.col(c).alias(f"{c}_{s}") for c in cols],
+            ),
+            f"_id{s}",
+        )
+    return cands
+
+
+def _sized_shingles(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
+) -> tuple[DataFrame, DataFrame]:
+    """Persisted (id, sh, _n) shingle sets and their ``_df_prefix`` token
+    table (id, _n, shingle, _h).
+
+    The shingle chain (regex split → n-gram transform) is the expensive
+    expression and the joins read it in several plan branches (df
+    window, rank, both verify sides). Catalyst has no cross-branch
+    subplan reuse, so the sets are cached once. MEMORY_AND_DISK spills at corpus scale; for a full 100 TB
+    run, materialize the tokenized corpus to storage first. The caller
+    releases the cache (``track_caches``)."""
+    sized = _shingle_sets(df, text_col, id_col, shingle_n).select(
+        F.col(id_col), F.col("sh"), F.size("sh").alias("_n")
+    ).persist()
+    tokens = sized.select(
+        F.col(id_col), F.col("_n"), F.explode("sh").alias("shingle")
+    ).withColumn("_h", F.xxhash64("shingle"))
+    return sized, tokens
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -252,7 +371,6 @@ def ngram_jaccard_pairs(
     *,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs: prefix-filtered inverted-index
     candidates + full-set verification (the AllPairs/PPJoin shape).
@@ -264,7 +382,7 @@ def ngram_jaccard_pairs(
     Prefix filtering removes that hot spot WITHOUT losing exactness:
 
     * order every doc's gram set by global document frequency ascending
-      (rarest first; ties by gram — any total order works),
+      (``_df_prefix``),
     * index only the first ``n - ⌈t·n⌉ + 1`` grams of each doc. Lemma
       (Chaudhuri et al., SSJoin): if ``|A∩B| ≥ α`` then the first
       ``|A|-α+1`` of A and ``|B|-α+1`` of B intersect under any shared
@@ -274,110 +392,33 @@ def ngram_jaccard_pairs(
       filter ``t·max(n_a,n_b) ≤ min(n_a,n_b)``), verified with exact
       Jaccard over the full sets — only candidate pairs pay.
 
-    The frequency ordering pushes high-df grams to the END of each doc's
-    list, so they rarely land in prefixes: the Σ df² blowup collapses
-    (measured 16s → ~2s at sf0.1). ``threshold`` is quantized to 6
-    decimals (decimal arithmetic) so ⌈t·n⌉ has no float-rounding holes.
-
-    ``max_doc_freq`` optionally drops grams with document frequency above
-    the cap from the PREFIX index only — a recall-trading scale valve for
-    adversarial corpora (reported scores for surviving pairs stay exact,
-    since verification always uses full sets). Default None = exact, used
-    by the oracle-checked registry query.
+    ``threshold`` is quantized to 6 decimals (decimal arithmetic) so
+    ⌈t·n⌉ has no float-rounding holes.
     """
-    # The shingle chain (regex split → n-gram transform) is the expensive
-    # expression and the plan uses it in FOUR branches (df count, rank,
-    # both verify sides). Catalyst has no cross-branch subplan reuse, so
-    # persist the per-doc sets once — every branch then reads the cache
-    # (measured 14s → 3s at sf0.1). MEMORY_AND_DISK spills at corpus
-    # scale; for a full 100 TB run, materialize the tokenized corpus to
-    # storage first and feed it in here.
-    sets_ = _shingle_sets(df, text_col, id_col, shingle_n)
-    sized = sets_.select(
-        F.col(id_col), F.col("sh"), F.size("sh").alias("_n")
-    ).persist()
-    # r11 (guide §2.3 — shuffle fewer bytes): every wide exchange below
-    # (df groupBy, df back-join, window, prefix self-join) used the gram
-    # STRING (~25 B) as its key. xxhash64 (codegen, 8 B) replaces it:
-    #  * no false negatives — equal grams hash equal, and verification
-    #    over the FULL sets is unchanged, so output is invariant;
-    #  * a hash collision merely (a) merges two grams' df counts — df
-    #    feeds only the prefix ORDER, and any globally consistent order
-    #    satisfies the Chaudhuri lemma — and (b) can admit a spurious
-    #    candidate pair, which exact verification then rejects;
-    #  * the window order (_df, _h, shingle) keeps the string as the
-    #    final tie-break so the realized order is total and identical
-    #    across docs even under a collision (comparisons short-circuit
-    #    on (_df, _h), so the string is almost never touched).
-    # Measured sf0.1 (cache-cleared A/B, alternating): median
-    # 3.61 -> 2.62 s, output bit-identical (256 pairs, symdiff 0).
-    posts = sized.select(
-        F.col(id_col), F.col("_n"), F.explode("sh").alias("shingle")
-    )
-    if max_doc_freq is not None:
-        # keep the valve's df-cut keyed on the exact gram string so a
-        # hash collision can never change WHICH grams are dropped
-        keep = (
-            posts.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_sdf"))
-            .filter(F.col("_sdf") <= max_doc_freq)
-            .select("shingle")
-        )
-        posts = posts.join(keep, "shingle")
-    posts = posts.withColumn("_h", F.xxhash64("shingle"))
-    # r12 (guide §2.4 — remove shuffles outright): document frequency now
-    # comes from a COUNT WINDOW over the postings partitioned by _h
-    # instead of a groupBy + corpus-sized back-join. The sort-merge join
-    # already paid exchange(_h) + sort(_h) on the postings side; the
-    # window pays exactly that and nothing else — the aggregate, its
-    # exchange, and the join disappear, and the postings explode runs
-    # ONCE instead of twice (posts fed both join sides and is not
-    # cached). df values are identical (count over the _h partition =
-    # the old groupBy count), so the prefix order and output are
-    # bit-identical (verified, symdiff 0).
-    w_df = Window.partitionBy("_h")
-    w = Window.partitionBy(id_col).orderBy("_df", "_h", "shingle")
-    # α = ⌈t·n⌉ in exact decimal so e.g. 0.7×10 is 7.000000, never 7.0…01
-    alpha = F.ceil(
-        F.lit(threshold).cast("decimal(10,6)") * F.col("_n")
-    ).cast("int")
-    # persisted (r12): the prefix feeds BOTH sides of the candidate
-    # self-join; caching these few rows (n−α+1 per doc) runs the
-    # explode→window chain once instead of twice
-    prefix = (
-        posts.withColumn("_df", F.count(F.lit(1)).over(w_df))
-        .withColumn("_pos", F.row_number().over(w))
-        .filter(F.col("_pos") <= F.col("_n") - alpha + 1)
-        .select(id_col, "_n", "_h")
-    ).persist()
-    a = prefix.select(
-        F.col(id_col).alias(f"{id_col}_a"), F.col("_n").alias("_na"), "_h"
-    )
-    b = prefix.select(
-        F.col(id_col).alias(f"{id_col}_b"), F.col("_n").alias("_nb"), "_h"
-    )
+    sized, tokens = _sized_shingles(df, text_col, id_col, shingle_n)
+    # α = ⌈t·n⌉ in exact decimal: 0.56×25 is 14.000000, where floats give
+    # 14.000000000000002 and a prefix one gram short
     tq = F.lit(threshold).cast("decimal(10,6)")
-    cands = (
-        a.join(b, "_h")
-        .filter(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
-        .filter(F.least("_na", "_nb") >= tq * F.greatest("_na", "_nb"))
-        .select(f"{id_col}_a", f"{id_col}_b")
-        .distinct()
+    alpha = F.ceil(tq * F.col("_n")).cast("int")
+    # persisted: the prefix feeds both sides of the candidate self-join
+    prefix = (
+        _df_prefix(tokens, id_col, F.col("_n") - alpha + 1, "shingle")
+        .select(id_col, "_n", "_h")
+        .persist()
     )
-    a_sets = sized.select(
-        F.col(id_col).alias(f"{id_col}_a"), F.col("sh").alias("sh_a")
-    )
-    b_sets = sized.select(
-        F.col(id_col).alias(f"{id_col}_b"), F.col("sh").alias("sh_b")
-    )
+    band = F.least("_la", "_lb") >= tq * F.greatest("_la", "_lb")
+    cands = _prefix_pairs(prefix, id_col, "_n", band).distinct()
     jac = (
         F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         / F.size(F.array_union("sh_a", "sh_b")).cast("double")
     )
     out = (
-        cands.join(a_sets, f"{id_col}_a")
-        .join(b_sets, f"{id_col}_b")
-        .select(f"{id_col}_a", f"{id_col}_b", jac.alias("_j"))
+        _attach_sides(cands, sized, id_col, "sh")
+        .select(
+            F.col("_ida").alias(f"{id_col}_a"),
+            F.col("_idb").alias(f"{id_col}_b"),
+            jac.alias("_j"),
+        )
         .filter(F.col("_j") >= threshold)
         .select(
             f"{id_col}_a",
@@ -717,8 +758,8 @@ def edit_distance_pairs(
     q: int = 3,
 ) -> DataFrame:
     """EXACT edit-distance near-dup pairs: q-gram prefix-filtered candidates
-    + Levenshtein verification (the Ed-Join / Pass-Join family, built from
-    the same df-ordered-prefix machinery as ``ngram_jaccard_pairs``).
+    + Levenshtein verification (the Ed-Join / Pass-Join family, built on
+    the df-ordered prefix kernel ``_df_prefix``).
 
     Guarantee chain (full recall at the threshold, no probabilistic step):
 
@@ -747,15 +788,10 @@ def edit_distance_pairs(
     docs = df.select(
         F.col(id_col), t.alias("_t"), F.length(t).alias("_len")
     ).persist()
-    # r11 (guide §4.1 — prefer codegen over interpreted expressions): the
-    # positional grams were built with a transform(sequence, i ->
-    # substring(...)) lambda — higher-order functions are interpreted
-    # per ELEMENT, so the corpus paid ~1.5M interpreted substring calls
-    # at sf0.1 in the query's widest stage. Exploding the INDEX sequence
-    # and taking substring(_t, _i, q) as a plain row expression keeps the
-    # whole gram generation inside WholeStageCodegen (verified
-    # row-identical; median 2.95 → 2.65 s warm on the tokens subtree,
-    # more cold where the interpreted path dominated).
+    # positional grams: explode the INDEX sequence and take
+    # substring(_t, _i, q) as a plain row expression — a transform(sequence,
+    # i -> substring) lambda is interpreted per element, this stays inside
+    # WholeStageCodegen (OPTIMIZATION_r11.md)
     g = docs.select(
         F.col(id_col),
         "_len",
@@ -776,27 +812,6 @@ def edit_distance_pairs(
     # same shuffle width, but hash aggregation replaces the window's
     # full sort of the exploded gram table (O(n) vs O(n log n) at the
     # widest stage; wall-clock parity at sf0.1 where the stage is small)
-    # persisted: the gram explode + occurrence aggregation feeds TWO plan
-    # branches (the document-frequency table and the prefix-rank join) and
-    # Catalyst has no cross-branch subplan reuse — without the persist the
-    # widest stage of the query runs twice
-    # r11 (guide §2.3 — shuffle fewer bytes, the ngram_jaccard_pairs
-    # precedent): downstream exchanges key on _h = xxhash64(gram, occ)
-    # (8 B) instead of the (string, int) pair. No recall loss: equal
-    # tokens hash equal, so the prefix self-join on _h is a SUPERSET of
-    # the token join; a collision can only merge df counts (order-only —
-    # the Gravano/Chaudhuri prefix lemma holds for ANY globally
-    # consistent total order, and (_df, _h, _gram, _occ) stays total via
-    # the string tie-break) or admit a spurious candidate that the exact
-    # levenshtein verification rejects. Measured sf0.1 (cache-cleared
-    # alternating A/B): 5.53-6.93 -> 4.81-6.24 s, output bit-identical
-    # (255 pairs, symdiff 0).
-    # r12: the tokens persist moved DOWN to `prefix` — after the
-    # df-window rewrite below the token table has a single consumer (the
-    # window chain), while the chain's OUTPUT feeds both sides of the
-    # candidate self-join. Caching the prefix (q·d+1 rows/doc, ~125 K
-    # narrow rows at sf0.1) instead of the full token table (~1.5 M
-    # rows) computes the widest stage once and caches 10× fewer bytes.
     tokens = (
         g.groupBy(id_col, "_len", "_gram")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -808,34 +823,16 @@ def edit_distance_pairs(
         )
         .withColumn("_h", F.xxhash64("_gram", "_occ"))
     )
-    # r12 (guide §2.4 — remove shuffles outright, same rewrite as
-    # ngram_jaccard_pairs): token document frequency via a count window
-    # partitioned by _h instead of groupBy(_h) + corpus-sized back-join.
-    # The SMJ already paid exchange(_h)+sort(_h) on the token side; the
-    # window pays exactly that, the aggregate + its exchange + the join
-    # are gone. df values — and therefore the prefix order and output —
-    # are bit-identical (verified, symdiff 0; measured sf0.1 prefix
-    # subtree 1.57→1.06 s, candidate subtree 3.17→2.13 s median).
-    w_df = Window.partitionBy("_h")
-    rank_w = Window.partitionBy(id_col).orderBy("_df", "_h", "_gram", "_occ")
+    # persisted: the prefix (q·d+1 narrow rows per doc) feeds both sides
+    # of the candidate self-join; caching it rather than the ~10× larger
+    # token table computes the widest stage once
     prefix = (
-        tokens.withColumn("_df", F.count(F.lit(1)).over(w_df))
-        .withColumn("_rk", F.row_number().over(rank_w))
-        .filter(F.col("_rk") <= q * max_distance + 1)
+        _df_prefix(tokens, id_col, q * max_distance + 1, "_gram", "_occ")
         .select(id_col, "_len", "_h")
-    ).persist()
-    a = prefix.select(
-        F.col(id_col).alias("_ida"), F.col("_len").alias("_la"), "_h"
+        .persist()
     )
-    b = prefix.select(
-        F.col(id_col).alias("_idb"), F.col("_len").alias("_lb"), "_h"
-    )
-    cands = (
-        a.join(b, "_h")
-        .filter(F.col("_ida") < F.col("_idb"))
-        .filter(F.abs(F.col("_la") - F.col("_lb")) <= max_distance)
-        .select("_ida", "_idb")
-    )
+    band = F.abs(F.col("_la") - F.col("_lb")) <= max_distance
+    cands = _prefix_pairs(prefix, id_col, "_len", band)
     # short-doc completeness branch: grams ≤ q·d ⇔ len ≤ q·d + q − 1; any
     # in-threshold partner is within d of that, so both sides of a missed
     # pair live under this cap — meet them on adjacent length buckets
@@ -856,20 +853,13 @@ def edit_distance_pairs(
     short_cands = (
         sx.join(sy, "_bk")
         .filter(F.col("_ida") < F.col("_idb"))
-        .filter(F.abs(F.col("_la") - F.col("_lb")) <= max_distance)
+        .filter(band)
         .select("_ida", "_idb")
     )
-    ed = F.levenshtein(F.col("_ta"), F.col("_tb"), max_distance)
+    ed = F.levenshtein(F.col("_t_a"), F.col("_t_b"), max_distance)
     out = (
-        cands.unionByName(short_cands)
-        .distinct()
-        .join(
-            docs.select(F.col(id_col).alias("_ida"), F.col("_t").alias("_ta")),
-            "_ida",
-        )
-        .join(
-            docs.select(F.col(id_col).alias("_idb"), F.col("_t").alias("_tb")),
-            "_idb",
+        _attach_sides(
+            cands.unionByName(short_cands).distinct(), docs, id_col, "_t"
         )
         .withColumn("_ed", ed)
         .filter(F.col("_ed") >= 0)
@@ -1309,7 +1299,6 @@ def containment_pairs(
     *,
     shingle_n: int = 3,
     threshold: float = 0.9,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """X172 EXACT directed n-gram CONTAINMENT near-dup pairs:
     ``containment(A→B) = |sh_A ∩ sh_B| / |sh_A| ≥ t`` with ``A ≠ B`` —
@@ -1319,7 +1308,7 @@ def containment_pairs(
     quote/snippet/subset-duplication case a pretraining dedup pass
     wants flagged separately from symmetric near-dups.
 
-    Same AllPairs/SSJoin prefix-filter machinery as
+    Same AllPairs/SSJoin prefix kernel (``_df_prefix``) as
     :func:`ngram_jaccard_pairs`, adapted to the asymmetric overlap
     bound: ``|A∩B| ≥ α = ⌈t·|A|⌉`` depends on A alone, so only the
     CONTAINED side is prefix-indexed (first ``|A| − α + 1`` grams in
@@ -1327,66 +1316,34 @@ def containment_pairs(
     FULL gram set — the Chaudhuri et al. prefix lemma then guarantees
     every qualifying directed pair shares a (prefix_A, full_B) gram.
     No length filter applies (B may be arbitrarily larger — that is
-    the point). The df-ascending prefix order keeps boilerplate grams
-    out of prefixes, collapsing the Σ prefix_df·df join; the
-    ``max_doc_freq`` valve drops hot grams from the PREFIX index only
-    (recall-trading, verification stays exact), default None = exact.
+    the point).
 
     Verification is integer-exact: ``containment_ppm =
     (1e6 · |A∩B|) div |A|``, compared against ``t`` quantized to ppm —
     no float anywhere. Returns ``(id_a, id_b, containment_ppm)``,
     directed (both directions of a mutual pair release).
     """
-    sets_ = _shingle_sets(df, text_col, id_col, shingle_n)
-    sized = sets_.select(
-        F.col(id_col), F.col("sh"), F.size("sh").alias("_n")
-    ).persist()
-    posts = sized.select(
-        F.col(id_col), F.explode("sh").alias("shingle")
-    )
-    dfreq = posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
+    sized, tokens = _sized_shingles(df, text_col, id_col, shingle_n)
     t_ppm = int(round(threshold * 1_000_000))
     # α = ⌈t·n⌉ in pure integers: (t_ppm·n + 1e6 − 1) div 1e6
     alpha = F.expr(f"cast(({t_ppm} * _n + 999999) div 1000000 as int)")
-    w = Window.partitionBy(id_col).orderBy("_df", "shingle")
-    pref_src = dfreq if max_doc_freq is None else dfreq.filter(
-        F.col("_df") <= max_doc_freq
-    )
-    prefix = (
-        sized.select(
-            F.col(id_col), F.col("_n"), F.explode("sh").alias("shingle")
-        )
-        .join(pref_src, "shingle")
-        .withColumn("_pos", F.row_number().over(w))
-        .filter(F.col("_pos") <= F.col("_n") - alpha + 1)
-        .select(F.col(id_col).alias("_ida"), "shingle")
-    )
+    # not persisted: the prefix has a single consumer, the probe below
+    prefix = _df_prefix(tokens, id_col, F.col("_n") - alpha + 1, "shingle")
     cands = (
-        prefix.join(
-            posts.select(F.col(id_col).alias("_idb"), "shingle"),
-            "shingle",
-        )
+        prefix.select(F.col(id_col).alias("_ida"), "_h")
+        .join(tokens.select(F.col(id_col).alias("_idb"), "_h"), "_h")
         .filter(F.col("_ida") != F.col("_idb"))
         .select("_ida", "_idb")
         .distinct()
     )
-    a_sets = sized.select(
-        F.col(id_col).alias("_ida"),
-        F.col("sh").alias("_sha"),
-        F.col("_n").alias("_na"),
-    )
-    b_sets = sized.select(
-        F.col(id_col).alias("_idb"), F.col("sh").alias("_shb")
-    )
     out = (
-        cands.join(a_sets, "_ida")
-        .join(b_sets, "_idb")
+        _attach_sides(cands, sized, id_col, "sh", "_n")
         .select(
             F.col("_ida").alias("id_a"),
             F.col("_idb").alias("id_b"),
             F.expr(
-                "cast(1000000 * cast(size(array_intersect(_sha, _shb))"
-                " as bigint) div _na as bigint)"
+                "cast(1000000 * cast(size(array_intersect(sh_a, sh_b))"
+                " as bigint) div _n_a as bigint)"
             ).alias("containment_ppm"),
         )
         .filter(F.col("containment_ppm") >= t_ppm)

@@ -27,7 +27,13 @@ from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.functions import masking
-from dbt_gdpr_anonymizer_spark.policy import SERVICES_POLICY, TablePolicy, mask_model
+from dbt_gdpr_anonymizer_spark.policy import (
+    SERVICES_POLICY,
+    TablePolicy,
+    _sql_ident,
+    _sql_str,
+    mask_model,
+)
 
 RAW_COLUMNS = [
     "service_id",
@@ -97,22 +103,18 @@ def _mapping_expr(col, mapping: dict[str, str], default: str):
     parsed CASE is semantically identical (NULL input falls to ELSE in
     both forms). ``col`` is a plain column name string.
 
-    Escaping: Spark SQL string literals process BACKSLASH escapes by
-    default (``'C:\\temp'`` parses as ``C:<TAB>emp``), so backslashes
-    double before quotes do; backticks in the column name double too —
-    otherwise a key/value/name containing either silently changes
-    meaning vs the old ``F.lit`` chain, which compared raw bytes."""
+    Escaping is ``policy._sql_str`` / ``policy._sql_ident``: backslashes
+    double before quotes do (Spark SQL string literals process backslash
+    escapes by default) and backticks in the column name double, so a
+    key/value/name containing either routes exactly as raw bytes."""
     if not mapping:
         return F.lit(default)
-
-    def q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    col_sql = "`" + col.replace("`", "``") + "`"
+    col_sql = _sql_ident(col)
     arms = " ".join(
-        f"WHEN {col_sql} = {q(k)} THEN {q(v)}" for k, v in mapping.items()
+        f"WHEN {col_sql} = {_sql_str(k)} THEN {_sql_str(v)}"
+        for k, v in mapping.items()
     )
-    return F.expr(f"CASE {arms} ELSE {q(default)} END")
+    return F.expr(f"CASE {arms} ELSE {_sql_str(default)} END")
 
 
 def staging(raw: DataFrame) -> DataFrame:

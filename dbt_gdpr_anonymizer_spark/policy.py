@@ -126,7 +126,7 @@ def validate_policy(policy: TablePolicy) -> None:
 def _sql_str(s: str) -> str:
     """Quote a Python string as a Spark SQL literal (backslash escapes are
     live in Spark SQL string literals, so backslashes double before
-    quotes do — same discipline as plans/pipeline._mapping_expr)."""
+    quotes do; plans/pipeline._mapping_expr quotes with it too)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 

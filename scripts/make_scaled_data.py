@@ -6,7 +6,9 @@ scheduling-overhead-bound (r11 driver scaling block: every query's
 wall-clock. This script builds a larger fixture (default 10× sf0.1 ≈ sf1)
 by replicating each FACT table R times with disjoint key ranges —
 replica i adds ``i * 10_000_000`` to every entity key, so joins and
-group-bys keep their selectivity while row counts scale linearly.
+group-bys keep their selectivity while row counts scale linearly. Every
+key must lie in [0, 10_000_000); the script checks this before writing
+anything and fails naming the table and column otherwise.
 Dimension tables (region, nation, part, supplier) are copied once.
 
 Pure pyarrow (no Spark, no randomness — byte-deterministic given the
@@ -42,16 +44,33 @@ FACT_KEYS = {
 }
 
 
+def check_key_range(table: str, tb: pa.Table, keys: list[str]) -> None:
+    """Raise unless every key column lies in [0, OFFSET): replica i shifts
+    keys by i * OFFSET, so a key outside that range collides with a
+    shifted key of another replica."""
+    for k in keys:
+        mm = pc.min_max(tb.column(k))
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if hi is not None and (lo < 0 or hi >= OFFSET):
+            raise ValueError(
+                f"{table}.{k}: keys span [{lo}, {hi}], outside [0, {OFFSET}); "
+                "replicas would collide"
+            )
+
+
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/scaled_sf1"
     r = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+    bases = {t: pq.read_table(f"{src}/{t}.parquet") for t in FACT_KEYS}
+    for t, keys in FACT_KEYS.items():
+        check_key_range(t, bases[t], keys)
     os.makedirs(out, exist_ok=True)
     for t in DIM_TABLES:
         pq.write_table(pq.read_table(f"{src}/{t}.parquet"), f"{out}/{t}.parquet")
         print(f"{t}: copied")
     for t, keys in FACT_KEYS.items():
-        base = pq.read_table(f"{src}/{t}.parquet")
+        base = bases[t]
         parts = []
         for i in range(r):
             tb = base

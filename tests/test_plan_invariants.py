@@ -20,11 +20,16 @@ cluster:
 
 Catching these at plan level keeps a future query edit from silently
 reintroducing an all-pairs join that works at sf0.01 and dies at 100 TB.
+
+The exact similarity joins (one shared prefix kernel in operators/dedup)
+are also pinned to key their candidate joins on the 8-byte token hash
+``_h`` and never to aggregate or join on the gram string.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -217,3 +222,25 @@ def test_no_unbounded_join_in_plan(spark, name):
             f"{name}: unpartitioned Window (single-partition WindowExec "
             f"at scale) outside the bounded-frame allowlist: {hits}"
         )
+
+
+# A join keyed on the token hash, and an aggregate or join keyed on the
+# gram string alone (containment's old groupBy("shingle") + back-join).
+_H_JOIN = re.compile(r"Join \[_h#\d+L?\], \[_h#\d+L?\]")
+_GRAM_AGG = re.compile(r"HashAggregate\(keys=\[(shingle|_gram)#\d+L?\]")
+_GRAM_JOIN = re.compile(r"Join \[(shingle|_gram)#")
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["edit_distance_neardup", "ngram_containment_neardup", "ngram_jaccard_neardup"],
+)
+def test_similarity_joins_key_on_token_hash(spark, name):
+    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
+
+    df = all_queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    release_caches(df)
+    assert _H_JOIN.search(plan), f"{name}: no candidate join on _h"
+    assert not _GRAM_AGG.search(plan), f"{name}: aggregate keyed on the gram"
+    assert not _GRAM_JOIN.search(plan), f"{name}: join keyed on the gram"
