@@ -4,6 +4,9 @@ Every function here maps a ``Column`` (or column name) to a ``Column`` built
 purely from ``pyspark.sql.functions`` — JVM-side, whole-stage-codegen'd, no
 Python in the hot path. Semantics reproduce the reference macros exactly,
 including their quirks (double-space phone mask, NULL-on-empty-string guard).
+The ``*_sql`` functions hold the SQL text of a formula that the publish
+path builds inside one parsed projection (see ``functions/sqltext.py``);
+their ``Column`` forms parse that same text.
 
 Reference parity map (file:line in /root/reference):
     mask_email            dbt_project/macros/privacy/mask_email.sql:30-54
@@ -35,6 +38,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import ANON_EMAIL_DOMAIN
+from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident
 
 __all__ = [
     "mask_email",
@@ -43,6 +47,7 @@ __all__ = [
     "suppress",
     "mask_full_coordinates",
     "create_geohash",
+    "geohash_sql",
     "haversine_distance",
     "extract_country_code",
     "normalize_phone",
@@ -51,6 +56,7 @@ __all__ = [
     "extract_email_domain",
     "are_valid_coordinates",
     "surrogate_key",
+    "surrogate_key_sql",
     "luhn_check",
     "iban_valid",
     "nir_valid",
@@ -120,19 +126,23 @@ def mask_full_coordinates(
     return F.lit(None).cast("double"), F.lit(None).cast("double")
 
 
-def create_geohash(
-    lat: Column | str, lon: Column | str, precision: int = 2
-) -> Column:
-    """Pseudo-geohash ``geo_<round(lat,p)>_<round(lon,p)>``.
+def geohash_sql(lat: str, lon: str, precision: int = 2) -> str:
+    """Pseudo-geohash ``geo_<round(lat,p)>_<round(lon,p)>`` as SQL text
+    over two SQL expressions.
 
     String rendering goes through the decimal cast so both Spark and DuckDB
     format identically (e.g. ``48.86``, with trailing zeros like ``48.90``).
     """
-    la = _col(lat).cast("double").cast(f"decimal(18,{precision})")
-    lo = _col(lon).cast("double").cast(f"decimal(18,{precision})")
-    return F.concat(
-        F.lit("geo_"), la.cast("string"), F.lit("_"), lo.cast("string")
+    la, lo = (
+        f"cast(cast(cast({c} as double) as decimal(18,{precision})) as string)"
+        for c in (lat, lon)
     )
+    return f"concat('geo_', {la}, '_', {lo})"
+
+
+def create_geohash(lat: str, lon: str, precision: int = 2) -> Column:
+    """:func:`geohash_sql` over two column names."""
+    return F.expr(geohash_sql(sql_ident(lat), sql_ident(lon), precision))
 
 
 def haversine_distance(
@@ -201,18 +211,24 @@ def are_valid_coordinates(lat: Column | str, lon: Column | str) -> Column:
     )
 
 
-def surrogate_key(*cols: Column | str) -> Column:
-    """md5 over null-coalesced string casts, dbt_utils-compatible.
+def surrogate_key_sql(*cols: str) -> str:
+    """md5 over null-coalesced string casts, dbt_utils-compatible, as SQL
+    text over SQL expressions.
 
     ``generate_surrogate_key`` coalesces each field to the sentinel below and
     joins multiple fields with ``'-'``.
     """
     parts = [
-        F.coalesce(_col(c).cast("string"), F.lit("_dbt_utils_surrogate_key_null_"))
+        f"coalesce(cast({c} as string), '_dbt_utils_surrogate_key_null_')"
         for c in cols
     ]
-    joined = parts[0] if len(parts) == 1 else F.concat_ws("-", *parts)
-    return F.md5(joined)
+    joined = parts[0] if len(parts) == 1 else f"concat_ws('-', {', '.join(parts)})"
+    return f"md5({joined})"
+
+
+def surrogate_key(*cols: str) -> Column:
+    """:func:`surrogate_key_sql` over column names."""
+    return F.expr(surrogate_key_sql(*map(sql_ident, cols)))
 
 
 def luhn_check(c: Column | str) -> Column:

@@ -14,7 +14,6 @@ import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
@@ -71,11 +70,11 @@ def pii_inventory(
                     else conf.k_anonymity_min,
                 )
             )
-    df = spark.createDataFrame(rows, REPORT_SCHEMA).orderBy(
-        "model_name", "column_name"
-    )
+    # Policy-sized: sorted here, a Spark sort would cost two more jobs.
+    rows.sort(key=lambda r: (r[0], r[1]))
+    df = spark.createDataFrame(rows, REPORT_SCHEMA)
     if with_timestamp:
-        df = df.select("*", F.current_timestamp().alias("report_generated_at"))
+        df = df.selectExpr("*", "current_timestamp() AS report_generated_at")
     return df
 
 

@@ -13,7 +13,7 @@ intermediate layers (the dbt behavior) when an output root is given; at
 cluster scale you would partition those writes by e.g. ``department_code``.
 
 The dept→region and type→label lookups are CASE-chain expressions built from
-mapping dicts (``_mapping_expr``): at their tiny cardinality an expression is
+mapping dicts (``_mapping_sql``): at their tiny cardinality an expression is
 cheaper than even a broadcast join (no exchange, stays inside whole-stage
 codegen), and the mapping stays data (editable, auditable). Swap to a
 ``broadcast()`` lookup join only if a mapping ever grows past a few hundred
@@ -22,18 +22,13 @@ entries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.functions import masking
-from dbt_gdpr_anonymizer_spark.policy import (
-    SERVICES_POLICY,
-    TablePolicy,
-    _sql_ident,
-    _sql_str,
-    mask_model,
-)
+from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident, sql_str
+from dbt_gdpr_anonymizer_spark.policy import SERVICES_POLICY, TablePolicy, mask_model
 
 RAW_COLUMNS = [
     "service_id",
@@ -93,65 +88,47 @@ REGION_MAP = {
 }
 
 
-def _mapping_expr(col, mapping: dict[str, str], default: str):
-    """CASE chain from a mapping dict (kept as expressions: tiny cardinality,
-    avoids even a broadcast for the common enrich path).
+def _mapping_sql(col: str, mapping: dict[str, str], default: str) -> str:
+    """CASE chain SQL text from a mapping dict over column ``col`` (kept as
+    expressions: tiny cardinality, avoids even a broadcast for the common
+    enrich path). NULL input falls to ELSE.
 
-    Built as ONE parsed SQL string, not chained ``F.when()`` calls: each
-    ``when`` is a py4j round trip, and the three pipeline maps total ~50
-    entries — ~0.2 s of socket chatter per query build, measured. The
-    parsed CASE is semantically identical (NULL input falls to ELSE in
-    both forms). ``col`` is a plain column name string.
-
-    Escaping is ``policy._sql_str`` / ``policy._sql_ident``: backslashes
-    double before quotes do (Spark SQL string literals process backslash
-    escapes by default) and backticks in the column name double, so a
-    key/value/name containing either routes exactly as raw bytes."""
+    Quoting is ``sqltext.sql_str`` / ``sqltext.sql_ident``, so a key, value
+    or column name containing backslashes, quotes or backticks routes
+    exactly as raw bytes under either ``escapedStringLiterals`` setting."""
+    default_sql = sql_str(default)
     if not mapping:
-        return F.lit(default)
-    col_sql = _sql_ident(col)
+        return default_sql
+    c = sql_ident(col)
     arms = " ".join(
-        f"WHEN {col_sql} = {_sql_str(k)} THEN {_sql_str(v)}"
-        for k, v in mapping.items()
+        f"WHEN {c} = {sql_str(k)} THEN {sql_str(v)}" for k, v in mapping.items()
     )
-    return F.expr(f"CASE {arms} ELSE {_sql_str(default)} END")
+    return f"CASE {arms} ELSE {default_sql} END"
+
+
+# The layers are built as parsed SQL text (see the note in policy.py).
+_TYPED = {
+    "latitude": "cast(latitude as double) AS latitude",
+    "longitude": "cast(longitude as double) AS longitude",
+    "last_updated": "cast(last_updated as date) AS last_updated",
+}
 
 
 def staging(raw: DataFrame) -> DataFrame:
     """Clean + type the raw seed (stg_services_publics.sql:39-95)."""
-    df = raw.select(
-        "service_id",
-        "service_name",
-        "parent_organization",
-        "organization_type",
-        "contact_email",
-        "contact_phone",
-        "website",
-        "street_address",
-        "postal_code",
-        "city",
-        "commune",
-        F.col("latitude").cast("double").alias("latitude"),
-        F.col("longitude").cast("double").alias("longitude"),
-        "insee_code",
-        F.col("last_updated").cast("date").alias("last_updated"),
-        F.current_timestamp().alias("loaded_at"),
-    ).filter(F.col("service_id").isNotNull() & F.col("service_name").isNotNull())
-    flagged = df.select(
-        masking.surrogate_key("service_id").alias("service_key"),
+    df = raw.selectExpr(
+        *[_TYPED.get(c, c) for c in RAW_COLUMNS],
+        "current_timestamp() AS loaded_at",
+    ).filter("service_id IS NOT NULL AND service_name IS NOT NULL")
+    return df.selectExpr(
+        f"{masking.surrogate_key_sql('service_id')} AS service_key",
         "*",
-        F.when(F.col("contact_email").isNotNull(), 1).otherwise(0).alias("has_email"),
-        F.when(F.col("contact_phone").isNotNull(), 1).otherwise(0).alias("has_phone"),
-        F.when(F.col("street_address").isNotNull(), 1)
-        .otherwise(0)
-        .alias("has_address"),
-        F.when(
-            F.col("latitude").isNotNull() & F.col("longitude").isNotNull(), 1
-        )
-        .otherwise(0)
-        .alias("has_coordinates"),
+        "CASE WHEN contact_email IS NOT NULL THEN 1 ELSE 0 END AS has_email",
+        "CASE WHEN contact_phone IS NOT NULL THEN 1 ELSE 0 END AS has_phone",
+        "CASE WHEN street_address IS NOT NULL THEN 1 ELSE 0 END AS has_address",
+        "CASE WHEN latitude IS NOT NULL AND longitude IS NOT NULL THEN 1 ELSE 0 END"
+        " AS has_coordinates",
     )
-    return flagged
 
 
 def anonymize(
@@ -175,34 +152,33 @@ def anonymize(
         conf,
         compat_aggregate_to_city_passthrough=compat_aggregate_to_city_passthrough,
     )
-    return masked.select(
+    return masked.selectExpr(
         "*",
-        F.current_timestamp().alias("anonymized_at"),
-        F.lit(conf.project_version).alias("anonymization_version"),
-        F.lit(f"round_{conf.gps_precision}_decimals").alias(
-            "gps_anonymization_method"
-        ),
+        "current_timestamp() AS anonymized_at",
+        f"{sql_str(conf.project_version)} AS anonymization_version",
+        f"{sql_str(f'round_{conf.gps_precision}_decimals')}"
+        " AS gps_anonymization_method",
     )
 
 
 def enrich(anon: DataFrame, conf: EngineSettings | None = None) -> DataFrame:
     """Business enrichment (int_services_enriched.sql:35-99)."""
     conf = conf or settings()
-    return anon.select(
+    category = _mapping_sql(
+        "organization_type_anon", ORGANIZATION_CATEGORY_MAP, "autres"
+    )
+    geohash = masking.geohash_sql(
+        "latitude_anon", "longitude_anon", conf.gps_precision
+    )
+    return anon.selectExpr(
         "*",
-        _mapping_expr(
-            "organization_type_anon", ORGANIZATION_CATEGORY_MAP, "autres"
-        ).alias("organization_category"),
-        F.substring(F.col("postal_code_anon"), 1, 2).alias("department_code_anon"),
-        masking.create_geohash(
-            "latitude_anon", "longitude_anon", conf.gps_precision
-        ).alias("geohash_anon"),
-        F.when(F.col("contact_email_anon").like("%@anonymized.gouv.fr"), 1)
-        .otherwise(0)
-        .alias("is_email_properly_anonymized"),
-        F.when(F.col("contact_phone_anon").like("%XX XX XX XX"), 1)
-        .otherwise(0)
-        .alias("is_phone_properly_anonymized"),
+        f"{category} AS organization_category",
+        "substring(postal_code_anon, 1, 2) AS department_code_anon",
+        f"{geohash} AS geohash_anon",
+        "CASE WHEN contact_email_anon LIKE '%@anonymized.gouv.fr' THEN 1 ELSE 0 END"
+        " AS is_email_properly_anonymized",
+        "CASE WHEN contact_phone_anon LIKE '%XX XX XX XX' THEN 1 ELSE 0 END"
+        " AS is_phone_properly_anonymized",
     )
 
 
@@ -210,56 +186,53 @@ def mart(enriched: DataFrame, conf: EngineSettings | None = None) -> DataFrame:
     """Open-data mart: rename *_anon -> clean, region mapping, quality filter
     (mart_services_open_data.sql:37-146)."""
     conf = conf or settings()
-    completeness = (
-        F.col("has_email_anon").cast("int")
-        + F.col("has_phone_anon").cast("int")
-        + F.col("has_address_anon").cast("int")
-        + F.col("has_coordinates_anon").cast("int")
+
+    def renamed(*cols: str) -> list[str]:
+        return [f"{c}_anon AS {c}" for c in cols]
+
+    completeness = " + ".join(
+        f"cast({c}_anon as int)"
+        for c in ("has_email", "has_phone", "has_address", "has_coordinates")
     )
-    df = enriched.select(
-        F.col("service_id_anon").alias("service_id"),
-        F.col("service_name_anon").alias("service_name"),
-        F.col("parent_organization_anon").alias("parent_organization"),
-        F.col("organization_type_anon").alias("organization_type"),
-        _mapping_expr(
-            "organization_type_anon", ORGANIZATION_TYPE_LABELS, "Autre"
-        ).alias("organization_type_label"),
-        F.col("contact_email_anon").alias("contact_email"),
-        F.col("contact_phone_anon").alias("contact_phone"),
-        F.col("city_anon").alias("city"),
-        F.col("commune_anon").alias("commune"),
-        F.col("department_code_anon").alias("department_code"),
-        _mapping_expr(
-            "department_code_anon", REGION_MAP, "Autre région"
-        ).alias("region"),
-        F.col("latitude_anon").alias("latitude"),
-        F.col("longitude_anon").alias("longitude"),
-        F.col("geohash_anon").alias("geohash"),
-        F.col("insee_code_anon").alias("insee_code"),
-        F.col("postal_code_anon").alias("postal_code"),
-        F.col("has_email_anon").alias("has_email"),
-        F.col("has_phone_anon").alias("has_phone"),
-        F.col("has_address_anon").alias("has_address"),
-        F.col("has_coordinates_anon").alias("has_coordinates"),
-        completeness.alias("data_completeness_score"),
-        F.when(completeness >= 3, "Complet")
-        .when(completeness == 2, "Partiel")
-        .otherwise("Minimal")
-        .alias("data_quality_level"),
-        F.col("last_updated_anon").alias("last_updated"),
-        F.col("anonymized_at"),
-        F.current_timestamp().alias("mart_created_at"),
-        F.col("anonymization_version"),
-        F.concat(F.lit("GDPR Anonymizer v"), F.col("anonymization_version")).alias(
-            "processing_pipeline"
+    label = _mapping_sql(
+        "organization_type_anon", ORGANIZATION_TYPE_LABELS, "Autre"
+    )
+    region = _mapping_sql("department_code_anon", REGION_MAP, "Autre région")
+    df = enriched.selectExpr(
+        *renamed(
+            "service_id", "service_name", "parent_organization", "organization_type"
         ),
-        F.lit("Conforme GDPR - Art. 4.5 (Pseudonymisation)").alias("legal_status"),
-        F.lit("Licence Ouverte / Open Licence").alias("license"),
+        f"{label} AS organization_type_label",
+        *renamed(
+            "contact_email", "contact_phone", "city", "commune", "department_code"
+        ),
+        f"{region} AS region",
+        *renamed(
+            "latitude",
+            "longitude",
+            "geohash",
+            "insee_code",
+            "postal_code",
+            "has_email",
+            "has_phone",
+            "has_address",
+            "has_coordinates",
+        ),
+        f"{completeness} AS data_completeness_score",
+        f"CASE WHEN {completeness} >= 3 THEN 'Complet'"
+        f" WHEN {completeness} = 2 THEN 'Partiel'"
+        " ELSE 'Minimal' END AS data_quality_level",
+        "last_updated_anon AS last_updated",
+        "anonymized_at",
+        "current_timestamp() AS mart_created_at",
+        "anonymization_version",
+        "concat('GDPR Anonymizer v', anonymization_version) AS processing_pipeline",
+        "'Conforme GDPR - Art. 4.5 (Pseudonymisation)' AS legal_status",
+        "'Licence Ouverte / Open Licence' AS license",
     )
     return df.filter(
-        F.col("service_name").isNotNull()
-        & F.col("organization_type").isNotNull()
-        & (F.col("data_completeness_score") >= 1)
+        "service_name IS NOT NULL AND organization_type IS NOT NULL"
+        " AND data_completeness_score >= 1"
     )
 
 
@@ -325,7 +298,14 @@ def run_pipeline(
             if parts:
                 w = w.partitionBy(*parts)
             w.parquet(path)
-            return spark.read.parquet(path)
+            if parts:  # partition columns are re-typed from directory names
+                return spark.read.parquet(path)
+            # The written schema made nullable is what inference would
+            # find (the layers are flat); passing it skips the inference job.
+            schema = T.StructType(
+                [T.StructField(f.name, f.dataType, True, f.metadata) for f in df.schema]
+            )
+            return spark.read.schema(schema).parquet(path)
         return df
 
     # D4 run hooks: each layer's jobs carry a description in the Spark UI /

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.functions import masking
+from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident, sql_str
 
 
 @dataclass(frozen=True)
@@ -123,72 +124,59 @@ def validate_policy(policy: TablePolicy) -> None:
         )
 
 
-def _sql_str(s: str) -> str:
-    """Quote a Python string as a Spark SQL literal (backslash escapes are
-    live in Spark SQL string literals, so backslashes double before
-    quotes do; plans/pipeline._mapping_expr quotes with it too)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_ident(name: str) -> str:
-    """Backtick-quote a column name for Spark SQL."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-# r12 (py4j plan-build floor, measured r9-r11: mask_model's per-column
-# Column chains cost ~0.16 s of driver socket chatter per mart_pipeline
-# build, scale-invariant): the four reference methods' expressions are
-# built as ONE parsed ``F.expr`` each instead of 8-12 chained F.* calls.
-# Each template is the EXACT SQL form of the previous Column chain — the
-# same null/empty guard (CASE with no ELSE releases the same typed NULL
-# the old .otherwise(lit(None)) did), the same decimal-cast rounding,
-# the same sha2/substring shapes — verified hash-identical on every
-# consumer query at 3 SFs. Methods outside the hot path (generalize,
-# fpe_digits HOF, the FF1 UDF) keep their Column builders. Registry
-# functions take the column NAME (the F.expr templates need the
-# identifier, not a Column object).
+# Wide projections are built as parsed SQL text, one string per output
+# column with the alias inside it (functions/sqltext.py): in PySpark 4.1
+# ``F.col`` costs 13 py4j commands and ``F.col(c).alias(n)`` 24, while one
+# ``selectExpr`` of n strings costs about n + 5. r12 measured mask_model's
+# per-column Column chains at ~0.16 s of driver socket chatter per
+# mart_pipeline build; as one selectExpr the build cost no longer grows
+# with the column count. The four reference methods, the pass-through and
+# the ``AS {name}_anon`` alias are therefore SQL text. Each template is
+# the EXACT SQL form of the former Column chain — the same null/empty
+# guard (CASE with no ELSE releases the same typed NULL the old
+# .otherwise(lit(None)) did), the same decimal-cast rounding, the same
+# sha2/substring shapes — verified hash-identical on every consumer query
+# at 3 SFs. Extension methods that only exist as Columns (generalize, the
+# fpe_digits HOF, the FF1 UDF) keep their Column builders; a model using
+# one is projected with ``select`` and its SQL columns parsed one by one.
+# Registry functions take the column NAME and return SQL text or a Column.
 def _method_registry(
     conf: EngineSettings, city_column: str | None
-) -> dict[str, Callable[[str], Column]]:
-    def guarded(col_sql: str, masked_sql: str) -> Column:
-        return F.expr(
-            f"CASE WHEN {col_sql} IS NOT NULL AND {col_sql} != '' "
-            f"THEN {masked_sql} END"
-        )
+) -> dict[str, Callable[[str], str | Column]]:
+    from dbt_gdpr_anonymizer_spark.config import ANON_EMAIL_DOMAIN
 
-    def mask_partial(c: str) -> Column:
-        cs = _sql_ident(c)
+    salt = sql_str(conf.salt_key)
+    dom = sql_str("@" + ANON_EMAIL_DOMAIN)
+    p = int(conf.gps_precision)
+
+    def guarded(c: str, masked_sql: str) -> str:
+        return f"CASE WHEN {c} IS NOT NULL AND {c} != '' THEN {masked_sql} END"
+
+    def mask_partial(c: str) -> str:
+        cs = sql_ident(c)
         return guarded(
             cs, f"concat(substring(trim({cs}), 1, 6), ' XX XX XX XX')"
         )
 
-    def hash_sha256(c: str) -> Column:
-        cs = _sql_ident(c)
-        salt = _sql_str(conf.salt_key)
-        from dbt_gdpr_anonymizer_spark.config import ANON_EMAIL_DOMAIN
-
-        dom = _sql_str("@" + ANON_EMAIL_DOMAIN)
+    def hash_sha256(c: str) -> str:
+        cs = sql_ident(c)
         return guarded(
             cs,
             "concat('user_', substring(sha2(concat(lower(trim("
             f"{cs})), {salt}), 256), 1, 16), {dom})",
         )
 
-    def round_dec(c: str) -> Column:
-        cs = _sql_ident(c)
-        p = int(conf.gps_precision)
-        return F.expr(
-            f"cast(cast(cast({cs} as double) as decimal(18,{p})) as double)"
-        )
+    def round_dec(c: str) -> str:
+        cs = sql_ident(c)
+        return f"cast(cast(cast({cs} as double) as decimal(18,{p})) as double)"
 
+    city = sql_ident(city_column) if city_column else "cast(null as string)"
     return {
-        "mask_partial": lambda c: mask_partial(c),
-        "hash_sha256": lambda c: hash_sha256(c),
-        "round_2_decimals": lambda c: round_dec(c),
-        "suppress": lambda c: F.expr("cast(null as string)"),
-        "aggregate_to_city": lambda c: (
-            F.col(city_column) if city_column else F.lit(None).cast("string")
-        ),
+        "mask_partial": mask_partial,
+        "hash_sha256": hash_sha256,
+        "round_2_decimals": round_dec,
+        "suppress": lambda c: "cast(null as string)",
+        "aggregate_to_city": lambda c: city,
         # extension beyond the reference's four methods: temporal
         # generalization (precision reduction for dates, the counterpart
         # of round_2_decimals for coordinates)
@@ -215,6 +203,26 @@ def _ff1_method(conf: EngineSettings) -> Callable[[Column], Column]:
     return lambda c: udf(F.col(c))
 
 
+def _masked(
+    name: str,
+    policy: ColumnPolicy | None,
+    registry: dict[str, Callable[[str], str | Column]],
+    compat_aggregate_to_city_passthrough: bool,
+) -> str | Column:
+    """One column's masked expression aliased ``{name}_anon``: SQL text
+    for the reference methods and the pass-through, a Column for the
+    Column-only extension methods."""
+    method = policy.anonymization_method if policy else None
+    if method == "aggregate_to_city" and compat_aggregate_to_city_passthrough:
+        method = None  # reference behavior: no branch -> pass-through
+    fn = registry.get(method or "")
+    out = fn(name) if fn else sql_ident(name)
+    alias = f"{name}_anon"
+    if isinstance(out, str):
+        return f"{out} AS {sql_ident(alias)}"
+    return out.alias(alias)
+
+
 def mask_column(
     name: str,
     policy: ColumnPolicy | None,
@@ -222,24 +230,17 @@ def mask_column(
     *,
     city_column: str | None = None,
     compat_aggregate_to_city_passthrough: bool = False,
-    registry: dict[str, Callable[[str], Column]] | None = None,
 ) -> Column:
     """Dispatch one column through its anonymization method (M6).
 
     Unknown/missing methods pass through; every result is aliased
-    ``{name}_anon`` exactly like the reference dispatcher. ``registry``
-    lets a model-level caller build the method registry ONCE instead of
-    per column (r12: each registry build constructs the FF1 pandas UDF —
-    measured as the dominant per-column dispatch cost).
+    ``{name}_anon`` exactly like the reference dispatcher. A whole model
+    goes through ``mask_model``, which builds the method registry once
+    (r12: each registry build constructs the FF1 pandas UDF).
     """
-    method = policy.anonymization_method if policy else None
-    if method == "aggregate_to_city" and compat_aggregate_to_city_passthrough:
-        method = None  # reference behavior: no branch -> pass-through
-    if registry is None:
-        registry = _method_registry(conf, city_column)
-    fn = registry.get(method or "")
-    out = fn(name) if fn else F.col(name)
-    return out.alias(f"{name}_anon")
+    registry = _method_registry(conf, city_column)
+    out = _masked(name, policy, registry, compat_aggregate_to_city_passthrough)
+    return F.expr(out) if isinstance(out, str) else out
 
 
 def mask_model(
@@ -255,26 +256,27 @@ def mask_model(
 
     Column set and order come from the physical DataFrame (``df.columns``),
     mirroring the reference's ``adapter.get_columns_in_relation`` — columns
-    absent from the policy still flow through (renamed ``_anon``).
+    absent from the policy still flow through (renamed ``_anon``). With
+    only SQL-text methods in use the projection is one ``selectExpr``.
     """
     conf = conf or settings()
     if validate:
         validate_policy(policy)
-    city = city_column if city_column in df.columns else None
+    columns = df.columns
+    city = city_column if city_column in columns else None
     registry = _method_registry(conf, city)  # once, not per column (r12)
-    return df.select(
-        [
-            mask_column(
-                name,
-                policy.columns.get(name),
-                conf,
-                city_column=city,
-                compat_aggregate_to_city_passthrough=compat_aggregate_to_city_passthrough,
-                registry=registry,
-            )
-            for name in df.columns
-        ]
-    )
+    exprs = [
+        _masked(
+            name,
+            policy.columns.get(name),
+            registry,
+            compat_aggregate_to_city_passthrough,
+        )
+        for name in columns
+    ]
+    if all(isinstance(e, str) for e in exprs):
+        return df.selectExpr(*exprs)
+    return df.select([F.expr(e) if isinstance(e, str) else e for e in exprs])
 
 
 # The reference's canonical staging policy (schema.yml:49-154), reusable in

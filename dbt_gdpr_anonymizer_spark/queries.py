@@ -307,7 +307,7 @@ def geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
-        masking.create_geohash(_lat_col(), _lon_col()).alias("geohash"),
+        F.expr(masking.geohash_sql(_LAT_SQL, _LON_SQL)).alias("geohash"),
     )
 
 

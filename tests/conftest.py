@@ -80,3 +80,20 @@ def unpartitioned_windows(df) -> list[str]:
         return acc
 
     return walk(df._jdf.queryExecution().optimizedPlan(), [])
+
+
+@pytest.fixture
+def literal_modes(spark):
+    """Call to iterate over both ``spark.sql.parser.escapedStringLiterals``
+    settings (set on the session while each is yielded); the setting is
+    unset afterwards. SQL text must be built inside the loop: it is
+    parsed when built."""
+    key = "spark.sql.parser.escapedStringLiterals"
+
+    def modes():
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            yield value
+
+    yield modes
+    spark.conf.unset(key)

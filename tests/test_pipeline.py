@@ -5,6 +5,8 @@ from __future__ import annotations
 import datetime
 import hashlib
 
+import pytest
+
 from dbt_gdpr_anonymizer_spark.config import EngineSettings
 from dbt_gdpr_anonymizer_spark.operators.validate import (
     assert_no_pii_in_mart,
@@ -206,28 +208,107 @@ def test_generic_schema_tests_vocabulary(spark):
     }
 
 
-def test_mapping_expr_escaping(spark):
+def test_mapping_expr_escaping(spark, literal_modes):
     """Mapping keys/values with backslashes and quotes, and column
-    names with backticks, must route exactly (the parsed-SQL rewrite
-    must match the old F.lit chain's raw-byte comparison)."""
+    names with backticks, must route exactly as raw bytes under both
+    ``escapedStringLiterals`` settings."""
     from pyspark.sql import functions as F
 
-    from dbt_gdpr_anonymizer_spark.plans.pipeline import _mapping_expr
+    from dbt_gdpr_anonymizer_spark.plans.pipeline import _mapping_sql
 
     df = spark.createDataFrame(
         [("C:\\temp",), ("don't",), ("plain",), (None,)], ["od`d"]
     )
     m = {"C:\\temp": "bs\\v", "don't": "quo'te", "plain": "ok"}
-    got = {
-        r[0]: r.v
-        for r in df.select(
-            F.expr("`od``d`").alias("k"),
-            _mapping_expr("od`d", m, "MISS").alias("v"),
-        ).collect()
-    }
-    assert got == {
-        "C:\\temp": "bs\\v",
-        "don't": "quo'te",
-        "plain": "ok",
-        None: "MISS",
-    }
+    for _ in literal_modes():
+        got = {
+            r[0]: r.v
+            for r in df.select(
+                F.expr("`od``d`").alias("k"),
+                F.expr(_mapping_sql("od`d", m, "MISS")).alias("v"),
+            ).collect()
+        }
+        assert got == {
+            "C:\\temp": "bs\\v",
+            "don't": "quo'te",
+            "plain": "ok",
+            None: "MISS",
+        }
+
+
+def test_layer_reread_schema_matches_inferred(spark, ci_raw, tmp_path):
+    """run_pipeline re-reads each written layer with the written schema
+    made nullable; that must be exactly what parquet inference finds,
+    and the rows must be the same."""
+    ls = pipeline.run_pipeline(ci_raw, conf=CONF, output_root=str(tmp_path))
+    for name in ("anonymized", "enriched", "mart"):
+        inferred = spark.read.parquet(str(tmp_path / name))
+        assert ls[name].schema == inferred.schema, name
+        assert all(f.nullable for f in ls[name].schema.fields), name
+        assert sorted(map(repr, ls[name].collect())) == sorted(
+            map(repr, inferred.collect())
+        ), name
+
+
+@pytest.mark.parametrize(
+    "extra", ["remarque_é", "remarque`é"], ids=["non_ascii", "backtick"]
+)
+def test_gate_failing_path(spark, ci_raw, tmp_path, literal_modes, extra):
+    """A mart with one planted un-hashed email, unmasked +33 phone, street
+    address and 3-decimal coordinate, plus an extra string column (a
+    non-ASCII name, with or without a backtick) holding an email: every
+    count is exact under both literal settings, and the gate fails and
+    stores the failing rows."""
+    from pyspark.sql import functions as F
+
+    from dbt_gdpr_anonymizer_spark.operators.validate import (
+        run_validation_gate,
+        validate,
+    )
+
+    ls = layers(ci_raw)
+    mart = ls["mart"].withColumn(extra, F.lit(None).cast("string"))
+    planted = spark.createDataFrame(
+        [
+            (
+                "leak1@example.fr",
+                "+33 1 23 45 67 89",
+                "12 rue de la Paix",
+                48.857,
+                2.35,
+                "owner@example.com",
+            )
+        ],
+        ["contact_email", "contact_phone", "city", "latitude", "longitude", extra],
+    )
+    first = ls["mart"].limit(1).drop(*planted.columns[:-1])
+    mart = mart.unionByName(first.crossJoin(planted))
+    for _ in literal_modes():
+        report = validate(ls["enriched"], mart, k=1)
+        assert report["pii_violations"] == 3
+        assert report["pii_scan_detail"] == {
+            "scan__contact_email__non_anonymized_email": 1,
+            "scan__contact_phone__unmasked_fr_phone": 1,
+            "scan__city__street_address": 1,
+            f"scan__{extra}__non_anonymized_email": 1,
+        }
+        assert report["pii_scan_hits"] == 4
+        assert report["passed"] is False
+    out = tmp_path / "test_results"
+    assert run_validation_gate(ls["enriched"], mart, k=1, failures_root=str(out)) == 1
+    rows = spark.read.parquet(str(out / "assert_no_pii_in_mart")).collect()
+    assert sorted((r.column_name, r.value) for r in rows) == [
+        ("contact_email", "leak1@example.fr"),
+        ("contact_phone", "+33 1 23 45 67 89"),
+        ("latitude/longitude", "48.857, 2.35"),
+    ]
+    scan = spark.read.parquet(str(out / "pii_scan")).collect()
+    assert sorted((r.column_name, r.issue_type, r.value) for r in scan) == sorted(
+        [
+            ("contact_email", "non_anonymized_email", "leak1@example.fr"),
+            ("contact_phone", "unmasked_fr_phone", "+33 1 23 45 67 89"),
+            ("city", "street_address", "12 rue de la Paix"),
+            (extra, "non_anonymized_email", "owner@example.com"),
+        ]
+    )
+    assert not (out / "k_anonymity").exists()

@@ -24,6 +24,10 @@ reintroducing an all-pairs join that works at sf0.01 and dies at 100 TB.
 The exact similarity joins (one shared prefix kernel in operators/dedup)
 are also pinned to key their candidate joins on the 8-byte token hash
 ``_h`` and never to aggregate or join on the gram string.
+
+The publish path's wide builds (the validation gate's fused aggregate
+and ``mask_model``'s projection) are pinned to a driver cost, counted in
+py4j commands, that barely grows with the column count.
 """
 
 from __future__ import annotations
@@ -244,3 +248,72 @@ def test_similarity_joins_key_on_token_hash(spark, name):
     assert _H_JOIN.search(plan), f"{name}: no candidate join on _h"
     assert not _GRAM_AGG.search(plan), f"{name}: aggregate keyed on the gram"
     assert not _GRAM_JOIN.search(plan), f"{name}: join keyed on the gram"
+
+
+def _py4j_commands(monkeypatch, fn) -> int:
+    """py4j commands this thread sends while ``fn()`` runs, not counting
+    the reference releases that Python garbage collection sends whenever
+    it runs."""
+    import threading
+
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    caller = threading.get_ident()
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.get_ident() == caller and not command.startswith(release):
+            sent[0] += 1
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counted)
+        fn()
+    return sent[0]
+
+
+# Extra columns per build -> the most py4j commands they may add in
+# total: the gate's scan counts travel as one array column (flat), and
+# mask_model's selectExpr ships one string per column (about one command
+# each). Built from chained Column calls they cost ~100 and ~20 per column.
+_WIDE_BUILD_BOUND = {"validate": 10, "mask_model": 2 * 35}
+
+
+@pytest.mark.parametrize("build", sorted(_WIDE_BUILD_BOUND))
+def test_wide_build_cost_is_flat_in_column_count(spark, monkeypatch, build):
+    from dbt_gdpr_anonymizer_spark.config import EngineSettings
+    from dbt_gdpr_anonymizer_spark.operators.validate import validate
+    from dbt_gdpr_anonymizer_spark.policy import SERVICES_POLICY, mask_model
+
+    # 5 string columns (validate) / the 5 policy columns (mask_model),
+    # then 35 more pass-through string columns.
+    base = {
+        "validate": "contact_email string, contact_phone string, "
+        "contact_email_anon string, contact_phone_anon string, "
+        "organization_category string, latitude double, longitude double, "
+        "latitude_anon double, longitude_anon double",
+        "mask_model": "contact_email string, contact_phone string, "
+        "street_address string, latitude double, longitude double",
+    }[build]
+    conf = EngineSettings(salt_key="unit_salt_for_build_cost")
+
+    def frame(extra: int):
+        ddl = base + "".join(f", x{i} string" for i in range(extra))
+        return spark.createDataFrame([], ddl)
+
+    def run(df):
+        if build == "validate":
+            validate(df, df)
+        else:
+            mask_model(df, SERVICES_POLICY, conf)
+
+    frames = {extra: frame(extra) for extra in (0, 35)}
+    run(frames[0])  # warm-up: first-call imports and JVM class loading
+    cost = {
+        extra: min(_py4j_commands(monkeypatch, lambda: run(df)) for _ in range(3))
+        for extra, df in frames.items()
+    }
+    assert cost[35] - cost[0] <= _WIDE_BUILD_BOUND[build], cost

@@ -116,3 +116,62 @@ models:
     assert out["contact_email_anon"].endswith("@anonymized.gouv.fr")
     assert out["latitude_anon"] == 48.86
     assert out["city_anon"] == "Paris"
+
+
+def test_mask_model_salt_quoting(spark, literal_modes):
+    """A salt holding a backslash and a quote hashes as its raw bytes
+    under both ``escapedStringLiterals`` settings."""
+    import hashlib
+
+    conf = EngineSettings(salt_key="s\\a'lt\\'")
+    df = spark.createDataFrame([(" A@B.fr ",)], ["contact_email"])
+    digest = hashlib.sha256(("a@b.fr" + conf.salt_key).encode()).hexdigest()
+    for _ in literal_modes():
+        row = mask_model(df, SERVICES_POLICY, conf).collect()[0]
+        assert row.contact_email_anon == f"user_{digest[:16]}@anonymized.gouv.fr"
+
+
+def test_pii_inventory_sorted_and_exported(spark, tmp_path):
+    """Policies passed out of name order give rows ordered by
+    (model_name, column_name); the exported JSON is those rows."""
+    import json
+
+    from dbt_gdpr_anonymizer_spark.operators.report import (
+        export_report,
+        pii_inventory,
+    )
+
+    def pol(name, *cols):
+        return TablePolicy(
+            name=name,
+            columns={
+                c: ColumnPolicy(pii=True, pii_type="t", anonymization_method="suppress")
+                for c in cols
+            },
+        )
+
+    conf = EngineSettings(
+        salt_key="x", data_owner="DPO", retention_days_default=30, k_anonymity_min=5
+    )
+    inv = pii_inventory(
+        spark, [pol("z_model", "b", "a"), pol("a_model", "é", "c")], conf,
+        with_timestamp=False,
+    )
+    export_report(inv, str(tmp_path), formats=("json",))
+    expected = [
+        {
+            "model_name": m,
+            "column_name": c,
+            "pii_type": "t",
+            "anonymization_method": "suppress",
+            "data_owner": "DPO",
+            "legal_basis": None,
+            "retention_days": 30,
+            "k_anonymity_target": 5,
+        }
+        for m, c in [("a_model", "c"), ("a_model", "é"), ("z_model", "a"), ("z_model", "b")]
+    ]
+    assert [r.asDict() for r in inv.collect()] == expected
+    assert (tmp_path / "pii_report.json").read_text() == json.dumps(
+        expected, indent=2, ensure_ascii=False
+    )
