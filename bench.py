@@ -271,10 +271,12 @@ class _ScaleSignal:
     with id greater than the last snapshot" is exactly the query's own
     traffic — including jobs launched from streaming micro-batch threads,
     which thread-local job groups would miss. Reads the same store the
-    UI/REST API serve; store eviction (spark.ui.retainedStages, default
-    1000) only ever drops stages OLDER than a snapshot boundary, so
-    deltas stay exact for any query launching < 1000 stages. Failures
-    degrade to None — instrumentation must never fail the bench."""
+    UI/REST API serve. The store evicts its oldest stages past
+    spark.ui.retainedStages (default 1000); if a stage launched since the
+    snapshot is gone, the retained ids above the snapshot no longer run
+    contiguously from it and the delta is None, not an undercount.
+    Failures degrade to None — instrumentation must never fail the
+    bench."""
 
     def __init__(self, spark):
         self._store = spark.sparkContext._jsc.sc().statusStore()
@@ -313,6 +315,10 @@ class _ScaleSignal:
             new_stages = [
                 s for s in self._stages() if s.stageId() > self._max_stage
             ]
+            ids = sorted(s.stageId() for s in new_stages)
+            first = self._max_stage + 1
+            if ids != list(range(first, first + len(ids))):
+                return None  # evicted since the snapshot
             n_jobs = sum(
                 1 for j in self._jobs() if j.jobId() > self._max_job
             )

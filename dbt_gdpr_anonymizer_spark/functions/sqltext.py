@@ -10,6 +10,12 @@ helpers.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+from pyspark.sql import SparkSession
+
+REGEX_NAMES_CONF = "spark.sql.parser.quotedRegexColumnNames"
+
 
 def sql_str(s: str) -> str:
     """Quote a Python string as a Spark SQL string expression.
@@ -31,3 +37,20 @@ def sql_str(s: str) -> str:
 def sql_ident(name: str) -> str:
     """Backtick-quote a column name (backticks double)."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def check_quoted_names(spark: SparkSession, names: Iterable[str]) -> None:
+    """Raise if the parser would read a quoted column name as a regex.
+
+    With ``spark.sql.parser.quotedRegexColumnNames=true`` a backtick-quoted
+    name holding any character but a letter, digit or ``_`` parses as a
+    column regex, which does not resolve inside an expression or under an
+    alias. Text built with :func:`sql_ident` then cannot name the column,
+    so fail up front and name the setting and the columns.
+    """
+    odd = [n for n in names if not all(c.isalnum() or c == "_" for c in n)]
+    if odd and spark.conf.get(REGEX_NAMES_CONF, "false").lower() == "true":
+        raise ValueError(
+            f"{REGEX_NAMES_CONF}=true parses the quoted column names {odd} "
+            "as regexes; set it to false or rename the columns"
+        )

@@ -27,12 +27,16 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.functions import masking
-from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident, sql_str
+from dbt_gdpr_anonymizer_spark.functions.sqltext import (
+    check_quoted_names,
+    sql_ident,
+    sql_str,
+)
 
 
 @dataclass(frozen=True)
@@ -238,6 +242,8 @@ def mask_column(
     goes through ``mask_model``, which builds the method registry once
     (r12: each registry build constructs the FF1 pandas UDF).
     """
+    names = [name] + ([city_column] if city_column else [])
+    check_quoted_names(SparkSession.active(), names)
     registry = _method_registry(conf, city_column)
     out = _masked(name, policy, registry, compat_aggregate_to_city_passthrough)
     return F.expr(out) if isinstance(out, str) else out
@@ -263,6 +269,7 @@ def mask_model(
     if validate:
         validate_policy(policy)
     columns = df.columns
+    check_quoted_names(df.sparkSession, columns)
     city = city_column if city_column in columns else None
     registry = _method_registry(conf, city)  # once, not per column (r12)
     exprs = [

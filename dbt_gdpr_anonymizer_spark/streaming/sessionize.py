@@ -166,6 +166,24 @@ _OUT_SCHEMA = (
 _STATE_SCHEMA = "start bigint, last bigint, n bigint"
 
 
+def _emit_sessions(user_id: int, rows: list) -> "pd.DataFrame":
+    """One output frame for ``rows`` of (start_us, last_us, n): exact
+    micros as int64, reinterpreted as naive datetime64[us] (no float, no
+    tz). An empty list gives an empty frame."""
+    import numpy as np
+    import pandas as pd
+
+    a = np.asarray(rows, dtype="int64").reshape(-1, 3)
+    return pd.DataFrame(
+        {
+            "user_id": np.full(len(a), user_id, dtype="int64"),
+            "session_start": a[:, 0].view("datetime64[us]"),
+            "session_end": a[:, 1].view("datetime64[us]"),
+            "n_events": a[:, 2],
+        }
+    )
+
+
 def _session_fn(gap_micros: int):
     """Per-group state transition (closure over the gap). State:
     (start, last, n) in epoch MICROS — integers round-trip exactly
@@ -182,26 +200,12 @@ def _session_fn(gap_micros: int):
 
     def fn(key, pdfs, state) -> Iterator["pd.DataFrame"]:
         import numpy as np
-        import pandas as pd
-
-        def emit(rows: list) -> "pd.DataFrame":
-            # rows: [(start_us, last_us, n)] — exact micros as int64,
-            # reinterpreted as naive datetime64[us] (no float, no tz)
-            a = np.asarray(rows, dtype="int64")
-            return pd.DataFrame(
-                {
-                    "user_id": np.full(len(rows), user_id, dtype="int64"),
-                    "session_start": a[:, 0].view("datetime64[us]"),
-                    "session_end": a[:, 1].view("datetime64[us]"),
-                    "n_events": a[:, 2],
-                }
-            )
 
         (user_id,) = key
         if state.hasTimedOut:
             start, last, n = state.get
             state.remove()
-            yield emit([(start, last, n)])
+            yield _emit_sessions(user_id, [(start, last, n)])
             return
 
         parts = [
@@ -240,7 +244,7 @@ def _session_fn(gap_micros: int):
             max(timeout_ms, state.getCurrentWatermarkMs() + 1)
         )
         if closed:
-            yield emit(closed)
+            yield _emit_sessions(user_id, closed)
 
     return fn
 

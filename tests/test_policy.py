@@ -175,3 +175,42 @@ def test_pii_inventory_sorted_and_exported(spark, tmp_path):
     assert (tmp_path / "pii_report.json").read_text() == json.dumps(
         expected, indent=2, ensure_ascii=False
     )
+
+
+def test_mask_model_regex_column_names(spark):
+    """Under spark.sql.parser.quotedRegexColumnNames=true a quoted name
+    holding regex metacharacters parses as a regex. mask_model must then
+    fail and name the setting and the column, never pass a column
+    through; plain names give the same rows under both settings."""
+    from dbt_gdpr_anonymizer_spark.functions.sqltext import REGEX_NAMES_CONF
+
+    df = spark.createDataFrame(
+        [("x@y.fr", "secret@z.fr", "Paris")],
+        "`a.b+(c)` string, `axbc` string, city string",
+    )
+    pol = TablePolicy(
+        name="t",
+        columns={
+            "a.b+(c)": ColumnPolicy(
+                pii=True, pii_type="direct_identifier",
+                anonymization_method="hash_sha256",
+            ),
+            "axbc": ColumnPolicy(
+                pii=True, pii_type="direct_identifier",
+                anonymization_method="hash_sha256",
+            ),
+        },
+    )
+    plain = df.select("axbc", "city")
+    default = mask_model(df, pol, CONF).collect()
+    assert default[0]["a.b+(c)_anon"].startswith("user_")
+    assert default[0]["axbc_anon"].startswith("user_")
+    plain_default = mask_model(plain, pol, CONF).collect()
+    spark.conf.set(REGEX_NAMES_CONF, "true")
+    try:
+        with pytest.raises(ValueError, match="quotedRegexColumnNames") as e:
+            mask_model(df, pol, CONF)
+        assert "a.b+(c)" in str(e.value)
+        assert mask_model(plain, pol, CONF).collect() == plain_default
+    finally:
+        spark.conf.unset(REGEX_NAMES_CONF)

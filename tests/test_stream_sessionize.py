@@ -242,3 +242,21 @@ def test_stream_sessionize_very_late_new_key_does_not_kill_query(
         (1, ts("2024-01-01 12:00:00"), ts("2024-01-01 12:00:00"), 1),
         (9, ts("2024-01-01 08:00:00"), ts("2024-01-01 08:00:00"), 1),
     }
+
+
+def test_emit_sessions_empty_and_exact():
+    """An empty row list gives an empty, typed frame (it raised IndexError
+    when the rows went through a 1-D array); rows keep exact micros."""
+    from dbt_gdpr_anonymizer_spark.streaming.sessionize import _emit_sessions
+
+    empty = _emit_sessions(7, [])
+    assert list(empty.columns) == [
+        "user_id", "session_start", "session_end", "n_events"
+    ]
+    assert len(empty) == 0
+    assert str(empty["session_start"].dtype) == "datetime64[us]"
+    one = _emit_sessions(7, [(1_000_001, 2_000_003, 4)])
+    assert one["user_id"].tolist() == [7]
+    assert one["session_start"].astype("int64").tolist() == [1_000_001]
+    assert one["session_end"].astype("int64").tolist() == [2_000_003]
+    assert one["n_events"].tolist() == [4]
