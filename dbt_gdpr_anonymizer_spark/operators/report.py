@@ -13,8 +13,10 @@ import csv
 import json
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.policy import PolicyError, TablePolicy
@@ -70,9 +72,16 @@ def pii_inventory(
                     else conf.k_anonymity_min,
                 )
             )
-    # Policy-sized: sorted here, a Spark sort would cost two more jobs.
+    # Policy-sized: sorted here, a Spark sort would cost two more jobs. An
+    # Arrow table plans as a LocalRelation, so collect() (timestamp
+    # included) runs on the driver with no job; a list of rows would be
+    # scanned as an RDD, one job.
     rows.sort(key=lambda r: (r[0], r[1]))
-    df = spark.createDataFrame(rows, REPORT_SCHEMA)
+    table = pa.Table.from_pylist(
+        [dict(zip(REPORT_SCHEMA.names, r)) for r in rows],
+        schema=to_arrow_schema(REPORT_SCHEMA),
+    )
+    df = spark.createDataFrame(table)
     if with_timestamp:
         df = df.selectExpr("*", "current_timestamp() AS report_generated_at")
     return df

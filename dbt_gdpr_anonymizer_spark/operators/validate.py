@@ -21,9 +21,11 @@ Scale notes:
     column. Literals go through ``functions/sqltext.sql_str``, which means
     the same under both ``spark.sql.parser.escapedStringLiterals``
     settings (a wrongly quoted regex would match nothing and pass PII).
-  * ``validate()`` fuses every per-table check into one aggregation pass per
-    table (mart: 1 job; enriched: quality aggregates + the k-anonymity
-    shuffle) instead of re-running the full lineage per metric.
+  * ``validate()`` fuses every per-table check into one aggregation per
+    table instead of re-running the full lineage per metric. When
+    ``run_pipeline`` wrote the layer as unpartitioned parquet, those
+    aggregates rode the write as an ``Observation`` and the gate reads the
+    observed row (``bind_observed``): only the k-anonymity group-by runs.
   * ``scan_for_pii`` is a single scan: each row is exploded into its
     (column × pattern) cells once, then filtered — not a union of N×P
     subplans each re-reading the table.
@@ -34,13 +36,18 @@ Scale notes:
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident, sql_str
+from dbt_gdpr_anonymizer_spark.functions.sqltext import (
+    check_quoted_names,
+    sql_ident,
+    sql_str,
+)
 
 # validate_anonymization.py:23-35 — PII detection patterns (verbatim).
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@(?!anonymized\.gouv\.fr)[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -52,6 +59,21 @@ PII_PATTERNS = {
     "unmasked_fr_phone": PHONE_PATTERN,
     "street_address": ADDRESS_PATTERN,
 }
+
+# A literal that every match of the pattern contains. The regex then runs
+# only on cells holding it; ``contains`` compares bytes without building a
+# Java String, and the count cannot change. The address pattern has no
+# such literal (its only fixed text is case-insensitive).
+_PATTERN_GUARDS = {EMAIL_PATTERN: "@", PHONE_PATTERN: "+33"}
+
+
+def _match_count(col: str, pattern: str) -> str:
+    """``count_if`` text: the cells of ``col`` that ``pattern`` matches."""
+    match = f"{sql_ident(col)} RLIKE {sql_str(pattern)}"
+    guard = _PATTERN_GUARDS.get(pattern)
+    if guard is not None:
+        match = f"contains({sql_ident(col)}, {sql_str(guard)}) AND {match}"
+    return f"count_if({match})"
 
 
 def _too_precise(c: str, precision: int = 2) -> str:
@@ -137,6 +159,7 @@ def scan_for_pii(
     string_cols = _string_columns(df)
     if not string_cols:
         raise ValueError("no string columns to scan")
+    check_quoted_names(df.sparkSession, string_cols)
 
     cells = ", ".join(
         f"named_struct('column_name', {sql_str(c)}, 'value', {sql_ident(c)})"
@@ -214,10 +237,52 @@ def _metrics_from_row(row) -> QualityMetrics:
     )
 
 
+# Aggregate rows observed while a layer was written, keyed by the frame
+# that reads the written rows back, with the aggregate texts they answer.
+# Weak keys: the row lives exactly as long as the frame.
+_OBSERVED: weakref.WeakKeyDictionary[DataFrame, tuple[list[str], dict]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def bind_observed(df: DataFrame, aggs: list[str], row: dict) -> None:
+    """Record ``row``, the values of ``aggs`` observed over exactly the rows
+    and column types ``df`` reads, so the gate need not scan ``df``."""
+    _OBSERVED[df] = (aggs, row)
+
+
+def _aggregate_row(df: DataFrame, aggs: list[str]):
+    """The values of ``aggs`` over ``df``: the observed row bound to this
+    very frame, else one scan. A derived frame is always scanned."""
+    seen = _OBSERVED.get(df)
+    if seen is not None and seen[0] == aggs:
+        return seen[1]
+    return df.selectExpr(*aggs).collect()[0]
+
+
+def quality_aggs(enriched: DataFrame) -> list[str]:
+    """The gate's aggregates over ``enriched``: the quality metrics."""
+    return list(_QUALITY_AGGS)
+
+
+def mart_aggs(mart: DataFrame) -> list[str]:
+    """The gate's aggregates over ``mart``: the three singular-test
+    violation counts and every (string column × pattern) regex hit count.
+    The hit counts travel as ONE array column, so the build costs the same
+    number of py4j commands at any mart width."""
+    cols = _string_columns(mart)
+    check_quoted_names(mart.sparkSession, cols)
+    scan = ", ".join(_match_count(c, p) for c in cols for p in PII_PATTERNS.values())
+    return [
+        *[f"count_if({t[0]}) AS viol_{name}" for name, t in _MART_TESTS.items()],
+        f"array({scan}) AS scan",
+    ]
+
+
 def check_anonymization_quality(enriched: DataFrame) -> QualityMetrics:
     """Conditional-aggregate quality metrics in one pass (the reference runs
     three separate queries)."""
-    return _metrics_from_row(enriched.selectExpr(*_QUALITY_AGGS).collect()[0])
+    return _metrics_from_row(_aggregate_row(enriched, quality_aggs(enriched)))
 
 
 def k_anonymity_violations(
@@ -225,12 +290,12 @@ def k_anonymity_violations(
 ) -> DataFrame:
     """Groups smaller than ``k`` over the quasi-identifier set
     (validate_anonymization.py:229-243). Map-side partial aggregation makes
-    this a single shuffle on the QI key at any scale."""
+    this a single shuffle on the QI key at any scale. Unordered: the gate
+    counts the groups or stores them as parquet."""
     return (
         df.groupBy(*quasi_identifiers)
         .agg(F.count(F.lit(1)).alias("group_size"))
         .filter(F.col("group_size") < k)
-        .orderBy(F.col("group_size").asc())
     )
 
 
@@ -242,31 +307,25 @@ def validate(
 ) -> dict:
     """Full validation run (validate_anonymization.py:311-374).
 
-    Exactly three Spark jobs regardless of table size:
-      1. one fused aggregation over ``mart`` — the three singular-test
-         violation counts AND every (string column × pattern) regex-scan hit
-         count in a single pass;
-      2. one fused aggregation over ``enriched`` — the nine quality metrics;
+    Three aggregations regardless of table size:
+      1. one fused aggregation over ``mart`` (``mart_aggs``): the three
+         singular-test violation counts AND every (string column × pattern)
+         regex-scan hit count in a single pass;
+      2. one fused aggregation over ``enriched``: the quality metrics;
       3. the k-anonymity group-by over ``enriched``.
 
-    (The previous design ran four actions that each recomputed the full
-    raw→mart lineage.) Returns a report dict; callers wanting the violating
+    1 and 2 read the row observed when ``run_pipeline`` wrote the layer
+    as unpartitioned parquet and returned this very frame; any other frame
+    is scanned. Measured under AQE (4 cores): 3 Spark jobs on the frames
+    ``run_pipeline`` returns, all the k-anonymity group-by's; 7 on frames
+    that are scanned. Returns a report dict; callers wanting the violating
     ROWS use ``assert_no_pii_in_mart`` / ``scan_for_pii`` directly, and
     ``run_validation_gate`` persists them + sets the exit code.
     """
-    # The scan counts travel as ONE array column, so the build costs the
-    # same number of py4j commands at any mart width.
-    cells = [
-        (f"scan__{col}__{issue}", f"count_if({sql_ident(col)} RLIKE {sql_str(pat)})")
-        for col in _string_columns(mart)
-        for issue, pat in PII_PATTERNS.items()
-    ]
-    mrow = mart.selectExpr(
-        *[f"count_if({t[0]}) AS viol_{name}" for name, t in _MART_TESTS.items()],
-        f"array({', '.join(agg for _, agg in cells)}) AS scan",
-    ).collect()[0]
+    names = [f"scan__{c}__{i}" for c in _string_columns(mart) for i in PII_PATTERNS]
+    mrow = _aggregate_row(mart, mart_aggs(mart))
     n_pii = mrow["viol_email"] + mrow["viol_phone"] + mrow["viol_gps"]
-    scan_hits = {name: v for (name, _), v in zip(cells, mrow["scan"]) if v}
+    scan_hits = {name: v for name, v in zip(names, mrow["scan"]) if v}
     n_scan = sum(scan_hits.values())
 
     metrics = check_anonymization_quality(enriched)
@@ -301,7 +360,8 @@ def run_validation_gate(
     ``failures_root`` set, violating rows (singular-test + k-anonymity
     groups) are written as parquet under ``{failures_root}/<check>``; rows
     are only computed when the fused ``validate()`` counts say they exist,
-    so the green path stays at three jobs.
+    so the green path launches ``validate()``'s jobs only: 3 on the frames
+    ``run_pipeline`` returns, 7 on scanned ones (4 cores, AQE).
     """
     report = validate(enriched, mart, quasi_identifiers, k)
     if failures_root:

@@ -22,12 +22,14 @@ entries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.functions import masking
 from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident, sql_str
+from dbt_gdpr_anonymizer_spark.operators import validate
 from dbt_gdpr_anonymizer_spark.policy import SERVICES_POLICY, TablePolicy, mask_model
 
 RAW_COLUMNS = [
@@ -246,6 +248,30 @@ MATERIALIZATION = {
     "mart": "table",
 }
 
+# The validation gate's aggregates per layer. They ride the layer's write
+# as an Observation, so the gate reads their row instead of re-scanning.
+GATE_AGGS = {"enriched": validate.quality_aggs, "mart": validate.mart_aggs}
+
+
+def _write_observed(df: DataFrame, path: str, aggs: list[str]) -> DataFrame:
+    """Write ``df`` as unpartitioned parquet; return the frame reading it
+    back. ``aggs`` ride the write as an Observation, and their row is bound
+    to the returned frame, which reads exactly the rows and column types
+    written (``validate.bind_observed``)."""
+    # The written schema made nullable is what inference would find (the
+    # layers are flat); passing it skips the inference job.
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in df.schema]
+    )
+    obs = Observation()
+    if aggs:
+        df = df.observe(obs, *map(F.expr, aggs))
+    df.write.mode("overwrite").parquet(path)
+    out = df.sparkSession.read.schema(schema).parquet(path)
+    if aggs:
+        validate.bind_observed(out, aggs, obs.get)
+    return out
+
 
 def run_pipeline(
     raw: DataFrame,
@@ -266,6 +292,8 @@ def run_pipeline(
     reference's per-layer ``+schema`` routing). With neither, everything
     stays a lazy DataFrame and Catalyst optimizes across all four layers in
     one plan — the preferred mode when downstream consumers are in-process.
+    An unpartitioned parquet layer comes back carrying the validation
+    gate's counts for it, observed during its write (``GATE_AGGS``).
     """
     conf = conf or settings()
     conf.require_safe_salt()
@@ -294,18 +322,14 @@ def run_pipeline(
             return spark.table(qualified)
         if output_root:
             path = f"{output_root}/{name}"
-            w = df.write.mode("overwrite")
             if parts:
-                w = w.partitionBy(*parts)
-            w.parquet(path)
-            if parts:  # partition columns are re-typed from directory names
+                # Partition columns are re-typed from directory names, so
+                # the frame read back differs from the one written and the
+                # gate scans it.
+                df.write.mode("overwrite").partitionBy(*parts).parquet(path)
                 return spark.read.parquet(path)
-            # The written schema made nullable is what inference would
-            # find (the layers are flat); passing it skips the inference job.
-            schema = T.StructType(
-                [T.StructField(f.name, f.dataType, True, f.metadata) for f in df.schema]
-            )
-            return spark.read.schema(schema).parquet(path)
+            gate = GATE_AGGS.get(name)
+            return _write_observed(df, path, gate(df) if gate else [])
         return df
 
     # D4 run hooks: each layer's jobs carry a description in the Spark UI /

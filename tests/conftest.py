@@ -82,6 +82,23 @@ def unpartitioned_windows(df) -> list[str]:
     return walk(df._jdf.queryExecution().optimizedPlan(), [])
 
 
+def jobs_launched(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs: the delta of the newest
+    job id in Spark's status store."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    empty = sc._jvm.java.util.ArrayList()
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(empty)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    before = newest()
+    fn()
+    return newest() - before
+
+
 @pytest.fixture
 def literal_modes(spark):
     """Call to iterate over both ``spark.sql.parser.escapedStringLiterals``

@@ -15,6 +15,7 @@ from dbt_gdpr_anonymizer_spark.operators.validate import (
     scan_for_pii,
 )
 from dbt_gdpr_anonymizer_spark.plans import pipeline
+from tests.conftest import CI_ROWS, RAW_SCHEMA, jobs_launched
 
 CONF = EngineSettings(salt_key="dev_salt_UNSAFE")
 
@@ -312,3 +313,145 @@ def test_gate_failing_path(spark, ci_raw, tmp_path, literal_modes, extra):
         ]
     )
     assert not (out / "k_anonymity").exists()
+
+
+def _nulled(rows, *idx):
+    return [tuple(None if i in idx else v for i, v in enumerate(r)) for r in rows]
+
+
+# Raw inputs for the observed-versus-scanned gate: the CI rows; rows that
+# staging filters to zero (no service_id); every PII column NULL; and an
+# email planted in service_name, a pass-through column that reaches the mart.
+GATE_INPUTS = {
+    "ci": CI_ROWS,
+    "staged_empty": _nulled(CI_ROWS, 0),
+    "null_pii": _nulled(CI_ROWS, 4, 5, 7, 11, 12),
+    "planted": [(CI_ROWS[0][0], "Service owner@example.com") + CI_ROWS[0][2:]]
+    + CI_ROWS[1:],
+}
+
+
+@pytest.mark.parametrize("case", list(GATE_INPUTS))
+def test_observed_gate_equals_scan(spark, tmp_path, literal_modes, case):
+    """validate() on the frames run_pipeline returns reads the counts
+    observed during the layer writes and launches only the k-anonymity
+    jobs; on fresh reads of the same files, or a derived frame, it scans.
+    The reports are equal under both literal settings, and the planted
+    email fails the gate through the observed path."""
+    from dbt_gdpr_anonymizer_spark.operators.validate import (
+        run_validation_gate,
+        validate,
+    )
+
+    raw = spark.createDataFrame(GATE_INPUTS[case], RAW_SCHEMA)
+    for mode in literal_modes():
+        root = tmp_path / mode
+        ls = pipeline.run_pipeline(raw, conf=CONF, output_root=str(root))
+        enr, mart = ls["enriched"], ls["mart"]
+        kanon = jobs_launched(
+            spark,
+            lambda: k_anonymity_violations(enr, ["organization_category"], 1).count(),
+        )
+        reports = []
+        assert jobs_launched(
+            spark, lambda: reports.append(validate(enr, mart, k=1))
+        ) == kanon
+        assert jobs_launched(
+            spark, lambda: reports.append(validate(enr, mart.filter("true"), k=1))
+        ) > kanon
+        fresh = [spark.read.parquet(str(root / n)) for n in ("enriched", "mart")]
+        reports.append(validate(*fresh, k=1))
+        assert reports[0] == reports[1] == reports[2]
+        if case != "planted":
+            assert reports[0]["passed"] is True
+            continue
+        assert reports[0]["pii_scan_detail"] == {
+            "scan__service_name__non_anonymized_email": 1
+        }
+        out = root / "test_results"
+        assert run_validation_gate(enr, mart, k=1, failures_root=str(out)) == 1
+        assert spark.read.parquet(str(out / "assert_no_pii_in_mart")).count() == 0
+        scan = spark.read.parquet(str(out / "pii_scan")).collect()
+        assert [(r.column_name, r.issue_type, r.value) for r in scan] == [
+            ("service_name", "non_anonymized_email", "Service owner@example.com")
+        ]
+
+
+def test_pattern_guards_lossless(spark, literal_modes):
+    """Each literal guard in front of a PII regex keeps every match: the
+    guarded count equals the bare regex count under both literal
+    settings. ``+331 23 45 67 89`` matches with no space after ``+33``,
+    so a ``'+33 '`` guard would drop it."""
+    from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_str
+    from dbt_gdpr_anonymizer_spark.operators.validate import (
+        _PATTERN_GUARDS,
+        EMAIL_PATTERN,
+        PHONE_PATTERN,
+        _match_count,
+    )
+
+    cells = [
+        "leak1@example.fr", "a.b+c@x.co", "user_1@anonymized.gouv.fr",
+        "a＠b.fr", "mail@例え.jp", "no at sign", "@", "x@y",
+        "+33 1 23 45 67 89", "+331 23 45 67 89", "+33612345678",
+        "tél. +33 6 12 34 56 78 à Paris", "+33 1 23 XX XX XX",
+        "+33 1 23 45 67 89 XX", "+ 33 1 23 45 67 89", "+34 1 23 45 67 89",
+        "0033 1 23 45 67 89", "Ünïcödé ✓", "", None,
+    ]
+    df = spark.createDataFrame([(c,) for c in cells], "c string")
+    assert set(_PATTERN_GUARDS) == {EMAIL_PATTERN, PHONE_PATTERN}
+    for _ in literal_modes():
+        for pattern in _PATTERN_GUARDS:
+            guarded, bare = df.selectExpr(
+                _match_count("c", pattern), f"count_if(c RLIKE {sql_str(pattern)})"
+            ).first()
+            assert guarded == bare > 0, pattern
+        only = df.filter("c = '+331 23 45 67 89'")
+        assert only.selectExpr(_match_count("c", PHONE_PATTERN)).first()[0] == 1
+
+
+def test_k_anonymity_violations_unsorted(spark, ci_raw):
+    """The violating groups are counted or stored as parquet; nothing
+    reads their order, so the plan holds no Sort."""
+
+    def nodes(plan):
+        yield plan.getClass().getSimpleName()
+        ch = plan.children()
+        for i in range(ch.size()):
+            yield from nodes(ch.apply(i))
+
+    viol = k_anonymity_violations(layers(ci_raw)["enriched"], ["organization_category"])
+    assert "Sort" not in set(nodes(viol._jdf.queryExecution().optimizedPlan()))
+
+
+def test_gate_regex_column_names(spark, ci_raw, tmp_path):
+    """A mart string column named ``a.b+(c)`` holding an email: under the
+    default parser setting the observed and the scanned gate count it;
+    under ``quotedRegexColumnNames=true`` both raise the error naming the
+    setting and the column, never a silent 0."""
+    from pyspark.sql import functions as F
+
+    from dbt_gdpr_anonymizer_spark.functions.sqltext import REGEX_NAMES_CONF
+    from dbt_gdpr_anonymizer_spark.operators.validate import mart_aggs, validate
+
+    odd = "a.b+(c)"
+    ls = layers(ci_raw)
+    mart = ls["mart"].withColumn(odd, F.lit("owner@example.com"))
+
+    def observed():
+        return pipeline._write_observed(mart, str(tmp_path / "m"), mart_aggs(mart))
+
+    def hits(m):
+        return validate(ls["enriched"], m, k=1)["pii_scan_detail"]
+
+    want = {f"scan__{odd}__non_anonymized_email": 2}
+    written = observed()
+    assert hits(written) == hits(mart) == want
+    spark.conf.set(REGEX_NAMES_CONF, "true")
+    try:
+        for gate in (observed, lambda: written, lambda: mart):
+            with pytest.raises(ValueError, match=REGEX_NAMES_CONF) as e:
+                hits(gate())
+            assert odd in str(e.value)
+    finally:
+        spark.conf.unset(REGEX_NAMES_CONF)

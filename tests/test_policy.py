@@ -177,6 +177,32 @@ def test_pii_inventory_sorted_and_exported(spark, tmp_path):
     )
 
 
+def test_pii_report_builds_without_job(spark, tmp_path):
+    """The inventory is a local relation: its schema is REPORT_SCHEMA
+    (nullability included), and building and exporting the report,
+    timestamp included, launches no Spark job."""
+    from pyspark.sql import types as T
+
+    from dbt_gdpr_anonymizer_spark.operators.report import (
+        REPORT_SCHEMA,
+        export_report,
+        pii_inventory,
+    )
+    from tests.conftest import jobs_launched
+
+    for ts in (False, True):
+        inv = pii_inventory(spark, [SERVICES_POLICY], CONF, with_timestamp=ts)
+        extra = [T.StructField("report_generated_at", T.TimestampType(), False)]
+        assert inv.schema == T.StructType(REPORT_SCHEMA.fields + extra[:ts])
+        assert jobs_launched(
+            spark,
+            lambda: export_report(
+                pii_inventory(spark, [SERVICES_POLICY], CONF, with_timestamp=ts),
+                str(tmp_path / str(ts)),
+            ),
+        ) == 0
+
+
 def test_mask_model_regex_column_names(spark):
     """Under spark.sql.parser.quotedRegexColumnNames=true a quoted name
     holding regex metacharacters parses as a regex. mask_model must then

@@ -12,29 +12,13 @@ import pyarrow.parquet as pq
 import pytest
 
 from dbt_gdpr_anonymizer_spark import queries as Q
+from tests.conftest import jobs_launched
 from tests.test_plan_invariants import SF_DIR
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs: the delta of the newest
-    job id in Spark's status store."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-
-    def newest() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = store.jobsList(empty)
-        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
-    before = newest()
-    fn()
-    return newest() - before
 
 
 @pytest.mark.parametrize("table", TABLES)
@@ -98,5 +82,5 @@ def test_warm_read_launches_no_job(spark, tmp_path):
     )
     sf = str(tmp_path)
     # the cold read infers (a footer job), which shows the counter works
-    assert _jobs_launched(spark, lambda: Q._t(spark, sf, "w")) >= 1
-    assert _jobs_launched(spark, lambda: Q._t(spark, sf, "w")) == 0
+    assert jobs_launched(spark, lambda: Q._t(spark, sf, "w")) >= 1
+    assert jobs_launched(spark, lambda: Q._t(spark, sf, "w")) == 0
