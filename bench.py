@@ -168,11 +168,6 @@ HEADLINE = [
 # suppressed.
 
 
-_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 # Stateful micro-batch replays: their oracle is a batch EQUIVALENCE check
 # (same final rows), not a throughput baseline — a one-pass batch engine vs
 # a 3-micro-batch stateful drain with checkpoints is not a comparison. They
@@ -205,17 +200,13 @@ class OracleTimer:
     def __init__(self, sf_dir: str):
         import duckdb
 
-        from dbt_gdpr_anonymizer_spark.queries import all_oracles
+        from dbt_gdpr_anonymizer_spark.queries import all_oracles, duckdb_views
+        from dbt_gdpr_anonymizer_spark.session import host_cpus
 
         self._duckdb = duckdb
         self.oracles = all_oracles()
-        self.con = duckdb.connect()
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        self.con.execute(f"set threads to {int(cpus)}")
-        for t in _TABLES:
-            self.con.execute(
-                f"create view {t} as select * from '{sf_dir}/{t}.parquet'"
-            )
+        self.con = duckdb_views(duckdb.connect(), sf_dir)
+        self.con.execute(f"set threads to {host_cpus()}")
         self.capped: set[str] = set()
         self.errors: dict[str, str] = {}
 

@@ -21,8 +21,8 @@ round 4 after a driver canonicalizer diverged on a double→decimal cast):
     fetchall() replay, and the only two all-"bigint" failures each had one
     HUGEINT column (an uncast sum). Every oracle ``sum(...)`` feeding a
     compared column is therefore ``cast(... as bigint)``;
-    ``scripts/audit_oracle_types.py`` (and its pytest wrapper) enforces
-    DESCRIBE-level safety for every registered oracle.
+    ``tests/test_oracle_release_types.py`` enforces DESCRIBE-level safety
+    for every oracle of both tiers (at ``SPARK_GRAFT_TYPE_SF_DIR``).
   * Pure-integer releases where possible: ``t_distance_ppm`` is integral
     decimal division (Spark ``div`` ≡ DuckDB hugeint ``//``).
   * Aggregating unavoidable per-row doubles (streaming rollup): release
@@ -64,11 +64,19 @@ SALT = "dev_salt_UNSAFE"  # pinned for reproducible hashes (reference default)
 QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+# Each name's tier: "registry" is the driver contract (``all_queries()``,
+# frozen at 250 names); "staged" holds oracle-checked candidates kept
+# outside it. Promoting a staged query is dropping its ``tier=``.
+TIERS = ("registry", "staged")
+TIER: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str | None = None, tier: str = "registry"):
     def deco(fn: QueryFn) -> QueryFn:
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} registered twice")
         QUERIES[name] = fn
+        TIER[name] = tier
         if oracle is not None:
             ORACLE[name] = oracle
         return fn
@@ -134,6 +142,21 @@ def _parquet_schema(spark: SparkSession, path: str) -> StructType:
         while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
             _schema_memo.popitem(last=False)
     return schema
+
+
+# The parquet tables under ``sf_dir`` that queries and oracles read.
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
+)
+
+
+def duckdb_views(con, sf_dir: str):
+    """Create a view per ``TABLES`` entry over ``sf_dir``'s parquet on the
+    DuckDB connection ``con``, as the oracle SQL expects; returns ``con``."""
+    for t in TABLES:
+        con.execute(f"create view {t} as select * from '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1801,12 +1824,16 @@ def _check_ordered(d: dict) -> dict:
     return {n: d[n] for n in front + back}
 
 
-def all_queries() -> dict[str, QueryFn]:
-    return _check_ordered(QUERIES)
+def all_queries(tier: str = "registry") -> dict[str, QueryFn]:
+    return _check_ordered(
+        {n: f for n, f in QUERIES.items() if TIER[n] == tier}
+    )
 
 
-def all_oracles() -> dict[str, str]:
-    return _check_ordered(ORACLE)
+def all_oracles(tier: str = "registry") -> dict[str, str]:
+    return _check_ordered(
+        {n: q for n, q in ORACLE.items() if TIER[n] == tier}
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -12629,19 +12656,16 @@ def _pq_residual_recall_oracle_sql(
     """
 
 
-# NOT registered (r11 oracle freeze: the registry holds at 250 until the
-# parked backlog drains — VERDICT r10 item 2). Pre-staged as the FIRST
-# registration when the freeze lifts (r13 per the committed r12 rotation
-# plan); until then the Spark/oracle pair is pinned by
-# tests/test_pq_residual_recall.py running both sides on the same
-# parquet — the same row/schema/value comparison the external driver
-# applies (VERDICT r10 item 5's "hash-green + parked", honored without
-# growing the registry).
+# Staged tier (r11 oracle freeze: the registry holds at 250 until the
+# parked backlog drains — VERDICT r10 item 2). The first promotion when
+# the freeze lifts; tests/test_pq_residual_recall.py also runs both sides
+# on the same parquet with the driver's row/schema/value comparison.
 PQ_RESIDUAL_RECALL_ORACLE = _pq_residual_recall_oracle_sql(
     16, 4, 4, 64, 4, 2, 3, 5
 )
 
 
+@register("pq_residual_recall", PQ_RESIDUAL_RECALL_ORACLE, tier="staged")
 def pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall metrology answering the r9/r10 residual question ON the
     checked corpus: per query, how much of the exact cosine top-5 the
@@ -12715,7 +12739,6 @@ def pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(1000000 * res_hits div k_exact as bigint)"
             ).alias("res_recall_ppm"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -16225,11 +16248,10 @@ def conversion_latency_quantiles(
 # TPC-H completion tier (r11 extended session). With these ten the full
 # 22-query TPC-H plan-shape suite is re-expressed on the synthetic schema
 # (q1/q3/q5/q10/q14/q16/q18 registered earlier; q4/q6/q17/q21/q22 in the
-# r10 extended set). NOT registered — the r11 oracle freeze holds the
+# r10 extended set). Staged tier — the r11 oracle freeze holds the
 # registry at 250 until the parked backlog drains (VERDICT r10 item 2);
-# each pair below is pinned by tests/test_tpch_staged.py applying the
-# external driver's own row/schema/value comparison, the
-# pq_residual_recall precedent. r13 registration candidates.
+# tests/test_tpch_staged.py also applies the driver's row/schema/value
+# comparison to each pair. r13 registration candidates.
 #
 # Schema rebase notes (testdata has no partsupp / commitdate / shipmode):
 #   * "supply cost" → min line price cents (q2) / p_retailprice (q9)
@@ -16269,6 +16291,7 @@ limit 100
 """
 
 
+@register("q2_min_cost_supplier", Q2_MIN_COST_SUPPLIER_ORACLE, tier="staged")
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (minimum-cost supplier): for each ECONOMY part in
     a size band, the EUROPE-region supplier(s) that shipped it at the
@@ -16351,6 +16374,11 @@ order by 1, 2, 3
 """
 
 
+@register(
+    "q7_nation_volume_shipping",
+    Q7_NATION_VOLUME_SHIPPING_ORACLE,
+    tier="staged",
+)
 def q7_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape (volume shipping between two nations): revenue of
     lines shipped between the NATION_18/NATION_19 pair in either
@@ -16415,7 +16443,6 @@ def q7_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("rev").cast("bigint").alias("revenue_e4"),
             F.count(F.lit(1)).cast("long").alias("n_lines"),
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -16454,6 +16481,11 @@ order by o_year
 """
 
 
+@register(
+    "q8_national_market_share",
+    Q8_NATIONAL_MARKET_SHARE_ORACLE,
+    tier="staged",
+)
 def q8_national_market_share(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -16529,7 +16561,7 @@ def q8_national_market_share(
         ),
         F.col("_n").cast("bigint").alias("nation_rev_e4"),
         F.col("_t").cast("bigint").alias("total_rev_e4"),
-    ).orderBy("o_year")
+    )
 
 
 Q9_PRODUCT_TYPE_PROFIT_ORACLE = """
@@ -16550,6 +16582,11 @@ order by nation, o_year desc
 """
 
 
+@register(
+    "q9_product_type_profit",
+    Q9_PRODUCT_TYPE_PROFIT_ORACLE,
+    tier="staged",
+)
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit): per (supplier nation,
     order year), the profit on widget parts — discounted revenue minus
@@ -16607,7 +16644,6 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(profit).cast("bigint").alias("profit_e4"),
             F.count(F.lit(1)).cast("long").alias("n_lines"),
         )
-        .orderBy("nation", F.col("o_year").desc())
     )
 
 
@@ -16632,6 +16668,7 @@ order by value_cents desc, p_partkey
 """
 
 
+@register("q11_important_stock", Q11_IMPORTANT_STOCK_ORACLE, tier="staged")
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (important stock identification): parts whose
     EUROPE-supplied line value exceeds 1.25× the mean part value —
@@ -16681,7 +16718,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "p_partkey", F.col("val").cast("bigint").alias("value_cents")
         )
-        .orderBy(F.col("value_cents").desc(), "p_partkey")
     )
 
 
@@ -16702,6 +16738,7 @@ order by l_returnflag
 """
 
 
+@register("q12_priority_shipping", Q12_PRIORITY_SHIPPING_ORACLE, tier="staged")
 def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipping modes and order priority): among 1997
     shipments, per return-flag class (the schema's shipmode stand-in),
@@ -16740,7 +16777,6 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("low_line_count"),
             F.count(one).cast("long").alias("n_lines"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -16762,6 +16798,11 @@ order by custdist desc, c_count desc
 """
 
 
+@register(
+    "q13_customer_distribution",
+    Q13_CUSTOMER_DISTRIBUTION_ORACLE,
+    tier="staged",
+)
 def q13_customer_distribution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -16788,7 +16829,6 @@ def q13_customer_distribution(
     return (
         cc.groupBy("c_count")
         .agg(F.count(F.lit(1)).cast("long").alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
 
 
@@ -16812,6 +16852,7 @@ order by s_suppkey
 """
 
 
+@register("q15_top_supplier", Q15_TOP_SUPPLIER_ORACLE, tier="staged")
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): the supplier(s) with maximal
     revenue in 1996Q1 — Q15's view + scalar-MAX subquery becomes a
@@ -16845,7 +16886,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             F.col("tr").cast("bigint").alias("total_revenue_e4"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -16864,6 +16904,11 @@ where (p_brand = 'Brand#12' and p_size between 1 and 5
 """
 
 
+@register(
+    "q19_discounted_revenue",
+    Q19_DISCOUNTED_REVENUE_ORACLE,
+    tier="staged",
+)
 def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (discounted revenue): revenue over THREE
     disjunctive brand/size/quantity branches — the OR-of-conjuncts
@@ -16944,6 +16989,11 @@ order by s_name
 """
 
 
+@register(
+    "q20_potential_promotion",
+    Q20_POTENTIAL_PROMOTION_ORACLE,
+    tier="staged",
+)
 def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (potential part promotion): EUROPE-region
     suppliers who shipped more than 30% of some blue part's 1997
@@ -17005,15 +17055,14 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         s.join(qual, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", "bal_cents")
-        .orderBy("s_name")
     )
 
 
 # ---------------------------------------------------------------------------
 # Temporal-analytics tier (r11 extended session, operators/timeseries.py):
 # exact lag autocorrelation, dyadic-exact EWMA, Nelson-Aalen hazard, and
-# sequential 2-pattern mining. NOT registered (r11 oracle freeze) — pinned
-# by tests/test_timeseries.py applying the driver's own comparison.
+# sequential 2-pattern mining. Staged tier (r11 oracle freeze); also
+# pinned by tests/test_timeseries.py applying the driver's comparison.
 # r13 registration candidates.
 # ---------------------------------------------------------------------------
 
@@ -17059,6 +17108,7 @@ order by grp, lag
 """
 
 
+@register("acf_daily_events", ACF_DAILY_EVENTS_ORACLE, tier="staged")
 def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact lag autocorrelation of daily event volume per type
     (operators/timeseries.acf_lags): lags 1/2/3/7 — the weekly-rhythm
@@ -17108,6 +17158,7 @@ order by grp, t
 """
 
 
+@register("ewma_daily_events", EWMA_DAILY_EVENTS_ORACLE, tier="staged")
 def ewma_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dyadic-exact EWMA (alpha = 1/4) of daily event volume per type
     (operators/timeseries.ewma_fold): the alerting baseline next to
@@ -17180,6 +17231,11 @@ order by grp, dur
 """
 
 
+@register(
+    "time_to_purchase_hazard_events",
+    TIME_TO_PURCHASE_HAZARD_ORACLE,
+    tier="staged",
+)
 def time_to_purchase_hazard_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -17258,6 +17314,7 @@ order by support_users desc, ant, cons
 """
 
 
+@register("seq_2patterns_events", SEQ_2PATTERNS_EVENTS_ORACLE, tier="staged")
 def seq_2patterns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential 2-pattern support (PrefixSpan's length-2 frame,
     Pei et al. 2001): for every ordered event-type pair (a -> b), the
@@ -17308,7 +17365,6 @@ def seq_2patterns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast((1000000 * support_users) div n_users as bigint)"
             ).alias("support_ppm"),
         )
-        .orderBy(F.col("support_users").desc(), "ant", "cons")
     )
 
 
@@ -17376,6 +17432,11 @@ def _lpa_oracle_sql(rounds: int = 4) -> str:
 LPA_COMMUNITIES_BRANDS_ORACLE = _lpa_oracle_sql(4)
 
 
+@register(
+    "lpa_communities_brands",
+    LPA_COMMUNITIES_BRANDS_ORACLE,
+    tier="staged",
+)
 def lpa_communities_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation
     (operators/graph.label_propagation — Raghavan/Albert/Kumara 2007)
@@ -17527,6 +17588,7 @@ def _dbscan_oracle_sql(
 DBSCAN_CUSTOMERS_ORACLE = _dbscan_oracle_sql(20.0, 3, 6)
 
 
+@register("dbscan_customers", DBSCAN_CUSTOMERS_ORACLE, tier="staged")
 def dbscan_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-blocked DBSCAN (operators/spatial.dbscan_clusters — Ester
     et al. KDD 1996) over the customer coordinates: the density
@@ -17641,6 +17703,11 @@ def _kcore_oracle_sql(
 KCORE_SPATIAL_CUSTOMERS_ORACLE = _kcore_oracle_sql(40.0, 3, 8)
 
 
+@register(
+    "kcore_spatial_customers",
+    KCORE_SPATIAL_CUSTOMERS_ORACLE,
+    tier="staged",
+)
 def kcore_spatial_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core backbone of the customer proximity graph
     (operators/graph.kcore_peel — Seidman 1983 / Matula-Beck peeling):
@@ -17704,6 +17771,7 @@ order by grp, t
 """
 
 
+@register("holt_daily_events", HOLT_DAILY_EVENTS_ORACLE, tier="staged")
 def holt_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dyadic-exact Holt level+trend smoothing (alpha = beta = 1/4) of
     daily event volume per type (operators/timeseries.holt_fold): the
@@ -17791,6 +17859,11 @@ def _textrank_oracle_sql(
 TEXTRANK_KEYWORDS_ORACLE = _textrank_oracle_sql()
 
 
+@register(
+    "textrank_keywords_documents",
+    TEXTRANK_KEYWORDS_ORACLE,
+    tier="staged",
+)
 def textrank_keywords_documents(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -17844,61 +17917,6 @@ def textrank_keywords_documents(
     return _retrack(out, ranks)
 
 
-# ---------------------------------------------------------------------------
-# Staged r13 registration list (r11 oracle freeze: NOT in QUERIES/ORACLE —
-# the registry holds at 250 until the parked backlog drains). Each pair
-# below is pinned by its pytest module applying the driver's comparison;
-# scripts/check_staged.py drives the whole list in one command, both
-# fetchall and pandas modes, producing a CHECK_STAGED artifact. When the
-# freeze lifts, registration = move each pair into @register (names and
-# SQL are final).
-# ---------------------------------------------------------------------------
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def _stage(name: str, fn: QueryFn, oracle: str) -> None:
-    STAGED_QUERIES[name] = fn
-    STAGED_ORACLE[name] = oracle
-
-
-_stage("pq_residual_recall", pq_residual_recall, PQ_RESIDUAL_RECALL_ORACLE)
-_stage("q2_min_cost_supplier", q2_min_cost_supplier,
-       Q2_MIN_COST_SUPPLIER_ORACLE)
-_stage("q7_nation_volume_shipping", q7_nation_volume_shipping,
-       Q7_NATION_VOLUME_SHIPPING_ORACLE)
-_stage("q8_national_market_share", q8_national_market_share,
-       Q8_NATIONAL_MARKET_SHARE_ORACLE)
-_stage("q9_product_type_profit", q9_product_type_profit,
-       Q9_PRODUCT_TYPE_PROFIT_ORACLE)
-_stage("q11_important_stock", q11_important_stock,
-       Q11_IMPORTANT_STOCK_ORACLE)
-_stage("q12_priority_shipping", q12_priority_shipping,
-       Q12_PRIORITY_SHIPPING_ORACLE)
-_stage("q13_customer_distribution", q13_customer_distribution,
-       Q13_CUSTOMER_DISTRIBUTION_ORACLE)
-_stage("q15_top_supplier", q15_top_supplier, Q15_TOP_SUPPLIER_ORACLE)
-_stage("q19_discounted_revenue", q19_discounted_revenue,
-       Q19_DISCOUNTED_REVENUE_ORACLE)
-_stage("q20_potential_promotion", q20_potential_promotion,
-       Q20_POTENTIAL_PROMOTION_ORACLE)
-_stage("acf_daily_events", acf_daily_events, ACF_DAILY_EVENTS_ORACLE)
-_stage("ewma_daily_events", ewma_daily_events, EWMA_DAILY_EVENTS_ORACLE)
-_stage("time_to_purchase_hazard_events", time_to_purchase_hazard_events,
-       TIME_TO_PURCHASE_HAZARD_ORACLE)
-_stage("seq_2patterns_events", seq_2patterns_events,
-       SEQ_2PATTERNS_EVENTS_ORACLE)
-_stage("lpa_communities_brands", lpa_communities_brands,
-       LPA_COMMUNITIES_BRANDS_ORACLE)
-_stage("dbscan_customers", dbscan_customers, DBSCAN_CUSTOMERS_ORACLE)
-_stage("kcore_spatial_customers", kcore_spatial_customers,
-       KCORE_SPATIAL_CUSTOMERS_ORACLE)
-_stage("holt_daily_events", holt_daily_events, HOLT_DAILY_EVENTS_ORACLE)
-_stage("textrank_keywords_documents", textrank_keywords_documents,
-       TEXTRANK_KEYWORDS_ORACLE)
-
-
 MULTIMODAL_NETPBM_ORACLE = """
 with px as (
   select doc_id,
@@ -17932,6 +17950,11 @@ order by media_id
 """
 
 
+@register(
+    "multimodal_netpbm_features",
+    MULTIMODAL_NETPBM_ORACLE,
+    tier="staged",
+)
 def multimodal_netpbm_features(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -17969,14 +17992,8 @@ def multimodal_netpbm_features(
             F.element_at("features", i + 1).cast("long").alias(nm)
             for i, nm in enumerate(names)
         ],
-    ).orderBy("media_id")
+    )
 
-
-_stage(
-    "multimodal_netpbm_features",
-    multimodal_netpbm_features,
-    MULTIMODAL_NETPBM_ORACLE,
-)
 
 
 MK_TREND_DAILY_EVENTS_ORACLE = """
@@ -18044,6 +18061,7 @@ order by grp
 """
 
 
+@register("mk_trend_daily_events", MK_TREND_DAILY_EVENTS_ORACLE, tier="staged")
 def mk_trend_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall + Theil-Sen trend suite
     (operators/timeseries.mann_kendall) over daily event volume per
@@ -18065,10 +18083,6 @@ def mk_trend_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
     return mann_kendall(daily, "et", "d", "x")
 
-
-_stage(
-    "mk_trend_daily_events", mk_trend_daily_events, MK_TREND_DAILY_EVENTS_ORACLE
-)
 
 
 SEQ_3PATTERNS_EVENTS_ORACLE = """
@@ -18106,6 +18120,7 @@ order by support_users desc, ant, mid, cons
 """
 
 
+@register("seq_3patterns_events", SEQ_3PATTERNS_EVENTS_ORACLE, tier="staged")
 def seq_3patterns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential 3-pattern support completing X209's PrefixSpan frame
     (Pei et al. 2001, length-3): users whose stream contains types
@@ -18165,13 +18180,8 @@ def seq_3patterns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast((1000000 * support_users) div n_users as bigint)"
             ).alias("support_ppm"),
         )
-        .orderBy(F.col("support_users").desc(), "ant", "mid", "cons")
     )
 
-
-_stage(
-    "seq_3patterns_events", seq_3patterns_events, SEQ_3PATTERNS_EVENTS_ORACLE
-)
 
 
 CUSUM_DAILY_EVENTS_ORACLE = """
@@ -18209,6 +18219,7 @@ order by grp, t
 """
 
 
+@register("cusum_daily_events", CUSUM_DAILY_EVENTS_ORACLE, tier="staged")
 def cusum_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided CUSUM drift chart (operators/timeseries.cusum_fold —
     Page 1954) over daily event volume per type: the ONLINE "has the
@@ -18228,5 +18239,3 @@ def cusum_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
     return cusum_fold(daily, "et", "d", "x")
 
-
-_stage("cusum_daily_events", cusum_daily_events, CUSUM_DAILY_EVENTS_ORACLE)

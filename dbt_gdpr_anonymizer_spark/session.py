@@ -13,6 +13,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Cores a local run uses: ``SPARK_GRAFT_CPUS``, else the host's count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+
+
 def get_spark(
     app_name: str = "gdpr-anonymizer-spark",
     master: str | None = None,
@@ -25,7 +30,7 @@ def get_spark(
     bench harness and tests share one code path; on a cluster pass
     ``master=None`` with a pre-configured environment and these fall away.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+    cpus = host_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -1,11 +1,15 @@
 """Local mimic of the driver's t2 correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet dir, then compares row count, column names, and
-an order-insensitive value hash (columns sorted by name, rows sorted, values
+Runs every query of a tier on Spark and its oracle twin on DuckDB over the
+same parquet dir, then compares row count, column names, and an
+order-insensitive value hash (columns sorted by name, rows sorted, values
 rendered with repr-level precision). Usage::
 
-    python scripts/check_correctness.py [sf_dir] [query ...]
+    python scripts/check_correctness.py [--tier staged] [sf_dir] [query ...]
+
+``--tier registry`` (the default) checks the driver contract,
+``queries()``/``oracle_sql()``; ``--tier staged`` checks the staged
+candidates outside it.
 
 Set ``CHECK_JSON=/path/out.json`` to also write a driver-shaped artifact
 ({name: {rows_match, schema_match, hash_match, spark_rows, oracle_rows,
@@ -22,6 +26,7 @@ Run both modes before promoting a new oracle.
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import math
@@ -33,9 +38,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from dbt_gdpr_anonymizer_spark import queries as Q  # noqa: E402
 
 
 def norm_val(v):
@@ -60,21 +63,31 @@ def table_hash(cols, rows):
     return h.hexdigest()
 
 
+def pop_tier() -> str:
+    """Take ``--tier registry|staged`` (default ``registry``) out of
+    ``sys.argv``, leaving ``[sf_dir] [query ...]``; shared with
+    scripts/audit_cache_leaks.py."""
+    ap = argparse.ArgumentParser(
+        usage="%(prog)s [--tier {registry,staged}] [sf_dir] [query ...]"
+    )
+    ap.add_argument("--tier", choices=Q.TIERS, default="registry")
+    args, rest = ap.parse_known_args()
+    sys.argv[1:] = rest
+    return args.tier
+
+
 def main():
+    tier = pop_tier()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    import __spark_entry__ as ent
+    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
     from dbt_gdpr_anonymizer_spark.session import get_spark
 
     spark = get_spark("correctness-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from '{sf_dir}/{t}.parquet'"
-        )
+    con = Q.duckdb_views(duckdb.connect(), sf_dir)
 
-    qs, oracles = ent.queries(), ent.oracle_sql()
+    qs, oracles = Q.all_queries(tier), Q.all_oracles(tier)
     report: dict[str, dict] = {}
     npass = nfail = 0
     for name, fn in qs.items():
@@ -84,6 +97,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            release_caches(sdf)
             if name not in oracles:
                 print(f"  {name}: rows-only ({len(srows)} rows) OK")
                 report[name] = {

@@ -21,23 +21,15 @@ sys.path.insert(0, ".")
 
 import duckdb  # noqa: E402
 
-from dbt_gdpr_anonymizer_spark.queries import all_oracles  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from dbt_gdpr_anonymizer_spark.queries import all_oracles, duckdb_views  # noqa: E402
+from dbt_gdpr_anonymizer_spark.session import host_cpus  # noqa: E402
 
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     cap = float(sys.argv[2]) if len(sys.argv) > 2 else 20.0
-    con = duckdb.connect()
-    con.execute("set threads to 32")
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from '{sf}/{t}.parquet'"
-        )
+    con = duckdb_views(duckdb.connect(), sf)
+    con.execute(f"set threads to {host_cpus()}")
     times: dict[str, float] = {}
     capped: list[str] = []
     errs: dict[str, str] = {}

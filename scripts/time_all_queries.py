@@ -37,10 +37,10 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.collect()
             times[name] = round(time.time() - t0, 2)
-            # r8: query results now re-track their operators' persisted
-            # intermediates, so release them — without this the sweep
-            # accumulates blocks across 199 queries and late-query
-            # timings pay eviction pressure
+            # query results track their operators' persisted
+            # intermediates; release them, or the sweep accumulates blocks
+            # across every query and late-query timings pay eviction
+            # pressure
             release_caches(df)
         except Exception as e:  # noqa: BLE001
             errs[name] = f"{type(e).__name__}: {e}"[:200]

@@ -1,6 +1,6 @@
 """Netpbm codec tier: decoder unit pins + driver-style oracle parity
-for the staged query (NOT registered — r11 oracle freeze; r13
-candidate)."""
+for the staged query (outside the driver contract —
+r11 oracle freeze; r13 candidate)."""
 
 from __future__ import annotations
 
@@ -70,11 +70,7 @@ def test_matches_duckdb_oracle(spark):
     sdf = Q.multimodal_netpbm_features(spark, SF_DIR)
     scols = sdf.columns
     srows = sorted(tuple(r) for r in sdf.collect())
-    con = duckdb.connect()
-    con.execute(
-        f"create view documents as "
-        f"select * from '{SF_DIR}/documents.parquet'"
-    )
+    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
     res = con.execute(Q.MULTIMODAL_NETPBM_ORACLE)
     ocols = [d[0] for d in res.description]
     orows = sorted(tuple(r) for r in res.fetchall())

@@ -1,4 +1,4 @@
-"""Canonicalizer-safety gate for every registered oracle/query pair.
+"""Canonicalizer-safety gate for every oracle/query pair of both tiers.
 
 The external driver fetches oracle results through a pandas/Arrow path
 where DuckDB HUGEINT (the type of an uncast ``sum(BIGINT)``) and
@@ -23,12 +23,9 @@ import os
 import duckdb
 import pytest
 from pyspark.sql import types as T
+from dbt_gdpr_anonymizer_spark.queries import ORACLE, QUERIES, duckdb_views
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TYPE_SF_DIR", "/root/testdata/sf0.001")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 SAFE_DUCK = (
     "BIGINT", "INTEGER", "SMALLINT", "TINYINT", "VARCHAR", "BOOLEAN",
@@ -38,19 +35,10 @@ SAFE_DUCK = (
 UNSAFE_SPARK = (T.DecimalType, T.FloatType)
 
 
-def _entry():
-    import __spark_entry__ as ent
-
-    return ent
-
-
 def test_oracle_columns_are_canonicalizer_safe():
-    ent = _entry()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"create view {t} as select * from '{SF_DIR}/{t}.parquet'")
+    con = duckdb_views(duckdb.connect(), SF_DIR)
     bad = {}
-    for name, sql in ent.oracle_sql().items():
+    for name, sql in ORACLE.items():
         cols = con.execute(f"describe ({sql})").fetchall()
         flagged = [
             (c, ty)
@@ -65,11 +53,9 @@ def test_oracle_columns_are_canonicalizer_safe():
 def test_spark_columns_are_canonicalizer_safe(spark):
     if not os.path.isdir(SF_DIR):
         pytest.skip(f"{SF_DIR} missing")
-    ent = _entry()
-    oracled = set(ent.oracle_sql())
     bad = {}
-    for name, fn in ent.queries().items():
-        if name not in oracled:  # rows-only entries aren't value-hashed
+    for name, fn in QUERIES.items():
+        if name not in ORACLE:  # rows-only entries aren't value-hashed
             continue
         schema = fn(spark, SF_DIR).schema
         flagged = [

@@ -1,8 +1,8 @@
 """Global physical-plan invariants over the whole query registry.
 
-Every registered query is planned (not executed) at sf0.001 and its
-physical plan checked for patterns that would be scale-killers on a real
-cluster:
+Every registered query of both tiers (the driver contract and the staged
+candidates) is planned (not executed) at sf0.001 and its physical plan
+checked for patterns that would be scale-killers on a real cluster:
 
 * ``CartesianProduct`` — never acceptable.
 * ``BroadcastNestedLoopJoin`` — only for the brute-force ANN baselines,
@@ -41,7 +41,8 @@ import re
 
 import pytest
 
-from dbt_gdpr_anonymizer_spark.queries import all_queries
+from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
+from dbt_gdpr_anonymizer_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
@@ -178,6 +179,24 @@ BNLJ_ALLOWED = {
     #     40-row query-set frames (the t_closeness/ann_cosine bounded
     #     contract); the corpus is never pair-joined
     "jl_distortion_report",
+    # Staged tier:
+    #   pq_residual_recall — composes the exact cosine_topk baseline
+    #     (query-set-bounded broadcast, the pq_recall_report contract)
+    "pq_residual_recall",
+    #   q11/q15 — the 1-row totals/max stats frame cross-joined in
+    #     (the q22 scalar-subquery pattern)
+    "q11_important_stock",
+    "q15_top_supplier",
+    #   seq patterns — the 1-row distinct-user-count broadcast
+    "seq_2patterns_events",
+    "seq_3patterns_events",
+    #   hazard — the 1-row corpus-max-timestamp broadcast (censoring age)
+    "time_to_purchase_hazard_events",
+    #   dbscan/kcore — the grid tier's 1-row max|lat| stats broadcast
+    #     (the spatial_radius_pairs_customers pattern); the pair join is
+    #     a hash equi-join and stays un-allowlisted
+    "dbscan_customers",
+    "kcore_spatial_customers",
 }
 
 
@@ -247,20 +266,40 @@ ROOT_SORT_KEPT = {
     "triangle_count_brands",  # operators/graph.triangle_count
     "vocab_growth_documents",  # operators/vocab.vocab_growth
     "zorder_layout_orders",  # operators/layout.zorder_layout_stats
+    # Staged tier, all sorting inside the operator named:
+    "acf_daily_events",  # operators/timeseries.acf_lags
+    "cusum_daily_events",  # operators/timeseries.cusum_fold
+    "dbscan_customers",  # operators/spatial.dbscan_clusters
+    "ewma_daily_events",  # operators/timeseries.ewma_fold
+    "holt_daily_events",  # operators/timeseries.holt_fold
+    "kcore_spatial_customers",  # operators/graph.kcore_peel
+    "lpa_communities_brands",  # operators/graph.label_propagation
+    "mk_trend_daily_events",  # operators/timeseries.mann_kendall
+    # operators/timeseries.nelson_aalen; test_timeseries.py's
+    # test_hazard_monotone_and_bounded also reads the collect() order
+    "time_to_purchase_hazard_events",
 }
 
 _planned: dict[str, object] = {}
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_planned():
+    yield
+    for df in _planned.values():
+        release_caches(df)
+    _planned.clear()
 
 
 def _plan(spark, name):
     """The query's DataFrame, built once per session: every invariant
     below reads the same plan."""
     if name not in _planned:
-        _planned[name] = all_queries()[name](spark, SF_DIR)
+        _planned[name] = QUERIES[name](spark, SF_DIR)
     return _planned[name]
 
 
-@pytest.mark.parametrize("name", sorted(all_queries()))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_unbounded_join_in_plan(spark, name):
     df = _plan(spark, name)
     qe = df._jdf.queryExecution()
@@ -280,7 +319,7 @@ def test_no_unbounded_join_in_plan(spark, name):
         )
 
 
-@pytest.mark.parametrize("name", sorted(all_queries()))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_unread_root_sort(spark, name):
     if name in ROOT_SORT_KEPT:
         return
@@ -305,9 +344,7 @@ _GRAM_JOIN = re.compile(r"Join \[(shingle|_gram)#")
     ["edit_distance_neardup", "ngram_containment_neardup", "ngram_jaccard_neardup"],
 )
 def test_similarity_joins_key_on_token_hash(spark, name):
-    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
-
-    df = all_queries()[name](spark, SF_DIR)
+    df = QUERIES[name](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     release_caches(df)
     assert _H_JOIN.search(plan), f"{name}: no candidate join on _h"

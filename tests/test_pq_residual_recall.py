@@ -1,6 +1,6 @@
 """Oracle parity for the pre-staged residual-recall query.
 
-``pq_residual_recall`` is NOT in the registry (r11 oracle freeze: 250
+``pq_residual_recall`` is in the staged tier (r11 oracle freeze: 250
 queries until the parked backlog drains); this test applies the external
 driver's own comparison — row count, column names, order-insensitive
 value equality on the same parquet — to the Spark/oracle pair so the
@@ -16,6 +16,7 @@ import duckdb
 
 from dbt_gdpr_anonymizer_spark.queries import (
     PQ_RESIDUAL_RECALL_ORACLE,
+    duckdb_views,
     pq_residual_recall,
 )
 
@@ -27,11 +28,7 @@ def test_matches_duckdb_oracle(spark):
     scols = sdf.columns
     srows = sorted(tuple(r) for r in sdf.collect())
 
-    con = duckdb.connect()
-    con.execute(
-        f"create view embeddings as "
-        f"select * from '{SF_DIR}/embeddings.parquet'"
-    )
+    con = duckdb_views(duckdb.connect(), SF_DIR)
     res = con.execute(PQ_RESIDUAL_RECALL_ORACLE)
     ocols = [d[0] for d in res.description]
     orows = sorted(tuple(r) for r in res.fetchall())

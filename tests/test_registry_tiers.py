@@ -1,0 +1,80 @@
+"""The query registry's two tiers.
+
+``register(..., tier=...)`` puts every name in exactly one tier. The
+driver contract (``__spark_entry__``) serves the registry tier: the 250
+names the r11 oracle freeze holds, in check order. The staged tier holds
+the oracle-checked candidates kept outside the contract.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import json
+
+import pytest
+
+import __spark_entry__ as ent
+from dbt_gdpr_anonymizer_spark import queries as Q
+
+# md5 of json.dumps(names) over the registry tier in check order:
+# registering, dropping, renaming or reordering a name changes it.
+REGISTRY_NAMES_MD5 = "913d0b6f073e3c23e1adea8c0846f6b4"
+
+STAGED = [
+    "pq_residual_recall",
+    "q2_min_cost_supplier",
+    "q7_nation_volume_shipping",
+    "q8_national_market_share",
+    "q9_product_type_profit",
+    "q11_important_stock",
+    "q12_priority_shipping",
+    "q13_customer_distribution",
+    "q15_top_supplier",
+    "q19_discounted_revenue",
+    "q20_potential_promotion",
+    "acf_daily_events",
+    "ewma_daily_events",
+    "time_to_purchase_hazard_events",
+    "seq_2patterns_events",
+    "lpa_communities_brands",
+    "dbscan_customers",
+    "kcore_spatial_customers",
+    "holt_daily_events",
+    "textrank_keywords_documents",
+    "multimodal_netpbm_features",
+    "mk_trend_daily_events",
+    "seq_3patterns_events",
+    "cusum_daily_events",
+]
+
+
+def _md5(names) -> str:
+    return hashlib.md5(json.dumps(list(names)).encode()).hexdigest()
+
+
+def test_tiers_partition_the_registry():
+    assert set(Q.TIER.values()) == set(Q.TIERS)
+    registry, staged = (set(Q.all_queries(t)) for t in Q.TIERS)
+    assert not registry & staged
+    assert registry | staged == set(Q.QUERIES)
+    assert set(Q.ORACLE) <= set(Q.QUERIES)
+
+
+def test_driver_contract_is_the_frozen_registry_tier():
+    names = list(ent.queries())
+    assert len(names) == 250
+    assert _md5(names) == REGISTRY_NAMES_MD5
+    assert list(ent.oracle_sql()) == names
+    assert names == list(Q.all_queries("registry"))
+    assert ent.oracle_sql() == Q.all_oracles("registry")
+
+
+def test_staged_tier():
+    assert list(Q.all_queries("staged")) == STAGED
+    assert list(Q.all_oracles("staged")) == STAGED
+
+
+def test_register_rejects_a_second_registration():
+    with pytest.raises(ValueError, match="registered twice"):
+        Q.register("q1_pricing_summary", tier="staged")(lambda spark, sf: None)
+    assert Q.TIER["q1_pricing_summary"] == "registry"

@@ -15,13 +15,8 @@ from dbt_gdpr_anonymizer_spark import queries as Q
 from tests.conftest import jobs_launched
 from tests.test_plan_invariants import SF_DIR
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
-
-@pytest.mark.parametrize("table", TABLES)
+@pytest.mark.parametrize("table", Q.TABLES)
 def test_memoized_schema_equals_inferred(spark, table):
     path = f"{SF_DIR}/{table}.parquet"
     if table == "events":

@@ -1,5 +1,6 @@
 """TextRank keyword extraction: driver-style oracle parity for the
-staged query (NOT registered — r11 oracle freeze; r13 candidate).
+staged query (outside the driver contract — r11 oracle freeze; r13
+candidate).
 """
 
 from __future__ import annotations
@@ -14,11 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
 
 def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    con.execute(
-        f"create view documents as "
-        f"select * from '{sf_dir}/documents.parquet'"
-    )
+    con = Q.duckdb_views(duckdb.connect(), sf_dir)
     res = con.execute(sql)
     cols = [d[0] for d in res.description]
     rows = res.fetchall()

@@ -1,6 +1,7 @@
 """Temporal-analytics tier: unit pins for operators/timeseries.py plus
-driver-style oracle parity for the four staged queries (NOT registered —
-r11 oracle freeze; r13 candidates, the pq_residual_recall precedent).
+driver-style oracle parity for the four staged queries (outside the
+driver contract — r11 oracle freeze; r13 candidates, the
+pq_residual_recall precedent).
 """
 
 from __future__ import annotations
@@ -31,10 +32,7 @@ PAIRS = [
 
 
 def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    con.execute(
-        f"create view events as select * from '{sf_dir}/events.parquet'"
-    )
+    con = Q.duckdb_views(duckdb.connect(), sf_dir)
     res = con.execute(sql)
     cols = [d[0] for d in res.description]
     rows = res.fetchall()
@@ -193,11 +191,7 @@ def test_lpa_matches_duckdb_oracle(spark):
     sdf = Q.lpa_communities_brands(spark, SF_DIR)
     scols = sdf.columns
     srows = sorted(tuple(r) for r in sdf.collect())
-    con = duckdb.connect()
-    for t in ("lineitem", "part"):
-        con.execute(
-            f"create view {t} as select * from '{SF_DIR}/{t}.parquet'"
-        )
+    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
     res = con.execute(Q.LPA_COMMUNITIES_BRANDS_ORACLE)
     ocols = [d[0] for d in res.description]
     orows = sorted(tuple(r) for r in res.fetchall())
@@ -244,10 +238,7 @@ def test_dbscan_matches_duckdb_oracle(spark):
     sdf = Q.dbscan_customers(spark, SF_DIR)
     scols = sdf.columns
     srows = sorted(tuple(r) for r in sdf.collect())
-    con = duckdb.connect()
-    con.execute(
-        f"create view customer as select * from '{SF_DIR}/customer.parquet'"
-    )
+    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
     res = con.execute(Q.DBSCAN_CUSTOMERS_ORACLE)
     ocols = [d[0] for d in res.description]
     orows = sorted(tuple(r) for r in res.fetchall())
@@ -298,10 +289,7 @@ def test_kcore_matches_duckdb_oracle(spark):
     sdf = Q.kcore_spatial_customers(spark, SF_DIR)
     scols = sdf.columns
     srows = sorted(tuple(r) for r in sdf.collect())
-    con = duckdb.connect()
-    con.execute(
-        f"create view customer as select * from '{SF_DIR}/customer.parquet'"
-    )
+    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
     res = con.execute(Q.KCORE_SPATIAL_CUSTOMERS_ORACLE)
     ocols = [d[0] for d in res.description]
     orows = sorted(tuple(r) for r in res.fetchall())

@@ -1,7 +1,7 @@
 """Oracle parity for the staged TPC-H completion tier (q2/q7/q8/q9/q11/
 q12/q13/q15/q19/q20 — the ten shapes that finish the 22-query suite).
 
-These are NOT in the registry (r11 oracle freeze: 250 queries until the
+These are in the staged tier (r11 oracle freeze: 250 queries until the
 parked backlog drains); this test applies the external driver's own
 comparison — row count, column names, order-insensitive value equality
 on the same parquet — to each Spark/oracle pair so the tier carries
@@ -20,16 +20,6 @@ from dbt_gdpr_anonymizer_spark import queries as Q
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-]
-
 PAIRS = [
     (Q.q2_min_cost_supplier, Q.Q2_MIN_COST_SUPPLIER_ORACLE),
     (Q.q7_nation_volume_shipping, Q.Q7_NATION_VOLUME_SHIPPING_ORACLE),
@@ -45,11 +35,7 @@ PAIRS = [
 
 
 def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from '{sf_dir}/{t}.parquet'"
-        )
+    con = Q.duckdb_views(duckdb.connect(), sf_dir)
     res = con.execute(sql)
     cols = [d[0] for d in res.description]
     rows = res.fetchall()
