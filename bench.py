@@ -16,12 +16,15 @@ timing). Value = total wall seconds across headline queries.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.tracing import StatusStore  # noqa: E402
 
 # Representative of every operator family: masking pipeline, relational
 # agg/join/window, events (sessionize/rollup/json), validation union.
@@ -118,60 +121,15 @@ HEADLINE = [
     "orderkey_gap_islands",
 ]
 
-# neardup_components drift note (r5, data-backed): decomposed timing at
-# sf0.1 shows the query = ngram_jaccard pair generation (2.4-3.0s steady,
-# 8-10s first-run, swinging with host load) + 4 label-propagation rounds
-# (~1.5-2s of fixed stage-scheduling overhead on a tiny graph). The
-# r3→r4→r5 "regression" (2.71 → 3.51 → ~4-6s) is host-load drift on the
-# shared box — every heavy query moved the same session (edit_distance
-# 4.5→5.1, ngram_jaccard 2.2→2.4) and no commit has touched
-# operators/graph.py since r3. A bi-side repartition+persist to reuse one
-# edge shuffle across rounds was tried and reverted (made it 4.1→6.2s;
-# see operators/graph.py note). RESOLVED late-r5: the bounded driver
-# union-find fast path (operators/graph.py max_driver_edges — near-dup
-# graphs are tiny relative to the corpus; distributed rounds remain the
-# past-the-bound fallback) removes the round overhead entirely: measured
-# 6.6 → 1.0s at sf0.1, oracle-identical output.
-#
-# Streaming-entry comparison semantics: stream_sessionize_events and
-# stream_interval_join_clicks time a 3-batch stateful REPLAY end to end —
-# temp-file batch prep, state-store checkpoints per micro-batch, Python
-# state workers (sessionize) or double-sided join state (interval join).
-# Their DuckDB oracle is the BATCH equivalence check (same final rows),
-# not a throughput baseline: a batch engine replaying the same logic in
-# one pass will always be faster than a micro-batch stateful drain. The
-# entries are here to time the stateful plan shapes themselves
-# (regressions in state sizing/partitioning show up here), per the r4
-# review's request to put the newest plan shapes under timing.
-#
-# Per-query floor note (r6, measured): the ~0.3-0.6s cost of trivial
-# queries at bench scale was swept systematically on a quiet host
-# (8-query common set, fresh JVM per variant, median-of-3): base 5.12s;
-# AQE parallelismFirst=false 5.04s; shuffle compression off 5.21s; both
-# 5.70s; AQE OFF 6.00s (worse — the runtime re-plan pays for itself even
-# at toy scale); shuffle.partitions 8 / 64 5.30 / 5.49s; locality.wait=0
-# 5.56s. Everything is within run-to-run noise: the floor is fixed
-# stage-scheduling + codegen latency of the local JVM, not a tunable or a
-# plan defect, and it amortizes away at real data volume (the same
-# queries' per-row cost falls 10x from sf0.01 to sf0.1). The co-timed
-# duck_sec/ratio fields below give the judge the honest per-host context
-# the r4-r5 cross-round wall-clock comparisons lacked.
-#
-# Timing policy: every tracked persist() is released after each run, so all
-# three timed runs are COLD-cache — the number a fresh cluster job would
-# see, not one inflated by a previous run's leftover blocks. This is why
-# minhash_lsh_neardup reads ~2.2s here vs ~1.1s before the release was
-# added (r2 bench): the old number re-used the shingle-set cache persisted
-# by the PREVIOUS run's plan. Within a single run the plan still persists
-# and reuses the shingle sets across its own branches (the legitimate
-# shared-subplan cache in operators/dedup.py); only cross-run reuse is
-# suppressed.
-
-
-# Stateful micro-batch replays: their oracle is a batch EQUIVALENCE check
-# (same final rows), not a throughput baseline — a one-pass batch engine vs
-# a 3-micro-batch stateful drain with checkpoints is not a comparison. They
-# are excluded from the batch ratio and reported separately.
+# Stateful micro-batch replays: stream_sessionize_events and
+# stream_interval_join_clicks time a 3-batch stateful REPLAY end to end
+# (temp-file batch prep, state-store checkpoints per micro-batch, Python
+# state workers or double-sided join state), so regressions in state
+# sizing or partitioning show up here. Their oracle is a batch EQUIVALENCE
+# check (same final rows), not a throughput baseline — a one-pass batch
+# engine vs a 3-micro-batch stateful drain with checkpoints is not a
+# comparison. They are excluded from the batch ratio and reported
+# separately.
 _STREAMING_REPLAYS = {"stream_sessionize_events", "stream_interval_join_clicks"}
 
 # Per-oracle wall cap: the brute-force near-dup oracles are O(n²) by
@@ -180,43 +138,113 @@ _STREAMING_REPLAYS = {"stream_sessionize_events", "stream_interval_join_clicks"}
 # instead of stalling the bench.
 _DUCK_CAP_SEC = float(os.environ.get("BENCH_DUCK_CAP_SEC", "30"))
 
+# Per-run status-store fields of the scale signal: shuffle bytes and
+# job/stage counts follow the plan, not host load, so they witness plan
+# structure where sf0.1 timings are scheduling-bound.
+_SCALE_FIELDS = ("shuffle_write_bytes", "shuffle_read_bytes", "input_bytes", "jobs")
+
+
+def noop_write(df) -> None:
+    """Force ``df`` in full without a sink cost or a collect to the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM and parquet footers once, so per-query numbers measure
+    the query, not session startup."""
+    noop_write(spark.read.parquet(f"{sf_dir}/customer.parquet"))
+
+
+def mark(store: StatusStore) -> tuple[int, int]:
+    """``store.snapshot()`` once the listener bus has drained, so jobs that
+    already finished fall before the mark, not inside the window."""
+    store._bus.waitUntilEmpty()
+    return store.snapshot()
+
+
+def time_query(store: StatusStore, build, on_warm=None) -> dict:
+    """One untimed warm-up (plan compilation, code generation, footer
+    cache), then three timed runs of ``build()`` written to the noop sink.
+
+    Single-sample local-JVM timings jitter by 50-80% from GC and scheduler
+    noise; the median is the number that scales with data volume. Each run
+    starts its clock BEFORE ``build()``: streaming entries drain their
+    stream inside the callable, and plan build is part of what a user
+    pays. Tracked ``persist()``s are released after every run, so each
+    timed run is cold-cache, the number a fresh job would see, and
+    re-invocations do not pile up identical cached blocks that later
+    queries pay to evict.
+    ``on_warm(df)`` sees the warm-up frame after it ran.
+
+    Returns the medians ``build``, ``exec`` and ``total`` (seconds) and
+    ``per_run``: the status-store delta over the timed runs divided by
+    three (jobs from streaming threads included), or None when the store
+    evicted part of the window (``spark.ui.retainedStages``)."""
+    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
+
+    warm = build()
+    noop_write(warm)
+    if on_warm is not None:
+        on_warm(warm)
+    release_caches(warm)
+    before = mark(store)
+    runs = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
+        noop_write(df)
+        t2 = time.perf_counter()
+        runs.append((t1 - t0, t2 - t1, t2 - t0))
+        release_caches(df)
+    build_s, exec_s, total_s = (round(sorted(r)[1], 3) for r in zip(*runs))
+    d = store.since(before)
+    after = store.snapshot()
+    per_run = None
+    # Ids are dense, so the window holds every id from the mark to the
+    # newest. Spark evicts never-run (skipped) stages first, which leaves
+    # older stages in place: ``since`` cannot see that loss, the id span can.
+    span = (after[0] - before[0], after[1] - before[1])
+    if d is not None and (d["jobs"], d["stages"]) == span:
+        per_run = {k: round(d[k] / 3) for k in _SCALE_FIELDS}
+        per_run["stages"] = round(d["stages"] / 3, 1)
+    return {"build": build_s, "exec": exec_s, "total": total_s, "per_run": per_run}
+
 
 class OracleTimer:
     """Times one query's DuckDB oracle on the same host, same session,
-    same parquet (the r5 verdict's fix for cross-round host-drift
-    ambiguity): warm-up + median of three, per-query interrupt cap.
-    ``time_one`` returns None for no oracle, cap exceeded, or oracle
-    error (errors recorded separately — a broken oracle must not
+    same parquet: warm-up + median of three, each run interrupted at
+    ``cap_sec``. ``time_one`` returns None for no oracle, cap exceeded, or
+    oracle error (errors recorded separately — a broken oracle must not
     masquerade as a timeout).
 
-    r11: callers interleave ``time_one`` with the Spark timings so each
-    query's two sides are measured ADJACENT in time — the r10 closing
-    band (1.678-2.014 on identical code) and the r10 driver run's
-    slow-DuckDB outlier showed that minutes of host-load drift between
-    the all-Spark phase and the all-DuckDB phase lands entirely on one
-    side of the ratio; co-timing per query makes each ratio robust to
-    slow drift (fast noise still averages out in the medians)."""
+    Callers interleave ``time_one`` with the Spark timings so each query's
+    two sides are measured ADJACENT in time: minutes of host-load drift
+    between an all-Spark phase and an all-DuckDB phase would land entirely
+    on one side of the ratio (r10 closing band 1.678-2.014 on identical
+    code); co-timing per query makes each ratio robust to slow drift."""
 
-    def __init__(self, sf_dir: str):
+    def __init__(self, sf_dir: str, cap_sec: float = _DUCK_CAP_SEC):
         import duckdb
 
         from dbt_gdpr_anonymizer_spark.queries import all_oracles, duckdb_views
         from dbt_gdpr_anonymizer_spark.session import host_cpus
 
         self._duckdb = duckdb
+        self.cap_sec = cap_sec
         self.oracles = all_oracles()
         self.con = duckdb_views(duckdb.connect(), sf_dir)
         self.con.execute(f"set threads to {host_cpus()}")
         self.capped: set[str] = set()
         self.errors: dict[str, str] = {}
 
-    def _run_once(self, sql: str) -> float | None:
+    def run_capped(self, sql: str) -> float | None:
         """Returns elapsed sec; None = interrupted at the cap. A genuine
         oracle failure raises (duckdb.InterruptException is the documented
         interrupt type; a raw duckdb.Error here means the SQL is broken)."""
         import threading
 
-        timer = threading.Timer(_DUCK_CAP_SEC, self.con.interrupt)
+        timer = threading.Timer(self.cap_sec, self.con.interrupt)
         timer.start()
         t0 = time.perf_counter()
         try:
@@ -241,7 +269,7 @@ class OracleTimer:
         runs: list[float] = []
         try:
             for i in range(4):  # 1 warm-up + 3 timed
-                r = self._run_once(sql)
+                r = self.run_capped(sql)
                 if r is None:
                     self.capped.add(name)
                     return None
@@ -253,143 +281,26 @@ class OracleTimer:
         return round(sorted(runs)[1], 3)
 
 
-class _ScaleSignal:
-    """Per-query shuffle-byte / job-count deltas from the AppStatusStore
-    (r12, VERDICT #2: make scale-safety driver-visible — wall-clock at
-    sf0.1 is scheduling-bound, so plan-structural changes need a
-    byte-level witness). Stage and job ids are globally monotonic and the
-    bench runs queries strictly serially, so "sum the metrics of stages
-    with id greater than the last snapshot" is exactly the query's own
-    traffic — including jobs launched from streaming micro-batch threads,
-    which thread-local job groups would miss. Reads the same store the
-    UI/REST API serve. The store evicts its oldest stages past
-    spark.ui.retainedStages (default 1000); if a stage launched since the
-    snapshot is gone, the retained ids above the snapshot no longer run
-    contiguously from it and the delta is None, not an undercount.
-    Failures degrade to None — instrumentation must never fail the
-    bench."""
-
-    def __init__(self, spark):
-        self._store = spark.sparkContext._jsc.sc().statusStore()
-        jvm = spark.sparkContext._jvm
-        gw = spark.sparkContext._gateway
-        # stageList's py4j-visible overload is the 5-arg form
-        # (statuses, details, withSummaries, unsortedQuantiles, taskStatus)
-        self._empty = jvm.java.util.ArrayList()
-        self._no_quantiles = gw.new_array(jvm.double, 0)
-        self._max_stage = -1
-        self._max_job = -1
-
-    def _stages(self):
-        it = self._store.stageList(
-            self._empty, False, False, self._no_quantiles, self._empty
-        )
-        return [it.apply(i) for i in range(it.size())]
-
-    def _jobs(self):
-        it = self._store.jobsList(self._empty)
-        return [it.apply(i) for i in range(it.size())]
-
-    def snapshot(self) -> None:
-        try:
-            self._max_stage = max(
-                [s.stageId() for s in self._stages()], default=self._max_stage
-            )
-            self._max_job = max(
-                [j.jobId() for j in self._jobs()], default=self._max_job
-            )
-        except Exception:
-            pass
-
-    def delta(self) -> dict | None:
-        try:
-            new_stages = [
-                s for s in self._stages() if s.stageId() > self._max_stage
-            ]
-            ids = sorted(s.stageId() for s in new_stages)
-            first = self._max_stage + 1
-            if ids != list(range(first, first + len(ids))):
-                return None  # evicted since the snapshot
-            n_jobs = sum(
-                1 for j in self._jobs() if j.jobId() > self._max_job
-            )
-            return {
-                "shuffle_write_bytes": sum(
-                    s.shuffleWriteBytes() for s in new_stages
-                ),
-                "shuffle_read_bytes": sum(
-                    s.shuffleReadBytes() for s in new_stages
-                ),
-                "input_bytes": sum(s.inputBytes() for s in new_stages),
-                "jobs": n_jobs,
-                "stages": len(new_stages),
-            }
-        except Exception:
-            return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
     from dbt_gdpr_anonymizer_spark.queries import all_queries
     from dbt_gdpr_anonymizer_spark.session import get_spark
 
     spark = get_spark("bench")
     qs = all_queries()
     names = [n for n in HEADLINE if n in qs]
-
-    # Warm the JVM + parquet footers once so per-query numbers measure the
-    # query, not session startup.
-    spark.read.parquet(f"{sf_dir}/customer.parquet").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_session(spark, sf_dir)
 
     oracle_timer = OracleTimer(sf_dir)
+    store = StatusStore(spark)
     timings: dict[str, float] = {}
     duck: dict[str, float | None] = {}
-    scale_sig = _ScaleSignal(spark)
     scale: dict[str, dict | None] = {}
     for name in names:
-        # One untimed warm-up (plan compilation, code generation, parquet
-        # footer cache), then the MEDIAN of three timed steady-state runs —
-        # single-sample local-JVM timings jitter by 50-80% from GC and
-        # scheduler noise; the median is the number that scales with data
-        # volume rather than with warm-up or a stray pause.
-        # Tracked persist()s are released after every run: without this the
-        # dedup/components queries leave identical cached blocks behind on
-        # each re-invocation ("already cached" warnings, growing executor
-        # memory pressure) and later queries pay the eviction cost.
-        warm = qs[name](spark, sf_dir)
-        warm.write.format("noop").mode("overwrite").save()
-        release_caches(warm)
-        # r12 additions-only scale signal: snapshot AFTER the warm-up so
-        # the delta covers exactly the 3 timed runs (divided by 3 below) —
-        # shuffle bytes and job counts are deterministic per run, unlike
-        # wall-clock, so they witness plan structure for the judge.
-        scale_sig.snapshot()
-        runs = []
-        for _ in range(3):
-            # t0 BEFORE query construction: streaming entries drain their
-            # stream inside the callable, and plan build is part of what a
-            # user pays; for batch queries the build adds only millis.
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            release_caches(df)
-        timings[name] = round(sorted(runs)[1], 3)
-        d = scale_sig.delta()
-        scale[name] = (
-            None
-            if d is None
-            else {
-                k: (round(v / 3.0) if k != "stages" else round(v / 3.0, 1))
-                for k, v in d.items()
-            }
-        )
-        # Co-timed per query (r11): the oracle runs IMMEDIATELY after the
-        # query's Spark runs, so each ratio's two sides see the same host
-        # state; see OracleTimer docstring for the band evidence.
+        t = time_query(store, functools.partial(qs[name], spark, sf_dir))
+        timings[name], scale[name] = t["total"], t["per_run"]
+        # The oracle runs IMMEDIATELY after the query's Spark runs, so each
+        # ratio's two sides see the same host state (see OracleTimer).
         duck[name] = oracle_timer.time_one(name)
 
     duck_capped, duck_errors = oracle_timer.capped, oracle_timer.errors
@@ -418,7 +329,7 @@ def main() -> None:
         # (the brute-force near-dup oracles at sf>=0.1)
         "duck_sec": duck,
         "ratio": ratio,
-        "duck_cap_sec": _DUCK_CAP_SEC,
+        "duck_cap_sec": oracle_timer.cap_sec,
         "duck_capped": sorted(duck_capped),
         "duck_errors": duck_errors,
         "streaming_replays": sorted(_STREAMING_REPLAYS & set(names)),
@@ -431,7 +342,7 @@ def main() -> None:
         ),
         # r12 (additions-only): per-query per-run shuffle/input bytes and
         # job/stage counts from the AppStatusStore — deterministic plan
-        # witnesses that survive host-load noise (see _ScaleSignal).
+        # witnesses that survive host-load noise (see time_query).
         "scale_signal_per_run": scale,
     }
     # Full per-query detail goes to a file: the r6 single-line emission

@@ -38,12 +38,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import ANON_EMAIL_DOMAIN
-from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident
+from dbt_gdpr_anonymizer_spark.functions.sqltext import sql_ident, sql_str
 
 __all__ = [
     "mask_email",
+    "mask_email_sql",
     "mask_phone",
+    "mask_phone_sql",
     "mask_coordinates",
+    "mask_coordinates_sql",
     "suppress",
     "mask_full_coordinates",
     "create_geohash",
@@ -73,45 +76,64 @@ def _guard(c: Column, masked: Column) -> Column:
     """Apply ``masked`` only when the value is non-null and non-empty.
 
     Reference guard ``col is not null and col != ''`` (mask_email.sql:33):
-    empty string masks to NULL, not to a masked string.
+    empty string masks to NULL, not to a masked string. :func:`_guard_sql`
+    is its SQL text.
     """
     return F.when(c.isNotNull() & (c != F.lit("")), masked).otherwise(F.lit(None))
 
 
-def mask_email(
-    c: Column | str, salt: str, output_domain: str = ANON_EMAIL_DOMAIN
-) -> Column:
-    """Irreversible pseudonymization: ``user_<16 hex of sha256(lower(trim(e))||salt)>@domain``.
+def _guard_sql(c: str, masked: str) -> str:
+    """:func:`_guard` as SQL text: a CASE with no ELSE releases the same
+    typed NULL as ``.otherwise(lit(None))``."""
+    return f"CASE WHEN {c} IS NOT NULL AND {c} != '' THEN {masked} END"
 
-    ``F.sha2(..., 256)`` already yields lowercase hex, collapsing the
+
+def mask_email_sql(c: str, salt: str, output_domain: str = ANON_EMAIL_DOMAIN) -> str:
+    """Irreversible pseudonymization ``user_<16 hex of
+    sha256(lower(trim(e))||salt)>@domain`` as SQL text over a SQL
+    expression.
+
+    ``sha2(..., 256)`` already yields lowercase hex, collapsing the
     reference's ``to_hex(sha256(...))`` pair.
     """
-    c = _col(c)
-    hashed = F.sha2(F.concat(F.lower(F.trim(c)), F.lit(salt)), 256)
-    return _guard(
+    return _guard_sql(
         c,
-        F.concat(
-            F.lit("user_"), hashed.substr(1, 16), F.lit("@" + output_domain)
-        ),
+        f"concat('user_', substring(sha2(concat(lower(trim({c})), "
+        f"{sql_str(salt)}), 256), 1, 16), {sql_str('@' + output_domain)})",
     )
 
 
-def mask_phone(c: Column | str, keep_chars: int = 6) -> Column:
-    """Partial masking: first ``keep_chars`` chars of trimmed value + ``' XX XX XX XX'``.
+def mask_email(c: str, salt: str, output_domain: str = ANON_EMAIL_DOMAIN) -> Column:
+    """:func:`mask_email_sql` over a column name."""
+    return F.expr(mask_email_sql(sql_ident(c), salt, output_domain))
+
+
+def mask_phone_sql(c: str, keep_chars: int = 6) -> str:
+    """Partial masking as SQL text over a SQL expression: first
+    ``keep_chars`` chars of the trimmed value + ``' XX XX XX XX'``.
 
     Keeps the reference's quirk: ``'+33 1 '`` (trailing space) + mask gives a
     double space. Do not "fix".
     """
-    c = _col(c)
-    return _guard(
-        c, F.concat(F.substring(F.trim(c), 1, keep_chars), F.lit(" XX XX XX XX"))
+    return _guard_sql(
+        c, f"concat(substring(trim({c}), 1, {keep_chars}), ' XX XX XX XX')"
     )
 
 
-def mask_coordinates(c: Column | str, precision: int = 2) -> Column:
-    """Precision reduction to ``precision`` decimals (2 ≈ 1.1 km)."""
-    c = _col(c)
-    return c.cast("double").cast(f"decimal(18,{precision})").cast("double")
+def mask_phone(c: str, keep_chars: int = 6) -> Column:
+    """:func:`mask_phone_sql` over a column name."""
+    return F.expr(mask_phone_sql(sql_ident(c), keep_chars))
+
+
+def mask_coordinates_sql(c: str, precision: int = 2) -> str:
+    """Precision reduction to ``precision`` decimals (2 ≈ 1.1 km) as SQL
+    text over a SQL expression."""
+    return f"cast(cast(cast({c} as double) as decimal(18,{precision})) as double)"
+
+
+def mask_coordinates(c: str, precision: int = 2) -> Column:
+    """:func:`mask_coordinates_sql` over a column name."""
+    return F.expr(mask_coordinates_sql(sql_ident(c), precision))
 
 
 def suppress(c: Column | str) -> Column:  # noqa: ARG001 - signature symmetry

@@ -43,6 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_gdpr_anonymizer_spark.functions.masking import mask_coordinates_sql
 from dbt_gdpr_anonymizer_spark.functions.sqltext import (
     check_quoted_names,
     sql_ident,
@@ -83,7 +84,7 @@ def _too_precise(c: str, precision: int = 2) -> str:
     value, immune to the ``x*100 != floor(x*100)`` float fragility (the
     reference's string ``split_part`` check has the same intent).
     """
-    return f"{c} != cast(cast({c} as decimal(18,{precision})) as double)"
+    return f"{c} != {mask_coordinates_sql(c, precision)}"
 
 
 # The three singular tests (assert_no_pii_in_marts.sql:18-70): name ->

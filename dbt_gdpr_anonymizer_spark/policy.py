@@ -32,11 +32,7 @@ from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.functions import masking
-from dbt_gdpr_anonymizer_spark.functions.sqltext import (
-    check_quoted_names,
-    sql_ident,
-    sql_str,
-)
+from dbt_gdpr_anonymizer_spark.functions.sqltext import check_quoted_names, sql_ident
 
 
 @dataclass(frozen=True)
@@ -135,50 +131,21 @@ def validate_policy(policy: TablePolicy) -> None:
 # per-column Column chains at ~0.16 s of driver socket chatter per
 # mart_pipeline build; as one selectExpr the build cost no longer grows
 # with the column count. The four reference methods, the pass-through and
-# the ``AS {name}_anon`` alias are therefore SQL text. Each template is
-# the EXACT SQL form of the former Column chain — the same null/empty
-# guard (CASE with no ELSE releases the same typed NULL the old
-# .otherwise(lit(None)) did), the same decimal-cast rounding, the same
-# sha2/substring shapes — verified hash-identical on every consumer query
-# at 3 SFs. Extension methods that only exist as Columns (generalize, the
+# the ``AS {name}_anon`` alias are therefore SQL text; the masking
+# formulas are ``functions/masking.py``'s ``*_sql`` text, which the
+# masking Column forms parse too. Extension methods that only exist as Columns (generalize, the
 # fpe_digits HOF, the FF1 UDF) keep their Column builders; a model using
 # one is projected with ``select`` and its SQL columns parsed one by one.
 # Registry functions take the column NAME and return SQL text or a Column.
 def _method_registry(
     conf: EngineSettings, city_column: str | None
 ) -> dict[str, Callable[[str], str | Column]]:
-    from dbt_gdpr_anonymizer_spark.config import ANON_EMAIL_DOMAIN
-
-    salt = sql_str(conf.salt_key)
-    dom = sql_str("@" + ANON_EMAIL_DOMAIN)
     p = int(conf.gps_precision)
-
-    def guarded(c: str, masked_sql: str) -> str:
-        return f"CASE WHEN {c} IS NOT NULL AND {c} != '' THEN {masked_sql} END"
-
-    def mask_partial(c: str) -> str:
-        cs = sql_ident(c)
-        return guarded(
-            cs, f"concat(substring(trim({cs}), 1, 6), ' XX XX XX XX')"
-        )
-
-    def hash_sha256(c: str) -> str:
-        cs = sql_ident(c)
-        return guarded(
-            cs,
-            "concat('user_', substring(sha2(concat(lower(trim("
-            f"{cs})), {salt}), 256), 1, 16), {dom})",
-        )
-
-    def round_dec(c: str) -> str:
-        cs = sql_ident(c)
-        return f"cast(cast(cast({cs} as double) as decimal(18,{p})) as double)"
-
     city = sql_ident(city_column) if city_column else "cast(null as string)"
     return {
-        "mask_partial": mask_partial,
-        "hash_sha256": hash_sha256,
-        "round_2_decimals": round_dec,
+        "mask_partial": lambda c: masking.mask_phone_sql(sql_ident(c)),
+        "hash_sha256": lambda c: masking.mask_email_sql(sql_ident(c), conf.salt_key),
+        "round_2_decimals": lambda c: masking.mask_coordinates_sql(sql_ident(c), p),
         "suppress": lambda c: "cast(null as string)",
         "aggregate_to_city": lambda c: city,
         # extension beyond the reference's four methods: temporal

@@ -326,11 +326,13 @@ def mask_phone_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mask_coordinates_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = _t(spark, sf_dir, "customer").select(
+        "c_custkey", _lat_col().alias("lat"), _lon_col().alias("lon")
+    )
     return c.select(
         "c_custkey",
-        masking.mask_coordinates(_lat_col()).alias("lat_anon"),
-        masking.mask_coordinates(_lon_col()).alias("lon_anon"),
+        masking.mask_coordinates("lat").alias("lat_anon"),
+        masking.mask_coordinates("lon").alias("lon_anon"),
     )
 
 

@@ -5,10 +5,13 @@ Usage:
     python scripts/profile_query.py [--plans OUTDIR --tag before|after]
         [sf_dir] name [name ...]
 
-For each named registry query, measures (median of 3 after one warm-up):
+For each named registry query, measures with ``bench.time_query`` (median
+of 3 after one warm-up, the bench methodology):
   build  = py4j plan-construction wall (callable -> DataFrame)
   exec   = noop-sink execution wall (full computation, no sink cost)
-  jobs   = Spark jobs launched by one exec (statusTracker delta)
+  total  = build + exec wall of one run
+  jobs   = Spark jobs launched by one build + exec (status-store delta,
+           jobs from streaming threads included)
 and optionally writes ``<OUTDIR>/<name>_<tag>.txt`` with the
 ``explain("formatted")`` output, so plan claims in OPTIMIZATION_r11.md are
 checkable without running Spark.
@@ -17,15 +20,27 @@ checkable without running Spark.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import functools
+import io
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dbt_gdpr_anonymizer_spark.operators.caching import release_caches  # noqa: E402
+from bench import time_query, warm_session  # noqa: E402
 from dbt_gdpr_anonymizer_spark.queries import all_queries  # noqa: E402
 from dbt_gdpr_anonymizer_spark.session import get_spark  # noqa: E402
+from perfbench.tracing import StatusStore  # noqa: E402
+
+
+def _dump_plan(path: str, df) -> None:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    with open(path, "w") as f:
+        f.write(buf.getvalue())
 
 
 def main() -> None:
@@ -38,65 +53,21 @@ def main() -> None:
 
     spark = get_spark("profile")
     qs = all_queries()
-    tracker = spark.sparkContext.statusTracker()
-    # Warm the JVM + parquet footers (the bench does the same).
-    spark.read.parquet(f"{args.sf_dir}/customer.parquet").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    store = StatusStore(spark)
+    warm_session(spark, args.sf_dir)
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
 
     out: dict[str, dict] = {}
     for name in args.names:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        # warm-up run (codegen, footer cache) — not timed
-        warm = fn(spark, args.sf_dir)
-        warm.write.format("noop").mode("overwrite").save()
+        on_warm = None
         if args.plans:
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                warm.explain("formatted")
-            import os
-
-            os.makedirs(args.plans, exist_ok=True)
-            with open(f"{args.plans}/{name}_{args.tag}.txt", "w") as f:
-                f.write(buf.getvalue())
-        release_caches(warm)
-
-        builds, execs, jobs = [], [], []
-        for i in range(3):
-            # r12 (ADVICE): count jobs via an explicit JOB GROUP so the
-            # set is exactly this measurement's jobs — the old
-            # max-job-id delta counted any concurrent job in the
-            # session. Caveat that remains: jobs launched from OTHER
-            # threads (streaming micro-batches) don't inherit the
-            # thread-local group, so stream_* job counts are lower
-            # bounds here (bench.py's scale signal uses global
-            # stage-id deltas instead, which do include them).
-            group = f"profile:{name}:{i}"
-            spark.sparkContext.setJobGroup(group, f"profile {name} run {i}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            builds.append(t1 - t0)
-            execs.append(t2 - t1)
-            # build can launch eager jobs (collect of bounds/guards);
-            # the group covers build + exec, which is what "jobs per
-            # invocation" means for the record
-            jobs.append(len(set(tracker.getJobIdsForGroup(group) or [])))
-            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-            release_caches(df)
-        out[name] = {
-            "build": round(sorted(builds)[1], 3),
-            "exec": round(sorted(execs)[1], 3),
-            "total": round(sorted(builds)[1] + sorted(execs)[1], 3),
-            "jobs": sorted(jobs)[1],
-        }
-        spark.sparkContext.setJobDescription(None)
+            on_warm = functools.partial(
+                _dump_plan, f"{args.plans}/{name}_{args.tag}.txt"
+            )
+        t = time_query(store, functools.partial(qs[name], spark, args.sf_dir), on_warm)
+        per_run = t.pop("per_run")
+        out[name] = {**t, "jobs": per_run and per_run["jobs"]}
         print(name, out[name], flush=True)
     print(json.dumps({"sf_dir": args.sf_dir, "profile": out}))
 

@@ -1,12 +1,13 @@
 """Core-count scaling spot-bench on the replicated large fixture.
 
 Times a fixed list of DATA-BOUND headline queries (no near-dup class —
-see make_scaled_data.py — and no capped-oracle queries) with the noop
-sink at the current ``$SPARK_GRAFT_CPUS``, one warm-up + median of 3,
-exactly the bench methodology. Run it twice (cpus=8 and cpus=32) over
-the same fixture and compare: ratios well above 1 show the plans are
-data-parallel once rows dominate scheduling overhead — the scale signal
-the sf0.1 bench cannot produce (r11 driver scaling block ≈ 1 everywhere).
+see make_scaled_data.py — and no capped-oracle queries) with
+``bench.time_query`` at the current ``$SPARK_GRAFT_CPUS``: one warm-up +
+median of 3, exactly the bench methodology. Run it twice (cpus=8 and
+cpus=32) over the same fixture and compare: ratios well above 1 show the
+plans are data-parallel once rows dominate scheduling overhead — the
+scale signal the sf0.1 bench cannot produce (r11 driver scaling block ≈ 1
+everywhere).
 
 Usage:
     python scripts/make_scaled_data.py            # once, builds /tmp/scaled_sf1
@@ -16,12 +17,15 @@ Usage:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_query, warm_session  # noqa: E402
+from perfbench.tracing import StatusStore  # noqa: E402
 
 QUERIES = [
     "q1_pricing_summary",
@@ -42,28 +46,16 @@ QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SCALED_DIR", "/tmp/scaled_sf1")
-    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
     from dbt_gdpr_anonymizer_spark.queries import all_queries
     from dbt_gdpr_anonymizer_spark.session import get_spark
 
     spark = get_spark("spot_scaled")
     qs = all_queries()
-    spark.read.parquet(f"{sf_dir}/customer.parquet").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    store = StatusStore(spark)
+    warm_session(spark, sf_dir)
     out: dict[str, float] = {}
     for name in QUERIES:
-        warm = qs[name](spark, sf_dir)
-        warm.write.format("noop").mode("overwrite").save()
-        release_caches(warm)
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            release_caches(df)
-        out[name] = round(sorted(runs)[1], 3)
+        out[name] = time_query(store, functools.partial(qs[name], spark, sf_dir))["total"]
         print(f"# {name}: {out[name]}", file=sys.stderr, flush=True)
     print(
         json.dumps(

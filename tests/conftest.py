@@ -2,7 +2,9 @@ from __future__ import annotations
 
 import pytest
 
+from bench import mark
 from dbt_gdpr_anonymizer_spark.session import get_spark
+from perfbench.tracing import StatusStore
 
 
 @pytest.fixture(scope="session")
@@ -83,20 +85,12 @@ def unpartitioned_windows(df) -> list[str]:
 
 
 def jobs_launched(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs: the delta of the newest
-    job id in Spark's status store."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-
-    def newest() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = store.jobsList(empty)
-        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
-    before = newest()
+    """Spark jobs started while ``fn()`` runs, read from Spark's status
+    store by the benchmark's collector (jobs from other threads included)."""
+    store = StatusStore(spark)
+    before = mark(store)
     fn()
-    return newest() - before
+    return store.since(before)["jobs"]
 
 
 @pytest.fixture

@@ -9,7 +9,6 @@ from __future__ import annotations
 import re
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions import masking
 
@@ -90,18 +89,13 @@ def test_mask_phone_prefix_and_suffix(spark, values):
 @settings(max_examples=15, deadline=None)
 @given(st.lists(coords, min_size=1, max_size=30))
 def test_mask_coordinates_rounds_to_2_decimals_and_idempotent(spark, values):
-    outs = run(spark, values, masking.mask_coordinates(F.col("v")), "double")
+    outs = run(spark, values, masking.mask_coordinates("v"), "double")
     for v, o in zip(values, outs):
         if v is None:
             assert o is None
         else:
             assert abs(o - v) <= 0.005 + 1e-9
-    again = run(
-        spark,
-        outs,
-        masking.mask_coordinates(F.col("v")),
-        "double",
-    )
+    again = run(spark, outs, masking.mask_coordinates("v"), "double")
     assert again == outs  # idempotent: already-rounded stays fixed
 
 

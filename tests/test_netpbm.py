@@ -1,22 +1,15 @@
-"""Netpbm codec tier: decoder unit pins + driver-style oracle parity
-for the staged query (outside the driver contract —
-r11 oracle freeze; r13 candidate)."""
+"""Netpbm codec tier: decoder unit pins. The staged query's oracle parity
+is ``test_registry_tiers.test_staged_oracle_parity``."""
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
-from dbt_gdpr_anonymizer_spark import queries as Q
 from dbt_gdpr_anonymizer_spark.operators.multimodal import (
     make_netpbm,
     netpbm_decoder,
     real_decoder,
 )
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
 
 def test_roundtrip_all_formats():
@@ -64,17 +57,3 @@ def test_constraint_fences():
 def test_real_decoder_dispatch():
     p = make_netpbm(6, [[(1, 2, 3)]])
     assert real_decoder(p)[0] == 6.0
-
-
-def test_matches_duckdb_oracle(spark):
-    sdf = Q.multimodal_netpbm_features(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
-    res = con.execute(Q.MULTIMODAL_NETPBM_ORACLE)
-    ocols = [d[0] for d in res.description]
-    orows = sorted(tuple(r) for r in res.fetchall())
-    con.close()
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows

@@ -3,14 +3,17 @@
 ``register(..., tier=...)`` puts every name in exactly one tier. The
 driver contract (``__spark_entry__``) serves the registry tier: the 250
 names the r11 oracle freeze holds, in check order. The staged tier holds
-the oracle-checked candidates kept outside the contract.
+the oracle-checked candidates kept outside the contract; each is checked
+against its DuckDB oracle here with the driver's comparison.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import os
 
+import duckdb
 import pytest
 
 import __spark_entry__ as ent
@@ -19,6 +22,8 @@ from dbt_gdpr_anonymizer_spark import queries as Q
 # md5 of json.dumps(names) over the registry tier in check order:
 # registering, dropping, renaming or reordering a name changes it.
 REGISTRY_NAMES_MD5 = "913d0b6f073e3c23e1adea8c0846f6b4"
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
 STAGED = [
     "pq_residual_recall",
@@ -78,3 +83,19 @@ def test_register_rejects_a_second_registration():
     with pytest.raises(ValueError, match="registered twice"):
         Q.register("q1_pricing_summary", tier="staged")(lambda spark, sf: None)
     assert Q.TIER["q1_pricing_summary"] == "registry"
+
+
+@pytest.mark.parametrize("name", list(Q.all_queries("staged")))
+def test_staged_oracle_parity(spark, name):
+    """Column names, a non-empty row count and order-insensitive values
+    equal the oracle's on the same parquet."""
+    sdf = Q.all_queries("staged")[name](spark, SF_DIR)
+    srows = sorted(tuple(r) for r in sdf.collect())
+    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
+    res = con.execute(Q.all_oracles("staged")[name])
+    ocols = [d[0] for d in res.description]
+    orows = sorted(res.fetchall())
+    con.close()
+    assert sdf.columns == ocols
+    assert len(srows) == len(orows) > 0
+    assert srows == orows

@@ -1,37 +1,14 @@
-"""TextRank keyword extraction: driver-style oracle parity for the
-staged query (outside the driver contract — r11 oracle freeze; r13
-candidate).
+"""TextRank keyword extraction: release-order pin for the staged query.
+Its oracle parity is ``test_registry_tiers.test_staged_oracle_parity``.
 """
 
 from __future__ import annotations
 
 import os
 
-import duckdb
-
 from dbt_gdpr_anonymizer_spark import queries as Q
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = Q.duckdb_views(duckdb.connect(), sf_dir)
-    res = con.execute(sql)
-    cols = [d[0] for d in res.description]
-    rows = res.fetchall()
-    con.close()
-    return cols, rows
-
-
-def test_matches_duckdb_oracle(spark):
-    sdf = Q.textrank_keywords_documents(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    ocols, orows = _oracle(Q.TEXTRANK_KEYWORDS_ORACLE, SF_DIR)
-    orows = sorted(tuple(r) for r in orows)
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
 
 
 def test_release_is_total_ordered_topk(spark):

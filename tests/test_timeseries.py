@@ -1,14 +1,12 @@
-"""Temporal-analytics tier: unit pins for operators/timeseries.py plus
-driver-style oracle parity for the four staged queries (outside the
-driver contract — r11 oracle freeze; r13 candidates, the
-pq_residual_recall precedent).
+"""Temporal-analytics tier: unit pins for operators/timeseries.py and the
+graph/spatial operators behind the staged queries. Their oracle parity
+is ``test_registry_tiers.test_staged_oracle_parity``.
 """
 
 from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from dbt_gdpr_anonymizer_spark import queries as Q
@@ -19,41 +17,6 @@ from dbt_gdpr_anonymizer_spark.operators.timeseries import (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
-
-PAIRS = [
-    (Q.acf_daily_events, Q.ACF_DAILY_EVENTS_ORACLE),
-    (Q.ewma_daily_events, Q.EWMA_DAILY_EVENTS_ORACLE),
-    (
-        Q.time_to_purchase_hazard_events,
-        Q.TIME_TO_PURCHASE_HAZARD_ORACLE,
-    ),
-    (Q.seq_2patterns_events, Q.SEQ_2PATTERNS_EVENTS_ORACLE),
-]
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = Q.duckdb_views(duckdb.connect(), sf_dir)
-    res = con.execute(sql)
-    cols = [d[0] for d in res.description]
-    rows = res.fetchall()
-    con.close()
-    return cols, rows
-
-
-@pytest.mark.parametrize(
-    "fn,sql", PAIRS, ids=[fn.__name__ for fn, _ in PAIRS]
-)
-def test_matches_duckdb_oracle(spark, fn, sql):
-    sdf = fn(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(
-        tuple(r) for r in sdf.collect()
-    )
-    ocols, orows = _oracle(sql, SF_DIR)
-    orows = sorted(tuple(r) for r in orows)
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0, f"{fn.__name__}: empty result"
-    assert srows == orows
 
 
 # ---------------------------------------------------------------- units
@@ -187,20 +150,6 @@ def test_seq_patterns_tiny(spark):
 # ------------------------------------------------------- LPA communities
 
 
-def test_lpa_matches_duckdb_oracle(spark):
-    sdf = Q.lpa_communities_brands(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
-    res = con.execute(Q.LPA_COMMUNITIES_BRANDS_ORACLE)
-    ocols = [d[0] for d in res.description]
-    orows = sorted(tuple(r) for r in res.fetchall())
-    con.close()
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
-
-
 def test_lpa_two_cliques_with_bridge(spark):
     # two 3-cliques joined by one bridge edge: each clique converges to
     # its own min label; the bridge is outvoted 2-to-1 on both sides
@@ -232,20 +181,6 @@ def test_lpa_rejects_bad_rounds(spark):
 
 
 # ------------------------------------------------------------- DBSCAN
-
-
-def test_dbscan_matches_duckdb_oracle(spark):
-    sdf = Q.dbscan_customers(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
-    res = con.execute(Q.DBSCAN_CUSTOMERS_ORACLE)
-    ocols = [d[0] for d in res.description]
-    orows = sorted(tuple(r) for r in res.fetchall())
-    con.close()
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
 
 
 def test_dbscan_semantics_tiny(spark):
@@ -285,20 +220,6 @@ def test_dbscan_rejects_bad_min_pts(spark):
 # -------------------------------------------------------------- k-core
 
 
-def test_kcore_matches_duckdb_oracle(spark):
-    sdf = Q.kcore_spatial_customers(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    con = Q.duckdb_views(duckdb.connect(), SF_DIR)
-    res = con.execute(Q.KCORE_SPATIAL_CUSTOMERS_ORACLE)
-    ocols = [d[0] for d in res.description]
-    orows = sorted(tuple(r) for r in res.fetchall())
-    con.close()
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
-
-
 def test_kcore_cascade_semantics(spark):
     # triangle a-b-c plus a pendant chain c-d-e: at k=2 the chain peels
     # in CASCADE (e first, then d) — a single degree filter would keep d
@@ -321,17 +242,6 @@ def test_kcore_rejects_bad_params(spark):
 
 
 # ---------------------------------------------------------------- Holt
-
-
-def test_holt_matches_duckdb_oracle(spark):
-    sdf = Q.holt_daily_events(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    ocols, orows = _oracle(Q.HOLT_DAILY_EVENTS_ORACLE, SF_DIR)
-    orows = sorted(tuple(r) for r in orows)
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
 
 
 def test_holt_hand_computed_with_negative_trend(spark):
@@ -357,17 +267,6 @@ def test_holt_rejects_bad_factors(spark):
 
 
 # -------------------------------------------------------- Mann-Kendall
-
-
-def test_mk_matches_duckdb_oracle(spark):
-    sdf = Q.mk_trend_daily_events(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    ocols, orows = _oracle(Q.MK_TREND_DAILY_EVENTS_ORACLE, SF_DIR)
-    orows = sorted(tuple(r) for r in orows)
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
 
 
 def test_mk_monotone_series(spark):
@@ -396,17 +295,6 @@ def test_mk_all_tied_is_null_z(spark):
 
 
 # --------------------------------------------------------- 3-patterns
-
-
-def test_seq3_matches_duckdb_oracle(spark):
-    sdf = Q.seq_3patterns_events(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    ocols, orows = _oracle(Q.SEQ_3PATTERNS_EVENTS_ORACLE, SF_DIR)
-    orows = sorted(tuple(r) for r in orows)
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
 
 
 def test_seq3_strict_order_semantics(spark):
@@ -465,17 +353,6 @@ def test_seq3_strict_order_semantics(spark):
 
 
 # ---------------------------------------------------------------- CUSUM
-
-
-def test_cusum_matches_duckdb_oracle(spark):
-    sdf = Q.cusum_daily_events(spark, SF_DIR)
-    scols = sdf.columns
-    srows = sorted(tuple(r) for r in sdf.collect())
-    ocols, orows = _oracle(Q.CUSUM_DAILY_EVENTS_ORACLE, SF_DIR)
-    orows = sorted(tuple(r) for r in orows)
-    assert scols == ocols
-    assert len(srows) == len(orows) > 0
-    assert srows == orows
 
 
 def test_cusum_hand_computed(spark):
