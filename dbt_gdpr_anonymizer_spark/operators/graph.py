@@ -334,8 +334,7 @@ def triangle_count(
     Everything is hash equi-joins and keyed aggregates: degree table,
     two adjacency self-joins, one closing join, then a 3-way unpivot
     so each triangle credits all three corners. Returns
-    ``(node, n_triangles)`` for nodes in at least one triangle,
-    ordered by node.
+    ``(node, n_triangles)`` for nodes in at least one triangle.
     """
     e = (
         edges.select(
@@ -382,15 +381,13 @@ def triangle_count(
         oriented.select(F.col("b").alias("x"), F.col("a").alias("y"))
     ).distinct()
     tris = wedges.join(closer, ["x", "y"]).select("a", "x", "y")
-    per_node = (
+    return (
         tris.select(F.col("a").alias("node"))
         .unionAll(tris.select(F.col("x").alias("node")))
         .unionAll(tris.select(F.col("y").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-        .orderBy("node")
     )
-    return per_node
 
 
 def label_propagation(
@@ -457,14 +454,8 @@ def label_propagation(
     sz = labels.groupBy("lb").agg(
         F.count(F.lit(1)).cast("long").alias("community_size")
     )
-    out = (
-        labels.join(sz, "lb")
-        .select(
-            "node",
-            F.col("lb").alias("community"),
-            "community_size",
-        )
-        .orderBy("node")
+    out = labels.join(sz, "lb").select(
+        "node", F.col("lb").alias("community"), "community_size"
     )
     return track_caches(out, *cached)
 
@@ -500,7 +491,7 @@ def kcore_peel(
     localCheckpoints its edge frame (the dbscan_clusters lesson: a
     plain persist leaves the analyzer expanding the full subplan; at
     8 rounds that is 6561 copies). Returns ``(node, degree)`` for
-    surviving nodes with their final in-core degree, ordered by node.
+    surviving nodes with their final in-core degree.
     """
     if k < 1:
         raise ValueError("kcore_peel: k must be >= 1")
@@ -535,5 +526,4 @@ def kcore_peel(
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
         .where(F.col("degree") >= k)
         .select(F.col("n").alias("node"), "degree")
-        .orderBy("node")
     )

@@ -136,7 +136,7 @@ def zorder_layout_stats(
     a plain sort (which narrows only its leading column).
 
     Returns one row per non-empty bucket:
-    ``(zbucket, n_rows, {col}_min, {col}_max ...)`` ordered by bucket.
+    ``(zbucket, n_rows, {col}_min, {col}_max ...)``.
     One shuffle (the groupBy), map-side combined.
     """
     n = len(cols)
@@ -152,5 +152,4 @@ def zorder_layout_stats(
         )
         .groupBy("zbucket")
         .agg(*aggs)
-        .orderBy("zbucket")
     )

@@ -66,7 +66,7 @@ def fs_link_pairs(
     fan-out).
 
     Returns ``(a_id, b_id, agree_<name>... INT bits, score_e6,
-    decision)`` ordered by (a_id, b_id).
+    decision)``.
     """
     if set(tests) != set(weights):
         raise ValueError(
@@ -114,5 +114,4 @@ def fs_link_pairs(
                 F.lit("match"),
             ).otherwise(F.lit("possible")),
         )
-        .orderBy("a_id", "b_id")
     )

@@ -510,6 +510,5 @@ def min_k_prob_scores(
             F.col("sum_topk_e4").cast("long"),
             F.col("mink_mean_e4").cast("long"),
         )
-        .orderBy(id_col)
     )
     return track_caches(out, toks, events)

@@ -59,7 +59,6 @@ def l_diversity_violations(
         df.groupBy(*quasi_identifiers)
         .agg(F.count_distinct(F.col(sensitive_col)).alias("distinct_sensitive"))
         .filter(F.col("distinct_sensitive") < l)
-        .orderBy("distinct_sensitive", *quasi_identifiers)
     )
 
 
@@ -104,7 +103,6 @@ def t_closeness_report(
                 "AS BIGINT)"
             ).alias("t_distance_ppm"),
         )
-        .orderBy(*quasi_identifiers)
     )
 
 
@@ -166,7 +164,6 @@ def t_closeness_numerators(
             F.col("_n_g").cast("long").alias("n_g"),
             F.col("_N").cast("long").alias("n_total"),
         )
-        .orderBy(*quasi_identifiers)
     )
 
 
@@ -241,7 +238,6 @@ def dp_noisy_counts(
                 "noisy_count"
             ),
         )
-        .orderBy(*group_cols)
     )
 
 
@@ -342,10 +338,7 @@ def generalize_to_k(
             F.col("_n").cast("long").alias("n"),
         )
     return track_caches(
-        out.withColumn("level", F.lit(chosen).cast("long")).orderBy(
-            group_col, "band_label"
-        ),
-        grouped,
+        out.withColumn("level", F.lit(chosen).cast("long")), grouped
     )
 
 
@@ -405,7 +398,6 @@ def dp_noisy_sum(
                 (F.col("_s") + noise * F.lit(clip).cast("long")).cast("bigint"),
             ).alias("noisy_sum"),
         )
-        .orderBy(*group_cols)
     )
 
 
@@ -482,7 +474,6 @@ def microaggregate(
             F.col("_bn").alias("n_members"),
             F.expr("_bsum div _bn").cast("long").alias(out_col),
         )
-        .orderBy(*part, "block", id_col)
     )
 
 
@@ -617,7 +608,6 @@ def dp_quantile(
     return (
         pick.groupBy(group_col)
         .agg(F.min("_edge").cast("bigint").alias("dp_quantile_edge"))
-        .orderBy(group_col)
     )
 
 
@@ -757,7 +747,7 @@ def mondrian_partition(
     and are released as opaque BIGINTs. NULL dims are out of contract
     — callers pre-clean.
 
-    Returns ``(pid, n, <dim>_min, <dim>_max ...)`` ordered by pid.
+    Returns ``(pid, n, <dim>_min, <dim>_max ...)``.
     """
     from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
 
@@ -871,5 +861,4 @@ def mondrian_partition(
     for c in dims:
         aggs.append(F.min(c).cast("long").alias(f"{c}_min"))
         aggs.append(F.max(c).cast("long").alias(f"{c}_max"))
-    out = rows.groupBy("pid").agg(*aggs).orderBy("pid")
-    return track_caches(out, *persisted)
+    return track_caches(rows.groupBy("pid").agg(*aggs), *persisted)

@@ -109,7 +109,7 @@ def benford_profile(
         *[f"d{d}" for d in range(1, 10)],
         F.floor(chi2 * 1000000).cast("bigint").alias("chi2_e6"),
         F.floor(mad * 1000000).cast("bigint").alias("mad_ppm"),
-    ).orderBy("grp")
+    )
 
 
 def gini_concentration(
@@ -173,7 +173,7 @@ def gini_concentration(
             + F.lit(1).cast(dec)
         )
     )
-    out = (
+    return (
         ranked.groupBy("grp")
         .agg(
             F.sum("c").cast("long").alias("n"),
@@ -204,9 +204,7 @@ def gini_concentration(
                 ).cast("bigint"),
             ).alias("gini_e6"),
         )
-        .orderBy("grp")
     )
-    return out
 
 
 def changepoint_scan(
@@ -234,9 +232,8 @@ def changepoint_scan(
     caller aggregates the corpus first, so every window here is
     PARTITIONED by group over a period-domain-bounded frame (the
     group-histogram precedent), never the raw corpus. Returns
-    ``(group, period, t, gap_ppm)`` for interior splits (t < T),
-    ordered by (group, period); groups with one period release
-    nothing.
+    ``(group, period, t, gap_ppm)`` for interior splits (t < T);
+    groups with one period release nothing.
     """
     w_ord = Window.partitionBy(group_col).orderBy(time_col)
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -271,7 +268,6 @@ def changepoint_scan(
                 " div (t * (_tt - t))"
             ).alias("gap_ppm"),
         )
-        .orderBy("grp", "period")
     )
 
 
@@ -352,7 +348,6 @@ def ks_drift(
             F.max("n2").alias("n2"),
             F.max("_d").cast("long").alias("ks_ppm"),
         )
-        .orderBy("grp")
     )
 
 
@@ -454,4 +449,4 @@ def spearman_corr(
         )
         .cast("bigint")
         .alias("spearman_e6"),
-    ).orderBy("grp")
+    )

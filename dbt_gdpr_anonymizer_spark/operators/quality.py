@@ -1321,8 +1321,8 @@ def source_overlap_matrix(
     aggregate, broadcast-joined back onto the ≤ |S|²/2-row pair frame.
     ``jaccard_ppm = 1e6·shared div (tA + tB − shared)`` in exact
     integers. Returns ``(source_a, source_b, shared_grams, grams_a,
-    grams_b, jaccard_ppm)`` ordered by the pair; non-overlapping pairs
-    are absent (their Jaccard is 0).
+    grams_b, jaccard_ppm)``; non-overlapping pairs are absent (their
+    Jaccard is 0).
     """
     ws = tx.words(text_col)
     base = docs.select(
@@ -1388,6 +1388,5 @@ def source_overlap_matrix(
             .cast("bigint")
             .alias("jaccard_ppm"),
         )
-        .orderBy("source_a", "source_b")
     )
     return track_caches(out, grams)

@@ -35,6 +35,22 @@ REPORT_SCHEMA = T.StructType(
 )
 
 
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple], n_keys: int
+) -> DataFrame:
+    """Policy-sized ``rows`` as a DataFrame ordered by their first
+    ``n_keys`` fields. Sorted here: a Spark sort would cost two jobs. An
+    Arrow table plans as a LocalRelation, so collect() (a timestamp
+    column included) runs on the driver with no job; a list of rows
+    would be scanned as an RDD, one job."""
+    rows = sorted(rows, key=lambda r: r[:n_keys])
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table)
+
+
 def pii_inventory(
     spark: SparkSession,
     policies: list[TablePolicy],
@@ -72,16 +88,7 @@ def pii_inventory(
                     else conf.k_anonymity_min,
                 )
             )
-    # Policy-sized: sorted here, a Spark sort would cost two more jobs. An
-    # Arrow table plans as a LocalRelation, so collect() (timestamp
-    # included) runs on the driver with no job; a list of rows would be
-    # scanned as an RDD, one job.
-    rows.sort(key=lambda r: (r[0], r[1]))
-    table = pa.Table.from_pylist(
-        [dict(zip(REPORT_SCHEMA.names, r)) for r in rows],
-        schema=to_arrow_schema(REPORT_SCHEMA),
-    )
-    df = spark.createDataFrame(table)
+    df = _local_frame(spark, REPORT_SCHEMA, rows, 2)
     if with_timestamp:
         df = df.selectExpr("*", "current_timestamp() AS report_generated_at")
     return df
@@ -165,8 +172,9 @@ def processing_records(
     of truth — no second registry to drift.
 
     Like :func:`pii_inventory`, the output is policy-sized (one row per
-    model), so driver-side assembly is the correct plan at any corpus
-    scale: the register scales with the POLICY, never the data.
+    model, ordered by model), so driver-side assembly is the correct plan
+    at any corpus scale: the register scales with the POLICY, never the
+    data. Building and collecting it launches no Spark job.
     """
     conf = conf or settings()
     rows = []
@@ -208,6 +216,4 @@ def processing_records(
                 ",".join(methods) or None,
             )
         )
-    return spark.createDataFrame(rows, ROPA_SCHEMA).orderBy(
-        "processing_activity"
-    )
+    return _local_frame(spark, ROPA_SCHEMA, rows, 1)

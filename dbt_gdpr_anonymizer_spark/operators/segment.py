@@ -64,8 +64,8 @@ def rfm_segments(
     high — direction interpretation is the caller's.
 
     Returns ``(r_score, f_score, m_score, n_customers,
-    sum_monetary)`` ordered by the three scores — every released row
-    an aggregate over a segment cell, never an individual.
+    sum_monetary)`` — every released row an aggregate over a segment
+    cell, never an individual.
     """
     t = dict(orders.dtypes).get(amount_col)
     if t not in _INTEGRAL:
@@ -144,5 +144,4 @@ def rfm_segments(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.sum("m_units").cast("long").alias("sum_monetary"),
         )
-        .orderBy("r_score", "f_score", "m_score")
     )

@@ -208,7 +208,6 @@ def radius_pairs(
             "b_id",
             F.floor(F.col("_dkm") * 1000000).cast("bigint").alias("dist_mm"),
         )
-        .orderBy("a_id", "b_id")
     )
 
 
@@ -240,8 +239,8 @@ def dbscan_clusters(
     Scale: the pair graph persists once and feeds degree counts, the
     core filter (two semi joins), and the component rounds — all hash
     joins and keyed aggregates over the PAIR frame, whose size the
-    grid blocking already bounded. Returns ``(pid, cluster, is_core)``
-    ordered by pid; cluster labels are min member core ids.
+    grid blocking already bounded. Returns ``(pid, cluster, is_core)``;
+    cluster labels are min member core ids.
     """
     if min_pts < 2:
         raise ValueError("dbscan_clusters: min_pts must be >= 2")
@@ -301,13 +300,9 @@ def dbscan_clusters(
         .groupBy("pid")
         .agg(F.min("cluster").alias("cluster"))
     )
-    out = (
-        core_lab.withColumn("is_core", F.lit(1).cast("bigint"))
-        .unionByName(
-            border.withColumn("is_core", F.lit(0).cast("bigint"))
-        )
-        .orderBy("pid")
-    )
+    out = core_lab.withColumn(
+        "is_core", F.lit(1).cast("bigint")
+    ).unionByName(border.withColumn("is_core", F.lit(0).cast("bigint")))
     # comp's own caches ride its cached_deps (attributes don't survive
     # plan transforms — re-track them, the _retrack contract); the
     # checkpointed pair graph frees with GC, no unpersist needed.

@@ -139,7 +139,7 @@ def acf_lags(
         )
         .cast("bigint")
         .alias("acf_e6"),
-    ).orderBy("grp", "lag")
+    )
 
 
 def ewma_fold(
@@ -488,7 +488,6 @@ def mann_kendall(
             .alias("z_e6"),
             "sen_slope_e6",
         )
-        .orderBy("grp")
     )
 
 

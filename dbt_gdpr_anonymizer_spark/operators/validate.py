@@ -532,7 +532,7 @@ def generic_schema_tests(
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
-    return out.orderBy("table_name", "column_name", "test_name")
+    return out
 
 
 def canary_leak_audit(

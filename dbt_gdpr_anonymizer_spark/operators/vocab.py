@@ -236,9 +236,9 @@ def vocab_growth(
     the only cumulative window runs over the ≤ ``n_buckets``-row
     bucket frame. Everything released is an exact BIGINT count.
 
-    Returns ``(bucket, docs_cum, tokens_cum, vocab_cum)`` ordered by
-    bucket (empty buckets — possible when docs < n_buckets — are
-    absent; cumulative values at present buckets are unaffected).
+    Returns ``(bucket, docs_cum, tokens_cum, vocab_cum)`` (empty
+    buckets — possible when docs < n_buckets — are absent; cumulative
+    values at present buckets are unaffected).
     """
     from pyspark.sql import Window
 
@@ -287,5 +287,5 @@ def vocab_growth(
         F.sum("_docs").over(w).cast("long").alias("docs_cum"),
         F.sum("_toks").over(w).cast("long").alias("tokens_cum"),
         F.sum("_newv").over(w).cast("long").alias("vocab_cum"),
-    ).orderBy("bucket")
+    )
     return track_caches(out, *getattr(pos, "cached_deps", ()))

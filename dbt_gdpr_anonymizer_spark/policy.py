@@ -18,7 +18,8 @@ Anonymization-method registry (mask_columns.sql:1-30 dispatcher):
                         through. We implement it for real; pass
                         ``compat_aggregate_to_city_passthrough=True`` to
                         reproduce the reference's leak-by-omission.
-    (anything else)  -> pass-through
+    (anything else)  -> pass-through on a non-PII column; on a PII column
+                        both masking entry points raise PolicyError
 Every output column is renamed ``{col}_anon`` (including pass-throughs).
 """
 
@@ -179,11 +180,19 @@ def _masked(
     policy: ColumnPolicy | None,
     registry: dict[str, Callable[[str], str | Column]],
     compat_aggregate_to_city_passthrough: bool,
+    model: str | None = None,
 ) -> str | Column:
     """One column's masked expression aliased ``{name}_anon``: SQL text
     for the reference methods and the pass-through, a Column for the
-    Column-only extension methods."""
+    Column-only extension methods. A PII column whose method is not in
+    the registry raises instead of passing through."""
     method = policy.anonymization_method if policy else None
+    if policy and policy.pii and method not in registry:
+        col = f"{model}.{name}" if model else name
+        raise PolicyError(
+            f"PII column {col!r} has unknown anonymization_method "
+            f"{method!r}; known: {sorted(registry)}"
+        )
     if method == "aggregate_to_city" and compat_aggregate_to_city_passthrough:
         method = None  # reference behavior: no branch -> pass-through
     fn = registry.get(method or "")
@@ -204,10 +213,11 @@ def mask_column(
 ) -> Column:
     """Dispatch one column through its anonymization method (M6).
 
-    Unknown/missing methods pass through; every result is aliased
-    ``{name}_anon`` exactly like the reference dispatcher. A whole model
-    goes through ``mask_model``, which builds the method registry once
-    (r12: each registry build constructs the FF1 pandas UDF).
+    Unknown/missing methods pass through on a non-PII column and raise
+    ``PolicyError`` on a PII one; every result is aliased ``{name}_anon``
+    exactly like the reference dispatcher. A whole model goes through
+    ``mask_model``, which builds the method registry once (r12: each
+    registry build constructs the FF1 pandas UDF).
     """
     names = [name] + ([city_column] if city_column else [])
     check_quoted_names(SparkSession.active(), names)
@@ -223,7 +233,6 @@ def mask_model(
     *,
     city_column: str | None = "city",
     compat_aggregate_to_city_passthrough: bool = False,
-    validate: bool = True,
 ) -> DataFrame:
     """Model-level rewriter (M7): one projection masking every column.
 
@@ -233,8 +242,7 @@ def mask_model(
     only SQL-text methods in use the projection is one ``selectExpr``.
     """
     conf = conf or settings()
-    if validate:
-        validate_policy(policy)
+    validate_policy(policy)
     columns = df.columns
     check_quoted_names(df.sparkSession, columns)
     city = city_column if city_column in columns else None
@@ -245,6 +253,7 @@ def mask_model(
             policy.columns.get(name),
             registry,
             compat_aggregate_to_city_passthrough,
+            policy.name,
         )
         for name in columns
     ]

@@ -39,10 +39,12 @@ driver sorts columns by name before hashing).
 
 A registry result is an unordered multiset: the correctness harness, the
 checker and the bench compare rows without regard to order. A query sorts only where
-the order is read — under a ``limit``/top-k, a window or ``row_number``,
-or in an operator whose callers depend on it; a terminal sort would cost
-two jobs (range sample plus exchange) for an order nothing reads. The
-oracle SQL may still end in ``order by``. Tables are read through ``_t``,
+the order is read — under a ``limit``/top-k, a window or ``row_number``.
+Operators follow the same rule: a terminal sort stays only where a
+named test or caller reads the order (``ROOT_SORT_KEPT`` in
+``tests/test_plan_invariants.py``); anywhere else it would cost two jobs
+(range sample plus exchange) for an order nothing reads. The oracle SQL
+may still end in ``order by``. Tables are read through ``_t``,
 which infers each parquet schema once per process (``_parquet_schema``).
 """
 

@@ -100,8 +100,6 @@ def streaming_sessionize_custom(
     session) — replace with custom logic as needed; that freedom is the
     point of the custom-state tier.
     """
-    import pandas as pd
-
     gap_us = gap_minutes * 60 * 1_000_000
 
     def fn(key: Any, pdfs: Iterator["pd.DataFrame"], state) -> Iterator["pd.DataFrame"]:
@@ -111,7 +109,7 @@ def streaming_sessionize_custom(
         else:
             start_us = last_us = None
             n = 0
-        closed: list[tuple[int, int, int, int]] = []
+        closed: list[tuple[int, int, int]] = []
         for pdf in pdfs:
             ts_us = (
                 pdf["ts"].astype("int64").sort_values()
@@ -121,7 +119,7 @@ def streaming_sessionize_custom(
                 if start_us is None:
                     start_us, last_us, n = t, t, 1
                 elif t - last_us > gap_us:
-                    closed.append((user_id, start_us, last_us, n))
+                    closed.append((start_us, last_us, n))
                     start_us, last_us, n = t, t, 1
                 else:
                     # a late in-gap event can precede the open session's
@@ -131,16 +129,7 @@ def streaming_sessionize_custom(
                     n += 1
         state.update((start_us, last_us, n))
         if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [c[0] for c in closed],
-                    "session_start": [
-                        pd.Timestamp(c[1], unit="us") for c in closed
-                    ],
-                    "session_end": [pd.Timestamp(c[2], unit="us") for c in closed],
-                    "n_events": [c[3] for c in closed],
-                }
-            )
+            yield _emit_sessions(user_id, closed)
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,

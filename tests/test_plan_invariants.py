@@ -19,8 +19,10 @@ checked for patterns that would be scale-killers on a real cluster:
   frames, so its allowlist slot is the bounded-frame kind.
 
 * A root ``Sort`` (the first node below the root projections of the
-  optimized plan) — only where something reads the order
-  (ROOT_SORT_KEPT): registry results are unordered multisets.
+  optimized plan) — only where a named test or caller reads the order
+  (ROOT_SORT_KEPT), whether the sort is the query's own or inside the
+  operator it returns: registry results are unordered multisets. Every
+  kept entry must still end in a root ``Sort``, so a stale one fails.
 
 Catching these at plan level keeps a future query edit from silently
 reintroducing an all-pairs join that works at sf0.01 and dies at 100 TB.
@@ -234,49 +236,35 @@ WINDOW_GLOBAL_ALLOWED = {
 # A registry result is an unordered multiset: the checker and the bench
 # hash rows without regard to order, so a sort at the root of a plan is
 # two jobs (range sample + exchange) whose order nothing reads. A root
-# Sort is kept only where something reads the order:
+# Sort is kept only where something reads the order, named per entry
+# (the sort lives in the operator the query returns, except zipf's):
 ROOT_SORT_KEPT = {
-    # tests/test_corpus_profile.py asserts the collect() order (rank).
+    # query-level sort; tests/test_corpus_profile.py::
+    # test_word_frequency_zipf_counts_and_shares reads the rank order
     "word_frequency_zipf",
-    # The rest sort inside the operator (named per entry) whose output
-    # the query returns; dropping an operator's sort changes that
-    # operator and its own tests (open on ROADMAP direction 2).
-    "assoc_rules_brand_pairs",  # operators/basket.association_rules
-    "benford_profile_orders",  # operators/profile.benford_profile
-    "changepoint_daily_events",  # operators/profile.changepoint_scan
-    "dp_median_acctbal_by_segment",  # operators/privacy.dp_quantile
-    "dp_noisy_order_counts",  # operators/privacy.dp_noisy_counts
-    "dp_noisy_spend_by_priority",  # operators/privacy.dp_noisy_sum
-    "gini_spend_by_priority",  # operators/profile.gini_concentration
-    "k_anonymity_generalize",  # operators/privacy.generalize_to_k
-    "ks_drift_event_values",  # operators/profile.ks_drift
-    "l_diversity",  # operators/privacy.l_diversity_violations
-    "microaggregate_acctbal",  # operators/privacy.microaggregate
-    "minkprob_documents",  # operators/lm.min_k_prob_scores
-    "mondrian_kanon_customers",  # operators/privacy.mondrian_partition
-    "record_linkage_customers",  # operators/linkage.fs_link_pairs
-    "rfm_segments_customers",  # operators/segment.rfm_segments
-    "rrf_fusion_documents",  # operators/similarity.rrf_fuse
-    "schema_test_report",  # operators/validate.generic_schema_tests
-    "source_overlap_matrix_documents",  # operators/quality.source_overlap_matrix
-    "spatial_radius_pairs_customers",  # operators/spatial.radius_pairs
-    "spearman_qty_price_lineitem",  # operators/profile.spearman_corr
-    "t_closeness_numerators",  # operators/privacy.t_closeness_numerators
-    "t_closeness_segments",  # operators/privacy.t_closeness_report
-    "triangle_count_brands",  # operators/graph.triangle_count
-    "vocab_growth_documents",  # operators/vocab.vocab_growth
-    "zorder_layout_orders",  # operators/layout.zorder_layout_stats
-    # Staged tier, all sorting inside the operator named:
-    "acf_daily_events",  # operators/timeseries.acf_lags
-    "cusum_daily_events",  # operators/timeseries.cusum_fold
-    "dbscan_customers",  # operators/spatial.dbscan_clusters
-    "ewma_daily_events",  # operators/timeseries.ewma_fold
-    "holt_daily_events",  # operators/timeseries.holt_fold
-    "kcore_spatial_customers",  # operators/graph.kcore_peel
-    "lpa_communities_brands",  # operators/graph.label_propagation
-    "mk_trend_daily_events",  # operators/timeseries.mann_kendall
-    # operators/timeseries.nelson_aalen; test_timeseries.py's
-    # test_hazard_monotone_and_bounded also reads the collect() order
+    # operators/basket.association_rules; tests/test_basket.py::
+    # test_association_rules_match_replay reads the release order
+    "assoc_rules_brand_pairs",
+    # operators/similarity.rrf_fuse; tests/test_rrf.py::
+    # test_order_is_rrf_desc_then_id and
+    # test_single_list_passthrough_ranks read the fused order
+    "rrf_fusion_documents",
+    # Staged tier. operators/timeseries.cusum_fold;
+    # tests/test_timeseries.py::test_cusum_hand_computed and
+    # tests/test_timeseries_properties.py::test_cusum_property
+    "cusum_daily_events",
+    # operators/timeseries.ewma_fold; tests/test_timeseries.py::
+    # test_ewma_hand_computed and
+    # tests/test_timeseries_properties.py::test_ewma_property
+    "ewma_daily_events",
+    # operators/timeseries.holt_fold; tests/test_timeseries.py::
+    # test_holt_hand_computed_with_negative_trend and
+    # tests/test_timeseries_properties.py::test_holt_property
+    "holt_daily_events",
+    # operators/timeseries.nelson_aalen; tests/test_timeseries.py::
+    # test_nelson_aalen_hand_computed and test_hazard_monotone_and_bounded
+    # (the query itself), tests/test_timeseries_properties.py::
+    # test_nelson_aalen_property
     "time_to_purchase_hazard_events",
 }
 
@@ -319,17 +307,27 @@ def test_no_unbounded_join_in_plan(spark, name):
         )
 
 
+def test_root_sort_kept_names_are_registered():
+    assert ROOT_SORT_KEPT <= set(QUERIES), ROOT_SORT_KEPT - set(QUERIES)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_unread_root_sort(spark, name):
-    if name in ROOT_SORT_KEPT:
-        return
     node = _plan(spark, name)._jdf.queryExecution().optimizedPlan()
     while node.getClass().getSimpleName() == "Project":
         node = node.child()
-    assert node.getClass().getSimpleName() != "Sort", (
-        f"{name}: root Sort that no consumer reads (results are unordered "
-        "multisets); drop it or add the query to ROOT_SORT_KEPT with the reader"
-    )
+    root_sort = node.getClass().getSimpleName() == "Sort"
+    if name in ROOT_SORT_KEPT:
+        assert root_sort, (
+            f"{name}: listed in ROOT_SORT_KEPT but its plan no longer ends "
+            "in a root Sort; drop the stale entry"
+        )
+    else:
+        assert not root_sort, (
+            f"{name}: root Sort that no consumer reads (results are "
+            "unordered multisets); drop it or add the query to "
+            "ROOT_SORT_KEPT with the reader"
+        )
 
 
 # A join keyed on the token hash, and an aggregate or join keyed on the

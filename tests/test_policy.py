@@ -3,8 +3,16 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings
+from dbt_gdpr_anonymizer_spark.operators.report import (
+    REPORT_SCHEMA,
+    ROPA_SCHEMA,
+    export_report,
+    pii_inventory,
+    processing_records,
+)
 from dbt_gdpr_anonymizer_spark.policy import (
     SERVICES_POLICY,
     ColumnPolicy,
@@ -72,6 +80,22 @@ def test_mask_model_suppress_and_unknown(spark):
     assert row["b_anon"] == "y"  # unknown method -> pass-through
 
 
+def test_unknown_pii_method_raises(spark):
+    """A typo'd method on a PII column must not publish the raw value:
+    both masking entry points raise, naming the column and the method."""
+    from dbt_gdpr_anonymizer_spark.policy import mask_column
+
+    df = spark.createDataFrame(
+        [("jean.dupont@example.fr",)], "contact_email string"
+    )
+    typo = ColumnPolicy(pii=True, anonymization_method="hash_sha265")
+    tp = TablePolicy(name="stg", columns={"contact_email": typo})
+    with pytest.raises(PolicyError, match=r"stg\.contact_email.*hash_sha265"):
+        mask_model(df, tp, CONF)
+    with pytest.raises(PolicyError, match=r"contact_email.*hash_sha265"):
+        mask_column("contact_email", typo, CONF)
+
+
 def test_policies_from_schema_yaml_reference_shape(spark):
     """Parses the reference's dbt schema.yml layout (models -> columns ->
     meta) and the result drives mask_model identically to a hand-built
@@ -136,11 +160,6 @@ def test_pii_inventory_sorted_and_exported(spark, tmp_path):
     (model_name, column_name); the exported JSON is those rows."""
     import json
 
-    from dbt_gdpr_anonymizer_spark.operators.report import (
-        export_report,
-        pii_inventory,
-    )
-
     def pol(name, *cols):
         return TablePolicy(
             name=name,
@@ -177,30 +196,34 @@ def test_pii_inventory_sorted_and_exported(spark, tmp_path):
     )
 
 
-def test_pii_report_builds_without_job(spark, tmp_path):
-    """The inventory is a local relation: its schema is REPORT_SCHEMA
-    (nullability included), and building and exporting the report,
-    timestamp included, launches no Spark job."""
-    from pyspark.sql import types as T
+_TS = T.StructField("report_generated_at", T.TimestampType(), False)
 
-    from dbt_gdpr_anonymizer_spark.operators.report import (
-        REPORT_SCHEMA,
-        export_report,
-        pii_inventory,
-    )
+
+@pytest.mark.parametrize(
+    "build, schema",
+    [
+        (
+            lambda s: pii_inventory(s, [SERVICES_POLICY], CONF, with_timestamp=False),
+            REPORT_SCHEMA,
+        ),
+        (
+            lambda s: pii_inventory(s, [SERVICES_POLICY], CONF),
+            T.StructType(REPORT_SCHEMA.fields + [_TS]),
+        ),
+        (lambda s: processing_records(s, [SERVICES_POLICY], CONF), ROPA_SCHEMA),
+    ],
+    ids=["pii_inventory", "pii_inventory_timestamped", "processing_records"],
+)
+def test_pii_report_builds_without_job(spark, tmp_path, build, schema):
+    """Each report is a local relation: its schema is the report's own
+    (nullability included), and building and exporting it, a timestamp
+    included, launches no Spark job."""
     from tests.conftest import jobs_launched
 
-    for ts in (False, True):
-        inv = pii_inventory(spark, [SERVICES_POLICY], CONF, with_timestamp=ts)
-        extra = [T.StructField("report_generated_at", T.TimestampType(), False)]
-        assert inv.schema == T.StructType(REPORT_SCHEMA.fields + extra[:ts])
-        assert jobs_launched(
-            spark,
-            lambda: export_report(
-                pii_inventory(spark, [SERVICES_POLICY], CONF, with_timestamp=ts),
-                str(tmp_path / str(ts)),
-            ),
-        ) == 0
+    assert build(spark).schema == schema
+    assert jobs_launched(
+        spark, lambda: export_report(build(spark), str(tmp_path))
+    ) == 0
 
 
 def test_mask_model_regex_column_names(spark):
