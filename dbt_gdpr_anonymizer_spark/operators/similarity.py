@@ -423,14 +423,21 @@ def _lloyd_spherical_np(x, k: int, iters: int):
     and :func:`pq_fit`: seed = first k rows (caller pre-sorts by id),
     nearest-by-cosine assignment with first-max (lowest cell id) ties,
     normalized per-cell means, empty/zero-norm cells keep their previous
-    centroid. Returns the k×dim numpy centroid matrix."""
+    centroid. A zero-norm row or centroid has no cosine: it scores -inf,
+    so a zero-norm centroid never beats a nonzero one and a zero-norm
+    row takes cell 0 (first max). Returns the k×dim numpy centroid
+    matrix."""
     import numpy as np
 
     xn = np.sqrt((x * x).sum(axis=1))
     cents = x[:k].copy()
     for _ in range(iters):
         cn = np.sqrt((cents * cents).sum(axis=1))
-        cos = (x @ cents.T) / np.outer(xn, cn)
+        dots = x @ cents.T
+        norms = np.outer(xn, cn)
+        cos = np.divide(
+            dots, norms, out=np.full_like(dots, -np.inf), where=norms > 0
+        )
         assign = np.argmax(cos, axis=1)  # first max = lowest cell id
         new_cents = cents.copy()
         for ci in range(len(cents)):

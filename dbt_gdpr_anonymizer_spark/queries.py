@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dbt_gdpr_anonymizer_spark.functions import masking, text as tx
+from dbt_gdpr_anonymizer_spark.session import scoped_conf
 
 SALT = "dev_salt_UNSAFE"  # pinned for reproducible hashes (reference default)
 
@@ -191,16 +192,13 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1.7e18 nanos, past the 2^53 exact-integer range). DuckDB truncates nanos
     to micros on read, so both engines see identical microsecond timestamps.
 
-    The ``nanosAsLong`` flag is scoped to this read (saved and restored):
+    The ``nanosAsLong`` flag is scoped to this read (``scoped_conf``):
     it is captured at analysis time, so the returned DataFrame keeps
     working, and other parquet reads in the shared session are unaffected
     — a session-global set here would silently turn every later
     TIMESTAMP(NANOS) column in unrelated reads into bigint.
     """
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         e = _t(spark, sf_dir, "events")
         ts_type = dict(e.dtypes).get("ts")
         if ts_type == "bigint":
@@ -211,11 +209,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
             # timezone is pinned to UTC, so the cast is value-preserving and
             # every consumer keeps seeing the TIMESTAMP type it was built for.
             e = e.withColumn("ts", F.col("ts").cast("timestamp"))
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
     return e
 
 
@@ -2585,6 +2578,7 @@ def stream_scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
         stream_scrub_text,
+        write_stream_parquet,
     )
 
     schema = _parquet_schema(spark, f"{sf_dir}/documents.parquet")
@@ -2597,15 +2591,9 @@ def stream_scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrubbed = stream_scrub_text(injected, "t")
     out = scrubbed.select("doc_id", F.md5("t").alias("scrubbed_md5"))
     tmp = tempfile.mkdtemp(prefix="stream_scrub_")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_stream_parquet(
+        out, f"{tmp}/out", f"{tmp}/ckpt", available_now=True
+    ).awaitTermination()
     return spark.read.parquet(f"{tmp}/out")
 
 
@@ -2643,25 +2631,14 @@ def stream_rate_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sf_dir`` is unused: the source is a generator, the point is the
     unbounded-source plumbing (complements stream_scrub_documents'
     file-source path)."""
-    import uuid
-
     from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
+        drain,
         read_rate_events_stream,
         windowed_event_rollup,
     )
 
     ev = read_rate_events_stream(spark, rows_per_second=1000, micro_batch=True)
-    rolled = windowed_event_rollup(ev)
-    name = f"rate_rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return drain(windowed_event_rollup(ev), "complete").select(
         "window_start",
         "window_end",
         "event_type",
@@ -4041,6 +4018,9 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (global max event time, ms-floored, − 30 min). The oracle
     replays exactly that arithmetic on the batch gap-sessionization —
     integer ms comparisons, nothing engine-divergent."""
+    import tempfile
+
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
     from dbt_gdpr_anonymizer_spark.streaming.sessionize import (
         stream_sessionize,
     )
@@ -4048,40 +4028,13 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir).select(
         F.col("user_id").cast("bigint").alias("user_id"), "ts"
     )
-    # r11: inline prep replaced with the shared `_replay_batches` helper
-    # (one min/max aggregate + one partitioned write instead of an exact
-    # percentile UDAF + three sequential coalesce(1) jobs). The emitted
-    # session set is CUT-INVARIANT — see the helper docstring — so the
-    # oracle arithmetic is untouched.
-    stream = _replay_batches(spark, e, "user_id bigint, ts timestamp")
-    sessions = stream_sessionize(
-        stream, gap_minutes=30, watermark="30 minutes"
-    )
-    import uuid
-
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    # r12 (guide §5/§2): state partitions derived from the session core
-    # count instead of the session's batch default — see
-    # _stream_state_partitions for the sizing argument and the measured
-    # A/B (32→8 partitions: 7.46→6.57 s at sf0.1/32 cores). Scoped
-    # save/restore keeps the batch default untouched. Partition count
-    # never changes the drained row set (state is per user key; the
-    # watermark schedule is partition-independent).
-    key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, str(_stream_state_partitions(spark)))
-    try:
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    # The emitted session set is CUT-INVARIANT (see _replay_by_time), so
+    # the oracle arithmetic does not depend on the batch boundaries.
+    with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
+        stream = _replay_by_time(e, tmp)
+        return drain(
+            stream_sessionize(stream, gap_minutes=30, watermark="30 minutes")
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prior)
-    return spark.table(name)
 
 
 @register(
@@ -4626,6 +4579,7 @@ def stream_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
         stream_exact_dedup,
+        write_stream_parquet,
     )
 
     schema = _parquet_schema(spark, f"{sf_dir}/documents.parquet")
@@ -4643,15 +4597,9 @@ def stream_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream_exact_dedup(with_ts, watermark="24 hours")
     out = deduped.select("fingerprint", "n_distinct_words")
     tmp = tempfile.mkdtemp(prefix="stream_dedup_")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_stream_parquet(
+        out, f"{tmp}/out", f"{tmp}/ckpt", available_now=True
+    ).awaitTermination()
     return spark.read.parquet(f"{tmp}/out")
 
 
@@ -5019,7 +4967,6 @@ def stream_upsert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state). The final state must equal the batch answer — latest event
     per user — which is what makes the sink's exactly-once versioning
     observable to the oracle."""
-    import os
     import tempfile
 
     from dbt_gdpr_anonymizer_spark.streaming.upsert import (
@@ -5033,42 +4980,18 @@ def stream_upsert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.col("event_id").cast("bigint").alias("event_id"),
     )
-    us = F.unix_micros(F.col("ts"))
-    cuts = e.agg(
-        F.percentile(us, 1.0 / 3).alias("c1"),
-        F.percentile(us, 2.0 / 3).alias("c2"),
-    ).collect()[0]
-    c1, c2 = int(cuts["c1"]), int(cuts["c2"])
-    tmp = tempfile.mkdtemp(prefix="stream_upsert_")
-    parts = [
-        e.filter(us <= c1),
-        e.filter((us > c1) & (us <= c2)),
-        e.filter(us > c2),
-    ]
-    for i, p in enumerate(parts):
-        path = f"{tmp}/src/f{i}"
-        p.coalesce(1).write.parquet(path)
-        mt = 1_000.0 * (i + 1)
-        for root, _, files in os.walk(path):
-            for f_ in files:
-                os.utime(os.path.join(root, f_), (mt, mt))
-        os.utime(path, (mt, mt))
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, event_type string, ts timestamp, event_id bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/src/f*")
-    )
-    q = stream_upsert_parquet(
-        stream,
-        f"{tmp}/target",
-        keys=["user_id"],
-        order_cols=["ts", "event_id"],
-        checkpoint_dir=f"{tmp}/ckpt",
-    )
-    q.awaitTermination()
-    final = latest_state(spark, f"{tmp}/target")
+    # The final state is the latest event per user for any time-ordered
+    # cut (see _replay_by_time); only the target outlives the drive.
+    target = tempfile.mkdtemp(prefix="stream_upsert_")
+    with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
+        stream_upsert_parquet(
+            _replay_by_time(e, tmp),
+            target,
+            keys=["user_id"],
+            order_cols=["ts", "event_id"],
+            checkpoint_dir=f"{tmp}/ckpt",
+        ).awaitTermination()
+    final = latest_state(spark, target)
     return final.select(
         "user_id",
         F.col("event_type").alias("last_type"),
@@ -6327,119 +6250,31 @@ def encoding_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_state_partitions(spark: SparkSession) -> int:
-    """Shuffle/state partition count for the stateful replay drives.
+def _replay_by_time(df: DataFrame, directory: str) -> DataFrame:
+    """Replay ``df`` as a file stream of three arrival batches cut at
+    equal thirds of its ``ts`` range (``replay_batches`` under
+    ``directory``): arrival is time-ordered across batches, so watermarks
+    advance the way they would against a live, roughly-ordered source.
 
-    The stateful partition count is FROZEN at checkpoint creation (AQE
-    never re-plans stateful stages), so it must be sized up front: each
-    shuffle partition is one state-store instance per stateful operator
-    per micro-batch, each paying a fixed per-batch commit/snapshot cost,
-    while the useful update work per partition shrinks as partitions
-    grow. Derived from the SESSION's core count — ``defaultParallelism``
-    is ``$SPARK_GRAFT_CPUS`` under the bench contract's
-    ``local[$SPARK_GRAFT_CPUS]`` master and executors × cores on a real
-    cluster — never a hardcoded local-mode constant. ``cores // 4``
-    balances per-store commit overhead against update parallelism
-    (measured sf0.1 @ 32 cores, sessionize drain: 32 parts 7.46 s,
-    8 parts 6.57 s, 4 parts 9.06 s median-of-3), floored at 4 so small
-    sessions keep enough update parallelism. A production deployment
-    sizes this to aggregate state volume / target per-store size before
-    first start; this derivation is the scale-adaptive analogue with no
-    local-only constant. RocksDB provider: measured and REJECTED at this
-    state volume (sessionize 6.57→6.88 s, interval join 5.24→6.11 s —
-    per-instance open/compaction overhead exceeds the HDFS-backed map's
-    cost for KB-scale state; revisit only when per-store state is large
-    enough to pressure the heap).
+    Every caller's drained OUTPUT is cut-invariant: batch boundaries only
+    decide WHEN a row arrives, arrival stays time-ordered for any
+    monotone cuts (equal timestamps share a batch), and each consumer's
+    result is gated by the final watermark or final state, which depend
+    only on the rows. The cut costs one codegen min/max aggregate; a
+    time-skewed frame can leave a middle range empty, and the replay
+    then has one fewer micro-batch (same drained rows).
+
+    Contract: ``ts`` is non-null — every caller feeds generator-backed
+    timestamps; an all-NULL frame fails fast on the ``int()`` cast.
     """
-    return max(4, spark.sparkContext.defaultParallelism // 4)
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import replay_batches
 
-
-def _replay_batches(
-    spark: SparkSession, df: DataFrame, schema: str, n: int = 3
-) -> DataFrame:
-    """Replay a batch frame as a file stream of ``n`` event-time-ranged
-    single-file parquet batches (mtime-ordered, ``maxFilesPerTrigger=1``)
-    — arrival is time-ordered across batches, so watermarks advance the
-    way they would against a live, roughly-ordered source. Same harness
-    as ``stream_sessionize_events``; factored for reuse by every
-    streaming registry query that needs a deterministic replay.
-
-    r11 prep optimization (the drained OUTPUT is cut-invariant — batch
-    boundaries only decide WHEN a row arrives, arrival stays time-ordered
-    for any monotone cuts, and every consumer's append-mode result is
-    gated by the final watermark, which depends only on max event time):
-
-    * cuts are equal thirds of the [min, max] event-time RANGE — one
-      cheap codegen min/max aggregate instead of the exact ``percentile``
-      UDAF, which buffered every event timestamp per partition;
-    * the ``n`` batch files are written in ONE pass — a batch-id column,
-      ``repartition(n, _b)`` (each ``_b`` key lands in exactly one
-      shuffle partition — two keys may share a partition, which is
-      harmless since ``partitionBy`` still splits them into their own
-      directories — so each batch directory gets exactly one data file
-      under the default ``maxRecordsPerFile=0``; asserted below, because
-      multiple same-mtime files per batch would make intra-batch file
-      order arbitrary and could surface as dropped-late rows), then
-      directory renames + mtimes — instead of ``n`` sequential full-scan
-      ``coalesce(1)`` jobs.
-
-    A time-skewed frame can leave a middle range empty; ``partitionBy``
-    then writes no directory for it and the replay simply has one fewer
-    micro-batch (same drained rows).
-
-    Contract: the event-time column (the LAST column of ``schema``) must
-    be non-null — every registry caller feeds generator-backed non-null
-    ``ts``. A NULL ts would route to the last batch (``otherwise``) and
-    stateful consumers would then fail on a null event time; guarded by
-    the min/max probe below (min/max are NULL-skipping, so an all-NULL
-    frame fails fast on the int() cast).
-    """
-    import os
-    import tempfile
-
-    ts_col = schema.split(",")[-1].strip().split(" ")[0]
-    us = F.unix_micros(F.col(ts_col))
+    us = F.unix_micros(F.col("ts"))
     mm = df.agg(F.min(us).alias("mn"), F.max(us).alias("mx")).collect()[0]
     mn, mx = int(mm["mn"]), int(mm["mx"])
-    bounds = [mn + (mx - mn) * (i + 1) // n for i in range(n - 1)]
-    batch = F.when(us <= bounds[0], 0)
-    for i in range(1, n - 1):
-        batch = batch.when(us <= bounds[i], i)
-    batch = batch.otherwise(n - 1)
-    tmp = tempfile.mkdtemp(prefix="replay_")
-    raw = f"{tmp}/raw"
-    (
-        df.withColumn("_b", batch)
-        .repartition(n, "_b")
-        .write.partitionBy("_b")
-        .parquet(raw)
-    )
-    for i in range(n):
-        src, dst = f"{raw}/_b={i}", f"{tmp}/f{i}"
-        if not os.path.isdir(src):
-            continue  # empty time range — skip (one fewer micro-batch)
-        os.rename(src, dst)
-        mt = 1_000.0 * (i + 1)
-        data_files = []
-        for root, _, files in os.walk(dst):
-            for f_ in files:
-                if f_.endswith(".parquet"):
-                    data_files.append(f_)
-                os.utime(os.path.join(root, f_), (mt, mt))
-        # one data file per batch dir — the time-ordered-arrival argument
-        # depends on it (see docstring); fails loudly if a conf like
-        # maxRecordsPerFile ever splits a batch
-        if len(data_files) != 1:
-            raise AssertionError(
-                f"_replay_batches: batch dir {dst} has {len(data_files)} "
-                "parquet files, expected exactly 1"
-            )
-        os.utime(dst, (mt, mt))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/f*")
-    )
+    c1, c2 = mn + (mx - mn) // 3, mn + (mx - mn) * 2 // 3
+    batch = F.when(us <= c1, 0).when(us <= c2, 1).otherwise(2)
+    return replay_batches(df.withColumn("_b", batch), "_b", directory)
 
 
 @register(
@@ -6468,8 +6303,9 @@ def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly what the DuckDB oracle computes. The per-purchase count
     runs batch-side on the drained sink (chaining a streaming agg after
     a stream-stream join would be a second stateful operator)."""
-    import uuid
+    import tempfile
 
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
     from dbt_gdpr_anonymizer_spark.streaming.join import stream_interval_join
 
     e = _events(spark, sf_dir).select(
@@ -6478,65 +6314,35 @@ def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
     )
-    stream = _replay_batches(
-        spark,
-        e,
-        "event_id bigint, user_id bigint, event_type string, ts timestamp",
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), "ts"
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), "ts"
-    )
-    joined = stream_interval_join(
-        clicks,
-        purchases,
-        on="user_id",
-        lookback="1 hour",
-        watermark="2 hours",
-    ).select("purchase_id", "click_id")
-    name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-    # Stateful partition count is FROZEN at checkpoint creation (AQE never
-    # re-plans stateful stages), so it must be sized to state volume up
-    # front: each shuffle partition is a state-store instance per side per
-    # micro-batch, and at this drain's volume 32 stores are pure overhead
-    # — 8 halves the wall time (measured 12.8s → 6.8s at sf0.1). r12: the
-    # count is now DERIVED from the session core count (8 at the bench's
-    # 32 cores — same value, no hardcoded local-mode constant; see
-    # _stream_state_partitions). A production cluster sizes this to
-    # aggregate state volume / executor count BEFORE first start; scoped
-    # save/restore keeps the session's batch default untouched.
-    #
-    # r12: the final NO-DATA micro-batch is skipped for this INNER join —
-    # it exists for eager state eviction/timeout firing, and an inner
-    # stream-stream join emits rows only while processing DATA; the final
-    # eviction pass cannot add or remove emitted matches (measured: the
-    # no-data batch cost 0.7-0.8 s of pure state-store commit at sf0.1;
-    # drained rows identical, oracle green at 3 SFs). The OUTER-join
-    # drive (stream_outer_join_purchases) KEEPS no-data batches — its
-    # null emission fires exactly on watermark-driven eviction.
-    key = "spark.sql.shuffle.partitions"
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prior = spark.conf.get(key)
-    prior_nodata = spark.conf.get(nodata_key)
-    spark.conf.set(key, str(_stream_state_partitions(spark)))
-    spark.conf.set(nodata_key, "false")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
+        stream = _replay_by_time(e, tmp)
+        clicks = stream.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("event_id").alias("click_id"), "ts"
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prior)
-        spark.conf.set(nodata_key, prior_nodata)
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            "user_id", F.col("event_id").alias("purchase_id"), "ts"
+        )
+        joined = stream_interval_join(
+            clicks,
+            purchases,
+            on="user_id",
+            lookback="1 hour",
+            watermark="2 hours",
+        ).select("purchase_id", "click_id")
+        # The final NO-DATA micro-batch is skipped for this INNER join —
+        # it exists for eager state eviction/timeout firing, and an inner
+        # stream-stream join emits rows only while processing DATA; the
+        # final eviction pass cannot add or remove emitted matches
+        # (measured: the no-data batch cost 0.7-0.8 s of pure state-store
+        # commit at sf0.1; drained rows identical, oracle green at 3 SFs).
+        # The OUTER-join drive (stream_outer_join_purchases) KEEPS no-data
+        # batches — its null emission fires exactly on watermark-driven
+        # eviction.
+        nodata = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+        with scoped_conf(spark, nodata):
+            matches = drain(joined)
     return (
-        spark.table(name)
-        .groupBy("purchase_id")
+        matches.groupBy("purchase_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_clicks"))
     )
 
@@ -7374,9 +7180,8 @@ def python_stream_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact stream with DuckDB range() — a full value check on a
     custom streaming source, not a rows-only count. Swapping in a real
     bus changes only latestOffset/read/commit."""
-    import uuid
-
     from dbt_gdpr_anonymizer_spark.sources.pysource import register_range_bus
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
 
     register_range_bus(spark)
     stream = (
@@ -7385,17 +7190,8 @@ def python_stream_source_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("splits", "4")
         .load()
     )
-    name = f"bus_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(stream)
         .groupBy((F.col("k") % 10).alias("k_bucket"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_msgs"),
@@ -7992,46 +7788,35 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, X90) — the state cost is only the windowed agg. Per-row
     integer cents; the oracle replays the epoch-floor windows batch-
     side."""
-    import uuid
+    import tempfile
+
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
 
     e = _events(spark, sf_dir).select(
         F.col("user_id").cast("bigint").alias("user_id"),
         "ts",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    stream = _replay_batches(
-        spark, e.select("user_id", "cents", "ts"),
-        "user_id bigint, cents bigint, ts timestamp",
-    )
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    enriched = stream.join(
-        F.broadcast(cust), stream["user_id"] == cust["c_custkey"]
-    )
-    rolled = (
-        enriched.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "6 hours").alias("w"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("cents").cast("long").alias("total_cents"),
+    with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
+        stream = _replay_by_time(e, tmp)
+        enriched = stream.join(
+            F.broadcast(cust), stream["user_id"] == cust["c_custkey"]
         )
-    )
-    name = f"sse_{uuid.uuid4().hex[:8]}"
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .select(
-            F.col("w.start").alias("window_start"),
-            "c_mktsegment",
-            "n_events",
-            "total_cents",
+        rolled = (
+            enriched.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "6 hours").alias("w"), "c_mktsegment")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_events"),
+                F.sum("cents").cast("long").alias("total_cents"),
+            )
         )
+        totals = drain(rolled, "complete")
+    return totals.select(
+        F.col("w.start").alias("window_start"),
+        "c_mktsegment",
+        "n_events",
+        "total_cents",
     )
 
 
@@ -8210,55 +7995,35 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     in streaming/ relies on, certified end to end through a real
     drain."""
     import datetime as dt
-    import os
     import tempfile
-    import uuid
+
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
+        drain,
+        replay_batches,
+    )
 
     t0 = dt.datetime(2024, 1, 1, 0, 0)
 
     def at(minute: int) -> dt.datetime:
         return t0 + dt.timedelta(minutes=minute)
 
-    batches = [
-        [(1, at(1)), (2, at(4)), (3, at(7)), (4, at(25))],
-        [(6, at(17))],
-        [(5, at(5))],
-        [(7, at(41))],
+    # (batch, event_id, ts): the late 00:05 row stays in batch 2
+    rows = [
+        (0, 1, at(1)), (0, 2, at(4)), (0, 3, at(7)), (0, 4, at(25)),
+        (1, 6, at(17)),
+        (2, 5, at(5)),
+        (3, 7, at(41)),
     ]
-    tmp = tempfile.mkdtemp(prefix="wm_cert_")
-    for i, rows in enumerate(batches):
-        path = f"{tmp}/f{i}"
-        spark.createDataFrame(
-            rows, "event_id long, ts timestamp"
-        ).coalesce(1).write.parquet(path)
-        mt = 1_000.0 * (i + 1)
-        for root, _, files in os.walk(path):
-            for f_ in files:
-                os.utime(os.path.join(root, f_), (mt, mt))
-        os.utime(path, (mt, mt))
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/f*")
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    name = f"wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
+    arrivals = spark.createDataFrame(rows, "b int, event_id long, ts timestamp")
+    with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
+        agg = (
+            replay_batches(arrivals, "b", tmp)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes").alias("w"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+        )
+        windows = drain(agg)
+    return windows.select(F.col("w.start").alias("window_start"), "n_events")
 
 
 @register(
@@ -8303,8 +8068,9 @@ def stream_outer_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     same horizon. The hardest stream-stream shape — Spark rejects
     outer joins without the watermark + range condition, because null
     emission needs the eviction proof."""
-    import uuid
+    import tempfile
 
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
     from dbt_gdpr_anonymizer_spark.streaming.join import stream_interval_join
 
     e = _events(spark, sf_dir).select(
@@ -8313,50 +8079,31 @@ def stream_outer_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
     )
-    stream = _replay_batches(
-        spark,
-        e,
-        "event_id bigint, user_id bigint, event_type string, ts timestamp",
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), "ts"
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), "ts"
-    )
-    joined = stream_interval_join(
-        clicks,
-        purchases,
-        on="user_id",
-        lookback="1 hour",
-        watermark="2 hours",
-        how="right_outer",
-    ).select("purchase_id", "click_id", F.col("right_ts").alias("p_ts"))
-    name = f"soj_{uuid.uuid4().hex[:8]}"
-    # derived state-partition count (r12, see _stream_state_partitions);
-    # no-data micro-batches stay ON here — the outer join's null-padded
-    # rows are emitted exactly when the final watermark advance evicts
-    # unmatched state, which happens in that batch.
-    key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, str(_stream_state_partitions(spark)))
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
+        stream = _replay_by_time(e, tmp)
+        clicks = stream.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("event_id").alias("click_id"), "ts"
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prior)
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            "user_id", F.col("event_id").alias("purchase_id"), "ts"
+        )
+        joined = stream_interval_join(
+            clicks,
+            purchases,
+            on="user_id",
+            lookback="1 hour",
+            watermark="2 hours",
+            how="right_outer",
+        ).select("purchase_id", "click_id", F.col("right_ts").alias("p_ts"))
+        # no-data micro-batches stay ON here — the outer join's
+        # null-padded rows are emitted exactly when the final watermark
+        # advance evicts unmatched state, which happens in that batch.
+        pairs = drain(joined)
     horizon = e.agg(
         (F.max("ts") - F.expr("interval 24 hours")).alias("h")
     ).collect()[0]["h"]
     return (
-        spark.table(name)
-        .groupBy("purchase_id")
+        pairs.groupBy("purchase_id")
         .agg(
             F.sum(F.when(F.col("click_id").isNotNull(), 1).otherwise(0))
             .cast("long")
@@ -10537,9 +10284,12 @@ def stream_quota_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared output releases only arrival-INVARIANT columns: per-key
     admitted count (= min(quota, arrivals) — the state contract) and the
     arrival count recomputed from the admitted+batch sides. The streaming
-    path (source → keyed state gate → memory sink drain) is fully real."""
+    path (source → keyed state gate → checkpointed sink) is fully real."""
     import tempfile
 
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
+        write_stream_parquet,
+    )
     from dbt_gdpr_anonymizer_spark.streaming.quota import (
         stream_quota_gate_legacy,
     )
@@ -10561,15 +10311,9 @@ def stream_quota_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="quota_key bigint, doc_id bigint",
     )
     tmp = tempfile.mkdtemp(prefix="stream_quota_")
-    q = (
-        gated.writeStream.format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    write_stream_parquet(
+        gated, f"{tmp}/out", f"{tmp}/ckpt", available_now=True
+    ).awaitTermination()
     admitted = (
         spark.read.parquet(f"{tmp}/out")
         .groupBy("quota_key")

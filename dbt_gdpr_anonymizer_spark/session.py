@@ -9,6 +9,8 @@ one logical plan serve both the sf0.01 test scale and a 100 TB deployment.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -16,6 +18,26 @@ from pyspark.sql import SparkSession
 def host_cpus() -> int:
     """Cores a local run uses: ``SPARK_GRAFT_CPUS``, else the host's count."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set the session confs in ``conf`` for the body of a ``with`` block,
+    then restore each prior value, or unset a key that had none. A conf
+    read at analysis time (a parquet read flag) stays in force for a
+    DataFrame built inside the block; one read at execution (the shuffle
+    partition count) holds only for what executes inside it."""
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

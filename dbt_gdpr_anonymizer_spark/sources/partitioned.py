@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_gdpr_anonymizer_spark.session import scoped_conf
+
 __all__ = ["write_partitioned", "read_partitioned", "compact_files",
            "zorder_value", "write_zordered", "footer_stats"]
 
@@ -195,22 +197,18 @@ def footer_stats(
     to a real scan — correctness never depends on it).
 
     Pushdown only exists on the DataSource V2 read path, so the two
-    configs are scoped save/restore around PLAN construction (a
+    configs are scoped (``scoped_conf``) around PLAN construction (a
     DataFrame keeps the plan it was built under); the helper asserts
     ``PushedAggregation`` made it into the physical plan and fails
     loudly otherwise rather than silently scanning.
     """
-    saved = {
-        "spark.sql.sources.useV1SourceList": spark.conf.get(
-            "spark.sql.sources.useV1SourceList", None
-        ),
-        "spark.sql.parquet.aggregatePushDown": spark.conf.get(
-            "spark.sql.parquet.aggregatePushDown", None
-        ),
-    }
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.sources.useV1SourceList": "",
+            "spark.sql.parquet.aggregatePushDown": "true",
+        },
+    ):
         df = spark.read.parquet(path)
         aggs = [F.count(F.lit(1)).alias("_n")]
         for c in cols:
@@ -223,12 +221,6 @@ def footer_stats(
                 "types and that no filter precedes the aggregate"
             )
         row = agg.collect()[0]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     out = {"n_rows": row["_n"]}
     for c in cols:
         out[f"min_{c}"] = row[f"_min_{c}"]

@@ -6,6 +6,13 @@ streaming DataFrame — one code path for batch and streaming, the core
 promise of Structured Streaming. This module adds the stream plumbing:
 sources, sinks, and the watermarked windowed rollup for late events.
 
+Every finite drive in the package and its tests goes through three
+calls here: ``replay_batches`` turns a batch frame into a file stream
+with pinned micro-batch boundaries, ``drain`` runs a stream to the end
+into a memory sink and returns the rows as a batch frame (raising if the
+query failed, leaving no catalog view behind), and
+``write_stream_parquet`` is the checkpointed parquet sink.
+
 No reference equivalent (the reference is batch-only dbt); this is the
 extension surface for continuous pipelines.
 """
@@ -19,6 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
 from dbt_gdpr_anonymizer_spark.policy import TablePolicy, mask_model
+from dbt_gdpr_anonymizer_spark.session import scoped_conf
 from dbt_gdpr_anonymizer_spark.sources.ingest import SEED_SCHEMA
 
 __all__ = [
@@ -28,6 +36,8 @@ __all__ = [
     "EVENTS_PAYLOAD_SCHEMA",
     "stream_anonymize",
     "write_stream_parquet",
+    "drain",
+    "replay_batches",
     "windowed_event_rollup",
     "stream_exact_dedup",
     "stream_scrub_text",
@@ -168,6 +178,114 @@ def write_stream_parquet(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _stream_state_partitions(spark: SparkSession) -> int:
+    """Shuffle/state partition count for a drain.
+
+    The stateful partition count is FROZEN at checkpoint creation (AQE
+    never re-plans stateful stages), so it must be sized up front: each
+    shuffle partition is one state-store instance per stateful operator
+    per micro-batch, each paying a fixed per-batch commit/snapshot cost,
+    while the useful update work per partition shrinks as partitions
+    grow. Derived from the SESSION's core count — ``defaultParallelism``
+    is ``$SPARK_GRAFT_CPUS`` under the bench contract's
+    ``local[$SPARK_GRAFT_CPUS]`` master and executors × cores on a real
+    cluster — never a hardcoded local-mode constant. ``cores // 4``
+    balances per-store commit overhead against update parallelism
+    (measured sf0.1 @ 32 cores, sessionize drain: 32 parts 7.46 s,
+    8 parts 6.57 s, 4 parts 9.06 s median-of-3; interval join 12.8 s at
+    32 parts, 6.8 s at 8), floored at 4 so small sessions keep enough
+    update parallelism. A production deployment sizes this to aggregate
+    state volume / target per-store size before first start; this
+    derivation is the scale-adaptive analogue with no local-only
+    constant. RocksDB provider: measured and REJECTED at this state
+    volume (sessionize 6.57→6.88 s, interval join 5.24→6.11 s —
+    per-instance open/compaction overhead exceeds the HDFS-backed map's
+    cost for KB-scale state; revisit only when per-store state is large
+    enough to pressure the heap).
+    """
+    return max(4, spark.sparkContext.defaultParallelism // 4)
+
+
+def drain(stream: DataFrame, mode: str = "append") -> DataFrame:
+    """Run a finite stream to the end and return what it emitted.
+
+    The stream drains into a memory sink with an ``availableNow``
+    trigger, in output ``mode`` (``append`` or ``complete``), under a
+    shuffle partition count scoped to :func:`_stream_state_partitions`
+    (a partition count never changes the drained rows: state is per
+    key, and the watermark schedule is partition-independent).
+    ``awaitTermination`` raises if the query failed, so a failed drive
+    never reads partial output. The sink's catalog view is dropped
+    before returning: the returned frame was resolved against the sink
+    and keeps its rows, which the sink holds in driver memory for as
+    long as the frame lives.
+    """
+    import uuid
+
+    spark = stream.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    partitions = str(_stream_state_partitions(spark))
+    try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": partitions}):
+            (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def replay_batches(df: DataFrame, batch_col: str, directory: str) -> DataFrame:
+    """Replay a batch frame as a file stream, one micro-batch per value of
+    the integer column ``batch_col``, in ascending order.
+
+    All batches are written in ONE pass: ``repartition(batch_col)`` puts
+    each batch id in exactly one task, and ``partitionBy`` gives each id
+    its own directory, renamed to ``<directory>/f<id>`` and stamped with
+    an mtime that grows with the id. The stream reads them back with
+    ``maxFilesPerTrigger=1``, so batch ``i`` arrives whole and after
+    every smaller id (an id with no rows is simply no micro-batch). Each
+    directory must hold exactly one data file — two files of one mtime
+    would make the order inside a batch arbitrary — and a conf that
+    splits one (``maxRecordsPerFile``) fails loudly here. A later call
+    into the same ``directory`` with larger ids adds batches to a stream
+    that already drained, for checkpoint-resume drives.
+    """
+    import os
+    import shutil
+
+    raw = os.path.join(directory, "_raw")
+    df.repartition(batch_col).write.partitionBy(batch_col).parquet(raw)
+    for part in os.listdir(raw):
+        if not part.startswith(f"{batch_col}="):
+            continue
+        i = int(part.split("=", 1)[1])
+        dst = os.path.join(directory, f"f{i}")
+        os.rename(os.path.join(raw, part), dst)
+        files = os.listdir(dst)
+        n_data = sum(f_.endswith(".parquet") for f_ in files)
+        if n_data != 1:
+            raise AssertionError(
+                f"replay_batches: {dst} has {n_data} parquet files, "
+                "expected exactly 1"
+            )
+        mt = 1_000.0 * (i + 1)
+        for f_ in files:
+            os.utime(os.path.join(dst, f_), (mt, mt))
+        os.utime(dst, (mt, mt))
+    shutil.rmtree(raw)
+    return (
+        df.sparkSession.readStream.schema(df.drop(batch_col).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(directory, "f*"))
+    )
 
 
 def stream_exact_dedup(

@@ -2,11 +2,12 @@
 and formatted-plan capture for the queries under optimization.
 
 Usage:
-    python scripts/profile_query.py [--plans OUTDIR --tag before|after]
-        [sf_dir] name [name ...]
+    python scripts/profile_query.py [--tier registry|staged]
+        [--plans OUTDIR --tag before|after] [sf_dir] name [name ...]
 
-For each named registry query, measures with ``bench.time_query`` (median
-of 3 after one warm-up, the bench methodology):
+For each named query of the tier (default ``registry``), measures with
+``bench.time_query`` (median of 3 after one warm-up, the bench
+methodology):
   build  = py4j plan-construction wall (callable -> DataFrame)
   exec   = noop-sink execution wall (full computation, no sink cost)
   total  = build + exec wall of one run
@@ -33,6 +34,7 @@ from bench import time_query, warm_session  # noqa: E402
 from dbt_gdpr_anonymizer_spark.queries import all_queries  # noqa: E402
 from dbt_gdpr_anonymizer_spark.session import get_spark  # noqa: E402
 from perfbench.tracing import StatusStore  # noqa: E402
+from scripts.check_correctness import pop_tier  # noqa: E402
 
 
 def _dump_plan(path: str, df) -> None:
@@ -44,6 +46,7 @@ def _dump_plan(path: str, df) -> None:
 
 
 def main() -> None:
+    tier = pop_tier()
     ap = argparse.ArgumentParser()
     ap.add_argument("--plans", default=None, help="dir for explain dumps")
     ap.add_argument("--tag", default="before")
@@ -52,7 +55,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("profile")
-    qs = all_queries()
+    qs = all_queries(tier)
     store = StatusStore(spark)
     warm_session(spark, args.sf_dir)
     if args.plans:

@@ -24,8 +24,10 @@ from dbt_gdpr_anonymizer_spark.sources.ingest import (
     write_seed_csv,
 )
 from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
+    drain,
     stream_anonymize,
     windowed_event_rollup,
+    write_stream_parquet,
 )
 
 
@@ -97,15 +99,7 @@ def test_stream_anonymize_masks_microbatches(spark, tmp_path):
     masked = stream_anonymize(
         stream, SERVICES_POLICY, EngineSettings(salt_key="dev_salt_UNSAFE")
     )
-    q = (
-        masked.writeStream.format("memory")
-        .queryName("masked_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    out = spark.sql("select * from masked_stream").collect()
+    out = drain(masked).collect()
     assert len(out) == 1
     r = out[0]
     assert r["contact_email_anon"].endswith("@anonymized.gouv.fr")
@@ -159,15 +153,7 @@ def test_stream_exact_dedup_drops_in_horizon_duplicates(spark, tmp_path):
         "doc_id long, ts timestamp, text string"
     ).json(str(drop))
     deduped = stream_exact_dedup(stream, watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    out = spark.sql("select doc_id, fingerprint from dedup_stream").collect()
+    out = drain(deduped.select("doc_id", "fingerprint")).collect()
     # docs 1 and 2 normalize to the same fingerprint -> one survivor; 3 kept
     assert len(out) == 2
     assert len({r["fingerprint"] for r in out}) == 2
@@ -406,18 +392,9 @@ def test_stream_scrub_text_redacts_microbatches(spark, tmp_path):
         spark.readStream.schema("doc_id long, text string")
         .json(str(src))
     )
-    q = (
-        stream_scrub_text(stream)
-        .writeStream.format("memory")
-        .queryName("scrub_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
     out = {
         r["doc_id"]: r["text"]
-        for r in spark.sql("select * from scrub_stream").collect()
+        for r in drain(stream_scrub_text(stream)).collect()
     }
     assert out[1] == "mail [EMAIL] et tel [PHONE]"
     assert out[2] == "rien de sensible"
@@ -495,15 +472,9 @@ def test_rate_events_stream_feeds_windowed_rollup(spark, tmp_path):
     assert ev.isStreaming
     rolled = windowed_event_rollup(ev)
     out = str(tmp_path / "out")
-    q = (
-        rolled.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    write_stream_parquet(
+        rolled, out, str(tmp_path / "ckpt"), available_now=True
+    ).awaitTermination()
     # append mode only emits FINALIZED windows; a short drain may finalize
     # none, but the raw drain below must still land rows. Check the sink
     # parses (0-or-more rows, exact schema).
@@ -516,15 +487,9 @@ def test_rate_events_stream_feeds_windowed_rollup(spark, tmp_path):
     ]
 
     raw_out = str(tmp_path / "raw")
-    q2 = (
-        ev.writeStream.format("parquet")
-        .option("path", raw_out)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
+    write_stream_parquet(
+        ev, raw_out, str(tmp_path / "ckpt2"), available_now=True
+    ).awaitTermination()
     rows = spark.read.parquet(raw_out).collect()
     assert len(rows) > 0
     for r in rows:
@@ -595,15 +560,7 @@ def test_parse_kafka_events_streaming_composes_with_rollup(spark, tmp_path):
     batch.write.mode("overwrite").parquet(str(src_dir))
     wire = spark.readStream.schema("value binary").parquet(str(src_dir))
     rolled = windowed_event_rollup(parse_kafka_events(wire))
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName("kafka_parse_rollup")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("kafka_parse_rollup").collect()
+    got = drain(rolled, "complete").collect()
     assert len(got) == 1
     assert got[0]["n_events"] == 10 and got[0]["total_value"] == 10.0
 

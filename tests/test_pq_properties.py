@@ -324,6 +324,29 @@ def test_residual_lloyd_seeding_does_not_collapse():
     assert len(uniq) == 3, cents
 
 
+def test_spherical_lloyd_zero_norm_seed_captures_nothing():
+    """A zero-norm seed has no cosine with anything: it must not win a
+    row from a nonzero centroid (a NaN cosine made argmax pick it for
+    every row), and a zero-norm row falls to cell 0 (first max)."""
+    import warnings
+
+    import numpy as np
+
+    from dbt_gdpr_anonymizer_spark.operators.similarity import (
+        _lloyd_spherical_np,
+    )
+
+    x = np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.9, 0.1]])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cents = _lloyd_spherical_np(x, 2, 1)
+    # cell 0 holds only the zero row, whose mean has no direction, so
+    # the seed stays; cell 1 takes the three nonzero rows
+    m = x[1:].mean(axis=0)
+    np.testing.assert_array_equal(cents[0], [0.0, 0.0])
+    np.testing.assert_allclose(cents[1], m / np.linalg.norm(m))
+
+
 def test_ivf_pq_residual_requires_coarse(spark):
     """residual=True without the fitted coarse model must raise (the
     pq_assign guard, mirrored): silently auto-seeding a DIFFERENT

@@ -85,6 +85,21 @@ def test_register_rejects_a_second_registration():
     assert Q.TIER["q1_pricing_summary"] == "registry"
 
 
+def test_queries_use_the_one_stream_harness():
+    """Streams drain through ``drain`` / ``write_stream_parquet`` /
+    ``stream_upsert_parquet``, replays go through ``replay_batches`` and
+    session confs through ``scoped_conf``: no query hand-writes a sink,
+    an mtime-ordered replay or a conf save/restore."""
+    src = open(Q.__file__).read()
+    for needle in (
+        "writeStream",
+        "os.utime",
+        "spark.conf.set(",
+        "spark.conf.unset(",
+    ):
+        assert needle not in src, needle
+
+
 @pytest.mark.parametrize("name", list(Q.all_queries("staged")))
 def test_staged_oracle_parity(spark, name):
     """Column names, a non-empty row count and order-insensitive values

@@ -7,6 +7,7 @@ import json
 import os
 from datetime import datetime
 
+from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
 from dbt_gdpr_anonymizer_spark.streaming.sessionize import (
     session_window_rollup,
     streaming_sessionize_custom,
@@ -61,16 +62,7 @@ def test_streaming_sessionize_custom_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(drop))
     )
-    sessions = streaming_sessionize_custom(stream, gap_minutes=30)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("closed_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from closed_sessions").collect()
+    rows = drain(streaming_sessionize_custom(stream, gap_minutes=30)).collect()
     assert len(rows) == 1  # only the CLOSED session; batch-2 session stays open
     r = rows[0]
     assert r["user_id"] == 1

@@ -4,6 +4,8 @@ import hashlib
 import math
 from collections import Counter
 
+from dbt_gdpr_anonymizer_spark.streaming.anonymize import write_stream_parquet
+
 
 def _cm_replay(texts, depth, width, salt="cm"):
     """Pure-python count-min replay using the repo's tokenizer contract
@@ -317,15 +319,9 @@ def test_hll_register_table_streams(spark, tmp_path):
         "uid",
     )
     out_dir = tmp_path / "sink"
-    q = (
-        regs.writeStream.format("parquet")
-        .option("path", f"{out_dir}/out")
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    write_stream_parquet(
+        regs, f"{out_dir}/out", f"{out_dir}/ckpt", available_now=True
+    ).awaitTermination()
 
     sunk = spark.read.parquet(f"{out_dir}/out").select(
         F.col("day_w.start").alias("day"), "_j", "_m"
@@ -421,15 +417,9 @@ def test_cm_grid_table_streams(spark, tmp_path):
         width=16,
     )
     out_dir = tmp_path / "sink"
-    q = (
-        grid.writeStream.format("parquet")
-        .option("path", f"{out_dir}/out")
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    write_stream_parquet(
+        grid, f"{out_dir}/out", f"{out_dir}/ckpt", available_now=True
+    ).awaitTermination()
 
     sunk = (
         spark.read.parquet(f"{out_dir}/out")
@@ -570,16 +560,10 @@ def test_bloom_flag_grams_streams(spark, tmp_path):
         str(src)
     )
     out_dir = tmp_path / "sink"
-    q = (
-        bloom_flag_grams(stream, mask, k=2, n=3)
-        .writeStream.format("parquet")
-        .option("path", f"{out_dir}/out")
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    flagged = bloom_flag_grams(stream, mask, k=2, n=3)
+    write_stream_parquet(
+        flagged, f"{out_dir}/out", f"{out_dir}/ckpt", available_now=True
+    ).awaitTermination()
     sunk = spark.read.parquet(f"{out_dir}/out")
     got = {
         (r.doc_id, r.gram): r.flagged for r in sunk.collect()

@@ -57,6 +57,7 @@ def _py_fold(batches, ref, thr):
 
 
 def test_stream_cusum_across_batches(spark, tmp_path):
+    from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
     from dbt_gdpr_anonymizer_spark.streaming.drift import stream_cusum
 
     drop = tmp_path / "events"
@@ -70,20 +71,12 @@ def test_stream_cusum_across_batches(spark, tmp_path):
     gated = stream_cusum(
         stream, ref_num=5, ref_den=1, threshold=5
     )
-    q = (
-        gated.writeStream.format("memory")
-        .queryName("cusum_gate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = sorted(
         (
             r.user_id, r.event_id, r.value,
             r.cusum_pos_dx, r.cusum_neg_dx, r.alarm,
         )
-        for r in spark.sql("select * from cusum_gate").collect()
+        for r in drain(gated).collect()
     )
     assert got == _py_fold(batches, ref=5, thr=5)
     # key 1 must alarm on the hot side by event 12 (2+3+4 = 9 >= 5);

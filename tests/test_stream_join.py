@@ -5,35 +5,16 @@ cross-batch state survival (a click arriving a batch before its purchase)."""
 from __future__ import annotations
 
 import datetime as dt
-import os
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
+from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain, replay_batches
 from dbt_gdpr_anonymizer_spark.streaming.join import stream_interval_join
 
 
-def _mk_stream(spark, batches, schema):
-    tmp = tempfile.mkdtemp(prefix="sj_test_")
-    for i, rows in enumerate(batches):
-        path = f"{tmp}/f{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
-        mt = 1_000.0 * (i + 1)
-        for root, _, files in os.walk(path):
-            for f_ in files:
-                os.utime(os.path.join(root, f_), (mt, mt))
-        os.utime(path, (mt, mt))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/f*")
-    )
-
-
-def test_stream_interval_join_semantics(spark):
+def test_stream_interval_join_semantics(spark, tmp_path):
     t = lambda m: dt.datetime(2024, 1, 1, 10, m)
-    schema = "kind string, eid long, user long, ts timestamp"
+    schema = "b int, kind string, eid long, user long, ts timestamp"
     batches = [
         # batch 1: clicks only — state must survive into batch 2
         [
@@ -50,7 +31,10 @@ def test_stream_interval_join_semantics(spark):
         # batch 3: advances the watermark so nothing is stuck
         [("view", 99, 1, dt.datetime(2024, 1, 1, 14, 0))],
     ]
-    stream = _mk_stream(spark, batches, schema)
+    rows = [(i, *r) for i, batch in enumerate(batches) for r in batch]
+    stream = replay_batches(
+        spark.createDataFrame(rows, schema), "b", str(tmp_path)
+    )
     clicks = stream.filter(F.col("kind") == "click").select(
         F.col("user").alias("user"), F.col("eid").alias("click_id"), "ts"
     )
@@ -60,17 +44,5 @@ def test_stream_interval_join_semantics(spark):
     joined = stream_interval_join(
         clicks, purchases, on="user", lookback="1 hour", watermark="2 hours"
     ).select("purchase_id", "click_id")
-    name = f"sj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.purchase_id, r.click_id)
-        for r in spark.table(name).collect()
-    }
+    got = {(r.purchase_id, r.click_id) for r in drain(joined).collect()}
     assert got == {(10, 1), (10, 2)}

@@ -13,6 +13,9 @@ import os
 
 import pytest
 
+from dbt_gdpr_anonymizer_spark.session import scoped_conf
+from dbt_gdpr_anonymizer_spark.streaming.anonymize import drain
+
 try:
     HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
 except ModuleNotFoundError:  # no 'google' namespace package at all
@@ -38,19 +41,8 @@ def _write_batches(drop):
     os.utime(f2, (1_700_000_100, 1_700_000_100))
 
 
-def _drain(gated, spark, name):
-    q = (
-        gated.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return sorted(
-        (r["user_id"], r["event_id"])
-        for r in spark.sql(f"select * from {name}").collect()
-    )
+def _drain(gated):
+    return sorted((r["user_id"], r["event_id"]) for r in drain(gated).collect())
 
 
 def test_stream_quota_gate_legacy_across_batches(spark, tmp_path):
@@ -73,7 +65,7 @@ def test_stream_quota_gate_legacy_across_batches(spark, tmp_path):
         output_schema="user_id long, event_id long",
         order_col="event_id",
     )
-    got = _drain(gated, spark, "quota_legacy_out")
+    got = _drain(gated)
     # user 1: 2 admitted in batch 1 + exactly 1 more in batch 2 (state
     # carried the count across the batch boundary); user 2: its single row
     assert got == [(1, 10), (1, 11), (1, 12), (2, 20)]
@@ -89,14 +81,12 @@ def test_stream_quota_gate_tws_across_batches(spark, tmp_path):
     drop = tmp_path / "events"
     drop.mkdir()
     _write_batches(drop)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state"
-        ".RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state"
+            ".RocksDBStateStoreProvider",
+    }
+    with scoped_conf(spark, rocksdb):
         stream = (
             spark.readStream.schema("user_id long, event_id long")
             .option("maxFilesPerTrigger", "1")
@@ -109,12 +99,7 @@ def test_stream_quota_gate_tws_across_batches(spark, tmp_path):
             output_schema="user_id long, event_id long",
             order_col="event_id",
         )
-        got = _drain(gated, spark, "quota_tws_out")
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
+        got = _drain(gated)
     assert got == [(1, 10), (1, 11), (1, 12), (2, 20)]
 
 

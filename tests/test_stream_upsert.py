@@ -3,9 +3,9 @@ micro-batches and exactly-once state after a kill-and-resume."""
 
 from __future__ import annotations
 
-import os
 from datetime import datetime
 
+from dbt_gdpr_anonymizer_spark.streaming.anonymize import replay_batches
 from dbt_gdpr_anonymizer_spark.streaming.upsert import (
     latest_state,
     stream_upsert_parquet,
@@ -16,33 +16,20 @@ def ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
 
 
-def _write_batch(spark, rows, path, mtime):
+def _drain(spark, rows, src, target, ckpt):
+    """Upsert ``rows`` — (batch, user_id, event_type, ts, event_id), batch
+    i arriving as micro-batch i — into ``target``."""
     df = spark.createDataFrame(
-        rows, "user_id long, event_type string, ts timestamp, event_id long"
+        rows,
+        "b int, user_id long, event_type string, ts timestamp, event_id long",
     )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    for root, _, files in os.walk(path):
-        for f in files:
-            os.utime(os.path.join(root, f), (mtime, mtime))
-    os.utime(path, (mtime, mtime))
-
-
-def _drain(spark, src, target, ckpt):
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp, event_id long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f*")
-    )
-    q = stream_upsert_parquet(
-        stream,
+    stream_upsert_parquet(
+        replay_batches(df, "b", src),
         target,
         keys=["user_id"],
         order_cols=["ts", "event_id"],
         checkpoint_dir=ckpt,
-    )
-    q.awaitTermination(180)
+    ).awaitTermination()
 
 
 def test_stream_upsert_latest_wins_within_and_across_batches(
@@ -53,28 +40,22 @@ def test_stream_upsert_latest_wins_within_and_across_batches(
         str(tmp_path / "target"),
         str(tmp_path / "ckpt"),
     )
-    # batch 1: user 1 twice (in-batch dedup must keep the later), user 2
-    _write_batch(
+    _drain(
         spark,
         [
-            (1, "signup", ts("2024-01-01 10:00:00"), 1),
-            (1, "click", ts("2024-01-01 10:05:00"), 2),
-            (2, "view", ts("2024-01-01 10:00:00"), 3),
+            # batch 0: user 1 twice (in-batch dedup must keep the later),
+            # user 2
+            (0, 1, "signup", ts("2024-01-01 10:00:00"), 1),
+            (0, 1, "click", ts("2024-01-01 10:05:00"), 2),
+            (0, 2, "view", ts("2024-01-01 10:00:00"), 3),
+            # batch 1: user 1 updates again; user 3 appears
+            (1, 1, "purchase", ts("2024-01-01 11:00:00"), 4),
+            (1, 3, "view", ts("2024-01-01 11:00:00"), 5),
         ],
-        f"{src}/f1",
-        1_000,
+        src,
+        target,
+        ckpt,
     )
-    # batch 2: user 1 updates again; user 3 appears
-    _write_batch(
-        spark,
-        [
-            (1, "purchase", ts("2024-01-01 11:00:00"), 4),
-            (3, "view", ts("2024-01-01 11:00:00"), 5),
-        ],
-        f"{src}/f2",
-        2_000,
-    )
-    _drain(spark, src, target, ckpt)
     got = {
         r["user_id"]: (r["event_type"], r["event_id"])
         for r in latest_state(spark, target).collect()
@@ -88,28 +69,25 @@ def test_stream_upsert_kill_and_resume_exactly_once(spark, tmp_path):
         str(tmp_path / "target"),
         str(tmp_path / "ckpt"),
     )
-    _write_batch(
-        spark,
-        [(1, "signup", ts("2024-01-01 10:00:00"), 1)],
-        f"{src}/f1",
-        1_000,
+    # first run commits state for batch 0
+    _drain(
+        spark, [(0, 1, "signup", ts("2024-01-01 10:00:00"), 1)], src, target, ckpt
     )
-    _drain(spark, src, target, ckpt)  # first run commits state for f1
     v1 = latest_state(spark, target).collect()
     assert {(r["user_id"], r["event_id"]) for r in v1} == {(1, 1)}
 
-    _write_batch(
+    # resume from the SAME checkpoint: only batch 1 replays, merging over
+    # batch 0's committed state — no duplicated or lost keys
+    _drain(
         spark,
         [
-            (1, "purchase", ts("2024-01-01 12:00:00"), 2),
-            (2, "view", ts("2024-01-01 12:00:00"), 3),
+            (1, 1, "purchase", ts("2024-01-01 12:00:00"), 2),
+            (1, 2, "view", ts("2024-01-01 12:00:00"), 3),
         ],
-        f"{src}/f2",
-        2_000,
+        src,
+        target,
+        ckpt,
     )
-    # resume from the SAME checkpoint: only f2 replays, merging over f1's
-    # committed state — no duplicated or lost keys
-    _drain(spark, src, target, ckpt)
     got = {
         r["user_id"]: r["event_id"]
         for r in latest_state(spark, target).collect()
