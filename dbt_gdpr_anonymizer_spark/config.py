@@ -14,10 +14,6 @@ from dataclasses import dataclass, field
 DEFAULT_SALT = "dev_salt_UNSAFE"  # reference default, dbt_project.yml:36
 ANON_EMAIL_DOMAIN = "anonymized.gouv.fr"
 
-HIGH_SENSITIVITY = ("email", "phone", "ssn", "credit_card")
-MEDIUM_SENSITIVITY = ("address", "coordinates", "postal_code")
-LOW_SENSITIVITY = ("department", "region", "country")
-
 
 @dataclass(frozen=True)
 class EngineSettings:

@@ -64,7 +64,9 @@ __all__ = [
     "iban_valid",
     "nir_valid",
     "generalize_date",
+    "generalize_date_sql",
     "fpe_digits",
+    "fpe_digits_sql",
 ]
 
 
@@ -72,19 +74,14 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def _guard(c: Column, masked: Column) -> Column:
-    """Apply ``masked`` only when the value is non-null and non-empty.
+def _guard_sql(c: str, masked: str) -> str:
+    """``masked`` only when the value is non-null and non-empty, as SQL
+    text.
 
     Reference guard ``col is not null and col != ''`` (mask_email.sql:33):
-    empty string masks to NULL, not to a masked string. :func:`_guard_sql`
-    is its SQL text.
+    empty string masks to NULL, not to a masked string. A CASE with no
+    ELSE releases a NULL of the masked type.
     """
-    return F.when(c.isNotNull() & (c != F.lit("")), masked).otherwise(F.lit(None))
-
-
-def _guard_sql(c: str, masked: str) -> str:
-    """:func:`_guard` as SQL text: a CASE with no ELSE releases the same
-    typed NULL as ``.otherwise(lit(None))``."""
     return f"CASE WHEN {c} IS NOT NULL AND {c} != '' THEN {masked} END"
 
 
@@ -322,18 +319,23 @@ def iban_valid(c: Column | str) -> Column:
     )
 
 
-def generalize_date(c: Column | str, granularity: str = "month") -> Column:
+def generalize_date_sql(c: str, granularity: str = "month") -> str:
     """Temporal generalization: truncate a date/timestamp to ``month`` /
-    ``quarter`` / ``year`` — the date counterpart of coordinate rounding
-    (precision reduction, not suppression). An EXTENSION method beyond the
-    reference's four (its ladder stops at round_2_decimals for
-    coordinates); registered in the policy dispatcher as
-    ``generalize_to_month`` so schema metadata can select it exactly like
-    the reference methods. NULL-safe (date_trunc propagates NULL); pure
-    codegen."""
+    ``quarter`` / ``year``, as SQL text over a SQL expression — the date
+    counterpart of coordinate rounding (precision reduction, not
+    suppression). An EXTENSION method beyond the reference's four (its
+    ladder stops at round_2_decimals for coordinates); registered in the
+    policy dispatcher as ``generalize_to_month`` so schema metadata can
+    select it exactly like the reference methods. NULL-safe (date_trunc
+    propagates NULL); pure codegen."""
     if granularity not in ("month", "quarter", "year"):
         raise ValueError("granularity must be month, quarter, or year")
-    return F.date_trunc(granularity, _col(c))
+    return f"date_trunc('{granularity.upper()}', {c})"
+
+
+def generalize_date(c: str, granularity: str = "month") -> Column:
+    """:func:`generalize_date_sql` over a column name."""
+    return F.expr(generalize_date_sql(sql_ident(c), granularity))
 
 
 def nir_valid(c: Column | str) -> Column:
@@ -356,49 +358,50 @@ def nir_valid(c: Column | str) -> Column:
     return s.rlike("^[12][0-9]{14}$") & (key == 97 - body % 97)
 
 
-def fpe_digits(c: Column | str, salt: str) -> Column:
-    """Format-preserving pseudonymization of the DIGITS in a string: each
-    digit at position i maps to ``(d + k_i) mod 10`` where the per-
-    position key stream ``k_i`` derives from md5(salt, i) — every
-    non-digit character (separators, country prefixes '+', spacing)
-    passes through untouched, so downstream format validators and
-    parsers keep working on the masked value. This is the FPE method
-    CLASS (NIST FF1/FF3's contract — masked output inhabits the input
-    format) with a keystream cipher standing in for the AES Feistel
-    rounds: same format guarantees, same reversibility-with-key
-    (subtract the keystream), NOT cryptographic-grade diffusion — the
-    docstring contract states it. The REAL cipher exists since r6:
-    ``functions/fpe.py`` implements NIST SP 800-38G FF1 over AES-128
-    (NIST-vector-validated), exposed as the ``fpe_ff1`` policy method
-    (Arrow-batched pandas UDF — per-row AES cannot be a Catalyst
-    expression); this keystream twin remains the codegen/oracle-checkable
-    tier of the same method class.
+def fpe_digits_sql(c: str, salt: str) -> str:
+    """Format-preserving pseudonymization of the DIGITS in a string, as
+    SQL text over a SQL expression: each digit at position i maps to
+    ``(d + k_i) mod 10`` where the per-position key stream ``k_i``
+    derives from md5(salt, i) — every non-digit character (separators,
+    country prefixes '+', spacing) passes through untouched, so
+    downstream format validators and parsers keep working on the masked
+    value. This is the FPE method CLASS (NIST FF1/FF3's contract — masked
+    output inhabits the input format) with a keystream cipher standing in
+    for the AES Feistel rounds: same format guarantees, same
+    reversibility-with-key (subtract the keystream), NOT
+    cryptographic-grade diffusion — the docstring contract states it.
+    The REAL cipher exists since r6: ``functions/fpe.py`` implements NIST
+    SP 800-38G FF1 over AES-128 (NIST-vector-validated), exposed as the
+    ``fpe_ff1`` policy method (Arrow-batched pandas UDF — per-row AES
+    cannot be a Catalyst expression); this keystream twin remains the
+    codegen/oracle-checkable tier of the same method class.
 
-    Pure higher-order Column expression (transform over the char
-    sequence + concat), whole-stage codegen, no UDF; identical list
-    arithmetic replays in the DuckDB oracle. NULL/empty guard matches
-    the reference's mask guard.
+    Pure higher-order expression (transform over the char sequence +
+    array_join), whole-stage codegen, no UDF; identical list arithmetic
+    replays in the DuckDB oracle. NULL/empty guard matches the
+    reference's mask guard. The lambda variable is named so that it
+    cannot capture a name inside ``c``.
     """
-    s = _col(c)
-
-    def shifted(i: Column) -> Column:
-        ch = s.substr(i, F.lit(1))
-        # per-position key digit: first hex nibble of md5(salt:i) mod 10
-        k = (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(salt + ":"), i.cast("string"))), 1, 1),
-                16,
-                10,
-            ).cast("int")
-            % 10
-        )
-        d = F.ascii(ch) - 48
-        return F.when(
-            ch.between("0", "9"),
-            F.chr(((d + k) % 10 + 48).cast("bigint")),
-        ).otherwise(ch)
-
-    masked = F.array_join(
-        F.transform(F.sequence(F.lit(1), F.length(s)), shifted), ""
+    i = "_fpe_i"
+    while i in c.lower():
+        i += "_"
+    ch = f"substring({c}, {i}, 1)"
+    # per-position key digit: first hex nibble of md5(salt:i) mod 10
+    k = (
+        f"cast(conv(substring(md5(concat({sql_str(salt + ':')}, "
+        f"cast({i} as string))), 1, 1), 16, 10) as int) % 10"
     )
-    return _guard(s, masked)
+    shifted = (
+        f"CASE WHEN {ch} >= '0' AND {ch} <= '9' "
+        f"THEN chr(cast(((ascii({ch}) - 48) + ({k})) % 10 + 48 as bigint)) "
+        f"ELSE {ch} END"
+    )
+    return _guard_sql(
+        c,
+        f"array_join(transform(sequence(1, length({c})), {i} -> {shifted}), '')",
+    )
+
+
+def fpe_digits(c: str, salt: str) -> Column:
+    """:func:`fpe_digits_sql` over a column name."""
+    return F.expr(fpe_digits_sql(sql_ident(c), salt))

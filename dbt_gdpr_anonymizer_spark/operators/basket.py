@@ -93,8 +93,7 @@ def association_rules(
     join sides are item-domain-bounded post-aggregation tables.
 
     Returns ``(antecedent, consequent, pair_support, support_ppm,
-    conf_ppm, lift_e6)`` ordered ``(pair_support DESC, antecedent,
-    consequent)``.
+    conf_ppm, lift_e6)``, unordered.
     """
     items = df.select(
         F.col(basket_col).alias("_bk"), F.col(item_col).alias("_it")
@@ -151,6 +150,5 @@ def association_rules(
             .cast("long")
             .alias("lift_e6"),
         )
-        .orderBy(F.desc("pair_support"), "antecedent", "consequent")
     )
     return track_caches(out, items)

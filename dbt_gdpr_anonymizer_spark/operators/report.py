@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
-from dbt_gdpr_anonymizer_spark.policy import PolicyError, TablePolicy
+from dbt_gdpr_anonymizer_spark.policy import TablePolicy, validate_policy
 
 REPORT_SCHEMA = T.StructType(
     [
@@ -56,22 +56,19 @@ def pii_inventory(
     policies: list[TablePolicy],
     conf: EngineSettings | None = None,
     *,
-    strict: bool = True,
     with_timestamp: bool = True,
 ) -> DataFrame:
     """Inventory of every PII column across models (generate_pii_report.sql:20-93).
 
-    ``strict`` reproduces the compile-gate (D1): a PII column without an
-    anonymization method raises instead of reporting.
+    Each policy goes through ``validate_policy``, the compile-gate (D1)
+    that masking runs too: a PII column whose method is missing or
+    unknown raises instead of being reported as masked.
     """
     conf = conf or settings()
     rows = []
     for tp in policies:
+        validate_policy(tp)
         for col, p in sorted(tp.pii_columns().items()):
-            if strict and not p.anonymization_method:
-                raise PolicyError(
-                    f"PII column {tp.name}.{col} has no anonymization_method"
-                )
             rows.append(
                 (
                     tp.name,
@@ -92,19 +89,6 @@ def pii_inventory(
     if with_timestamp:
         df = df.selectExpr("*", "current_timestamp() AS report_generated_at")
     return df
-
-
-def summarize_inventory(inventory: DataFrame) -> dict:
-    """Counts for the log banner (generate_pii_report.sql:103-137)."""
-    by_type = {
-        r["pii_type"]: r["count"]
-        for r in inventory.groupBy("pii_type").count().collect()
-    }
-    return {
-        "pii_columns": inventory.count(),
-        "models": inventory.select("model_name").distinct().count(),
-        "by_pii_type": by_type,
-    }
 
 
 def export_report(

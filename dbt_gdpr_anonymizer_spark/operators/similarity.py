@@ -1777,8 +1777,8 @@ def rrf_fuse(
     1/(k+r) whose fold order could diverge across engines). A document
     missing from a list contributes nothing. Released columns:
     ``(id_col, n_lists, rrf_pm, rank_<name>...)`` — per-source ranks
-    ride along NULL-able so the fusion is auditable per row — ordered
-    by ``rrf_pm`` desc with ``id_col`` tiebreak.
+    ride along NULL-able so the fusion is auditable per row; the rows
+    are unordered (rank them by ``rrf_pm`` desc, ``id_col``).
 
     Scale shape: one unionByName of the (small, already top-k-bounded)
     ranking frames, one keyed aggregate. The rankings themselves are
@@ -1826,8 +1826,4 @@ def rrf_fuse(
         .alias(f"rank_{name}")
         for name in rankings
     ]
-    return (
-        u.groupBy(id_col)
-        .agg(*aggs)
-        .orderBy(F.col("rrf_pm").desc(), F.col(id_col))
-    )
+    return u.groupBy(id_col).agg(*aggs)

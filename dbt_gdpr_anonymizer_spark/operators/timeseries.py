@@ -200,7 +200,6 @@ def ewma_fold(
     return (
         folded.select("grp", F.inline("_f"))
         .select("grp", "t", "x", F.col("s").alias("ewma_e6"))
-        .orderBy("grp", "t")
     )
 
 
@@ -276,7 +275,6 @@ def nelson_aalen(
             "cum_hazard_e6",
             F.sum("hazard_step_e6").over(w_cum).cast("bigint"),
         )
-        .orderBy("grp", "dur")
     )
 
 
@@ -360,7 +358,6 @@ def holt_fold(
             F.col("b").alias("trend_e6"),
             (F.col("l") + F.col("b")).cast("bigint").alias("forecast_e6"),
         )
-        .orderBy("grp", "t")
     )
 
 
@@ -563,5 +560,4 @@ def cusum_fold(
             F.col("sp").alias("cusum_pos_nx"),
             F.col("sn").alias("cusum_neg_nx"),
         )
-        .orderBy("grp", "t")
     )

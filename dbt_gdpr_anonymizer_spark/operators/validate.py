@@ -23,9 +23,9 @@ Scale notes:
     settings (a wrongly quoted regex would match nothing and pass PII).
   * ``validate()`` fuses every per-table check into one aggregation per
     table instead of re-running the full lineage per metric. When
-    ``run_pipeline`` wrote the layer as unpartitioned parquet, those
-    aggregates rode the write as an ``Observation`` and the gate reads the
-    observed row (``bind_observed``): only the k-anonymity group-by runs.
+    ``run_pipeline`` wrote the layer, those aggregates rode the write as
+    an ``Observation`` and the gate reads the observed row
+    (``bind_observed``): only the k-anonymity group-by runs.
   * ``scan_for_pii`` is a single scan: each row is exploded into its
     (column × pattern) cells once, then filtered — not a union of N×P
     subplans each re-reading the table.
@@ -316,8 +316,7 @@ def validate(
       3. the k-anonymity group-by over ``enriched``.
 
     1 and 2 read the row observed when ``run_pipeline`` wrote the layer
-    as unpartitioned parquet and returned this very frame; any other frame
-    is scanned. Measured under AQE (4 cores): 3 Spark jobs on the frames
+    and returned this very frame; any other frame is scanned. Measured under AQE (4 cores): 3 Spark jobs on the frames
     ``run_pipeline`` returns, all the k-anonymity group-by's; 7 on frames
     that are scanned. Returns a report dict; callers wanting the violating
     ROWS use ``assert_no_pii_in_mart`` / ``scan_for_pii`` directly, and

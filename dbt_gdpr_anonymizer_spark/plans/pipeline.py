@@ -9,8 +9,9 @@ Reference models (all under /root/reference/dbt_project/models/):
 Each stage is a pure ``DataFrame -> DataFrame`` function, so Catalyst sees one
 lazy plan across all four layers and optimizes globally — unlike dbt, which
 materializes at every model boundary. ``run_pipeline`` optionally persists
-intermediate layers (the dbt behavior) when an output root is given; at
-cluster scale you would partition those writes by e.g. ``department_code``.
+intermediate layers (the dbt behavior) when an output root is given; a
+layer that should be partitioned (e.g. the mart by ``department_code``)
+is written with ``sources/partitioned.write_partitioned``.
 
 The dept→region and type→label lookups are CASE-chain expressions built from
 mapping dicts (``_mapping_sql``): at their tiny cardinality an expression is
@@ -137,24 +138,17 @@ def anonymize(
     staged: DataFrame,
     policy: TablePolicy = SERVICES_POLICY,
     conf: EngineSettings | None = None,
-    *,
-    compat_aggregate_to_city_passthrough: bool = False,
 ) -> DataFrame:
     """Policy-driven masking + audit columns (int_services_anonymized.sql:41-50).
 
-    Default actually aggregates street addresses to the city value. The
-    reference has NO dispatcher branch for ``aggregate_to_city``, so its
-    street addresses leak (pass-through) into every persisted layer —
-    set the flag True only to reproduce that bug-compat behavior.
+    Street addresses are aggregated to the city value. The reference has
+    NO dispatcher branch for ``aggregate_to_city``, so its street
+    addresses leak (pass-through) into every persisted layer;
+    ``mask_model``'s ``compat_aggregate_to_city_passthrough`` reproduces
+    that.
     """
     conf = conf or settings()
-    masked = mask_model(
-        staged,
-        policy,
-        conf,
-        compat_aggregate_to_city_passthrough=compat_aggregate_to_city_passthrough,
-    )
-    return masked.selectExpr(
+    return mask_model(staged, policy, conf).selectExpr(
         "*",
         "current_timestamp() AS anonymized_at",
         f"{sql_str(conf.project_version)} AS anonymization_version",
@@ -240,7 +234,7 @@ def mart(enriched: DataFrame, conf: EngineSettings | None = None) -> DataFrame:
 
 # dbt_project.yml:81,95,110 — staging materializes as a view; anonymized/
 # enriched/mart as tables. Mirrored here: view layers register a temp view,
-# table layers persist (parquet under output_root, or saveAsTable).
+# table layers persist as parquet under output_root.
 MATERIALIZATION = {
     "staging": "view",
     "anonymized": "table",
@@ -254,7 +248,7 @@ GATE_AGGS = {"enriched": validate.quality_aggs, "mart": validate.mart_aggs}
 
 
 def _write_observed(df: DataFrame, path: str, aggs: list[str]) -> DataFrame:
-    """Write ``df`` as unpartitioned parquet; return the frame reading it
+    """Write ``df`` as parquet; return the frame reading it
     back. ``aggs`` ride the write as an Observation, and their row is bound
     to the returned frame, which reads exactly the rows and column types
     written (``validate.bind_observed``)."""
@@ -278,22 +272,17 @@ def run_pipeline(
     policy: TablePolicy = SERVICES_POLICY,
     conf: EngineSettings | None = None,
     output_root: str | None = None,
-    *,
-    use_catalog: bool = False,
-    database: str | None = None,
-    partition_by: dict[str, list[str]] | None = None,
 ) -> dict[str, DataFrame]:
     """Run all four layers with reference materialization semantics (S5).
 
     Returns every layer so callers (tests, validation, reports) can inspect
     intermediates. View layers (staging) register a temp view; table layers
-    persist — as parquet under ``output_root``, or into the session catalog
-    via ``saveAsTable`` when ``use_catalog`` is set (``database`` maps the
-    reference's per-layer ``+schema`` routing). With neither, everything
-    stays a lazy DataFrame and Catalyst optimizes across all four layers in
-    one plan — the preferred mode when downstream consumers are in-process.
-    An unpartitioned parquet layer comes back carrying the validation
-    gate's counts for it, observed during its write (``GATE_AGGS``).
+    persist as parquet under ``output_root`` and come back carrying the
+    validation gate's counts for them, observed during the write
+    (``GATE_AGGS``). Without ``output_root`` everything stays a lazy
+    DataFrame and Catalyst optimizes across all four layers in one plan —
+    the preferred mode when downstream consumers are in-process.
+    Partitioned layer writes are ``sources/partitioned.write_partitioned``.
     """
     conf = conf or settings()
     conf.require_safe_salt()
@@ -307,29 +296,11 @@ def run_pipeline(
         if MATERIALIZATION[name] == "view":
             df.createOrReplaceTempView(name)
             return df
-        # partition_by maps layer -> partition columns (e.g. mart by
-        # department_code): downstream reads filtered on those columns get
-        # partition pruning for free at cluster scale.
-        parts = (partition_by or {}).get(name)
-        if use_catalog:
-            if database:
-                spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-            qualified = f"{database}.{name}" if database else name
-            w = df.write.mode("overwrite")
-            if parts:
-                w = w.partitionBy(*parts)
-            w.saveAsTable(qualified)
-            return spark.table(qualified)
         if output_root:
-            path = f"{output_root}/{name}"
-            if parts:
-                # Partition columns are re-typed from directory names, so
-                # the frame read back differs from the one written and the
-                # gate scans it.
-                df.write.mode("overwrite").partitionBy(*parts).parquet(path)
-                return spark.read.parquet(path)
             gate = GATE_AGGS.get(name)
-            return _write_observed(df, path, gate(df) if gate else [])
+            return _write_observed(
+                df, f"{output_root}/{name}", gate(df) if gate else []
+            )
         return df
 
     # D4 run hooks: each layer's jobs carry a description in the Spark UI /

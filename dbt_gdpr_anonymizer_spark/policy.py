@@ -8,25 +8,31 @@ effect (one SELECT applying the right masking expression per column), but as
 a runtime ``DataFrame -> DataFrame`` function: no codegen step, and Catalyst
 still sees one flat projection it can optimize through.
 
-Anonymization-method registry (mask_columns.sql:1-30 dispatcher):
-    mask_partial     -> partial phone masking
-    hash_sha256      -> salted-hash email pseudonymization
-    round_2_decimals -> coordinate precision reduction
-    suppress         -> NULL
-    aggregate_to_city-> reference declares it (schema.yml:98) but has NO
-                        dispatcher branch, so the column silently passes
-                        through. We implement it for real; pass
-                        ``compat_aggregate_to_city_passthrough=True`` to
-                        reproduce the reference's leak-by-omission.
-    (anything else)  -> pass-through on a non-PII column; on a PII column
-                        both masking entry points raise PolicyError
+Anonymization methods (mask_columns.sql:1-30 dispatcher), each SQL text:
+    mask_partial       -> partial phone masking
+    hash_sha256        -> salted-hash email pseudonymization
+    round_2_decimals   -> coordinate precision reduction
+    suppress           -> NULL
+    aggregate_to_city  -> reference declares it (schema.yml:98) but has NO
+                          dispatcher branch, so the column silently passes
+                          through. We implement it for real; pass
+                          ``compat_aggregate_to_city_passthrough=True`` to
+                          ``mask_model`` to reproduce the reference's
+                          leak-by-omission.
+    generalize_to_month-> extension: ``date_trunc('MONTH', c)``
+    fpe_digits         -> extension: keystream digit FPE, a ``transform``
+    fpe_ff1            -> extension: NIST FF1, a registered pandas UDF
+    (anything else)    -> pass-through on a non-PII column; on a PII column
+                          ``validate_policy`` raises PolicyError, and
+                          ``mask_model``, ``mask_column`` and the PII report
+                          all call it
 Every output column is renamed ``{col}_anon`` (including pass-throughs).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -111,119 +117,107 @@ class PolicyError(ValueError):
     generate_pii_report.sql:147-176)."""
 
 
-def validate_policy(policy: TablePolicy) -> None:
-    """Fail fast if any PII column lacks an anonymization method (D1)."""
-    missing = [
-        c
-        for c, p in policy.columns.items()
-        if p.pii and not p.anonymization_method
-    ]
-    if missing:
-        raise PolicyError(
-            f"PII columns without anonymization_method in '{policy.name}': "
-            f"{sorted(missing)}"
-        )
-
-
-# Wide projections are built as parsed SQL text, one string per output
-# column with the alias inside it (functions/sqltext.py): in PySpark 4.1
+# Every method is SQL text over the quoted column name, so a whole model
+# is one parsed projection: one ``selectExpr`` of one string per output
+# column with the alias inside it (functions/sqltext.py). In PySpark 4.1
 # ``F.col`` costs 13 py4j commands and ``F.col(c).alias(n)`` 24, while one
-# ``selectExpr`` of n strings costs about n + 5. r12 measured mask_model's
-# per-column Column chains at ~0.16 s of driver socket chatter per
-# mart_pipeline build; as one selectExpr the build cost no longer grows
-# with the column count. The four reference methods, the pass-through and
-# the ``AS {name}_anon`` alias are therefore SQL text; the masking
-# formulas are ``functions/masking.py``'s ``*_sql`` text, which the
-# masking Column forms parse too. Extension methods that only exist as Columns (generalize, the
-# fpe_digits HOF, the FF1 UDF) keep their Column builders; a model using
-# one is projected with ``select`` and its SQL columns parsed one by one.
-# Registry functions take the column NAME and return SQL text or a Column.
-def _method_registry(
-    conf: EngineSettings, city_column: str | None
-) -> dict[str, Callable[[str], str | Column]]:
-    p = int(conf.gps_precision)
-    city = sql_ident(city_column) if city_column else "cast(null as string)"
-    return {
-        "mask_partial": lambda c: masking.mask_phone_sql(sql_ident(c)),
-        "hash_sha256": lambda c: masking.mask_email_sql(sql_ident(c), conf.salt_key),
-        "round_2_decimals": lambda c: masking.mask_coordinates_sql(sql_ident(c), p),
-        "suppress": lambda c: "cast(null as string)",
-        "aggregate_to_city": lambda c: city,
-        # extension beyond the reference's four methods: temporal
-        # generalization (precision reduction for dates, the counterpart
-        # of round_2_decimals for coordinates)
-        "generalize_to_month": lambda c: masking.generalize_date(
-            F.col(c), "month"
-        ),
-        # extension: format-preserving digit pseudonymization (the FPE
-        # method class — masked output inhabits the input format)
-        "fpe_digits": lambda c: masking.fpe_digits(F.col(c), conf.salt_key),
-        # extension: real NIST SP 800-38G FF1 (functions/fpe.py — AES-128
-        # Feistel, NIST-vector-validated) behind the same format contract;
-        # Arrow-batched pandas UDF, the documented slow-path tier. Key is
-        # derived from the configured salt (md5 → 16 bytes).
-        "fpe_ff1": _ff1_method(conf),
-    }
+# ``selectExpr`` of n strings costs about n + 5, so the build cost barely
+# grows with the column count. The formulas are ``functions/masking.py``'s
+# ``*_sql`` text, which the masking Column forms parse too; fpe_ff1 is a
+# call of a registered session function.
+class _Scope(NamedTuple):
+    """What a method's SQL text may depend on besides its column."""
+
+    spark: SparkSession
+    conf: EngineSettings
+    city: str  # SQL text aggregate_to_city releases
 
 
-def _ff1_method(conf: EngineSettings) -> Callable[[Column], Column]:
+def _ff1_sql(c: str, scope: _Scope) -> str:
+    """Real NIST SP 800-38G FF1 (functions/fpe.py — AES-128 Feistel,
+    NIST-vector-validated) behind the fpe_digits format contract, as an
+    Arrow-batched pandas UDF: the documented slow-path tier. Its key is
+    derived from the configured salt (md5 → 16 bytes); the UDF is built
+    and registered only when a column uses it, under a name derived from
+    a digest of the key, so two salts get two functions and a repeated
+    call replaces the one it registered before."""
     import hashlib
 
     from dbt_gdpr_anonymizer_spark.functions.fpe import ff1_digits_udf
 
-    udf = ff1_digits_udf(hashlib.md5(conf.salt_key.encode()).hexdigest())
-    return lambda c: udf(F.col(c))
+    key = hashlib.md5(scope.conf.salt_key.encode()).hexdigest()
+    name = "fpe_ff1_" + hashlib.sha256(key.encode()).hexdigest()[:16]
+    scope.spark.udf.register(name, ff1_digits_udf(key))
+    return f"{name}({c})"
+
+
+# The anonymization methods (mask_columns.sql:1-30 dispatcher and its
+# extensions): name -> SQL text of the masked value.
+_METHODS: dict[str, Callable[[str, _Scope], str]] = {
+    "mask_partial": lambda c, s: masking.mask_phone_sql(c),
+    "hash_sha256": lambda c, s: masking.mask_email_sql(c, s.conf.salt_key),
+    "round_2_decimals": lambda c, s: masking.mask_coordinates_sql(
+        c, int(s.conf.gps_precision)
+    ),
+    "suppress": lambda c, s: "cast(null as string)",
+    "aggregate_to_city": lambda c, s: s.city,
+    # extension: temporal generalization (precision reduction for dates,
+    # the counterpart of round_2_decimals for coordinates)
+    "generalize_to_month": lambda c, s: masking.generalize_date_sql(c, "month"),
+    # extension: format-preserving digit pseudonymization (the FPE method
+    # class — masked output inhabits the input format)
+    "fpe_digits": lambda c, s: masking.fpe_digits_sql(c, s.conf.salt_key),
+    "fpe_ff1": _ff1_sql,
+}
+
+
+def validate_policy(policy: TablePolicy) -> None:
+    """Fail fast if a PII column's anonymization method is missing (D1)
+    or unknown. ``mask_model``, ``mask_column`` and the PII report all
+    call it, so a PII column is neither published raw nor reported as
+    masked by a method that does not exist (e.g. the typo
+    ``hash_sha265``)."""
+    bad = {
+        f"{policy.name}.{c}" if policy.name else c: p.anonymization_method
+        for c, p in sorted(policy.pii_columns().items())
+        if p.anonymization_method not in _METHODS
+    }
+    if bad:
+        raise PolicyError(
+            f"PII columns without a known anonymization_method: {bad}; "
+            f"known: {sorted(_METHODS)}"
+        )
 
 
 def _masked(
     name: str,
     policy: ColumnPolicy | None,
-    registry: dict[str, Callable[[str], str | Column]],
+    scope: _Scope,
     compat_aggregate_to_city_passthrough: bool,
-    model: str | None = None,
-) -> str | Column:
-    """One column's masked expression aliased ``{name}_anon``: SQL text
-    for the reference methods and the pass-through, a Column for the
-    Column-only extension methods. A PII column whose method is not in
-    the registry raises instead of passing through."""
+) -> str:
+    """One column's masked value aliased ``{name}_anon``, as SQL text. A
+    column without a known method passes through (``validate_policy``
+    has rejected every such PII column)."""
     method = policy.anonymization_method if policy else None
-    if policy and policy.pii and method not in registry:
-        col = f"{model}.{name}" if model else name
-        raise PolicyError(
-            f"PII column {col!r} has unknown anonymization_method "
-            f"{method!r}; known: {sorted(registry)}"
-        )
     if method == "aggregate_to_city" and compat_aggregate_to_city_passthrough:
         method = None  # reference behavior: no branch -> pass-through
-    fn = registry.get(method or "")
-    out = fn(name) if fn else sql_ident(name)
-    alias = f"{name}_anon"
-    if isinstance(out, str):
-        return f"{out} AS {sql_ident(alias)}"
-    return out.alias(alias)
+    c = sql_ident(name)
+    fn = _METHODS.get(method or "")
+    return f"{fn(c, scope) if fn else c} AS {sql_ident(f'{name}_anon')}"
 
 
 def mask_column(
-    name: str,
-    policy: ColumnPolicy | None,
-    conf: EngineSettings,
-    *,
-    city_column: str | None = None,
-    compat_aggregate_to_city_passthrough: bool = False,
+    name: str, policy: ColumnPolicy | None, conf: EngineSettings
 ) -> Column:
-    """Dispatch one column through its anonymization method (M6).
-
-    Unknown/missing methods pass through on a non-PII column and raise
-    ``PolicyError`` on a PII one; every result is aliased ``{name}_anon``
-    exactly like the reference dispatcher. A whole model goes through
-    ``mask_model``, which builds the method registry once (r12: each
-    registry build constructs the FF1 pandas UDF).
+    """Dispatch one column through its anonymization method (M6): the
+    ``mask_model`` text for that column, aliased ``{name}_anon``. With no
+    frame to look the column up in, ``aggregate_to_city`` releases NULL.
     """
-    names = [name] + ([city_column] if city_column else [])
-    check_quoted_names(SparkSession.active(), names)
-    registry = _method_registry(conf, city_column)
-    out = _masked(name, policy, registry, compat_aggregate_to_city_passthrough)
-    return F.expr(out) if isinstance(out, str) else out
+    validate_policy(TablePolicy("", {name: policy or ColumnPolicy()}))
+    spark = SparkSession.active()
+    check_quoted_names(spark, [name])
+    scope = _Scope(spark, conf, "cast(null as string)")
+    return F.expr(_masked(name, policy, scope, False))
 
 
 def mask_model(
@@ -231,35 +225,25 @@ def mask_model(
     policy: TablePolicy,
     conf: EngineSettings | None = None,
     *,
-    city_column: str | None = "city",
     compat_aggregate_to_city_passthrough: bool = False,
 ) -> DataFrame:
-    """Model-level rewriter (M7): one projection masking every column.
+    """Model-level rewriter (M7): one ``selectExpr`` masking every column.
 
     Column set and order come from the physical DataFrame (``df.columns``),
     mirroring the reference's ``adapter.get_columns_in_relation`` — columns
-    absent from the policy still flow through (renamed ``_anon``). With
-    only SQL-text methods in use the projection is one ``selectExpr``.
+    absent from the policy still flow through (renamed ``_anon``).
+    ``aggregate_to_city`` releases the frame's ``city`` column, or NULL
+    where it has none.
     """
-    conf = conf or settings()
     validate_policy(policy)
     columns = df.columns
     check_quoted_names(df.sparkSession, columns)
-    city = city_column if city_column in columns else None
-    registry = _method_registry(conf, city)  # once, not per column (r12)
-    exprs = [
-        _masked(
-            name,
-            policy.columns.get(name),
-            registry,
-            compat_aggregate_to_city_passthrough,
-            policy.name,
-        )
-        for name in columns
-    ]
-    if all(isinstance(e, str) for e in exprs):
-        return df.selectExpr(*exprs)
-    return df.select([F.expr(e) if isinstance(e, str) else e for e in exprs])
+    city = sql_ident("city") if "city" in columns else "cast(null as string)"
+    scope = _Scope(df.sparkSession, conf or settings(), city)
+    compat = compat_aggregate_to_city_passthrough
+    return df.selectExpr(
+        *(_masked(n, policy.columns.get(n), scope, compat) for n in columns)
+    )
 
 
 # The reference's canonical staging policy (schema.yml:49-154), reusable in

@@ -40,10 +40,9 @@ driver sorts columns by name before hashing).
 A registry result is an unordered multiset: the correctness harness, the
 checker and the bench compare rows without regard to order. A query sorts only where
 the order is read — under a ``limit``/top-k, a window or ``row_number``.
-Operators follow the same rule: a terminal sort stays only where a
-named test or caller reads the order (``ROOT_SORT_KEPT`` in
-``tests/test_plan_invariants.py``); anywhere else it would cost two jobs
-(range sample plus exchange) for an order nothing reads. The oracle SQL
+Operators follow the same rule and end unsorted: a terminal sort would
+cost two jobs (range sample plus exchange) for an order nothing reads,
+and ``tests/test_plan_invariants.py`` fails on one. The oracle SQL
 may still end in ``order by``. Tables are read through ``_t``,
 which infers each parquet schema once per process (``_parquet_schema``).
 """
@@ -60,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dbt_gdpr_anonymizer_spark.functions import masking, text as tx
-from dbt_gdpr_anonymizer_spark.session import scoped_conf
+from dbt_gdpr_anonymizer_spark.session import scoped_conf, scratch_dir
 
 SALT = "dev_salt_UNSAFE"  # pinned for reproducible hashes (reference default)
 
@@ -2574,8 +2573,6 @@ def stream_scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the returned batch result. Deterministic — the stream is finite and
     the scrub is stateless — so a plain SQL oracle covers the whole
     streaming path (source → transform → checkpointed sink)."""
-    import tempfile
-
     from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
         stream_scrub_text,
         write_stream_parquet,
@@ -2590,7 +2587,7 @@ def stream_scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     injected = src.withColumn("t", _inject_pii_text())
     scrubbed = stream_scrub_text(injected, "t")
     out = scrubbed.select("doc_id", F.md5("t").alias("scrubbed_md5"))
-    tmp = tempfile.mkdtemp(prefix="stream_scrub_")
+    tmp = scratch_dir("stream_scrub_")
     write_stream_parquet(
         out, f"{tmp}/out", f"{tmp}/ckpt", available_now=True
     ).awaitTermination()
@@ -4505,7 +4502,6 @@ def word_frequency_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cum_share_ppm"),
             "vocab_size",
         )
-        .orderBy("rank")
     )
 
 
@@ -4575,8 +4571,6 @@ def stream_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same sorted set — identical for every member of a duplicate
     group, making the result deterministic while the streaming path
     (source → stateful dedup → checkpointed sink) stays fully real."""
-    import tempfile
-
     from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
         stream_exact_dedup,
         write_stream_parquet,
@@ -4596,7 +4590,7 @@ def stream_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deduped = stream_exact_dedup(with_ts, watermark="24 hours")
     out = deduped.select("fingerprint", "n_distinct_words")
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_")
+    tmp = scratch_dir("stream_dedup_")
     write_stream_parquet(
         out, f"{tmp}/out", f"{tmp}/ckpt", available_now=True
     ).awaitTermination()
@@ -4982,7 +4976,7 @@ def stream_upsert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The final state is the latest event per user for any time-ordered
     # cut (see _replay_by_time); only the target outlives the drive.
-    target = tempfile.mkdtemp(prefix="stream_upsert_")
+    target = scratch_dir("stream_upsert_")
     with tempfile.TemporaryDirectory(prefix="replay_") as tmp:
         stream_upsert_parquet(
             _replay_by_time(e, tmp),
@@ -6416,12 +6410,10 @@ def orc_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix: parquet + JSON + CSV (sources/ingest.py) + ORC. The md5
     column drags doc_id values through the round trip so a
     row-corruption would show, not just count drift."""
-    import tempfile
-
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="orc_rt_")
+    tmp = scratch_dir("orc_rt_")
     d.write.mode("overwrite").orc(f"{tmp}/docs")
     back = spark.read.orc(f"{tmp}/docs")
     return (
@@ -7019,12 +7011,10 @@ def python_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet oracle, proving the source's partitioning and parsing. (For
     JVM-native formats the built-in readers win — this is the
     no-JVM-connector escape hatch, kept off every hot path.)"""
-    import tempfile
-
     from dbt_gdpr_anonymizer_spark.sources.pysource import register_jsonl_dir
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="pysrc_")
+    tmp = scratch_dir("pysrc_")
     d.select(F.to_json(F.struct("doc_id", "lang", "n_chars")).alias("value")) \
         .coalesce(4).write.mode("overwrite").text(f"{tmp}/payload")
     register_jsonl_dir(spark)
@@ -7144,16 +7134,13 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(n):
                 yield doc_id, i, t[i * 500:(i + 1) * 500]
 
-    import uuid
-
     spark.udtf.register("udtf_chunker", Chunker)
-    view = f"docs_{uuid.uuid4().hex[:8]}"
-    _t(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 50
-    ).createOrReplaceTempView(view)
+    # a frame passed as an argument is a temp view that spark.sql drops
+    # once the query is analyzed
     return spark.sql(
-        f"""select c.doc_id, c.chunk_idx, c.chunk
-            from {view}, lateral udtf_chunker(doc_id, text) c"""
+        """select c.doc_id, c.chunk_idx, c.chunk
+           from {docs}, lateral udtf_chunker(doc_id, text) c""",
+        docs=_t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50),
     )
 
 
@@ -10285,8 +10272,6 @@ def stream_quota_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted count (= min(quota, arrivals) — the state contract) and the
     arrival count recomputed from the admitted+batch sides. The streaming
     path (source → keyed state gate → checkpointed sink) is fully real."""
-    import tempfile
-
     from dbt_gdpr_anonymizer_spark.streaming.anonymize import (
         write_stream_parquet,
     )
@@ -10310,7 +10295,7 @@ def stream_quota_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         quota=7,
         output_schema="quota_key bigint, doc_id bigint",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_quota_")
+    tmp = scratch_dir("stream_quota_")
     write_stream_parquet(
         gated, f"{tmp}/out", f"{tmp}/ckpt", available_now=True
     ).awaitTermination()

@@ -8,7 +8,11 @@ one logical plan serve both the sf0.01 test scale and a 100 TB deployment.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -18,6 +22,31 @@ from pyspark.sql import SparkSession
 def host_cpus() -> int:
     """Cores a local run uses: ``SPARK_GRAFT_CPUS``, else the host's count."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+
+
+# One scratch root per process (keyed by pid: a forked child makes its own)
+_scratch_roots: dict[int, str] = {}
+_scratch_lock = threading.Lock()
+
+
+def _remove_scratch(pid: int, root: str) -> None:
+    # a forked child inherits the exit hook; only the creator removes
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory under this process's scratch root, which is
+    removed when the process exits. For files a returned DataFrame reads
+    lazily (a stream sink, a round-trip write): they must outlive the
+    call that made them."""
+    pid = os.getpid()
+    with _scratch_lock:
+        if pid not in _scratch_roots:
+            root = tempfile.mkdtemp(prefix="gdpr_scratch_")
+            _scratch_roots[pid] = root
+            atexit.register(_remove_scratch, pid, root)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_roots[pid])
 
 
 @contextmanager

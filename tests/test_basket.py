@@ -90,11 +90,9 @@ def test_association_rules_match_replay(spark):
         for r in rows
     }
     assert got == want
-    # both directions of every pair are released
+    # both directions of every pair are released, each once
     assert all((b, a) in got for a, b in got)
-    # release order: (pair_support desc, antecedent, consequent)
-    keys = [(-r.pair_support, r.antecedent, r.consequent) for r in rows]
-    assert keys == sorted(keys)
+    assert len(rows) == len(got)
 
 
 def test_rules_lift_symmetry_and_confidence_bounds(spark):

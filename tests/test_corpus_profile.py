@@ -46,7 +46,10 @@ def test_word_frequency_zipf_counts_and_shares(spark, tmp_path):
         ],
         f"{sf}/documents.parquet",
     )
-    out = QUERIES["word_frequency_zipf"](spark, sf).collect()
+    out = sorted(
+        QUERIES["word_frequency_zipf"](spark, sf).collect(),
+        key=lambda r: r["rank"],
+    )
     by_rank = [(r["word"], r["n_occurrences"], r["cum_share_ppm"]) for r in out]
     # counts: alpha 4, beta 3, delta 1, gamma 1 (delta < gamma alphabetical)
     assert [w for w, _, _ in by_rank] == ["alpha", "beta", "delta", "gamma"]

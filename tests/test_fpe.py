@@ -115,3 +115,30 @@ def test_policy_fpe_ff1_method(spark):
     assert got != "06 12 34 56 78"
     assert [c for c in got if not c.isdigit()] == [" "] * 4
     assert sum(c.isdigit() for c in got) == 10
+
+
+def test_policy_fpe_ff1_salts_and_registrations(spark):
+    """Each salt masks through its own session function, and masking
+    again replaces the function it registered before."""
+    from dbt_gdpr_anonymizer_spark.config import EngineSettings
+    from dbt_gdpr_anonymizer_spark.policy import (
+        ColumnPolicy,
+        TablePolicy,
+        mask_model,
+    )
+
+    df = spark.createDataFrame([("06 12 34 56 78",)], ["contact_phone"])
+    ff1 = ColumnPolicy(pii=True, anonymization_method="fpe_ff1")
+    pol = TablePolicy("t", {"contact_phone": ff1})
+    a, b = (
+        mask_model(df, pol, EngineSettings(salt_key=salt))
+        for salt in ("unit_salt_a", "unit_salt_b")
+    )
+    ra, rb = a.collect(), b.collect()
+    assert ra != rb
+    n = len(spark.catalog.listFunctions())
+    for salt in ("unit_salt_a", "unit_salt_b", "unit_salt_a"):
+        mask_model(df, pol, EngineSettings(salt_key=salt))
+    assert len(spark.catalog.listFunctions()) == n
+    # frames built before the re-registrations keep their salt's output
+    assert (a.collect(), b.collect()) == (ra, rb)

@@ -19,10 +19,8 @@ checked for patterns that would be scale-killers on a real cluster:
   frames, so its allowlist slot is the bounded-frame kind.
 
 * A root ``Sort`` (the first node below the root projections of the
-  optimized plan) — only where a named test or caller reads the order
-  (ROOT_SORT_KEPT), whether the sort is the query's own or inside the
-  operator it returns: registry results are unordered multisets. Every
-  kept entry must still end in a root ``Sort``, so a stale one fails.
+  optimized plan) — never, whether the sort is the query's own or inside
+  the operator it returns: registry results are unordered multisets.
 
 Catching these at plan level keeps a future query edit from silently
 reintroducing an all-pairs join that works at sf0.01 and dies at 100 TB.
@@ -233,41 +231,6 @@ WINDOW_GLOBAL_ALLOWED = {
 }
 
 
-# A registry result is an unordered multiset: the checker and the bench
-# hash rows without regard to order, so a sort at the root of a plan is
-# two jobs (range sample + exchange) whose order nothing reads. A root
-# Sort is kept only where something reads the order, named per entry
-# (the sort lives in the operator the query returns, except zipf's):
-ROOT_SORT_KEPT = {
-    # query-level sort; tests/test_corpus_profile.py::
-    # test_word_frequency_zipf_counts_and_shares reads the rank order
-    "word_frequency_zipf",
-    # operators/basket.association_rules; tests/test_basket.py::
-    # test_association_rules_match_replay reads the release order
-    "assoc_rules_brand_pairs",
-    # operators/similarity.rrf_fuse; tests/test_rrf.py::
-    # test_order_is_rrf_desc_then_id and
-    # test_single_list_passthrough_ranks read the fused order
-    "rrf_fusion_documents",
-    # Staged tier. operators/timeseries.cusum_fold;
-    # tests/test_timeseries.py::test_cusum_hand_computed and
-    # tests/test_timeseries_properties.py::test_cusum_property
-    "cusum_daily_events",
-    # operators/timeseries.ewma_fold; tests/test_timeseries.py::
-    # test_ewma_hand_computed and
-    # tests/test_timeseries_properties.py::test_ewma_property
-    "ewma_daily_events",
-    # operators/timeseries.holt_fold; tests/test_timeseries.py::
-    # test_holt_hand_computed_with_negative_trend and
-    # tests/test_timeseries_properties.py::test_holt_property
-    "holt_daily_events",
-    # operators/timeseries.nelson_aalen; tests/test_timeseries.py::
-    # test_nelson_aalen_hand_computed and test_hazard_monotone_and_bounded
-    # (the query itself), tests/test_timeseries_properties.py::
-    # test_nelson_aalen_property
-    "time_to_purchase_hazard_events",
-}
-
 _planned: dict[str, object] = {}
 
 
@@ -307,27 +270,18 @@ def test_no_unbounded_join_in_plan(spark, name):
         )
 
 
-def test_root_sort_kept_names_are_registered():
-    assert ROOT_SORT_KEPT <= set(QUERIES), ROOT_SORT_KEPT - set(QUERIES)
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_unread_root_sort(spark, name):
+    """A registry result is an unordered multiset: the checker and the
+    bench hash rows without regard to order, so a sort at the root of a
+    plan, the query's own or inside the operator it returns, is two jobs
+    (range sample + exchange) whose order nothing reads."""
     node = _plan(spark, name)._jdf.queryExecution().optimizedPlan()
     while node.getClass().getSimpleName() == "Project":
         node = node.child()
-    root_sort = node.getClass().getSimpleName() == "Sort"
-    if name in ROOT_SORT_KEPT:
-        assert root_sort, (
-            f"{name}: listed in ROOT_SORT_KEPT but its plan no longer ends "
-            "in a root Sort; drop the stale entry"
-        )
-    else:
-        assert not root_sort, (
-            f"{name}: root Sort that no consumer reads (results are "
-            "unordered multisets); drop it or add the query to "
-            "ROOT_SORT_KEPT with the reader"
-        )
+    assert node.getClass().getSimpleName() != "Sort", (
+        f"{name}: root Sort that no consumer reads; drop it"
+    )
 
 
 # A join keyed on the token hash, and an aggregate or join keyed on the
@@ -378,18 +332,40 @@ def _py4j_commands(monkeypatch, fn) -> int:
 # Extra columns per build -> the most py4j commands they may add in
 # total: the gate's scan counts travel as one array column (flat), and
 # mask_model's selectExpr ships one string per column (about one command
-# each). Built from chained Column calls they cost ~100 and ~20 per column.
-_WIDE_BUILD_BOUND = {"validate": 10, "mask_model": 2 * 35}
+# each), the extension methods included. Built from chained Column calls
+# they cost ~100 and ~20 per column.
+_WIDE_BUILD_BOUND = {
+    "validate": 10,
+    "mask_model": 2 * 35,
+    "mask_model_ext": 2 * 35,
+}
 
 
 @pytest.mark.parametrize("build", sorted(_WIDE_BUILD_BOUND))
 def test_wide_build_cost_is_flat_in_column_count(spark, monkeypatch, build):
     from dbt_gdpr_anonymizer_spark.config import EngineSettings
     from dbt_gdpr_anonymizer_spark.operators.validate import validate
-    from dbt_gdpr_anonymizer_spark.policy import SERVICES_POLICY, mask_model
+    from dbt_gdpr_anonymizer_spark.policy import (
+        SERVICES_POLICY,
+        ColumnPolicy,
+        TablePolicy,
+        mask_model,
+    )
 
-    # 5 string columns (validate) / the 5 policy columns (mask_model),
-    # then 35 more pass-through string columns.
+    # 5 string columns (validate) / the 5 policy columns (mask_model) /
+    # those plus one column per extension method (mask_model_ext), then
+    # 35 more pass-through string columns.
+    ext = TablePolicy(
+        "ext",
+        {
+            **SERVICES_POLICY.columns,
+            "phone2": ColumnPolicy(pii=True, anonymization_method="fpe_digits"),
+            "seen_at": ColumnPolicy(
+                pii=True, anonymization_method="generalize_to_month"
+            ),
+            "phone3": ColumnPolicy(pii=True, anonymization_method="fpe_ff1"),
+        },
+    )
     base = {
         "validate": "contact_email string, contact_phone string, "
         "contact_email_anon string, contact_phone_anon string, "
@@ -397,7 +373,11 @@ def test_wide_build_cost_is_flat_in_column_count(spark, monkeypatch, build):
         "latitude_anon double, longitude_anon double",
         "mask_model": "contact_email string, contact_phone string, "
         "street_address string, latitude double, longitude double",
+        "mask_model_ext": "contact_email string, contact_phone string, "
+        "street_address string, latitude double, longitude double, "
+        "phone2 string, seen_at timestamp, phone3 string",
     }[build]
+    policy = ext if build == "mask_model_ext" else SERVICES_POLICY
     conf = EngineSettings(salt_key="unit_salt_for_build_cost")
 
     def frame(extra: int):
@@ -408,7 +388,7 @@ def test_wide_build_cost_is_flat_in_column_count(spark, monkeypatch, build):
         if build == "validate":
             validate(df, df)
         else:
-            mask_model(df, SERVICES_POLICY, conf)
+            mask_model(df, policy, conf)
 
     frames = {extra: frame(extra) for extra in (0, 35)}
     run(frames[0])  # warm-up: first-call imports and JVM class loading

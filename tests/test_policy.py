@@ -96,6 +96,15 @@ def test_unknown_pii_method_raises(spark):
         mask_column("contact_email", typo, CONF)
 
 
+def test_pii_inventory_rejects_unknown_pii_method(spark):
+    """The DPO report runs the check masking runs: a typo'd method is
+    not reported as if it had been applied."""
+    typo = ColumnPolicy(pii=True, anonymization_method="hash_sha265")
+    tp = TablePolicy(name="stg", columns={"contact_email": typo})
+    with pytest.raises(PolicyError, match=r"stg\.contact_email.*hash_sha265"):
+        pii_inventory(spark, [SERVICES_POLICY, tp], CONF)
+
+
 def test_policies_from_schema_yaml_reference_shape(spark):
     """Parses the reference's dbt schema.yml layout (models -> columns ->
     meta) and the result drives mask_model identically to a hand-built

@@ -100,6 +100,16 @@ def test_queries_use_the_one_stream_harness():
         assert needle not in src, needle
 
 
+def test_queries_leave_no_scratch_behind():
+    """Files a returned frame reads lazily go under ``scratch_dir``,
+    removed at process exit, and a frame a SQL text reads is passed as a
+    ``spark.sql`` argument, a view dropped after analysis: no query makes
+    a directory or a catalog view that outlives the process."""
+    src = open(Q.__file__).read()
+    for needle in ("mkdtemp", "createOrReplaceTempView"):
+        assert needle not in src, needle
+
+
 @pytest.mark.parametrize("name", list(Q.all_queries("staged")))
 def test_staged_oracle_parity(spark, name):
     """Column names, a non-empty row count and order-insensitive values

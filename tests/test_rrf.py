@@ -27,16 +27,22 @@ def test_matches_hand_computation(spark):
     assert got[3].rank_b is None
 
 
+def _ranked(fused):
+    """Collected rows in rank order: rrf_pm desc, doc_id tiebreak."""
+    return sorted(fused.collect(), key=lambda r: (-r.rrf_pm, r.doc_id))
+
+
 def test_order_is_rrf_desc_then_id(spark):
     a = _mk(spark, [(9, 1), (5, 2)])
     b = _mk(spark, [(5, 1), (9, 2)])  # symmetric -> tie broken by id
-    rows = rrf_fuse({"a": a, "b": b}).collect()
+    rows = _ranked(rrf_fuse({"a": a, "b": b}))
     assert [r.doc_id for r in rows] == [5, 9]
+    assert rows[0].rrf_pm == rows[1].rrf_pm
 
 
 def test_single_list_passthrough_ranks(spark):
     a = _mk(spark, [(7, 1), (8, 2)])
-    rows = rrf_fuse({"only": a}).collect()
+    rows = _ranked(rrf_fuse({"only": a}))
     assert [r.doc_id for r in rows] == [7, 8]
     assert rows[0].rrf_pm == 1000000 // 61
 

@@ -1,5 +1,5 @@
-"""Tests for scale-oriented features: interval join, partitioned writes
-with pruning, bucketed co-located joins, skew-safe distincts."""
+"""Tests for scale-oriented features: interval join, bucketed co-located
+joins, skew-safe distincts (partitioned writes: tests/test_partitioned.py)."""
 
 from __future__ import annotations
 
@@ -75,27 +75,6 @@ def test_interval_join_plan_has_no_nested_loop(spark):
         .toString()
     )
     assert "NestedLoop" not in plan and "Cartesian" not in plan
-
-
-def test_partitioned_mart_write_prunes(spark, ci_raw, tmp_path):
-    from dbt_gdpr_anonymizer_spark.config import EngineSettings
-    from dbt_gdpr_anonymizer_spark.plans.pipeline import run_pipeline
-
-    layers = run_pipeline(
-        ci_raw,
-        conf=EngineSettings(salt_key="dev_salt_UNSAFE"),
-        output_root=str(tmp_path),
-        partition_by={"mart": ["department_code"]},
-    )
-    # physical layout: one directory per department_code
-    mart_dir = tmp_path / "mart"
-    parts = {p.name for p in mart_dir.iterdir() if p.name.startswith("department_code=")}
-    assert parts == {"department_code=75", "department_code=13"}
-    # a filter on the partition column prunes to one partition's files
-    pruned = layers["mart"].filter(F.col("department_code") == "75")
-    explained = pruned._jdf.queryExecution().executedPlan().toString()
-    assert pruned.count() == 1
-    assert "department_code=13" not in explained
 
 
 def test_bucketed_join_has_no_exchange(spark):

@@ -61,7 +61,7 @@ def test_ewma_hand_computed(spark):
         [("g", 1, 8), ("g", 2, 4), ("g", 3, 12)],
         "grp string, t int, x int",
     )
-    out = ewma_fold(df, "grp", "t", "x", 1, 4, 100).collect()
+    out = sorted(ewma_fold(df, "grp", "t", "x", 1, 4, 100).collect())
     assert [(r.t, r.ewma_e6) for r in out] == [(1, 800), (2, 700), (3, 825)]
 
 
@@ -80,7 +80,7 @@ def test_nelson_aalen_hand_computed(spark):
         [("g", 1, 1), ("g", 2, 0), ("g", 3, 1)],
         "grp string, dur int, ev int",
     )
-    out = nelson_aalen(df, "grp", "dur", "ev").collect()
+    out = sorted(nelson_aalen(df, "grp", "dur", "ev").collect())
     assert [(r.dur, r.n_at_risk, r.d_events, r.hazard_step_e6,
              r.cum_hazard_e6) for r in out] == [
         (1, 3, 1, 333333, 1333333 - 1000000),
@@ -96,7 +96,10 @@ def test_nelson_aalen_censored_only_group_is_empty(spark):
 
 
 def test_hazard_monotone_and_bounded(spark):
-    rows = Q.time_to_purchase_hazard_events(spark, SF_DIR).collect()
+    rows = sorted(
+        Q.time_to_purchase_hazard_events(spark, SF_DIR).collect(),
+        key=lambda r: (r.grp, r.dur),
+    )
     assert rows
     last = {}
     for r in rows:
@@ -253,7 +256,7 @@ def test_holt_hand_computed_with_negative_trend(spark):
     df = spark.createDataFrame(
         [("g", 1, 8), ("g", 2, 4)], "grp string, t int, x int"
     )
-    out = holt_fold(df, "grp", "t", "x", 1, 2, 1, 2, 100).collect()
+    out = sorted(holt_fold(df, "grp", "t", "x", 1, 2, 1, 2, 100).collect())
     got = [(r.t, r.level_e6, r.trend_e6, r.forecast_e6) for r in out]
     assert got == [(1, 800, 0, 800), (2, 600, -100, 500)]
 
@@ -364,6 +367,6 @@ def test_cusum_hand_computed(spark):
         [("g", 1, 1), ("g", 2, 1), ("g", 3, 4)],
         "grp string, t int, x int",
     )
-    out = cusum_fold(df, "grp", "t", "x").collect()
+    out = sorted(cusum_fold(df, "grp", "t", "x").collect())
     got = [(r.t, r.cusum_pos_nx, r.cusum_neg_nx) for r in out]
     assert got == [(1, 0, 3), (2, 0, 6), (3, 6, 0)]

@@ -49,7 +49,7 @@ def test_ewma_property(spark, pairs, num_den):
     )
     got = [
         (r.t, r.x, r.ewma_e6)
-        for r in ewma_fold(df, "grp", "t", "x", num, den, 1000).collect()
+        for r in sorted(ewma_fold(df, "grp", "t", "x", num, den, 1000).collect())
     ]
     assert got == _ewma_py(pairs, num, den, 1000)
 
@@ -84,7 +84,9 @@ def test_holt_property(spark, pairs):
     )
     got = [
         (r.t, r.x, r.level_e6, r.trend_e6, r.forecast_e6)
-        for r in holt_fold(df, "grp", "t", "x", 1, 4, 1, 4, 1000).collect()
+        for r in sorted(
+            holt_fold(df, "grp", "t", "x", 1, 4, 1, 4, 1000).collect()
+        )
     ]
     assert got == _holt_py(pairs, 1, 4, 1, 4, 1000)
 
@@ -105,7 +107,7 @@ def test_nelson_aalen_property(spark, subjects):
         [("g", d, int(e)) for d, e in subjects],
         "grp string, dur int, ev int",
     )
-    rows = nelson_aalen(df, "grp", "dur", "ev").collect()
+    rows = sorted(nelson_aalen(df, "grp", "dur", "ev").collect())
 
     durs = sorted({d for d, e in subjects if e})
     expect = []
@@ -206,7 +208,7 @@ def test_cusum_property(spark, pairs):
     )
     got = [
         (r.t, r.cusum_pos_nx, r.cusum_neg_nx)
-        for r in cusum_fold(df, "grp", "t", "x").collect()
+        for r in sorted(cusum_fold(df, "grp", "t", "x").collect())
     ]
     n = len(pairs)
     tot = sum(x for _, x in pairs)
