@@ -170,7 +170,7 @@ def time_query(store: StatusStore, build, on_warm=None) -> dict:
     noise; the median is the number that scales with data volume. Each run
     starts its clock BEFORE ``build()``: streaming entries drain their
     stream inside the callable, and plan build is part of what a user
-    pays. Tracked ``persist()``s are released after every run, so each
+    pays. Operator caches are released after every run, so each
     timed run is cold-cache, the number a fresh job would see, and
     re-invocations do not pile up identical cached blocks that later
     queries pay to evict.

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = ["association_rules", "frequent_pairs"]
 
@@ -53,7 +53,7 @@ def frequent_pairs(
     ).distinct()
     c1 = items.groupBy("_it").agg(F.count(F.lit(1)).alias("_c1"))
     f1 = c1.filter(F.col("_c1") >= min_support).select("_it")
-    pruned = items.join(f1, "_it").persist()
+    pruned = persist(items.join(f1, "_it"))
     a = pruned.select(
         F.col("_bk"), F.col("_it").alias("item_a")
     )
@@ -67,7 +67,7 @@ def frequent_pairs(
         .agg(F.count(F.lit(1)).cast("long").alias("pair_support"))
         .filter(F.col("pair_support") >= min_support)
     )
-    return track_caches(pairs, pruned)
+    return pairs
 
 
 def association_rules(
@@ -98,7 +98,7 @@ def association_rules(
     items = df.select(
         F.col(basket_col).alias("_bk"), F.col(item_col).alias("_it")
     ).distinct()
-    items = items.persist()
+    items = persist(items)
     n = items.agg(
         F.countDistinct("_bk").cast("long").alias("_nb")
     )
@@ -133,7 +133,7 @@ def association_rules(
         F.col("_cb").alias("_cante"),
         F.col("_ca").alias("_ccons"),
     )
-    out = (
+    return (
         fwd.unionByName(rev)
         .crossJoin(F.broadcast(n))
         .select(
@@ -151,4 +151,3 @@ def association_rules(
             .alias("lift_e6"),
         )
     )
-    return track_caches(out, items)

@@ -1,4 +1,4 @@
-"""Cache-lifetime bookkeeping for operators that persist() intermediates.
+"""Cache lifetime for operators that persist intermediates.
 
 Several operators (``neardup_pairs``, ``ngram_jaccard_pairs``,
 ``simhash_neardup_pairs``, ``connected_components``) persist an expensive
@@ -9,40 +9,49 @@ caller has CONSUMED the returned DataFrame (collect/write); Spark blocks
 evict lazily under memory pressure, but a long-lived session invoking such
 an operator repeatedly accumulates dead blocks until then.
 
-Contract: operators attach their persisted intermediates to the returned
-DataFrame as ``df.cached_deps`` (a plain Python attribute — DataFrames are
-ordinary objects). After consuming the result, callers release them::
+Contract: every persist in the package goes through ``persist``, which
+records the frame in a ledger kept per SparkSession. After consuming a
+result, the caller releases the ledger of that result's session::
 
     pairs = neardup_pairs(docs)
     pairs.write.parquet(out)
-    release_caches(pairs)        # no-op for plans without tracked caches
+    release_caches(pairs)        # frees every cache the session holds
 
-Releasing before consumption is safe but wasteful (the work re-executes
-uncached).
+A release frees every cache made since the previous release, whichever
+frame it hangs off — wrappers that ``select``/``join`` on an operator's
+output, and queries that raise after an operator persisted, need no
+bookkeeping. Releasing before a result is consumed is safe but wasteful
+(its work re-executes uncached), so harnesses consume one result, release,
+then build the next. Do not re-run a frame after the release: a plan
+Spark already compiled against a cache (an earlier action or explain)
+persists that cache's RDD again on its next run, outside the ledger.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
 
-__all__ = ["track_caches", "release_caches"]
+from pyspark.sql import DataFrame, SparkSession
 
-_ATTR = "cached_deps"
+__all__ = ["persist", "release_caches"]
 
-
-def track_caches(out: DataFrame, *deps: DataFrame) -> DataFrame:
-    """Record ``deps`` (already-persisted DataFrames feeding ``out``) on the
-    returned plan so ``release_caches`` can unpersist them later. Deps
-    already tracked on an input plan should be re-tracked by wrappers that
-    build on it (attributes don't propagate through plan transforms)."""
-    existing = list(getattr(out, _ATTR, ()))
-    setattr(out, _ATTR, existing + list(deps))
-    return out
+_LOCK = threading.Lock()
+_LEDGER: dict[SparkSession, list[DataFrame]] = {}
 
 
-def release_caches(df: DataFrame, blocking: bool = False) -> None:
-    """Unpersist every tracked cache on ``df`` (idempotent, attribute is
-    cleared). Call after the plan has been consumed."""
-    for dep in getattr(df, _ATTR, ()):
-        dep.unpersist(blocking)
-    setattr(df, _ATTR, [])
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` (default storage level), recorded in the ledger of
+    ``df``'s session until the next ``release_caches``."""
+    df = df.persist()
+    with _LOCK:
+        _LEDGER.setdefault(df.sparkSession, []).append(df)
+    return df
+
+
+def release_caches(df: DataFrame) -> None:
+    """Unpersist every frame the ledger holds for ``df``'s session and
+    empty that ledger (idempotent). Call after ``df`` has been consumed."""
+    with _LOCK:
+        held = _LEDGER.pop(df.sparkSession, [])
+    for dep in held:
+        dep.unpersist()

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions.text import words
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = ["auc_exact", "naive_bayes_scores"]
 
@@ -55,9 +55,9 @@ def naive_bayes_scores(
         label.alias("y"),
         train.alias("is_train"),
     )
-    toks = base.select(
+    toks = persist(base.select(
         id_col, "y", "is_train", F.explode("ws").alias("w")
-    ).filter(F.col("w") != "").persist()
+    ).filter(F.col("w") != ""))
 
     tr = toks.filter("is_train")
     # Vocabulary-bounded model tables.
@@ -135,7 +135,7 @@ def naive_bayes_scores(
             "a class has no training documents')"
         )
     )
-    out = (
+    return (
         contrib.crossJoin(stats)
         .select(
             id_col,
@@ -144,7 +144,6 @@ def naive_bayes_scores(
         )
         .withColumn("pred_pos", F.col("logodds") > 0)
     )
-    return track_caches(out, toks)
 
 
 def auc_exact(
@@ -177,7 +176,6 @@ def auc_exact(
     ``label_col`` must be boolean; NULL labels/scores are excluded.
     Returns ONE row ``(n_pos, n_neg, auc_ppm)``; a single-class input
     releases NULL auc_ppm."""
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
     from dbt_gdpr_anonymizer_spark.operators.relational import (
         range_bucket_offsets,
     )
@@ -229,7 +227,7 @@ def auc_exact(
         F.sum("_cpos").cast("long").alias("n_pos"),
         F.sum("_c").cast("long").alias("_n"),
     )
-    out = agg.select(
+    return agg.select(
         "n_pos",
         (F.col("_n") - F.col("n_pos")).alias("n_neg"),
         F.when(
@@ -244,4 +242,3 @@ def auc_exact(
         .cast("bigint")
         .alias("auc_ppm"),
     )
-    return track_caches(out, *getattr(bo, "cached_deps", ()))

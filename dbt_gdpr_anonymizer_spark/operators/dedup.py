@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions import text as tx
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = [
     "bbit_minhash_pairs",
@@ -216,13 +216,13 @@ def neardup_pairs(
     rounding an engine version could diverge on. The Jaccard join touches
     only candidate pairs — at sane thresholds a vanishing fraction of n².
 
-    The persisted shingle sets are tracked on the result (``cached_deps``);
-    call ``operators.caching.release_caches(result)`` after consuming it.
+    The shingle sets are persisted; call
+    ``operators.caching.release_caches(result)`` after consuming it.
     """
     # One cached copy of the shingle sets feeds LSH banding AND both
     # verification sides — without it the regex/shingle chain re-executes
     # in three plan branches (no cross-branch subplan reuse in Catalyst).
-    sets_ = _shingle_sets(df, text_col, id_col, shingle_n).persist()
+    sets_ = persist(_shingle_sets(df, text_col, id_col, shingle_n))
     cands = _lsh_candidates_from_sets(
         sets_, id_col, num_hashes=num_hashes, bands=bands
     )
@@ -236,7 +236,7 @@ def neardup_pairs(
         F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         / F.size(F.array_union("sh_a", "sh_b")).cast("double")
     )
-    out = (
+    return (
         cands.join(a_sets, f"{id_col}_a")
         .join(b_sets, f"{id_col}_b")
         .select(
@@ -251,7 +251,6 @@ def neardup_pairs(
             F.floor(F.col("_jac_raw") * 1000000).cast("bigint").alias("jaccard_ppm"),
         )
     )
-    return track_caches(out, sets_)
 
 
 def _df_prefix(
@@ -354,10 +353,10 @@ def _sized_shingles(
     window, rank, both verify sides). Catalyst has no cross-branch
     subplan reuse, so the sets are cached once. MEMORY_AND_DISK spills at corpus scale; for a full 100 TB
     run, materialize the tokenized corpus to storage first. The caller
-    releases the cache (``track_caches``)."""
-    sized = _shingle_sets(df, text_col, id_col, shingle_n).select(
+    releases the cache (``release_caches``)."""
+    sized = persist(_shingle_sets(df, text_col, id_col, shingle_n).select(
         F.col(id_col), F.col("sh"), F.size("sh").alias("_n")
-    ).persist()
+    ))
     tokens = sized.select(
         F.col(id_col), F.col("_n"), F.explode("sh").alias("shingle")
     ).withColumn("_h", F.xxhash64("shingle"))
@@ -401,10 +400,9 @@ def ngram_jaccard_pairs(
     tq = F.lit(threshold).cast("decimal(10,6)")
     alpha = F.ceil(tq * F.col("_n")).cast("int")
     # persisted: the prefix feeds both sides of the candidate self-join
-    prefix = (
+    prefix = persist(
         _df_prefix(tokens, id_col, F.col("_n") - alpha + 1, "shingle")
         .select(id_col, "_n", "_h")
-        .persist()
     )
     band = F.least("_la", "_lb") >= tq * F.greatest("_la", "_lb")
     cands = _prefix_pairs(prefix, id_col, "_n", band).distinct()
@@ -412,7 +410,7 @@ def ngram_jaccard_pairs(
         F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         / F.size(F.array_union("sh_a", "sh_b")).cast("double")
     )
-    out = (
+    return (
         _attach_sides(cands, sized, id_col, "sh")
         .select(
             F.col("_ida").alias(f"{id_col}_a"),
@@ -426,7 +424,6 @@ def ngram_jaccard_pairs(
             F.floor(F.col("_j") * 1000000).cast("bigint").alias("jaccard_ppm"),
         )
     )
-    return track_caches(out, sized, prefix)
 
 
 def dedup_corpus(
@@ -461,10 +458,7 @@ def dedup_corpus(
         bands=bands,
     )
     losers = pairs.select(F.col(f"{id_col}_b").alias(id_col)).distinct()
-    out = kept.join(losers, id_col, "left_anti")
-    # propagate the pair plan's tracked caches (attributes don't survive
-    # plan transforms) so one release_caches(out) frees everything
-    return track_caches(out, *getattr(pairs, "cached_deps", ()))
+    return kept.join(losers, id_col, "left_anti")
 
 
 def simhash_neardup_pairs(
@@ -496,7 +490,7 @@ def simhash_neardup_pairs(
     width = bits // chunks
     # one bigint row per doc; persisted because the self-join otherwise
     # re-runs the whole explode/md5/vote pipeline for each side
-    sh = simhash_table(df, text_col, id_col, bits=bits).persist()
+    sh = persist(simhash_table(df, text_col, id_col, bits=bits))
     mask = (1 << width) - 1
     chunked = sh.select(
         id_col,
@@ -519,7 +513,7 @@ def simhash_neardup_pairs(
     ham = F.bit_count(
         F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     )
-    out = (
+    return (
         a.join(b, ["chunk", "val"])
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .filter(ham <= max_hamming)
@@ -530,7 +524,6 @@ def simhash_neardup_pairs(
         )
         .distinct()
     )
-    return track_caches(out, sh)
 
 
 def embedding_neardup_pairs(
@@ -785,9 +778,9 @@ def edit_distance_pairs(
     Returns (id_a, id_b, edit_distance) with id_a < id_b, distance ≤ d.
     """
     t = F.col(text_col)
-    docs = df.select(
+    docs = persist(df.select(
         F.col(id_col), t.alias("_t"), F.length(t).alias("_len")
-    ).persist()
+    ))
     # positional grams: explode the INDEX sequence and take
     # substring(_t, _i, q) as a plain row expression — a transform(sequence,
     # i -> substring) lambda is interpreted per element, this stays inside
@@ -826,10 +819,9 @@ def edit_distance_pairs(
     # persisted: the prefix (q·d+1 narrow rows per doc) feeds both sides
     # of the candidate self-join; caching it rather than the ~10× larger
     # token table computes the widest stage once
-    prefix = (
+    prefix = persist(
         _df_prefix(tokens, id_col, q * max_distance + 1, "_gram", "_occ")
         .select(id_col, "_len", "_h")
-        .persist()
     )
     band = F.abs(F.col("_la") - F.col("_lb")) <= max_distance
     cands = _prefix_pairs(prefix, id_col, "_len", band)
@@ -857,7 +849,7 @@ def edit_distance_pairs(
         .select("_ida", "_idb")
     )
     ed = F.levenshtein(F.col("_t_a"), F.col("_t_b"), max_distance)
-    out = (
+    return (
         _attach_sides(
             cands.unionByName(short_cands).distinct(), docs, id_col, "_t"
         )
@@ -869,7 +861,6 @@ def edit_distance_pairs(
             F.col("_ed").cast("bigint").alias("edit_distance"),
         )
     )
-    return track_caches(out, docs, prefix)
 
 
 def benchmark_contamination(
@@ -1077,7 +1068,7 @@ def source_dup_report(
     source. Fingerprint identity is ``tx.doc_fingerprint`` (md5 — the
     exact_dedup stance, engine-portable for the oracle).
     """
-    cell = (
+    cell = persist(
         docs.select(
             tx.doc_fingerprint(text_col).alias("_fp"), F.col(group_col)
         )
@@ -1086,13 +1077,12 @@ def source_dup_report(
         # persisted: the collapsed cell frame feeds BOTH the corpus
         # totals and the rollup join — without it each plan branch
         # re-scans the corpus and re-fingerprints (plan-audited, r7)
-        .persist()
     )
     tot = cell.groupBy("_fp").agg(
         F.sum("_c").alias("_tot"),
         F.count(F.lit(1)).alias("_nsrc"),
     )
-    out = (
+    return (
         cell.join(tot, "_fp")
         .groupBy(group_col)
         .agg(
@@ -1120,7 +1110,6 @@ def source_dup_report(
             .alias("dup_ppm"),
         )
     )
-    return track_caches(out, cell)
 
 
 def semantic_decontaminate(
@@ -1268,10 +1257,10 @@ def neardup_against_index(
     survivors' buckets to the index and the next delta dedups against
     corpus ∪ delta without rescanning either.
     """
-    bt = minhash_band_table(
+    bt = persist(minhash_band_table(
         new_docs, text_col, id_col,
         shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-    ).persist()
+    ))
     vs_index = bt.join(
         seen_buckets.select("band", "bucket"), ["band", "bucket"],
         "left_semi",
@@ -1284,12 +1273,11 @@ def neardup_against_index(
         .distinct()
     )
     dropped = vs_index.unionByName(vs_delta).distinct()
-    out = (
+    return (
         bt.join(dropped, id_col, "left_anti")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_buckets"))
     )
-    return track_caches(out, bt)
 
 
 def containment_pairs(
@@ -1336,7 +1324,7 @@ def containment_pairs(
         .select("_ida", "_idb")
         .distinct()
     )
-    out = (
+    return (
         _attach_sides(cands, sized, id_col, "sh", "_n")
         .select(
             F.col("_ida").alias("id_a"),
@@ -1348,7 +1336,6 @@ def containment_pairs(
         )
         .filter(F.col("containment_ppm") >= t_ppm)
     )
-    return track_caches(out, sized)
 
 
 def bbit_minhash_pairs(
@@ -1395,7 +1382,7 @@ def bbit_minhash_pairs(
         raise ValueError("b_bits must be a multiple of 4 in [4, 32]")
     r = num_hashes // bands
     nib = b_bits // 4
-    sets_ = _shingle_sets(df, text_col, id_col, shingle_n).persist()
+    sets_ = persist(_shingle_sets(df, text_col, id_col, shingle_n))
     exploded = sets_.select(
         F.col(id_col), F.explode_outer("sh").alias("_s")
     )
@@ -1413,7 +1400,7 @@ def bbit_minhash_pairs(
     # hashes (banding only), and the shingle set (verification only):
     # banding plus BOTH pair sides read this single frame, so the pair
     # assembly is two joins, not four.
-    sig = (
+    sig = persist(
         mins.join(sets_, id_col)
         .select(
             F.col(id_col),
@@ -1426,7 +1413,6 @@ def bbit_minhash_pairs(
             "sh",
             *[F.col(f"_h{i}") for i in range(num_hashes)],
         )
-        .persist()
     )
     bucket_structs = [
         F.struct(
@@ -1474,7 +1460,7 @@ def bbit_minhash_pairs(
         "double"
     ) / F.size(F.array_union("_sha", "_shb")).cast("double")
     two_b = 1 << b_bits
-    out = (
+    return (
         cands.join(sa, f"{id_col}_a")
         .join(sb, f"{id_col}_b")
         .select(
@@ -1500,4 +1486,3 @@ def bbit_minhash_pairs(
             .alias("jaccard_ppm"),
         )
     )
-    return track_caches(out, sets_, sig)

@@ -49,7 +49,7 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = [
     "erase_keys",
@@ -268,7 +268,7 @@ def _contains_join(
         # persist so the guard probe and the downstream phase probes
         # materialize the distinct reduction ONCE, not several times (the
         # term source may itself be a filtered corpus scan)
-        distinct_terms = distinct_terms.persist()
+        distinct_terms = persist(distinct_terms)
         probed = distinct_terms.limit(max_terms + 1).count()
         if probed > max_terms:
             if overflow == "error":
@@ -280,10 +280,9 @@ def _contains_join(
                     f"hash-join token-equality path, or raise the cap "
                     f"deliberately with max_terms=None"
                 )
-            out = _token_equijoin(
+            return _token_equijoin(
                 docs, distinct_terms, how, text_col, term_col, id_col
             )
-            return track_caches(out, distinct_terms)
         # Small-list tier: the bounded (≤ max_terms) term list collects to
         # the driver and compiles into a chunked-alternation FILTER — one
         # codegen predicate on the corpus scan, no join operator at all

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = [
     "connected_components",
@@ -68,9 +68,7 @@ def connected_components(
     # union references the caller's edge plan twice, and for an expensive
     # edge source (a near-dup join) an uncached double-scan costs a full
     # extra pass before any round runs.
-    cached: list[DataFrame] = []
-    ed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    cached.append(ed)
+    ed = persist(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     if max_driver_edges:
         # Small-graph fast path: near-dup graphs are usually TINY relative
         # to the corpus (the expensive part is finding the edges, not
@@ -108,7 +106,7 @@ def connected_components(
             from pyspark.sql.types import StructField, StructType
 
             id_type = ed.schema["a"].dataType
-            out = spark.createDataFrame(
+            return spark.createDataFrame(
                 [(n, find(n)) for n in nodes],
                 StructType(
                     [
@@ -117,7 +115,6 @@ def connected_components(
                     ]
                 ),
             )
-            return track_caches(out, *cached)
     # Measured note (r5): pre-partitioning + persisting `bi` on the join
     # key to reuse one edge shuffle across rounds was tried and REVERTED —
     # the extra materialization cost more than the saved exchanges (4.1s →
@@ -150,13 +147,8 @@ def connected_components(
         if checkpoint:
             labels = labels.localCheckpoint(eager=False)
         else:
-            labels = labels.persist()
-            cached.append(labels)
-    # tracked on the result so release_caches() can free the edge cache and
-    # every round's label cache once the caller has consumed the output
-    return track_caches(
-        labels.select("node", F.col("label").alias("component")), *cached
-    )
+            labels = persist(labels)
+    return labels.select("node", F.col("label").alias("component"))
 
 
 def pagerank_int(
@@ -219,11 +211,11 @@ def pagerank_int(
     # The edge list is read once and persisted: every iteration joins it,
     # and without the cache each of the `iters` joins would re-run the
     # source scan (and whatever synthesis built the edges).
-    edge_pairs = edges.select(src_col, dst_col).persist()
+    edge_pairs = persist(edges.select(src_col, dst_col))
     deg = edge_pairs.groupBy(src_col).agg(
         F.count(F.lit(1)).alias("_outdeg")
     )
-    spine = nodes.select(F.col(id_col)).persist()
+    spine = persist(nodes.select(F.col(id_col)))
     # r11 optimization (guide §2.4 — remove shuffles outright): both the
     # out-degree attach and the spine membership of each edge's dst are
     # STATIC across iterations, so they are joined ONCE here instead of
@@ -248,16 +240,15 @@ def pagerank_int(
     # .repartition(src_col) before persist() was tried and is ELIMINATED
     # by the optimizer as redundant (byte-identical plan, same 62
     # Exchange nodes: ..._nobroadcast_after.txt), so it is not kept.
-    edges_deg = (
+    edges_deg = persist(
         edge_pairs.join(deg, src_col)
         .join(
             spine.select(F.col(id_col).alias(dst_col)), dst_col, "semi"
         )
-        .persist()
     )
-    ranks = spine.select(
+    ranks = persist(spine.select(
         id_col, F.lit(scale // n_nodes).cast("long").alias("_r")
-    ).persist()
+    ))
     # Zero-contribution row per spine node: folds the old per-iteration
     # "spine LEFT JOIN summed" back-join into the SAME aggregation shuffle
     # (sum + 0 == coalesce(sum, 0) for present keys; absent keys get the
@@ -289,7 +280,7 @@ def pagerank_int(
             ).alias("_r"),
         )
         if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-            new_ranks = new_ranks.persist()
+            new_ranks = persist(new_ranks)
             new_ranks.count()  # materialize before dropping the parent
             prev_persisted.unpersist()
             prev_persisted = new_ranks
@@ -297,20 +288,11 @@ def pagerank_int(
     out = ranks.select(
         F.col(id_col), F.col("_r").cast("bigint").alias("rank_units")
     )
-    # Track the LIVE persisted frames, not just the final `ranks`: after
-    # the loop `ranks` is usually a lazy chain on top of `prev_persisted`
-    # (the last checkpoint, or the initial ranks when iters <
-    # checkpoint_every). Tracking only `ranks` leaked one cached DataFrame
-    # per call for the session lifetime. `edges_deg` stays tracked too
-    # (NOT eagerly unpersisted here): the returned plan is still lazy and
-    # its post-checkpoint iterations join edges_deg once per remaining
-    # iteration — an eager unpersist would make consumption recompute it,
-    # contradicting the "computed once" contract. unpersist() on a
-    # non-persisted frame is a no-op, so tracking all is safe in every
-    # branch.
-    return track_caches(
-        out, prev_persisted, ranks, spine, edges_deg, edge_pairs
-    )
+    # `edges_deg` is NOT eagerly unpersisted here: the returned plan is
+    # still lazy and its post-checkpoint iterations join edges_deg once
+    # per remaining iteration — an eager unpersist would make consumption
+    # recompute it, contradicting the "computed once" contract.
+    return out
 
 
 def triangle_count(
@@ -422,11 +404,9 @@ def label_propagation(
         raise ValueError("label_propagation: rounds must be >= 1")
     from pyspark.sql import Window
 
-    cached: list[DataFrame] = []
-    ed = edges.select(
+    ed = persist(edges.select(
         F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).persist()
-    cached.append(ed)
+    ))
     bi = ed.unionByName(
         ed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -444,20 +424,17 @@ def label_propagation(
             .groupBy(F.col("a").alias("node"), F.col("lb"))
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-        labels = (
+        labels = persist(
             votes.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "lb")
-            .persist()
         )
-        cached.append(labels)
     sz = labels.groupBy("lb").agg(
         F.count(F.lit(1)).cast("long").alias("community_size")
     )
-    out = labels.join(sz, "lb").select(
+    return labels.join(sz, "lb").select(
         "node", F.col("lb").alias("community"), "community_size"
     )
-    return track_caches(out, *cached)
 
 
 def kcore_peel(

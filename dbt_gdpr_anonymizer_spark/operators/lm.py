@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions.text import words
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = [
     "bigram_array",
@@ -70,8 +71,6 @@ def bigram_lm_scores(
     held-out corpus can be scored by passing it through the same joins
     with the model tables reused.
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     # One tokenization pass feeds everything: persist the (id, tokens)
     # frame and derive bigram events, unigram counts, and the id spine
     # from the cache. The exploded event stream is persisted TOO — it is
@@ -79,10 +78,10 @@ def bigram_lm_scores(
     # zip_with lambda, i.e. interpreted HOF work that must not re-run
     # per consumer (the char_entropy lesson). Both caches are released
     # by the caller via caching.release_caches after the action.
-    toks = docs.select(F.col(id_col), words(text_col).alias("ws")).persist()
-    events = toks.select(
+    toks = persist(docs.select(F.col(id_col), words(text_col).alias("ws")))
+    events = persist(toks.select(
         id_col, F.explode(bigram_array(F.col("ws"))).alias("bg")
-    ).persist()
+    ))
     bigrams = events.groupBy("bg").agg(F.count(F.lit(1)).alias("c12"))
     unigrams = (
         toks.select(F.explode("ws").alias("w"))
@@ -117,7 +116,7 @@ def bigram_lm_scores(
     pad = toks.select(
         F.col(id_col), F.lit(None).cast("double").alias("_nll")
     )
-    out = (
+    return (
         events.join(model, "bg")
         .select(id_col, "_nll")
         .unionByName(pad)
@@ -127,7 +126,6 @@ def bigram_lm_scores(
             (F.sum("_nll") / F.count("_nll")).alias("xent"),
         )
     )
-    return track_caches(out, toks, events)
 
 
 def trigram_array(ws: Column) -> Column:
@@ -175,13 +173,11 @@ def trigram_lm_scores(
     events-sized equi-join on the trigram key. Self-scoring keeps every
     event in-vocabulary. Returns ``(id_col, n_trigrams BIGINT, xent
     DOUBLE)``; xent is NULL below 3 tokens."""
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     l3, l2, l1 = (float(x) for x in lambdas)
-    toks = docs.select(F.col(id_col), words(text_col).alias("ws")).persist()
-    events = toks.select(
+    toks = persist(docs.select(F.col(id_col), words(text_col).alias("ws")))
+    events = persist(toks.select(
         id_col, F.explode(trigram_array(F.col("ws"))).alias("tg")
-    ).persist()
+    ))
     tri = events.groupBy("tg").agg(F.count(F.lit(1)).alias("c123"))
     bg = (
         toks.select(F.explode(bigram_array(F.col("ws"))).alias("bg"))
@@ -238,7 +234,7 @@ def trigram_lm_scores(
     pad = toks.select(
         F.col(id_col), F.lit(None).cast("double").alias("_nll")
     )
-    out = (
+    return (
         events.join(model, "tg")
         .select(id_col, "_nll")
         .unionByName(pad)
@@ -248,7 +244,6 @@ def trigram_lm_scores(
             (F.sum("_nll") / F.count("_nll")).alias("xent"),
         )
     )
-    return track_caches(out, toks, events)
 
 
 def kn_bigram_lm_scores(
@@ -291,12 +286,10 @@ def kn_bigram_lm_scores(
     evaluation per distinct bigram (the trigram-LM stance); release
     through ``floor(xent·1e4)`` downstream.
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
-    toks = docs.select(F.col(id_col), words(text_col).alias("ws")).persist()
-    events = toks.select(
+    toks = persist(docs.select(F.col(id_col), words(text_col).alias("ws")))
+    events = persist(toks.select(
         id_col, F.explode(bigram_array(F.col("ws"))).alias("bg")
-    ).persist()
+    ))
     parts = (
         events.groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c12"))
@@ -327,7 +320,7 @@ def kn_bigram_lm_scores(
     pad = toks.select(
         F.col(id_col), F.lit(None).cast("double").alias("_nll")
     )
-    out = (
+    return (
         events.join(model, "bg")
         .select(id_col, "_nll")
         .unionByName(pad)
@@ -337,7 +330,6 @@ def kn_bigram_lm_scores(
             (F.sum("_nll") / F.count("_nll")).alias("xent"),
         )
     )
-    return track_caches(out, toks, events)
 
 
 def pmi_collocations(
@@ -372,16 +364,13 @@ def pmi_collocations(
 
     Returns ``(pair STRING, n_pair BIGINT, pmi_e4 BIGINT)``.
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     toks = docs.select(F.col(id_col), words(text_col).alias("ws"))
-    pairs = (
+    pairs = persist(
         toks.select(F.explode(bigram_array(F.col("ws"))).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c12"))
         .withColumn("w1", F.split("bg", " ").getItem(0))
         .withColumn("w2", F.split("bg", " ").getItem(1))
-        .persist()
     )
     left = pairs.groupBy("w1").agg(F.sum("c12").alias("c1"))
     right = pairs.groupBy("w2").agg(F.sum("c12").alias("c2"))
@@ -391,7 +380,7 @@ def pmi_collocations(
         * F.col("t").cast("double")
         / (F.col("c1").cast("double") * F.col("c2").cast("double"))
     )
-    out = (
+    return (
         pairs.filter(F.col("c12") >= min_count)
         .join(left, "w1")
         .join(right, "w2")
@@ -404,7 +393,6 @@ def pmi_collocations(
         .orderBy(F.desc("pmi_e4"), "pair")
         .limit(k)
     )
-    return track_caches(out, pairs)
 
 
 def min_k_prob_scores(
@@ -438,14 +426,12 @@ def min_k_prob_scores(
     the one groupBy. Documents with no bigram events release
     ``(0, 0, NULL, NULL)``.
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     if not 1 <= int(k_pct) <= 100:
         raise ValueError("min_k_prob_scores: k_pct must be in [1, 100]")
-    toks = docs.select(F.col(id_col), words(text_col).alias("ws")).persist()
-    events = toks.select(
+    toks = persist(docs.select(F.col(id_col), words(text_col).alias("ws")))
+    events = persist(toks.select(
         id_col, F.explode(bigram_array(F.col("ws"))).alias("bg")
-    ).persist()
+    ))
     bigrams = events.groupBy("bg").agg(F.count(F.lit(1)).alias("c12"))
     unigrams = (
         toks.select(F.explode("ws").alias("w"))
@@ -500,7 +486,7 @@ def min_k_prob_scores(
             F.expr("sum_topk_e4 div m").alias("mink_mean_e4"),
         )
     )
-    out = (
+    return (
         toks.select(id_col)
         .join(per_doc, id_col, "left")
         .select(
@@ -511,4 +497,3 @@ def min_k_prob_scores(
             F.col("mink_mean_e4").cast("long"),
         )
     )
-    return track_caches(out, toks, events)

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
+
 __all__ = [
     "l_diversity_violations",
     "t_closeness_report",
@@ -270,18 +272,15 @@ def generalize_to_k(
     that cached aggregate (filter on its grouping flag), never by
     re-aggregating ``df`` — the corpus is scanned exactly once regardless
     of which level wins (the '*' fallback re-reduces the level-0 cells,
-    a table bounded by cell cardinality, not data volume). The cached
-    aggregate is tracked on the result for ``release_caches``.
+    a table bounded by cell cardinality, not data volume).
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     bands = [
         F.floor(F.col(value_col) / F.lit(float(w))).cast("long").alias(f"_b{i}")
         for i, w in enumerate(widths)
     ]
     with_bands = df.select(F.col(group_col), *bands)
     sets = [[group_col, f"_b{i}"] for i in range(len(widths))]
-    grouped = with_bands.groupingSets(
+    grouped = persist(with_bands.groupingSets(
         sets, group_col, *[F.col(f"_b{i}") for i in range(len(widths))]
     ).agg(
         F.count(F.lit(1)).alias("_n"),
@@ -290,7 +289,7 @@ def generalize_to_k(
             F.grouping(f"_b{i}").alias(f"_g{i}")
             for i in range(len(widths))
         ],
-    ).persist()
+    ))
     # level id from the grouping flags: row belongs to level i iff _bi is
     # the (single) non-aggregated band column in its grouping set
     level_of = None
@@ -337,9 +336,7 @@ def generalize_to_k(
             ).alias("band_label"),
             F.col("_n").cast("long").alias("n"),
         )
-    return track_caches(
-        out.withColumn("level", F.lit(chosen).cast("long")), grouped
-    )
+    return out.withColumn("level", F.lit(chosen).cast("long"))
 
 
 def dp_noisy_sum(
@@ -749,8 +746,6 @@ def mondrian_partition(
 
     Returns ``(pid, n, <dim>_min, <dim>_max ...)``.
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     dims = list(dim_cols)
     if not dims:
         raise ValueError("mondrian_partition: dim_cols must be non-empty")
@@ -766,10 +761,8 @@ def mondrian_partition(
     rows = df.select(
         *[F.col(c).cast("bigint").alias(c) for c in dims]
     ).withColumn("pid", F.lit(1).cast("bigint"))
-    persisted: list[DataFrame] = []
     for _ in range(rounds):
-        rows = rows.persist()
-        persisted.append(rows)
+        rows = persist(rows)
         stats = rows.groupBy("pid").agg(
             F.count(F.lit(1)).cast("long").alias("_n"),
             *[
@@ -861,4 +854,4 @@ def mondrian_partition(
     for c in dims:
         aggs.append(F.min(c).cast("long").alias(f"{c}_min"))
         aggs.append(F.max(c).cast("long").alias(f"{c}_max"))
-    return track_caches(rows.groupBy("pid").agg(*aggs), *persisted)
+    return rows.groupBy("pid").agg(*aggs)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
 from dbt_gdpr_anonymizer_spark.functions import text as tx
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 PPM = 1_000_000
 
@@ -248,9 +248,9 @@ def cross_doc_span_profile(
     # persisted (r9): both the gram explode and the final rejoin need the
     # tokenized frame (even the rejoin's _n is size(words(text))) — the
     # cache cuts the second source scan + regex tokenization pass.
-    base = docs.select(
+    base = persist(docs.select(
         F.col(id_col), ws.alias("_ws"), F.size(ws).alias("_n")
-    ).persist()
+    ))
     # grams shuffle as 8-byte xxhash64 keys, not ~k-word strings — the
     # same md5-fingerprint collision stance as exact_dedup (P(collision)
     # ~ n²/2^65; a collision would need two distinct grams in one corpus)
@@ -268,9 +268,9 @@ def cross_doc_span_profile(
     ).select(id_col, F.xxhash64("_g").alias("_gh"))
     # persisted: the shared-set chain and the probe side both read the
     # exploded grams — caching halves the normalize/split/slice string
-    # work (measured 2.15s -> 1.38s at sf0.1); released by the caller's
-    # release_caches via track_caches below
-    grams = grams.persist()
+    # work (measured 2.15s -> 1.38s at sf0.1); freed by the caller's
+    # release_caches
+    grams = persist(grams)
     shared = (
         grams.select(id_col, "_gh")
         .distinct()
@@ -294,7 +294,7 @@ def cross_doc_span_profile(
     n_grams = F.when(F.col("_n") >= k, F.col("_n") - k + 1).otherwise(
         F.lit(0)
     )
-    out = (
+    return (
         probe.unionByName(padded)
         .groupBy(id_col)
         .agg(F.max("_n").alias("_n"), F.sum("_d").alias("_ndup"))
@@ -316,7 +316,6 @@ def cross_doc_span_profile(
             .alias("shared_span_ppm"),
         )
     )
-    return track_caches(out, grams, base)
 
 
 def remove_duplicate_spans(
@@ -350,13 +349,13 @@ def remove_duplicate_spans(
     # persisted (r9): the tokenized frame feeds the gram explode, the
     # positional token list, AND the final rejoin — without the cache the
     # source scan + regex tokenization ran three times per query.
-    base = docs.select(
+    base = persist(docs.select(
         F.col(id_col),
         ws.alias("_ws"),
         # greatest(…, 0): NULL text yields a NULL word array whose size()
         # is -1 — release 0 tokens, not -1
         F.greatest(F.size(ws), F.lit(0)).alias("_n"),
-    ).persist()
+    ))
     grams = base.select(
         id_col,
         F.explode(
@@ -381,8 +380,8 @@ def remove_duplicate_spans(
         F.xxhash64(F.col("_pg.g")).alias("_gh"),
     )
     # persisted for the same shared-chain + probe reuse as
-    # cross_doc_span_profile (released via track_caches on the result)
-    grams = grams.persist()
+    # cross_doc_span_profile
+    grams = persist(grams)
     shared = (
         grams.select(id_col, "_gh")
         .distinct()
@@ -427,7 +426,7 @@ def remove_duplicate_spans(
         ).alias("clean_text"),
         F.count(F.lit(1)).cast("long").alias("_n_kept"),
     )
-    out = (
+    return (
         base.join(rebuilt, id_col, "left")
         .select(
             F.col(id_col),
@@ -438,7 +437,6 @@ def remove_duplicate_spans(
             .alias("n_tokens_removed"),
         )
     )
-    return track_caches(out, grams, base)
 
 
 def dsir_importance_weights(
@@ -490,11 +488,10 @@ def dsir_importance_weights(
         F.conv(F.substring(F.md5(F.col("_g")), 1, 5), 16, 10).cast("bigint")
         % n_buckets
     ).alias("_b")
-    doc_bucket = (
+    doc_bucket = persist(
         feats.select(id_col, "_tgt", bucket)
         .groupBy(id_col, "_tgt", "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .persist()
     )
     by_bucket = doc_bucket.groupBy("_b").agg(
         F.sum(F.when(F.col("_tgt"), F.col("_c")).otherwise(F.lit(0))).alias(
@@ -528,7 +525,7 @@ def dsir_importance_weights(
             F.sum(F.col("_c") * F.col("_dlog")).alias("logw"),
         )
     )
-    out = (
+    return (
         docs.select(id_col)
         .join(scored, id_col, "left")
         .select(
@@ -537,7 +534,6 @@ def dsir_importance_weights(
             "logw",
         )
     )
-    return track_caches(out, doc_bucket)
 
 
 def dsir_gumbel_topk(
@@ -582,13 +578,12 @@ def dsir_gumbel_topk(
         + F.lit(1.0)
     ) / F.lit(float((1 << 52) + 1))
     key = F.col("logw") / F.lit(float(temperature)) - F.log(-F.log(u))
-    out = (
+    return (
         w.filter(F.col("logw").isNotNull())
         .select(F.col(id_col), "n_feats", key.alias("gumbel_key"))
         .orderBy(F.desc("gumbel_key"), id_col)
         .limit(m)
     )
-    return track_caches(out, *getattr(w, "cached_deps", ()))
 
 
 def char_entropy_profile(
@@ -708,8 +703,7 @@ def _bucketed_prefix_filter(
     associative); the plan is as parallel as the bucket count, and the
     bucketed frame is persisted across the passes (it only routes here
     when the stratum is ≥ millions of rows — exactly when recomputing
-    the scan per pass would hurt). The helper's cache is re-tracked on
-    the result; callers that transform further must re-track again.
+    the scan per pass would hurt).
 
     Requires a numeric ``id_col`` (approxQuantile); callers fall back to
     the global window otherwise.
@@ -726,12 +720,11 @@ def _bucketed_prefix_filter(
     w = Window.partitionBy("_gb").orderBy(F.col(id_col)).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    out = (
+    return (
         bo.withColumn("_cum", F.sum(tokens_col).over(w) + F.col("_goff"))
         .filter(F.col("_cum") <= F.lit(rem))
         .drop("_gb", "_goff", "_cum")
     )
-    return track_caches(out, *getattr(bo, "cached_deps", ()))
 
 
 def token_budget_select(
@@ -817,12 +810,7 @@ def token_budget_select(
             .filter(F.col("_cum") <= F.lit(rem))
             .drop("_cum")
         )
-    # re-track the guarded path's persisted bucket frame through the
-    # union (attributes don't survive plan transforms)
-    return track_caches(
-        full.unionByName(boundary),
-        *getattr(boundary, "cached_deps", ()),
-    )
+    return full.unionByName(boundary)
 
 
 def quantile_normalize_scores(
@@ -955,11 +943,11 @@ def source_ngram_novelty(
     # persisted: the distinct pair frame feeds BOTH the per-gram source
     # count and the rollup join — without it each plan branch re-scans
     # the corpus and re-explodes the grams (plan-audited, r7)
-    grams = grams.persist()
+    grams = persist(grams)
     df_s = grams.groupBy("_gh").agg(
         F.count(F.lit(1)).alias("_ns")
     )
-    out = (
+    return (
         grams.join(df_s, "_gh")
         .groupBy(group_col)
         .agg(
@@ -981,7 +969,6 @@ def source_ngram_novelty(
             .alias("exclusive_ppm"),
         )
     )
-    return track_caches(out, grams)
 
 
 def token_budget_select_by_group(
@@ -1344,7 +1331,7 @@ def source_overlap_matrix(
             ).otherwise(F.array().cast("array<bigint>"))
         ).alias("_gh"),
     ).distinct()
-    grams = grams.persist()
+    grams = persist(grams)
     totals = grams.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("_t")
     )
@@ -1356,7 +1343,7 @@ def source_overlap_matrix(
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared_grams"))
     )
-    out = (
+    return (
         pairs.join(
             F.broadcast(
                 totals.select(
@@ -1389,4 +1376,3 @@ def source_overlap_matrix(
             .alias("jaccard_ppm"),
         )
     )
-    return track_caches(out, grams)

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
+
 __all__ = [
     "asof_join",
     "scd2_from_changes",
@@ -159,10 +161,8 @@ def range_bucket_offsets(
     are associative): ``row_number() + _goff`` for global numbering,
     ``sum(w).over(bucket window) + _goff`` for a global running total.
     Requires a numeric ``order_col`` (approxQuantile). The bucketed
-    input is persisted across the two passes; the cache is tracked on
-    the result for ``release_caches`` — wrappers that transform the
-    plan further must RE-TRACK (attributes don't survive plan
-    transforms; see operators/caching.py).
+    input is persisted across the two passes (freed by
+    ``release_caches``, see operators/caching.py).
     """
     from pyspark.sql.types import (
         IntegerType,
@@ -172,8 +172,6 @@ def range_bucket_offsets(
         StructField,
         StructType,
     )
-
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
 
     if not isinstance(df.schema[order_col].dataType, NumericType):
         raise ValueError(
@@ -201,7 +199,7 @@ def range_bucket_offsets(
         bucket = bucket + F.when(
             F.col(order_col) > F.lit(s), 1
         ).otherwise(0)
-    b = df.withColumn("_gb", bucket).persist()
+    b = persist(df.withColumn("_gb", bucket))
     agg = (
         F.count(F.lit(1))
         if weight_col is None
@@ -226,7 +224,7 @@ def range_bucket_offsets(
             ),
         )
     )
-    return track_caches(b.join(offs, "_gb"), b)
+    return b.join(offs, "_gb")
 
 
 def global_row_number(
@@ -242,17 +240,14 @@ def global_row_number(
     global window whenever ``order_col`` values are distinct; under ties
     the within-tie order is arbitrary in BOTH formulations (ties land in
     one bucket, so the distribution of tied ranks is the same set either
-    way). The cache tracked by the helper is re-tracked on the result.
+    way).
     """
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
     bo = range_bucket_offsets(df, order_col, n_buckets=n_buckets)
     w = Window.partitionBy("_gb").orderBy(F.col(order_col))
-    out = bo.withColumn(
+    return bo.withColumn(
         out_col,
         (F.row_number().over(w) + F.col("_goff")).cast("long"),
     ).drop("_gb", "_goff")
-    return track_caches(out, *getattr(bo, "cached_deps", ()))
 
 
 def snapshot_merge(

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import csv
 import json
+from dataclasses import replace
 from pathlib import Path
 
 import pyarrow as pa
@@ -19,7 +20,11 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from dbt_gdpr_anonymizer_spark.config import EngineSettings, settings
-from dbt_gdpr_anonymizer_spark.policy import TablePolicy, validate_policy
+from dbt_gdpr_anonymizer_spark.policy import (
+    ColumnPolicy,
+    TablePolicy,
+    validate_policy,
+)
 
 REPORT_SCHEMA = T.StructType(
     [
@@ -51,6 +56,32 @@ def _local_frame(
     return spark.createDataFrame(table)
 
 
+def _reported_pii(
+    tp: TablePolicy, conf: EngineSettings
+) -> list[tuple[str, ColumnPolicy]]:
+    """``tp``'s PII columns in name order, their data owner, retention
+    and k target defaulted from ``conf``. ``validate_policy`` runs first,
+    the compile-gate (D1) masking runs too: a PII column whose method is
+    missing or unknown raises instead of being reported as masked."""
+    validate_policy(tp)
+    return [
+        (
+            col,
+            replace(
+                p,
+                data_owner=p.data_owner or conf.data_owner,
+                retention_days=p.retention_days
+                if p.retention_days is not None
+                else conf.retention_days_default,
+                k_anonymity_target=p.k_anonymity_target
+                if p.k_anonymity_target is not None
+                else conf.k_anonymity_min,
+            ),
+        )
+        for col, p in sorted(tp.pii_columns().items())
+    ]
+
+
 def pii_inventory(
     spark: SparkSession,
     policies: list[TablePolicy],
@@ -60,31 +91,24 @@ def pii_inventory(
 ) -> DataFrame:
     """Inventory of every PII column across models (generate_pii_report.sql:20-93).
 
-    Each policy goes through ``validate_policy``, the compile-gate (D1)
-    that masking runs too: a PII column whose method is missing or
-    unknown raises instead of being reported as masked.
+    A policy with a PII column whose method is missing or unknown raises
+    ``PolicyError`` (``_reported_pii``).
     """
     conf = conf or settings()
-    rows = []
-    for tp in policies:
-        validate_policy(tp)
-        for col, p in sorted(tp.pii_columns().items()):
-            rows.append(
-                (
-                    tp.name,
-                    col,
-                    p.pii_type,
-                    p.anonymization_method,
-                    p.data_owner or conf.data_owner,
-                    p.legal_basis,
-                    p.retention_days
-                    if p.retention_days is not None
-                    else conf.retention_days_default,
-                    p.k_anonymity_target
-                    if p.k_anonymity_target is not None
-                    else conf.k_anonymity_min,
-                )
-            )
+    rows = [
+        (
+            tp.name,
+            col,
+            p.pii_type,
+            p.anonymization_method,
+            p.data_owner,
+            p.legal_basis,
+            p.retention_days,
+            p.k_anonymity_target,
+        )
+        for tp in policies
+        for col, p in _reported_pii(tp, conf)
+    ]
     df = _local_frame(spark, REPORT_SCHEMA, rows, 2)
     if with_timestamp:
         df = df.selectExpr("*", "current_timestamp() AS report_generated_at")
@@ -158,28 +182,21 @@ def processing_records(
     Like :func:`pii_inventory`, the output is policy-sized (one row per
     model, ordered by model), so driver-side assembly is the correct plan
     at any corpus scale: the register scales with the POLICY, never the
-    data. Building and collecting it launches no Spark job.
+    data. Building and collecting it launches no Spark job. Like the
+    inventory, a PII column whose method is missing or unknown raises
+    ``PolicyError``: safeguards list only methods that exist.
     """
     conf = conf or settings()
     rows = []
     for tp in policies:
-        pii = sorted(tp.pii_columns().items())
+        pii = _reported_pii(tp, conf)
         if not pii:
             continue
         cats = sorted({p.pii_type for _, p in pii if p.pii_type})
         bases = sorted({p.legal_basis for _, p in pii if p.legal_basis})
-        owners = sorted(
-            {p.data_owner or conf.data_owner for _, p in pii}
-        )
-        methods = sorted(
-            {p.anonymization_method for _, p in pii if p.anonymization_method}
-        )
-        rets = [
-            p.retention_days
-            if p.retention_days is not None
-            else conf.retention_days_default
-            for _, p in pii
-        ]
+        owners = sorted({p.data_owner for _, p in pii})
+        methods = sorted({p.anonymization_method for _, p in pii})
+        rets = [p.retention_days for _, p in pii]
         rows.append(
             (
                 tp.name,

@@ -27,6 +27,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
+
 __all__ = [
     "cosine_sim",
     "cosine_topk",
@@ -511,7 +513,7 @@ def kmeans_fit_model(
         # persisted: every iteration's assignment/means job reads the
         # sample, and an uncached TakeOrdered plan would re-sweep the
         # corpus once per iteration; released before returning.
-        sampled = deterministic_sample(vectors, fit_sample_n, id_col).persist()
+        sampled = persist(deterministic_sample(vectors, fit_sample_n, id_col))
         vectors = sampled
     # Driver-fit fast path: the FIT is model estimation over a BOUNDED
     # row set (the fit_sample cap, or a corpus that happens to be small).

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions.text import words
-from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = [
     "bloom_bitmask",
@@ -87,12 +87,11 @@ def countmin_heavy_hitters(
     Returns ``(token, exact_count BIGINT, cm_estimate BIGINT)``,
     ordered ``(cm_estimate DESC, token)``, ``k`` rows.
     """
-    wc = (
+    wc = persist(
         docs.select(F.explode(words(text_col)).alias("_w"))
         .filter(F.col("_w") != "")
         .groupBy("_w")
         .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-        .persist()
     )
     h = F.md5(
         F.concat(
@@ -114,14 +113,13 @@ def countmin_heavy_hitters(
             F.max("_c").cast("long").alias("exact_count"),
         )
     )
-    out = (
+    return (
         est.select(
             F.col("_w").alias("token"), "exact_count", "cm_estimate"
         )
         .orderBy(F.desc("cm_estimate"), "token")
         .limit(k)
     )
-    return track_caches(out, wc)
 
 
 def cm_grid_table(
@@ -367,12 +365,11 @@ def bloom_contamination_gate(
     # join bench ids BEFORE tokenizing: the bench branch then tokenizes
     # only the benchmark docs instead of re-running the words() chain
     # over the whole corpus a second time
-    bench_grams = (
+    bench_grams = persist(
         docs.join(F.broadcast(bench), id_col)
         .select(F.col(id_col), ws.alias("_ws"))
         .select(F.explode(grams).alias("_gram"))
         .distinct()
-        .persist()
     )
     pos = _nibble_bucket(
         F.md5(
@@ -391,11 +388,10 @@ def bloom_contamination_gate(
         .select(pos.alias("_pos"))
         .distinct()
     )
-    corpus_grams = (
+    corpus_grams = persist(
         docs.join(F.broadcast(bench), id_col, "left_anti")
         .select(F.col(id_col), ws.alias("_ws"))
         .select(id_col, F.explode(grams).alias("_gram"))
-        .persist()
     )
     flagged = (
         corpus_grams.select(id_col, "_gram", probe_rows)
@@ -415,7 +411,7 @@ def bloom_contamination_gate(
     totals = corpus_grams.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")
     )
-    out = (
+    return (
         flagged.join(totals, id_col)
         .join(exact, id_col, "left")
         .select(
@@ -427,7 +423,6 @@ def bloom_contamination_gate(
             .alias("n_exact_matches"),
         )
     )
-    return track_caches(out, bench_grams, corpus_grams)
 
 
 def bloom_bitmask(
@@ -587,13 +582,13 @@ def hll_set_overlap(
     ``group_a < group_b``; NULL groups are excluded (a NULL group is
     not a set name).
     """
-    regs = hll_register_table(
+    regs = persist(hll_register_table(
         df.filter(F.col(group_col).isNotNull()),
         [group_col],
         value_col,
         b=b,
         salt=salt,
-    ).persist()
+    ))
     groups = sorted(
         r[0] for r in regs.select(group_col).distinct().collect()
     )
@@ -605,7 +600,7 @@ def hll_set_overlap(
             f"group_a string, group_b string, hll_a bigint, "
             f"hll_b bigint, hll_union bigint, hll_intersection bigint",
         )
-        return track_caches(empty, regs)
+        return empty
     spark = df.sparkSession
     pair_df = spark.createDataFrame(pairs, ["group_a", "group_b"])
 
@@ -624,7 +619,7 @@ def hll_set_overlap(
     union_est = hll_estimate_from_registers(
         tag_a.unionByName(tag_b), ["group_a", "group_b"], b=b
     ).select("group_a", "group_b", F.col("hll_distinct").alias("hll_union"))
-    out = (
+    return (
         union_est.join(
             per_group.select(
                 F.col("_g").alias("group_a"), F.col("_e").alias("hll_a")
@@ -648,7 +643,6 @@ def hll_set_overlap(
             .alias("hll_intersection"),
         )
     )
-    return track_caches(out, regs)
 
 
 def cm_join_size_estimate(

@@ -244,7 +244,6 @@ def dbscan_clusters(
     """
     if min_pts < 2:
         raise ValueError("dbscan_clusters: min_pts must be >= 2")
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
     from dbt_gdpr_anonymizer_spark.operators.graph import (
         connected_components,
     )
@@ -303,7 +302,5 @@ def dbscan_clusters(
     out = core_lab.withColumn(
         "is_core", F.lit(1).cast("bigint")
     ).unionByName(border.withColumn("is_core", F.lit(0).cast("bigint")))
-    # comp's own caches ride its cached_deps (attributes don't survive
-    # plan transforms — re-track them, the _retrack contract); the
-    # checkpointed pair graph frees with GC, no unpersist needed.
-    return track_caches(out, *getattr(comp, "cached_deps", ()))
+    # the checkpointed pair graph frees with GC, no unpersist needed
+    return out

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.functions import text as tx
+from dbt_gdpr_anonymizer_spark.operators.caching import persist
 
 __all__ = [
     "bpe_learn",
@@ -82,14 +83,14 @@ def bpe_learn(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    state = words.select(
+    state = persist(words.select(
         F.concat(
             F.lit(BPE_SEP),
             F.array_join(F.split(F.col("w"), ""), BPE_END + BPE_SEP),
             F.lit(BPE_END),
         ).alias("s"),
         "freq",
-    ).persist()
+    ))
     state.count()  # materialize before the rounds probe it repeatedly
 
     merges: list[tuple[int, str, str, int]] = []
@@ -127,7 +128,7 @@ def bpe_learn(
                 break
             left, right = best[0]["p"].split(BPE_SEP)
             merges.append((rank, left, right, int(best[0]["f"])))
-            new_state = state.select(
+            new_state = persist(state.select(
                 F.replace(
                     F.col("s"),
                     F.lit(
@@ -136,7 +137,7 @@ def bpe_learn(
                     F.lit(BPE_SEP + left + right + BPE_END),
                 ).alias("s"),
                 "freq",
-            ).persist()
+            ))
             new_state.count()
             state.unpersist()
             state = new_state
@@ -242,7 +243,6 @@ def vocab_growth(
     """
     from pyspark.sql import Window
 
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
     from dbt_gdpr_anonymizer_spark.operators.relational import (
         global_row_number,
     )
@@ -282,10 +282,9 @@ def vocab_growth(
     w = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    out = g.select(
+    return g.select(
         "bucket",
         F.sum("_docs").over(w).cast("long").alias("docs_cum"),
         F.sum("_toks").over(w).cast("long").alias("tokens_cum"),
         F.sum("_newv").over(w).cast("long").alias("vocab_cum"),
     )
-    return track_caches(out, *getattr(pos, "cached_deps", ()))

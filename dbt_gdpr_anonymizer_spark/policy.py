@@ -173,9 +173,9 @@ _METHODS: dict[str, Callable[[str, _Scope], str]] = {
 
 def validate_policy(policy: TablePolicy) -> None:
     """Fail fast if a PII column's anonymization method is missing (D1)
-    or unknown. ``mask_model``, ``mask_column`` and the PII report all
-    call it, so a PII column is neither published raw nor reported as
-    masked by a method that does not exist (e.g. the typo
+    or unknown. ``mask_model``, ``mask_column``, the PII report and the
+    RoPA all call it, so a PII column is neither published raw nor
+    reported as masked by a method that does not exist (e.g. the typo
     ``hash_sha265``)."""
     bad = {
         f"{policy.name}.{c}" if policy.name else c: p.anonymization_method

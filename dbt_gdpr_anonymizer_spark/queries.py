@@ -166,23 +166,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
 
 
-def _retrack(out: DataFrame, *stages: DataFrame) -> DataFrame:
-    """Carry ``cached_deps`` from operator outputs onto the final query
-    result. DataFrame attributes do NOT survive plan transforms
-    (operators/caching.py contract), so a registry query that wraps a
-    cache-tracking operator in .select()/.orderBy()/.unionByName() must
-    re-track — otherwise release_caches() on the query result frees
-    nothing and every bench/check invocation leaks the operator's
-    persisted blocks for the session lifetime (found empirically by
-    scripts/audit_cache_leaks.py, r8)."""
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
-
-    deps: list[DataFrame] = []
-    for s in stages:
-        deps.extend(getattr(s, "cached_deps", ()))
-    return track_caches(out, *deps)
-
-
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet carries TIMESTAMP(NANOS), which Spark 4.x rejects.
 
@@ -1945,7 +1928,7 @@ def dedup_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_gdpr_anonymizer_spark.operators.dedup import dedup_corpus
 
     surv = dedup_corpus(_t(spark, sf_dir, "documents"), threshold=0.7)
-    return _retrack(surv.select("doc_id"), surv)
+    return surv.select("doc_id")
 
 
 @register(
@@ -2275,10 +2258,7 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         src="doc_id_a", dst="doc_id_b", iters=4,
         max_driver_edges=1_000_000
     )
-    return _retrack(
-        comp.select(F.col("node").alias("doc_id"), "component"),
-        pairs0, comp,
-    )
+    return comp.select(F.col("node").alias("doc_id"), "component")
 
 
 # positional k=3 word grams (order kept, duplicates kept — winnowing needs
@@ -4090,7 +4070,7 @@ def neardup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         comps["node"] == F.col("doc_id"),
     )
     w = W.partitionBy("component").orderBy(F.desc("n_chars"), "doc_id")
-    return _retrack(
+    return (
         m.withColumn("_rk", F.row_number().over(w))
         .withColumn(
             "n_members", F.count(F.lit(1)).over(W.partitionBy("component"))
@@ -4100,8 +4080,7 @@ def neardup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "component",
             F.col("doc_id").alias("keep_doc_id"),
             "n_members",
-        ),
-        pairs0, comps,
+        )
     )
 
 
@@ -8323,7 +8302,7 @@ def erasure_cascade_large_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = erasure_survivors(
         injected, banned, text_col="t", id_col="doc_id", max_terms=0
     )
-    return _retrack(surv.select("doc_id"), surv)
+    return surv.select("doc_id")
 
 
 @register(
@@ -8620,14 +8599,11 @@ def remove_duplicate_spans_documents(
     )
 
     out = remove_duplicate_spans(_t(spark, sf_dir, "documents"), k=5)
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_tokens",
-            "n_tokens_removed",
-            F.md5("clean_text").alias("clean_fp"),
-        ),
-        out,
+    return out.select(
+        "doc_id",
+        "n_tokens",
+        "n_tokens_removed",
+        F.md5("clean_text").alias("clean_fp"),
     )
 
 
@@ -9129,13 +9105,10 @@ def bigram_lm_perplexity_documents(
 
     d = _t(spark, sf_dir, "documents")
     out = bigram_lm_scores(d, text_col="text", id_col="doc_id")
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_bigrams",
-            F.floor(F.col("xent") * 10000).cast("bigint").alias("xent_e4"),
-        ),
-        out,
+    return out.select(
+        "doc_id",
+        "n_bigrams",
+        F.floor(F.col("xent") * 10000).cast("bigint").alias("xent_e4"),
     )
 
 
@@ -9216,16 +9189,13 @@ def naive_bayes_lang_classifier(
         label=F.col("lang") == F.lit("en"),
         train=F.col("doc_id") % 4 == 0,
     )
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_tokens",
-            F.floor(F.col("logodds") * 10000).cast("bigint").alias(
-                "logodds_e4"
-            ),
-            "pred_pos",
+    return out.select(
+        "doc_id",
+        "n_tokens",
+        F.floor(F.col("logodds") * 10000).cast("bigint").alias(
+            "logodds_e4"
         ),
-        out,
+        "pred_pos",
     )
 
 
@@ -9571,13 +9541,10 @@ def dsir_importance_weights_documents(
     out = dsir_importance_weights(
         d, F.coalesce(F.col("lang") == "en", F.lit(False)), n_buckets=1024
     )
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_feats",
-            F.floor(F.col("logw") * 10000).cast("bigint").alias("logw_e4"),
-        ),
-        out,
+    return out.select(
+        "doc_id",
+        "n_feats",
+        F.floor(F.col("logw") * 10000).cast("bigint").alias("logw_e4"),
     )
 
 
@@ -9621,15 +9588,12 @@ def dsir_gumbel_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=1024,
         salt="dsir",
     )
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_feats",
-            F.floor(F.col("gumbel_key") * 10000)
-            .cast("bigint")
-            .alias("gumbel_key_e4"),
-        ),
-        out,
+    return out.select(
+        "doc_id",
+        "n_feats",
+        F.floor(F.col("gumbel_key") * 10000)
+        .cast("bigint")
+        .alias("gumbel_key_e4"),
     )
 
 
@@ -12080,12 +12044,12 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     One distributed plan computes baseline + both tiers + the
     intersection counts; the two quantized tiers SHARE one persisted
     pq_assign corpus frame (cell + codes from the same matmuls) instead
-    of each re-encoding, tracked for release on the final plan. The
+    of each re-encoding. The
     oracle is assembled from the two PQ queries' own registered SQL plus
     the proven exact-cosine CTE, so the tiers can never drift from their
     checked definitions silently; releases are BIGINT hits +
     integral-division ppm recalls."""
-    from dbt_gdpr_anonymizer_spark.operators.caching import track_caches
+    from dbt_gdpr_anonymizer_spark.operators.caching import persist
     from dbt_gdpr_anonymizer_spark.operators.similarity import (
         cosine_topk,
         ivf_pq_topk,
@@ -12106,9 +12070,9 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     coarse = [[float(x) for x in r[1]] for r in seeds]
-    corpus = pq_assign(
+    corpus = persist(pq_assign(
         emb, models, id_col="vec_id", vec_col="embedding", coarse=coarse
-    ).persist()
+    ))
     exact = cosine_topk(emb, queries_df, k=5).select("query_id", "vec_id")
     adc = pq_adc_topk(emb, queries_df, models, k=5, codes=corpus).select(
         "query_id", "vec_id", F.lit(1).alias("_p")
@@ -12135,7 +12099,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out = j.select(
+    return j.select(
         "query_id",
         "k_exact",
         "adc_hits",
@@ -12147,9 +12111,6 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ivfpq_recall_ppm"
         ),
     )
-    # Track on the FINAL plan: attributes don't survive the select
-    # transforms above, so tracking the intermediate would silently leak.
-    return track_caches(out, corpus)
 
 
 # pq_recall_report oracle: assembled from the two PQ queries' registered
@@ -12627,13 +12588,10 @@ def trigram_lm_interpolated_documents(
 
     d = _t(spark, sf_dir, "documents")
     out = trigram_lm_scores(d, text_col="text", id_col="doc_id")
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_trigrams",
-            F.floor(F.col("xent") * 10000).cast("bigint").alias("xent_e4"),
-        ),
-        out,
+    return out.select(
+        "doc_id",
+        "n_trigrams",
+        F.floor(F.col("xent") * 10000).cast("bigint").alias("xent_e4"),
     )
 
 
@@ -12690,13 +12648,10 @@ def kn_bigram_lm_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     out = kn_bigram_lm_scores(d, text_col="text", id_col="doc_id")
-    return _retrack(
-        out.select(
-            "doc_id",
-            "n_bigrams",
-            F.floor(F.col("xent") * 10000).cast("bigint").alias("xent_e4"),
-        ),
-        out,
+    return out.select(
+        "doc_id",
+        "n_bigrams",
+        F.floor(F.col("xent") * 10000).cast("bigint").alias("xent_e4"),
     )
 
 
@@ -12755,8 +12710,7 @@ def countmin_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    out = countmin_heavy_hitters(d, depth=4, width=256, k=20)
-    return _retrack(out, out)
+    return countmin_heavy_hitters(d, depth=4, width=256, k=20)
 
 
 def _hll_oracle_sql(
@@ -13140,8 +13094,7 @@ def pmi_collocations_documents(
     from dbt_gdpr_anonymizer_spark.operators.lm import pmi_collocations
 
     d = _t(spark, sf_dir, "documents")
-    out = pmi_collocations(d, min_count=5, k=50)
-    return _retrack(out, out)
+    return pmi_collocations(d, min_count=5, k=50)
 
 
 def _cm_grid_oracle_sql(depth: int, width: int) -> str:
@@ -13607,8 +13560,7 @@ def assoc_rules_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.join(p, li.l_partkey == p.p_partkey).select(
         F.col("l_orderkey").alias("bk"), F.col("p_brand").alias("brand")
     )
-    out = association_rules(baskets, "bk", "brand", min_support=5)
-    return _retrack(out, out)
+    return association_rules(baskets, "bk", "brand", min_support=5)
 
 
 def _bbit_oracle_sql(num_hashes: int = 16, b_bits: int = 4) -> str:
@@ -13679,10 +13631,9 @@ def bbit_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bbit_minhash_pairs,
     )
 
-    out = bbit_minhash_pairs(
+    return bbit_minhash_pairs(
         _t(spark, sf_dir, "documents"), threshold=0.7
     )
-    return _retrack(out, out)
 
 
 def _spatial_oracle_sql(radius_km: float = 2.0) -> str:
@@ -13971,10 +13922,9 @@ def vocab_growth_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     window per the no-new-slots rule."""
     from dbt_gdpr_anonymizer_spark.operators.vocab import vocab_growth
 
-    out = vocab_growth(
+    return vocab_growth(
         _t(spark, sf_dir, "documents"), "doc_id", "text", n_buckets=16
     )
-    return _retrack(out, out)
 
 
 def _rfm_oracle_sql() -> str:
@@ -14756,10 +14706,9 @@ def source_overlap_matrix_documents(
         source_overlap_matrix,
     )
 
-    out = source_overlap_matrix(
+    return source_overlap_matrix(
         _t(spark, sf_dir, "documents"), n=3
     )
-    return _retrack(out, out)
 
 
 @register(
@@ -14987,7 +14936,7 @@ def mondrian_utility_customers(
         (F.max("bal_max") - F.min("bal_min")).alias("rg_bal"),
         (F.max("nk_max") - F.min("nk_min")).alias("rg_nk"),
     )
-    out = boxes.crossJoin(F.broadcast(g)).select(
+    return boxes.crossJoin(F.broadcast(g)).select(
         "pid",
         "n",
         (F.col("bal_max") - F.col("bal_min")).alias("r_bal"),
@@ -15000,7 +14949,6 @@ def mondrian_utility_customers(
         .cast("bigint")
         .alias("ncp_ppm"),
     )
-    return _retrack(out, boxes)
 
 
 @register(
@@ -15392,10 +15340,7 @@ def auc_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("lang") == F.lit("en")).alias("y")
     )
     frame = scored.join(truth, "doc_id")
-    out = auc_exact(frame, "s", "y")
-    # retrack from the RAW operator outputs: .select() drops cached_deps
-    # (operators/caching.py contract), so `scored`/`frame` carry nothing
-    return _retrack(out, nb, out)
+    return auc_exact(frame, "s", "y")
 
 
 @register(
@@ -15463,10 +15408,9 @@ def minkprob_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     register). Parked for the r12 window per the no-new-slots rule."""
     from dbt_gdpr_anonymizer_spark.operators.lm import min_k_prob_scores
 
-    out = min_k_prob_scores(
+    return min_k_prob_scores(
         _t(spark, sf_dir, "documents"), k_pct=20
     )
-    return _retrack(out, out)
 
 
 @register(
@@ -17205,8 +17149,7 @@ def lpa_communities_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_n") >= 10)
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
     )
-    out = label_propagation(edges, "src", "dst", rounds=4)
-    return _retrack(out, out)
+    return label_propagation(edges, "src", "dst", rounds=4)
 
 
 def _cc_rounds_materialized_sql(iters: int) -> str:
@@ -17343,10 +17286,9 @@ def dbscan_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lat_col().alias("lat"),
         _lon_col().alias("lon"),
     )
-    out = dbscan_clusters(
+    return dbscan_clusters(
         c, "pid", "lat", "lon", eps_km=20.0, min_pts=3, cc_iters=6
     )
-    return _retrack(out, out)
 
 
 def _kcore_oracle_sql(
@@ -17642,12 +17584,11 @@ def textrank_keywords_documents(
     )
     nodes = bi.select(F.col("src").alias("node_id")).distinct()
     ranks = pagerank_int(bi, nodes, iters=5, checkpoint_every=5)
-    out = (
+    return (
         ranks.select(F.col("node_id").alias("word"), "rank_units")
         .orderBy(F.col("rank_units").desc(), "word")
         .limit(50)
     )
-    return _retrack(out, ranks)
 
 
 MULTIMODAL_NETPBM_ORACLE = """

@@ -1,8 +1,8 @@
 """Structured Streaming anonymization.
 
-The masking surface is stateless per-row Column expressions (functions/
-masking.py), so the SAME ``mask_model`` rewriter applies unchanged to a
-streaming DataFrame — one code path for batch and streaming, the core
+Every masking method is stateless per-row SQL text (``policy._METHODS``)
+and ``mask_model`` is one ``selectExpr``, so the SAME rewriter applies
+unchanged to a streaming DataFrame — one code path for batch and streaming, the core
 promise of Structured Streaming. This module adds the stream plumbing:
 sources, sinks, and the watermarked windowed rollup for late events.
 

@@ -1,17 +1,14 @@
 """Empirical cache-leak audit over one tier of the query registry.
 
-Operators that persist() multi-branch intermediates track them on their
-returned plan (operators/caching.py) — but DataFrame attributes do NOT
-survive plan transforms, so a registry query that wraps such an operator
-in .select()/.orderBy()/.unionByName() silently drops the tracking and
-release_caches() on the query result frees nothing. Every bench run and
-long-lived session then accumulates dead cached blocks (the r8 review
-finding on orderkey_gap_islands / pagerank_documents).
-
-This audit finds the leaks EMPIRICALLY instead of by inspection: run each
-query at sf0.001, consume it (noop write), release_caches(result), and
-compare the JVM persistent-RDD registry size before/after. Any positive
-delta is a leak chargeable to that query.
+Operators persist multi-branch intermediates through
+``operators.caching.persist``, which records each one in a per-session
+ledger; ``release_caches(result)`` unpersists the whole ledger.
+``tests/test_registry_tiers.py`` fails on any other persist in the
+package, so a leak here means the ledger itself misbehaves — this audit
+confirms that EMPIRICALLY: run each query at sf0.001, consume it (noop
+write), release_caches(result), and compare the JVM persistent-RDD
+registry size before/after. Any positive delta is a leak chargeable to
+that query.
 
 localCheckpoint-based queries (CHECKPOINT_BASED: lineage truncation keeps
 their 3^rounds analyzer blowup away) hold their checkpoint blocks until

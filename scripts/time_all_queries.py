@@ -37,10 +37,9 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.collect()
             times[name] = round(time.time() - t0, 2)
-            # query results track their operators' persisted
-            # intermediates; release them, or the sweep accumulates blocks
-            # across every query and late-query timings pay eviction
-            # pressure
+            # release the operators' persisted intermediates, or the
+            # sweep accumulates blocks across every query and late-query
+            # timings pay eviction pressure
             release_caches(df)
         except Exception as e:  # noqa: BLE001
             errs[name] = f"{type(e).__name__}: {e}"[:200]

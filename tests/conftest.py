@@ -84,6 +84,15 @@ def unpartitioned_windows(df) -> list[str]:
     return walk(df._jdf.queryExecution().optimizedPlan(), [])
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the JVM holds persisted. Compare as sets ("no NEW
+    id remains"), not sizes: Spark's ContextCleaner evicts GC'd blocks of
+    earlier tests asynchronously, while unpersist removes an id
+    synchronously."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
 def jobs_launched(spark, fn) -> int:
     """Spark jobs started while ``fn()`` runs, read from Spark's status
     store by the benchmark's collector (jobs from other threads included)."""

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
 from dbt_gdpr_anonymizer_spark.operators.classify import naive_bayes_scores
+from tests.conftest import persistent_rdd_ids
 
 
 def _fit(spark, rows):
@@ -73,6 +74,7 @@ def test_empty_class_raises(spark):
 
 
 def test_plan_no_python_and_cache_tracked(spark):
+    before = persistent_rdd_ids(spark)
     out = _fit(
         spark,
         [(1, "a b", True, True), (2, "c", False, True)],
@@ -80,5 +82,7 @@ def test_plan_no_python_and_cache_tracked(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
-    assert getattr(out, "cached_deps", None)
+    out.collect()
+    assert persistent_rdd_ids(spark) - before, "token frame must be cached"
     release_caches(out)
+    assert not persistent_rdd_ids(spark) - before

@@ -18,6 +18,7 @@ from dbt_gdpr_anonymizer_spark.operators.similarity import (
     hyperplane_bucket,
     lsh_topk,
 )
+from tests.conftest import persistent_rdd_ids
 
 BASE = (
     "spark shuffles data between stages when a wide dependency requires "
@@ -367,20 +368,40 @@ def test_scrub_pii_redacts_emails_and_phones(spark):
     assert out[4] is None
 
 
-def test_cache_tracking_and_release(corpus):
+def test_cache_tracking_and_release(spark, corpus):
     from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
 
+    # an earlier test's unreleased cache of the same plan would make this
+    # persist a no-op ("already cached data")
+    release_caches(corpus)
+    before = persistent_rdd_ids(spark)
     pairs = neardup_pairs(corpus, threshold=0.5)
-    deps = getattr(pairs, "cached_deps", [])
-    assert deps, "neardup_pairs must track its persisted shingle sets"
     pairs.collect()
-    assert all(d.storageLevel.useMemory or d.storageLevel.useDisk for d in deps)
-    release_caches(pairs)
-    assert all(
-        not (d.storageLevel.useMemory or d.storageLevel.useDisk) for d in deps
+    assert persistent_rdd_ids(spark) - before, (
+        "neardup_pairs must persist its shingle sets"
     )
-    assert pairs.cached_deps == []
+    release_caches(pairs)
+    assert not persistent_rdd_ids(spark) - before
     release_caches(pairs)  # idempotent
+
+
+def test_release_frees_caches_of_a_query_that_raised(spark, corpus):
+    """A query that raises after its operator persisted returns no frame
+    to release; the session's next release_caches still frees the cache."""
+    from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
+
+    def failing_query():
+        pairs = neardup_pairs(corpus, threshold=0.5)
+        pairs.collect()
+        raise RuntimeError("a later step of the query failed")
+
+    release_caches(corpus)
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="later step"):
+        failing_query()
+    assert persistent_rdd_ids(spark) - before
+    release_caches(corpus)
+    assert not persistent_rdd_ids(spark) - before
 
 
 def test_cosine_topk_guard_blocks_oversized_corpus(vectors):

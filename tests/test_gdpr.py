@@ -129,7 +129,7 @@ def test_processing_records_art30_rollup(spark):
                 "email": ColumnPolicy(
                     pii=True,
                     pii_type="direct_identifier",
-                    anonymization_method="hash",
+                    anonymization_method="hash_sha256",
                     legal_basis="consent",
                     retention_days=30,
                     data_owner="crm",
@@ -137,7 +137,7 @@ def test_processing_records_art30_rollup(spark):
                 "city": ColumnPolicy(
                     pii=True,
                     pii_type="quasi_identifier",
-                    anonymization_method="generalize",
+                    anonymization_method="aggregate_to_city",
                     legal_basis="legitimate_interest",
                     retention_days=365,
                     data_owner="crm",
@@ -168,7 +168,7 @@ def test_processing_records_art30_rollup(spark):
     assert c.legal_bases == "consent,legitimate_interest"
     assert c.retention_days_max == 365  # envelope = max across columns
     assert c.n_pii_columns == 2 and c.n_direct_identifiers == 1
-    assert c.safeguards == "generalize,hash"
+    assert c.safeguards == "aggregate_to_city,hash_sha256"
     v = got["visits"]
     assert v.special_category is True
     assert v.retention_days_max == 10

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from dbt_gdpr_anonymizer_spark.operators.graph import connected_components
+from tests.conftest import persistent_rdd_ids
 
 
 def _components(spark, edges, iters=4, **kw):
@@ -138,11 +139,10 @@ def test_pagerank_off_spine_targets_dropped_outdeg_counts_all(spark):
 
 
 def test_pagerank_releases_all_caches(spark):
-    """r8 ADVICE: the checkpoint rotation left the live checkpoint cache
-    untracked (track_caches saw only the final lazy `ranks`), leaking one
-    cached DataFrame per call. After release_caches the persistent-RDD
-    registry must return to its baseline — in both the iters <
-    checkpoint_every and the checkpointed regimes."""
+    """r8 ADVICE: the checkpoint rotation once leaked the live checkpoint
+    cache, one cached DataFrame per call. After release_caches no new
+    persistent-RDD id may remain — in both the iters < checkpoint_every
+    and the checkpointed regimes."""
     from dbt_gdpr_anonymizer_spark.operators.caching import release_caches
     from dbt_gdpr_anonymizer_spark.operators.graph import pagerank_int
 
@@ -152,23 +152,14 @@ def test_pagerank_releases_all_caches(spark):
     nodes = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 4)], "node_id long"
     )
-    def persistent_ids():
-        # Set-based, not size-based: Spark's ContextCleaner evicts
-        # GC'd blocks from EARLIER tests asynchronously, so a size
-        # equality races (the registry can shrink between baseline and
-        # assert). The leak contract is "no NEW id remains" — unpersist
-        # removes ids from the registry synchronously, so this is exact.
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
     for iters, ck in ((2, 4), (5, 2)):
-        baseline = persistent_ids()
+        baseline = persistent_rdd_ids(spark)
         out = pagerank_int(
             edges, nodes, iters=iters, checkpoint_every=ck
         )
         out.collect()
         release_caches(out)
-        leaked = persistent_ids() - baseline
+        leaked = persistent_rdd_ids(spark) - baseline
         assert not leaked, (
             f"leaked cache ids {leaked} with iters={iters}, "
             f"checkpoint_every={ck}"

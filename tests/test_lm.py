@@ -13,6 +13,7 @@ from dbt_gdpr_anonymizer_spark.operators.lm import (
     bigram_array,
     bigram_lm_scores,
 )
+from tests.conftest import persistent_rdd_ids
 
 
 def _corpus(spark):
@@ -64,13 +65,16 @@ def test_smoothed_probability_bounds(spark):
 
 
 def test_plan_has_no_python_and_releases_cache(spark):
+    release_caches(_corpus(spark))  # no earlier cache of the same plan
+    before = persistent_rdd_ids(spark)
     out = bigram_lm_scores(_corpus(spark))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
-    assert getattr(out, "cached_deps", None), "events frame must be tracked"
+    out.collect()
+    assert persistent_rdd_ids(spark) - before, "events frame must be cached"
     release_caches(out)
-    assert not getattr(out, "cached_deps")
+    assert not persistent_rdd_ids(spark) - before
 
 
 def test_trigram_array(spark):
@@ -145,15 +149,11 @@ def test_trigram_scores_match_python_reference(spark):
 def test_trigram_releases_caches(spark):
     from dbt_gdpr_anonymizer_spark.operators.lm import trigram_lm_scores
 
-    def ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
-    before = ids()
+    before = persistent_rdd_ids(spark)
     out = trigram_lm_scores(_corpus(spark))
     out.collect()
     release_caches(out)
-    assert not (ids() - before)
+    assert not persistent_rdd_ids(spark) - before
 
 
 def test_kn_hand_computed_scores(spark):

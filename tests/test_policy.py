@@ -105,6 +105,17 @@ def test_pii_inventory_rejects_unknown_pii_method(spark):
         pii_inventory(spark, [SERVICES_POLICY, tp], CONF)
 
 
+def test_processing_records_rejects_unknown_pii_method(spark):
+    """The RoPA runs the same check: a typo'd method is not listed under
+    ``safeguards`` as if it had been applied."""
+    from dbt_gdpr_anonymizer_spark.operators.report import processing_records
+
+    typo = ColumnPolicy(pii=True, anonymization_method="hash_sha265")
+    tp = TablePolicy(name="stg", columns={"contact_email": typo})
+    with pytest.raises(PolicyError, match=r"stg\.contact_email.*hash_sha265"):
+        processing_records(spark, [SERVICES_POLICY, tp], CONF)
+
+
 def test_policies_from_schema_yaml_reference_shape(spark):
     """Parses the reference's dbt schema.yml layout (models -> columns ->
     meta) and the result drives mask_model identically to a hand-built

@@ -170,12 +170,15 @@ def test_source_overlap_matrix_release_caches(spark):
     from dbt_gdpr_anonymizer_spark.operators.quality import (
         source_overlap_matrix,
     )
+    from tests.conftest import persistent_rdd_ids
 
     docs = spark.createDataFrame(
         [(1, "a", "one two three four"), (2, "b", "two three four five")],
         "doc_id bigint, source string, text string",
     )
+    before = persistent_rdd_ids(spark)
     out = source_overlap_matrix(docs, n=3)
     out.collect()
-    assert getattr(out, "cached_deps", ())
+    assert persistent_rdd_ids(spark) - before
     release_caches(out)
+    assert not persistent_rdd_ids(spark) - before

@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -108,6 +109,28 @@ def test_queries_leave_no_scratch_behind():
     src = open(Q.__file__).read()
     for needle in ("mkdtemp", "createOrReplaceTempView"):
         assert needle not in src, needle
+
+
+def test_caches_have_one_owner():
+    """Every persist in the package goes through ``caching.persist``, so
+    the session ledger that ``release_caches`` empties sees every cache;
+    no code hand-carries caches from frame to frame."""
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "dbt_gdpr_anonymizer_spark"
+    for path in pkg.rglob("*.py"):
+        if path != pkg / "operators" / "caching.py":
+            src = path.read_text()
+            for needle in (".persist(", ".cache()"):
+                assert needle not in src, (path, needle)
+    sources = [root / "bench.py", *pkg.rglob("*.py")]
+    for d in ("scripts", "tests"):
+        sources += (root / d).rglob("*.py")
+    # assembled, so this file does not match its own needles
+    gone = ["track" + "_caches", "cached" + "_deps", "_re" + "track"]
+    for path in sources:
+        src = path.read_text()
+        for needle in gone:
+            assert needle not in src, (path, needle)
 
 
 @pytest.mark.parametrize("name", list(Q.all_queries("staged")))
